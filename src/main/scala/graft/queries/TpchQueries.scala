@@ -131,7 +131,7 @@ object TpchQueries {
       // TABLE (a serial driver build that would be nonsense at scale);
       // a per-partition hash join on the orderkey with the selective
       // side as build is the right shape at every tier (measured
-      // 1.55 s → 0.94 s at sf0.1, AQE-off). r14 A/B (Q5AB, BENCH_NOTES):
+      // 1.55 s → 0.94 s at sf0.1, AQE-off). r14 A/B (BENCH_NOTES):
       // the hint is NOT pessimizing larger tiers — sf1 1.26 vs 1.18
       // hint-free (window noise), sf10 6.11 vs 6.24 (tie).
       //

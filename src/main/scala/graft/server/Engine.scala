@@ -578,24 +578,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def macroBareName(raw: String): String =
     raw.replace("\"", "").split('.').last.toLowerCase
 
-  /** Index of the `)` balancing the `(` at `open`, skipping
-    * single-quoted literals ('' escapes honored). */
-  private def balancedClose(s: String, open: Int): Option[Int] = {
-    var depth = 0; var i = open; var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return Some(i)
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
   private val createMacroHeadRe =
     """(?is)^\s*create\s+(or\s+replace\s+)?(temp(?:orary)?\s+)?macro\s+([\w."]+)\s*\(""".r
   private val dropMacroRe =
@@ -619,8 +601,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val isTemp = head.group(2) != null
     val n = macroBareName(head.group(3))
     val open = head.end - 1
-    val close = balancedClose(sql, open).getOrElse(throw new IllegalArgumentException(
-      "unterminated macro parameter list"))
+    val close = SqlLexer.matchingClose(sql, open)
+    if (close < 0) throw new IllegalArgumentException("unterminated macro parameter list")
     val rest = sql.substring(close + 1)
     val bodyM = """(?is)^\s*as\s+(table\s+)?(.+)$""".r.findFirstMatchIn(rest)
       .getOrElse(throw new IllegalArgumentException(
@@ -631,7 +613,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // expressions — the list was captured with the balanced scan)
     val ps = scala.collection.mutable.ArrayBuffer.empty[String]
     val ds = scala.collection.mutable.Map.empty[String, String]
-    splitTopLevel(sql.substring(open + 1, close), ',').foreach { it =>
+    SqlLexer.splitTopLevel(sql.substring(open + 1, close), ',').foreach { it =>
       it.split(":=", 2) match {
         case Array(p, d) => val pn = p.trim.toLowerCase; ps += pn; ds(pn) = d.trim
         case _ => ps += it.trim.toLowerCase
@@ -684,61 +666,28 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val n = name.toLowerCase
       ns.macros.get(n).orElse(Option(macros.get(n)))
     }
-    val len = sql.length
-    var i = 0
-    while (i < len) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        i += 1
-        var closed = false
-        while (i < len && !closed) {
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < len && sql.charAt(i + 1) == '\'') i += 2 // '' escape
-            else { closed = true; i += 1 }
-          } else i += 1
-        }
-      } else if (c == '"') {
-        i += 1; while (i < len && sql.charAt(i) != '"') i += 1; i += 1
-      } else if (c == '-' && i + 1 < len && sql.charAt(i + 1) == '-') {
-        while (i < len && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < len && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2); i = if (e < 0) len else e + 2
-      } else if (Character.isLetter(c) || c == '_') {
-        var j = i
-        while (j < len && (Character.isLetterOrDigit(sql.charAt(j)) ||
-          sql.charAt(j) == '_' || sql.charAt(j) == '$')) j += 1
-        val prev = if (i > 0) sql.charAt(i - 1) else ' '
-        val name = sql.substring(i, j)
-        var k = j
-        while (k < len && Character.isWhitespace(sql.charAt(k))) k += 1
-        if (prev != '.' && k < len && sql.charAt(k) == '(') {
-          lookup(name) match {
-            case Some(d) =>
-              val close = balancedClose(sql, k).getOrElse(return None)
-              val args = bindMacroArgs(name, d, sql.substring(k + 1, close))
-              val expanded = "(" + substituteMacroParams(d.body, d.params, args) + ")"
-              return Some(sql.substring(0, i) + expanded + sql.substring(close + 1))
-            case None =>
-          }
-        } else if (prev == '.' && k < len && sql.charAt(k) == '(') {
-          // qualified call: only main./temp. qualifiers denote the
-          // macro namespace; other qualifiers are left alone
-          val qual = """(?is)(main|temp)\s*\.\s*$""".r
-            .findFirstMatchIn(sql.substring(0, i))
-          if (qual.isDefined && lookup(name).isDefined) {
-            val d = lookup(name).get
-            val close = balancedClose(sql, k).getOrElse(return None)
-            val args = bindMacroArgs(name, d, sql.substring(k + 1, close))
-            val expanded = "(" + substituteMacroParams(d.body, d.params, args) + ")"
-            return Some(sql.substring(0, qual.get.start) + expanded +
-              sql.substring(close + 1))
-          }
-        }
-        i = j
-      } else i += 1
+    // qualified call: only main./temp. qualifiers denote the macro
+    // namespace (and are replaced with it); other qualifiers are left alone
+    def callStart(i: Int): Option[Int] =
+      if (i == 0 || sql.charAt(i - 1) != '.') Some(i)
+      else macroQualRe.findFirstMatchIn(sql.substring(0, i)).map(_.start)
+    val calls = for {
+      m <- SqlLexer.codeMatches(sql, callHeadRe)
+      d <- lookup(m.group(1))
+      start <- callStart(m.start)
+    } yield (m, d, start)
+    calls.nextOption().flatMap { case (m, d, start) =>
+      val close = SqlLexer.matchingClose(sql, m.end - 1)
+      if (close < 0) None
+      else {
+        val args = bindMacroArgs(m.group(1), d, sql.substring(m.end, close))
+        val expanded = "(" + substituteMacroParams(d.body, d.params, args) + ")"
+        Some(sql.substring(0, start) + expanded + sql.substring(close + 1))
+      }
     }
-    None
   }
+  private val callHeadRe = """(?U)(?<![\w$])([^\W\d][\w$]*)\s*\(""".r
+  private val macroQualRe = """(?is)(main|temp)\s*\.\s*$""".r
 
   /** Bind a call's argument list to the macro's parameters with
     * DuckDB's exact model (measured): a parameter declared WITHOUT a
@@ -748,7 +697,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def bindMacroArgs(name: String, d: MacroDef,
       argText: String): Map[String, String] = {
     val items =
-      if (argText.trim.isEmpty) Nil else splitTopLevel(argText, ',')
+      if (argText.trim.isEmpty) Nil else SqlLexer.splitTopLevel(argText, ',')
     val positional = d.params.filterNot(d.defaults.contains)
     val named = scala.collection.mutable.Map.empty[String, String]
     val pos = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -777,11 +726,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * reference) with the parenthesized argument expressions. */
   private def substituteMacroParams(body: String, params: Seq[String],
       args: Map[String, String]): String =
-    mapOutsideLiterals(body) { span =>
-      params.foldLeft(span) { (s, p) =>
-        s.replaceAll("(?i)(?<![\\w$.])" + java.util.regex.Pattern.quote(p) + "(?![\\w$])",
-          java.util.regex.Matcher.quoteReplacement("(" + args(p) + ")"))
-      }
+    params.foldLeft(body) { (s, p) =>
+      val re = ("(?i)(?<![\\w$.])" + java.util.regex.Pattern.quote(p) + "(?![\\w$])").r
+      SqlLexer.replaceInCode(s, re)(_ => "(" + args(p) + ")")
     }
 
   private def persistMacros(): Unit = dbPath.foreach { p =>
@@ -990,55 +937,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     tempNs.get().tables.remove(n)
   }
 
-  /** Apply `f` to the spans of `sql` OUTSIDE single-quoted string
-    * literals ('' escapes honored), `--` line comments and block
-    * comments — the keyword-anchored temp substitutions must never
-    * rewrite stored TEXT (`INSERT INTO log VALUES ('delete from t')`
-    * was silently corrupted pre-fix; ADVICE r14). Double-quoted
-    * identifiers stay visible: a quoted temp name is a legal target.
-    * A keyword+name match can never straddle a literal boundary in
-    * valid SQL, so per-span application loses nothing. */
-  private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val n = sql.length
-    var i = 0
-    val out = new StringBuilder(n + 16)
-    val cur = new StringBuilder
-    def flush(): Unit = { if (cur.nonEmpty) { out.append(f(cur.toString)); cur.clear() } }
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        flush()
-        var k = i + 1
-        var open = true
-        while (open && k < n) {
-          if (sql.charAt(k) == '\'') {
-            if (k + 1 < n && sql.charAt(k + 1) == '\'') k += 2 else open = false
-          } else k += 1
-        }
-        val end = math.min(n, k + 1)
-        out.append(sql.substring(i, end)); i = end
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        flush()
-        val e = sql.indexOf('\n', i)
-        val end = if (e < 0) n else e + 1
-        out.append(sql.substring(i, end)); i = end
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        flush()
-        val e = sql.indexOf("*/", i + 2)
-        val end = if (e < 0) n else e + 2
-        out.append(sql.substring(i, end)); i = end
-      } else { cur.append(c); i += 1 }
-    }
-    flush()
-    out.toString
-  }
-
   /** Keyword-anchored TEXT substitution of connection-temp names in
     * write/DDL target positions (INSERT INTO / UPDATE / DELETE FROM /
     * TRUNCATE / COPY / ALTER TABLE / DESCRIBE / SUMMARIZE) — those
     * paths extract their target from the statement text, where the
     * plan-level read substitution cannot reach. Anchoring on the
-    * keyword plus [[mapOutsideLiterals]] keeps column names, string
+    * keyword plus [[SqlLexer.replaceInCode]] keeps column names, string
     * literals and comments safe. Reads go through
     * [[substituteConnTempReads]] instead.
     *
@@ -1050,33 +954,29 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def substituteTempTargets(sql: String): String = {
     val ns = tempNs.get()
     if (ns.isEmpty) return sql
-    mapOutsideLiterals(sql) { span =>
-      var s = span
-      def sub(keys: String, n: String, mangled: String): Unit = {
-        val re = ("(?is)\\b(" + keys + ")\\s+(?:temp\\.)?\"?" +
-          java.util.regex.Pattern.quote(n) + "\"?(?![\\w.])").r
-        s = re.replaceAllIn(s, mm =>
-          java.util.regex.Matcher.quoteReplacement(mm.group(1) + " " + mangled))
-      }
-      for ((n, m) <- ns.tables)
-        sub("""insert\s+into|update|delete\s+from|truncate\s+table|truncate|copy|alter\s+table(?:\s+if\s+exists)?|describe|summarize""",
-          n, m)
-      for ((n, _) <- ns.views) {
-        val q = java.util.regex.Pattern.quote(n)
-        val asWrite = ("(?is)\\b(?:insert\\s+into|update|delete\\s+from|" +
-          "truncate\\s+table|truncate|alter\\s+table(?:\\s+if\\s+exists)?)\\s+" +
-          "(?:temp\\.)?\"?" + q + "\"?(?![\\w.])").r
-        val asCopyFrom =
-          ("(?is)\\bcopy\\s+(?:temp\\.)?\"?" + q + "\"?\\s+from\\b").r
-        if (asWrite.findFirstIn(s).isDefined || asCopyFrom.findFirstIn(s).isDefined)
-          org.apache.spark.sql.GraftBridge.analysisError(
-            s"""cannot modify temp view "$n": it is a view, not a table""")
-        val re = ("(?is)\\b(describe)\\s+(?:temp\\.)?\"?" + q + "\"?(?![\\w.])").r
-        s = re.replaceAllIn(s, mm =>
-          java.util.regex.Matcher.quoteReplacement(mm.group(1) + " select * from " + n))
-      }
-      s
+    var s = sql
+    def sub(keys: String, n: String, mangled: String): Unit = {
+      val re = ("(?is)\\b(" + keys + ")\\s+(?:temp\\.)?\"?" +
+        java.util.regex.Pattern.quote(n) + "\"?(?![\\w.])").r
+      s = SqlLexer.replaceInCode(s, re)(mm => mm.group(1) + " " + mangled)
     }
+    for ((n, m) <- ns.tables)
+      sub("""insert\s+into|update|delete\s+from|truncate\s+table|truncate|copy|alter\s+table(?:\s+if\s+exists)?|describe|summarize""",
+        n, m)
+    for ((n, _) <- ns.views) {
+      val q = java.util.regex.Pattern.quote(n)
+      val asWrite = ("(?is)\\b(?:insert\\s+into|update|delete\\s+from|" +
+        "truncate\\s+table|truncate|alter\\s+table(?:\\s+if\\s+exists)?)\\s+" +
+        "(?:temp\\.)?\"?" + q + "\"?(?![\\w.])").r
+      val asCopyFrom =
+        ("(?is)\\bcopy\\s+(?:temp\\.)?\"?" + q + "\"?\\s+from\\b").r
+      if (SqlLexer.codeMatches(s, asWrite).hasNext || SqlLexer.codeMatches(s, asCopyFrom).hasNext)
+        org.apache.spark.sql.GraftBridge.analysisError(
+          s"""cannot modify temp view "$n": it is a view, not a table""")
+      val re = ("(?is)\\b(describe)\\s+(?:temp\\.)?\"?" + q + "\"?(?![\\w.])").r
+      s = SqlLexer.replaceInCode(s, re)(mm => mm.group(1) + " select * from " + n)
+    }
+    s
   }
 
   /** Pre-analysis READ substitution for the connection's TEMP
@@ -3534,7 +3434,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val ifNotExists = m.group(2) != null
       val name = m.group(3).toLowerCase
       val tbl = m.group(4)
-      val cols = splitTopLevel(m.group(5), ',').map(_.replace("\"", "").trim.toLowerCase)
+      val cols = SqlLexer.splitTopLevel(m.group(5), ',').map(_.replace("\"", "").trim.toLowerCase)
       val q = qualify(resolveRenamed(resolveConnTemp(tbl.replace("\"", ""))))
       if (!spark.catalog.tableExists(q))
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
@@ -3602,16 +3502,14 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val body = tempNs.get().prepared.getOrElse(n,
         throw new IllegalArgumentException(
           s"""prepared statement "$n" does not exist"""))
-      val args = Option(m.group(2)).map(a => splitTopLevel(a, ',')).getOrElse(Nil)
-      val subbed = mapOutsideLiterals(body) { span =>
-        """\$(\d+)""".r.replaceAllIn(span, mm => {
-          val k = mm.group(1).toInt
-          if (k < 1 || k > args.size)
-            throw new IllegalArgumentException(
-              s"""prepared statement "$n": no value bound for parameter """ +
-                s"$$$k (${args.size} given)")
-          Regex.quoteReplacement("(" + args(k - 1) + ")")
-        })
+      val args = Option(m.group(2)).map(a => SqlLexer.splitTopLevel(a, ',')).getOrElse(Nil)
+      val subbed = SqlLexer.replaceInCode(body, """\$(\d+)""".r) { mm =>
+        val k = mm.group(1).toInt
+        if (k < 1 || k > args.size)
+          throw new IllegalArgumentException(
+            s"""prepared statement "$n": no value bound for parameter """ +
+              s"$$$k (${args.size} given)")
+        "(" + args(k - 1) + ")"
       }
       return executeInner(subbed, allowReserved)
     }
@@ -3954,7 +3852,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       return ExecResult(spark.sql("SELECT 1 LIMIT 0"), "SET")
 
     createEnumRe.findFirstMatchIn(sql).foreach { m =>
-      val vals = splitTopLevel(m.group(2), ',').map(_.trim.stripPrefix("'").stripSuffix("'"))
+      val vals = SqlLexer.splitTopLevel(m.group(2), ',').map(_.trim.stripPrefix("'").stripSuffix("'"))
       val n = m.group(1).toLowerCase
       if (isTxnOpen) {
         // transactional CREATE TYPE (r12b): an intent — this txn's own
@@ -3993,7 +3891,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // a plain column-list CREATE TABLE (no constraint keywords) still
     // needs the constraints path when a column is enum-typed
     if (anyEnums) plainCreateTableRe.findFirstMatchIn(sql).foreach { m =>
-      val mentionsEnum = splitTopLevel(m.group(3), ',').exists { item =>
+      val mentionsEnum = SqlLexer.splitTopLevel(m.group(3), ',').exists { item =>
         val t = item.trim.split("\\s+", 3)
         t.length >= 2 && enumExists(t(1))
       }
@@ -4237,7 +4135,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     }
     replaceStarRe.findFirstMatchIn(rewritten).foreach { m =>
       // SELECT * REPLACE (expr AS col, …) — star with substitutions
-      val repls = splitTopLevel(m.group(1), ',').flatMap { item =>
+      val repls = SqlLexer.splitTopLevel(m.group(1), ',').flatMap { item =>
         val mm = """(?is)^(.*)\s+as\s+([\w"]+)$""".r.findFirstMatchIn(item.trim)
         mm.map(x => x.group(2).replace("\"", "").toLowerCase -> x.group(1).trim)
       }.toMap
@@ -4408,17 +4306,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     s = rewriteLeadingFrom(s)
     // type-name aliases BEFORE the bracket/arrow passes ('x'::json ->>
     // 'a' must become a STRING cast before the arrow's operand walk)
-    s = typeAliasColonRe.replaceAllIn(s, m =>
-      Regex.quoteReplacement("::" + typeAliasMap(m.group(1).toLowerCase)))
-    s = typeAliasAsRe.replaceAllIn(s, m =>
-      Regex.quoteReplacement("AS " + typeAliasMap(m.group(1).toLowerCase)))
+    s = SqlLexer.replaceInCode(s, typeAliasColonRe)(m => "::" + typeAliasMap(m.group(1).toLowerCase))
+    s = SqlLexer.replaceInCode(s, typeAliasAsRe)(m => "AS " + typeAliasMap(m.group(1).toLowerCase))
     // user-defined ENUM names cast to their STRING storage type
-    // literal-aware: a data string containing '::<enum_name>' must
-    // not be rewritten (ADVICE r8)
     if (anyEnums)
-      s = replaceOutsideLiteralsF(s, enumColonCastRe)(m =>
-        if (enumExists(m.group(1))) "::STRING"
-        else Regex.quoteReplacement(m.matched))
+      s = SqlLexer.replaceInCode(s, enumColonCastRe)(m =>
+        if (enumExists(m.group(1))) "::STRING" else m.matched)
     // CAST(x AS VARCHAR/TEXT/JSON/TIME/…) — the AS-form regex above
     // excludes names that could be column aliases; inside a CAST the
     // position is unambiguous, so resolve them there explicitly
@@ -4430,8 +4323,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // Applies ONLY to column-list CREATE TABLE (never CTAS/views, whose
     // bodies are arbitrary SQL where these words can be identifiers).
     if (createTableColsRe.findFirstIn(s).isDefined)
-      s = ddlTypeAliasRe.replaceAllIn(s, m =>
-        Regex.quoteReplacement(m.group(1) + typeAliasMap(m.group(2).toLowerCase)))
+      s = SqlLexer.replaceInCode(s, ddlTypeAliasRe)(m =>
+        m.group(1) + typeAliasMap(m.group(2).toLowerCase))
     s = rewriteBracketLists(s)
     s = rewriteJsonArrows(s)
     s = rewriteStructLiterals(s)
@@ -4444,16 +4337,14 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // route to a registered builder that truncates both sides to the
     // unit before timestampdiff (Spark's quoted-unit builtin both
     // rejects strings and counts complete periods)
-    s = dateDiffRe.replaceAllIn(s, m =>
-      Regex.quoteReplacement(s"duck_date_diff('${m.group(2)}',"))
+    s = SqlLexer.replaceInCode(s, dateDiffRe)(m => s"duck_date_diff('${m.group(2)}',")
     // DuckDB fmt-style format('{} x {}', …) → format_string('%s x %s',
     // …); templates with positional {0} or spec {:…} forms are left
     // alone (an unresolved-function error beats silently-wrong output)
-    s = formatFnRe.replaceAllIn(s, m =>
+    s = SqlLexer.replaceInCode(s, formatFnRe)(m =>
       if (m.group(1).matches("""[^{}]*(\{\}[^{}]*)*"""))
-        Regex.quoteReplacement(
-          s"graft_format('${m.group(1).replace("%", "%%").replace("{}", "%s")}',")
-      else Regex.quoteReplacement(m.matched))
+        s"graft_format('${m.group(1).replace("%", "%%").replace("{}", "%s")}',"
+      else m.matched)
     // PG regex-match operators with a string-literal pattern:
     // x ~ 'p' → rlike, !~ negates, ~* / !~* case-insensitive. String-
     // aware scan, scoped to literal RHS, so bitwise-NOT and tildes
@@ -4464,35 +4355,30 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     s = rewriteDuckOperators(s)
     // DuckDB's bare SEMI/ANTI JOIN keywords → Spark's LEFT-prefixed
     // ones; an existing LEFT/RIGHT prefix (any whitespace) passes through
-    s = semiAntiRe.replaceAllIn(s, m =>
-      if (m.group(1) != null) Regex.quoteReplacement(m.matched)
-      else s"LEFT ${m.group(2).toUpperCase} JOIN")
+    s = SqlLexer.replaceInCode(s, semiAntiRe)(m =>
+      if (m.group(1) != null) m.matched else s"LEFT ${m.group(2).toUpperCase} JOIN")
     // DuckDB `USING SAMPLE n% | n [ROWS] | method(n unit) [(method
     // [, seed])] [REPEATABLE (seed)]` after a relation → Spark
     // TABLESAMPLE (bare n = ROWS, DuckDB's default). The post-WHERE
     // placement DuckDB also allows cannot attach to a relation
     // textually and keeps erroring loudly at parse (declared).
-    s = replaceOutsideLiteralsF(s, usingSampleRe) { m =>
+    s = SqlLexer.replaceInCode(s, usingSampleRe) { m =>
       val n = Option(m.group(2)).getOrElse(m.group(4))
       val unit = Option(m.group(3)).orElse(Option(m.group(5))).map(_.toLowerCase)
       val isPct = unit.exists(u => u == "%" || u == "percent")
       val seed = Option(m.group(7)).orElse(Option(m.group(8)))
-      Regex.quoteReplacement(
-        s"TABLESAMPLE ($n ${if (isPct) "PERCENT" else "ROWS"})" +
-          seed.map(x => s" REPEATABLE ($x)").getOrElse(""))
+      s"TABLESAMPLE ($n ${if (isPct) "PERCENT" else "ROWS"})" +
+        seed.map(x => s" REPEATABLE ($x)").getOrElse("")
     }
     // DuckDB `getvariable('x')` → THIS connection's mangled Spark
     // session variable (Spark variables are session-wide and the
     // session is shared, so bare names would leak across connections).
-    // Plain replace — the pattern itself contains the quoted name, so
-    // the outside-literals splitter could never see a whole match.
     // Declared: an UNDECLARED variable errors here where DuckDB
     // returns NULL — an honest binder error beats a silent NULL.
-    s = getVariableRe.replaceAllIn(s, m => {
+    s = SqlLexer.replaceInCode(s, getVariableRe) { m =>
       val n = m.group(1).toLowerCase
-      val ref = tempNs.get().vars.getOrElse(n, n)
-      Regex.quoteReplacement(s"system.session.$ref")
-    })
+      s"system.session.${tempNs.get().vars.getOrElse(n, n)}"
+    }
     // DuckDB/PG in-aggregate ordering: string_agg(e, sep ORDER BY k) →
     // sorted-struct collect + array_join (array_join skips NULL
     // elements, matching string_agg). NOT Spark's WITHIN GROUP
@@ -4500,71 +4386,70 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // aggregate rewrite when any other DISTINCT aggregate shares the
     // query ("AttributeReference cannot be cast to SortOrder" —
     // fuzzer find, seed 1030).
-    s = orderedAggRe.replaceAllIn(s, m => {
-      val args = splitTopLevel(m.group(2).trim, ',').map(_.trim)
+    s = SqlLexer.replaceInCode(s, orderedAggRe) { m =>
+      val args = SqlLexer.splitTopLevel(m.group(2).trim, ',').map(_.trim)
       val (e, sep) = args match {
         case Seq(only) => (only, "','")
         case Seq(a, b) => (a, b)
         case other => (other.head, other.tail.mkString(", "))
       }
-      val keys = splitTopLevel(m.group(3).trim, ',').map { k0 =>
+      val keys = SqlLexer.splitTopLevel(m.group(3).trim, ',').map { k0 =>
         val k = k0.trim; val lower = k.toLowerCase
         if (lower.endsWith(" desc")) (k.dropRight(5).trim, true)
         else if (lower.endsWith(" asc")) (k.dropRight(4).trim, false)
         else (k, false)
       }
       val dirs = keys.map(_._2).distinct
-      if (dirs.length > 1) Regex.quoteReplacement(m.matched) // mixed: surface at parse
+      if (dirs.length > 1) m.matched // mixed: surface at parse
       else {
         val fields = keys.zipWithIndex.map { case ((k, _), i) => s"$k AS __k$i" }.mkString(", ")
         val sorted0 = s"transform(array_sort(collect_list(struct($fields, CAST($e AS STRING) AS __v))), s -> s.__v)"
         val sorted = if (dirs.headOption.contains(true)) s"reverse($sorted0)" else sorted0
         // all-NULL (or empty) group → NULL like the aggregate, not ''
         val filtered = s"filter($sorted, __sa -> __sa IS NOT NULL)"
-        Regex.quoteReplacement(
-          s"(CASE WHEN size($filtered) = 0 THEN CAST(NULL AS STRING) " +
-          s"ELSE array_join($filtered, $sep) END)")
+        s"(CASE WHEN size($filtered) = 0 THEN CAST(NULL AS STRING) " +
+          s"ELSE array_join($filtered, $sep) END)"
       }
-    })
+    }
     // DuckDB ordered aggregates Spark lacks: first/last/list(expr ORDER
     // BY key [DESC]) → sort collect_list(struct(key, expr)) and project
     // the value back out (structs sort by field order, key first)
-    s = orderedFllRe.replaceAllIn(s, m => {
+    s = SqlLexer.replaceInCode(s, orderedFllRe) { m =>
       val (fn, e) = (m.group(1).toLowerCase, m.group(2).trim)
       val keysRaw = m.group(3).trim + Option(m.group(4)).map(" " + _).getOrElse("")
       // per-key direction: all-ASC sorts directly, all-DESC sorts then
       // reverses (lexicographic reverse == every key descending);
       // MIXED directions cannot be expressed with array_sort — pass
       // the original text through so the error surfaces at parse
-      val keys = splitTopLevel(keysRaw, ',').map { k0 =>
+      val keys = SqlLexer.splitTopLevel(keysRaw, ',').map { k0 =>
         val k = k0.trim; val lower = k.toLowerCase
         if (lower.endsWith(" desc")) (k.dropRight(5).trim, true)
         else if (lower.endsWith(" asc")) (k.dropRight(4).trim, false)
         else (k, false)
       }
       val dirs = keys.map(_._2).distinct
-      if (dirs.length > 1) Regex.quoteReplacement(m.matched)
+      if (dirs.length > 1) m.matched
       else {
         val fields = keys.zipWithIndex.map { case ((k, _), i) => s"$k AS __k$i" }.mkString(", ")
         val sorted0 = s"transform(array_sort(collect_list(struct($fields, $e AS __v))), s -> s.__v)"
         val sorted = if (dirs.headOption.contains(true)) s"reverse($sorted0)" else sorted0
-        Regex.quoteReplacement(fn match {
+        fn match {
           // DuckDB first keeps a leading NULL; any_value skips to the
           // first NON-NULL in order (probed, fuzzer find)
           case "first" => s"element_at($sorted, 1)"
           case "any_value" => s"element_at(filter($sorted, __av -> __av IS NOT NULL), 1)"
           case "last" => s"element_at($sorted, -1)"
           case _ => sorted // list / array_agg
-        })
+        }
       }
-    })
-    s = readParquetRe.replaceAllIn(s, m => Regex.quoteReplacement(s"parquet.`${m.group(1)}`"))
-    s = readCsvRe.replaceAllIn(s, m => Regex.quoteReplacement(s"csv.`${m.group(1)}`"))
-    s = readJsonRe.replaceAllIn(s, m => Regex.quoteReplacement(s"json.`${m.group(1)}`"))
+    }
+    s = SqlLexer.replaceInCode(s, readParquetRe)(m => s"parquet.`${m.group(1)}`")
+    s = SqlLexer.replaceInCode(s, readCsvRe)(m => s"csv.`${m.group(1)}`")
+    s = SqlLexer.replaceInCode(s, readJsonRe)(m => s"json.`${m.group(1)}`")
     // generate_series as a FROM-position TVF (stop-INCLUSIVE, vs range's
     // exclusive stop; DuckDB names the column generate_series)
-    s = genSeriesTvfRe.replaceAllIn(s, m => {
-      val args = splitTopLevel(m.group(2), ',').map(_.trim)
+    s = SqlLexer.replaceInCode(s, genSeriesTvfRe) { m =>
+      val args = SqlLexer.splitTopLevel(m.group(2), ',').map(_.trim)
       val sub = args match {
         case Seq(b) => Some(s"range(0, ($b) + 1)")
         case Seq(a, b) => Some(s"range($a, ($b) + 1)")
@@ -4573,29 +4458,28 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         case _ => None
       }
       sub match {
-        case Some(r) => Regex.quoteReplacement(
-          s"${m.group(1)} (SELECT id AS generate_series FROM $r)")
-        case None => Regex.quoteReplacement(m.matched)
+        case Some(r) => s"${m.group(1)} (SELECT id AS generate_series FROM $r)"
+        case None => m.matched
       }
-    })
+    }
     // x [NOT] SIMILAR TO 'p' → [NOT] RLIKE '^(?:p)$' — DuckDB's SIMILAR
     // TO is a full-string regex match (regexp_full_match), not PG's
     // %-wildcard hybrid
-    s = similarToRe.replaceAllIn(s, m => {
+    s = SqlLexer.replaceInCode(s, similarToRe) { m =>
       val lit = m.group(2)
       val body = lit.substring(1, lit.length - 1)
       val neg = if (m.group(1) != null) "NOT " else ""
-      Regex.quoteReplacement(s"${neg}RLIKE '^(?:$body)$$'")
-    })
+      s"${neg}RLIKE '^(?:$body)$$'"
+    }
     // regexp_replace on the wire gets DuckDB's semantics (first-match
     // unless 'g'); the internal name keeps the Scala corpus (Column
     // API, which resolves registry names in Spark 4) on Spark-native
     // global behavior
-    s = replaceOutsideLiterals(s, "(?i)\\bregexp_replace\\s*\\(".r, "graft_regexp_replace(")
+    s = SqlLexer.replaceInCode(s, regexpReplaceRe)(_ => "graft_regexp_replace(")
     // x [NOT] GLOB 'pat' → [NOT] RLIKE anchored regex: DuckDB GLOB is a
     // full-string filesystem-style match (* ? [set]); regex specials in
     // the pattern are escaped, glob metachars translate
-    s = globRe.replaceAllIn(s, m => {
+    s = SqlLexer.replaceInCode(s, globRe) { m =>
       val lit = m.group(2)
       // the literal arrives with backslashes DOUBLED by
       // escapeLiteralBackslashes — undo, build the regex over the raw
@@ -4604,8 +4488,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val raw = lit.substring(1, lit.length - 1).replace("\\\\", "\\")
       val sqlText = globToRegex(raw).replace("\\", "\\\\")
       val neg = if (m.group(1) != null) "NOT " else ""
-      Regex.quoteReplacement(s"${neg}RLIKE '^(?:$sqlText)$$'")
-    })
+      s"${neg}RLIKE '^(?:$sqlText)$$'"
+    }
     // constructs Spark's parser rejects outright (QUALIFY, DISTINCT ON,
     // UNION BY NAME) — structural rewrites that hoist into standard SQL
     s = rewriteStructural(s)
@@ -4615,37 +4499,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   /** Double every backslash inside '…' literals (see the rewrite()
     * call-site comment). Only '' doubling is honored as an in-literal
     * escape — the same lexing psql and DuckDB apply. */
-  private def escapeLiteralBackslashes(sql: String): String = {
-    if (!sql.contains('\\')) return sql
-    val sb = new StringBuilder(sql.length + 8)
-    var inStr = false
-    var ident = 0.toChar // '"' or '`' when inside a quoted identifier, else 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (ident != 0) {
-        // inside "…" / `…` identifiers quotes double to escape; a '
-        // in here is identifier TEXT, not a literal delimiter
-        // (doubleQuotedIdentifiers is on — see GraftSession)
-        if (c == ident) {
-          if (i + 1 < sql.length && sql.charAt(i + 1) == ident) { sb += c; sb += c; i += 2 }
-          else { sb += c; ident = 0.toChar; i += 1 }
-        } else { sb += c; i += 1 }
-      } else if (!inStr) {
-        sb += c
-        if (c == '\'') inStr = true
-        else if (c == '"' || c == '`') ident = c
-        i += 1
-      } else c match {
-        case '\'' =>
-          if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { sb.append("''"); i += 2 }
-          else { sb += c; inStr = false; i += 1 }
-        case '\\' => sb.append("\\\\"); i += 1
-        case o => sb += o; i += 1
-      }
-    }
-    sb.toString
-  }
+  private def escapeLiteralBackslashes(sql: String): String =
+    if (!sql.contains('\\')) sql
+    else SqlLexer.spans(sql).map { sp =>
+      val t = sql.substring(sp.start, sp.end)
+      if (sp.kind == SqlLexer.Literal) t.replace("\\", "\\\\") else t
+    }.mkString
 
   /** Rewrite the type name of CAST/TRY_CAST expressions when it is a
     * DuckDB spelling Spark lacks (typeAliasMap): find each cast's own
@@ -4657,30 +4516,14 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def rewriteCastTypeNames(sql: String): String = {
     if (!sql.toLowerCase.contains("cast")) return sql
     var s = sql
-    for (m <- castOpenRe.findAllMatchIn(sql).toList.reverse) {
-      var depth = 1
-      var i = m.end
-      var inq = false
+    for (m <- SqlLexer.codeMatches(sql, castOpenRe).toList.reverse) {
+      val close = SqlLexer.matchingClose(s, m.end - 1)
       var asPos = -1
-      while (i < s.length && depth > 0) {
-        val c = s.charAt(i)
-        if (inq) { if (c == '\'') inq = false }
-        else c match {
-          case '\'' => inq = true
-          case '(' | '[' => depth += 1
-          case ')' | ']' => depth -= 1
-          case 'a' | 'A' if depth == 1 =>
-            val wordEnd = i + 2
-            def isWord(ch: Char) = ch.isLetterOrDigit || ch == '_'
-            if (wordEnd < s.length && (s.charAt(i + 1) == 's' || s.charAt(i + 1) == 'S') &&
-                !isWord(s.charAt(wordEnd)) && (i == 0 || !isWord(s.charAt(i - 1))))
-              asPos = i
-          case _ =>
-        }
-        i += 1
+      SqlLexer.scanTopLevel(s, m.end) { i =>
+        if (SqlLexer.keywordAt(s, i, "as")) asPos = i
+        false
       }
-      if (depth == 0 && asPos > 0) {
-        val close = i - 1
+      if (close > 0 && asPos > 0) {
         val typeName = s.substring(asPos + 2, close).trim
         val isTry = m.matched.toLowerCase.contains("try_")
         val intTypes = Set("bigint", "int", "integer", "smallint", "tinyint", "int8", "int4", "int2")
@@ -4770,43 +4613,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     rx.toString
   }
 
-  /** Apply a regex replacement only OUTSIDE '…' string literals and
-    * "…" / `…` quoted identifiers — a rewrite like the regexp_replace
-    * rename must never mutate literal data that happens to contain the
-    * function's name. Quote-doubling is the only in-region escape, the
-    * same lexing escapeLiteralBackslashes applies. */
-  private def replaceOutsideLiterals(sql: String, re: Regex, repl: String): String =
-    replaceOutsideLiteralsF(sql, re)(_ => Regex.quoteReplacement(repl))
-
-  /** Function-replacement form of [[replaceOutsideLiterals]] for
-    * rewrites whose replacement depends on the match (the enum ::cast
-    * scan) — same literal/identifier skipping. */
-  private def replaceOutsideLiteralsF(sql: String, re: Regex)(
-      repl: Regex.Match => String): String = {
-    val out = new StringBuilder(sql.length + 16)
-    var i = 0
-    var segStart = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        out.append(re.replaceAllIn(sql.substring(segStart, i), repl))
-        var j = i + 1
-        var done = false
-        while (j < sql.length && !done) {
-          if (sql.charAt(j) == c) {
-            if (j + 1 < sql.length && sql.charAt(j + 1) == c) j += 2 else done = true
-          } else j += 1
-        }
-        val end = if (done) j + 1 else sql.length
-        out.append(sql.substring(i, end))
-        i = end
-        segStart = end
-      } else i += 1
-    }
-    out.append(re.replaceAllIn(sql.substring(segStart), repl))
-    out.toString
-  }
-
   /** DuckDB/PG allow a generator nested in a SELECT-list expression
     * (`select unnest(xs) + 10 from t`); Spark requires it at top level.
     * Hoist the single unnest/explode into an inner SELECT that explodes
@@ -4819,49 +4625,21 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def hoistNestedUnnest(sql: String): Option[String] = {
     if (!sql.trim.toLowerCase.startsWith("select")) return None
     val genRe = """(?i)\b(unnest|explode)\s*\(""".r
-    val ms = genRe.findAllMatchIn(sql).toList
+    val ms = SqlLexer.codeMatches(sql, genRe).toList
     if (ms.size != 1) return None
     val m = ms.head
-    var depth = 1; var i = m.end; var inStr = false
-    while (i < sql.length && depth > 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (depth != 0) return None
-    val arg = sql.substring(m.end, i - 1)
-    def topLevelKw(s: String, from: Int, kws: Seq[String]): Int = {
-      var d = 0; var str0 = false; var j = from
-      while (j < s.length) {
-        val c = s.charAt(j)
-        if (str0) { if (c == '\'') str0 = false }
-        else c match {
-          case '\'' => str0 = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ if d == 0 && kws.exists(kwAt(s, j, _)) => return j
-          case _ =>
-        }
-        j += 1
-      }
-      -1
-    }
-    val fromPos0 = topLevelKw(sql, 0, Seq("from"))
+    val close = SqlLexer.matchingClose(sql, m.end - 1)
+    if (close < 0) return None
+    val arg = sql.substring(m.end, close)
+    val fromPos0 = SqlLexer.topLevelKeyword(sql, 0, "from")
     if (fromPos0 >= 0 && fromPos0 < m.start)
       return None // generator after FROM (in WHERE etc) — not a select-list hoist
-    val mutated = sql.substring(0, m.start) + "__unnest" + sql.substring(i)
-    val fromPos = topLevelKw(mutated, 0, Seq("from"))
+    val mutated = sql.substring(0, m.start) + "__unnest" + sql.substring(close + 1)
+    val fromPos = SqlLexer.topLevelKeyword(mutated, 0, "from")
     if (fromPos < 0)
       return Some(s"$mutated FROM (SELECT explode($arg) AS __unnest)")
-    val tailKws = Seq("group", "having", "order", "limit", "qualify",
-      "union", "intersect", "except", "window")
-    val tailPos = topLevelKw(mutated, fromPos, tailKws)
+    val tailPos = SqlLexer.topLevelKeyword(mutated, fromPos, "group", "having", "order",
+      "limit", "qualify", "union", "intersect", "except", "window")
     val (core, trailer) =
       if (tailPos < 0) (mutated.substring(fromPos), "")
       else (mutated.substring(fromPos, tailPos), " " + mutated.substring(tailPos))
@@ -4879,40 +4657,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   // spark.sql sees the text. Each rewrite is conservative: any shape it
   // doesn't understand (or whose hoisted form fails analysis) passes
   // through unchanged so the original parser error surfaces.
-
-  /** True iff the word-bounded keyword starts at position i (ASCII
-    * case-insensitive). */
-  private def kwAt(s: String, i: Int, kw: String): Boolean =
-    s.regionMatches(true, i, kw, 0, kw.length) &&
-      (i == 0 || { val p = s.charAt(i - 1); !p.isLetterOrDigit && p != '_' }) &&
-      (i + kw.length >= s.length || {
-        val n = s.charAt(i + kw.length); !n.isLetterOrDigit && n != '_' })
-
-  /** Scan for the first position (≥ from) OUTSIDE string literals,
-    * backticks and parens where `hit` fires; -1 when it never does.
-    * `hit` may also be used purely for side effects (always None). */
-  private def scanTopLevel(s: String, from: Int)(hit: Int => Option[Int]): Int = {
-    var depth = 0; var inStr = false; var inTick = false; var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 =>
-          hit(i) match { case Some(r) => return r; case None => }
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def firstTopLevelKw(s: String, from: Int, kws: String*): Int =
-    scanTopLevel(s, from)(i => if (kws.exists(kwAt(s, i, _))) Some(i) else None)
 
   /** Result schema of an already-standard-SQL fragment, or None when it
     * doesn't analyze (the caller then passes the original through). */
@@ -4938,20 +4682,20 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * outer projection drops it; an alias-only predicate just filters
     * the wrapped query. */
   private def rewriteQualify(sql: String): String = {
-    val qIdx = firstTopLevelKw(sql, 0, "qualify")
+    val qIdx = SqlLexer.topLevelKeyword(sql, 0, "qualify")
     if (qIdx < 0) return sql
     val pre = sql.substring(0, qIdx).trim
     val rest = sql.substring(qIdx + "qualify".length)
-    val tailIdx = firstTopLevelKw(rest, 0, "order", "limit", "offset")
+    val tailIdx = SqlLexer.topLevelKeyword(rest, 0, "order", "limit", "offset")
     val (pred, tail) =
       if (tailIdx < 0) (rest.trim, "")
       else (rest.substring(0, tailIdx).trim, rest.substring(tailIdx).trim)
     if (pred.isEmpty) return sql
-    val hasWindow = firstTopLevelKw(pred, 0, "over") >= 0
+    val hasWindow = SqlLexer.topLevelKeyword(pred, 0, "over") >= 0
     if (!hasWindow)
       s"SELECT * FROM ( $pre ) __graft_q WHERE ($pred) $tail".trim
     else {
-      val fromIdx = firstTopLevelKw(pre, 0, "from")
+      val fromIdx = SqlLexer.topLevelKeyword(pre, 0, "from")
       if (fromIdx < 0) return sql
       val inner = pre.substring(0, fromIdx).trim +
         s", ($pred) AS __graft_qualify " + pre.substring(fromIdx)
@@ -4969,34 +4713,22 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * first-row-per-group semantics; DuckDB without ORDER BY picks an
     * arbitrary row — we order by the ON keys for determinism). */
   private def rewriteDistinctOn(sql: String): String = {
-    val selIdx = firstTopLevelKw(sql, 0, "select")
+    val selIdx = SqlLexer.topLevelKeyword(sql, 0, "select")
     if (selIdx < 0) return sql
     val afterSel = selIdx + "select".length
     val onM = """(?is)^\s*distinct\s+on\s*\(""".r
       .findPrefixMatchOf(sql.subSequence(afterSel, sql.length))
     if (onM.isEmpty) return sql
     val openIdx = afterSel + onM.get.end - 1
-    // balanced close paren for the ON key list (string-aware)
-    var depth = 0; var inStr = false; var j = openIdx; var closeIdx = -1
-    while (j < sql.length && closeIdx < 0) {
-      val c = sql.charAt(j)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) closeIdx = j
-        case _ =>
-      }
-      j += 1
-    }
+    val closeIdx = SqlLexer.matchingClose(sql, openIdx)
     if (closeIdx < 0) return sql
     val keys = sql.substring(openIdx + 1, closeIdx).trim
-    val fromIdx = firstTopLevelKw(sql, closeIdx + 1, "from")
+    val fromIdx = SqlLexer.topLevelKeyword(sql, closeIdx + 1, "from")
     if (fromIdx < 0) return sql
     val selList = sql.substring(closeIdx + 1, fromIdx).trim
     val rest = sql.substring(fromIdx) // FROM … [ORDER BY …] [LIMIT …]
-    val obIdx = firstTopLevelKw(rest, 0, "order")
-    val limIdx = firstTopLevelKw(rest, 0, "limit", "offset")
+    val obIdx = SqlLexer.topLevelKeyword(rest, 0, "order")
+    val limIdx = SqlLexer.topLevelKeyword(rest, 0, "limit", "offset")
     val cutIdx = Seq(obIdx, limIdx).filter(_ >= 0).sorted.headOption.getOrElse(rest.length)
     val base = rest.substring(0, cutIdx).trim
     val orderBy = if (obIdx < 0) "" else
@@ -5024,17 +4756,17 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def rewriteUnionByName(sql: String): String = {
     val byNameRe = """(?is)^union\s+(?:(all)\s+|distinct\s+)?by\s+name\b""".r
     // CTE prefix (kept outside, in scope for all branches)
-    val selStart = firstTopLevelKw(sql, 0, "select", "from", "values", "table")
+    val selStart = SqlLexer.topLevelKeyword(sql, 0, "select", "from", "values", "table")
     if (selStart < 0) return sql
     val prefix = sql.substring(0, selStart)
     val body = sql.substring(selStart)
     case class Op(start: Int, end: Int, all: Boolean)
     val ops = scala.collection.mutable.ListBuffer[Op]()
-    scanTopLevel(body, 0) { i =>
-      if (kwAt(body, i, "union"))
+    SqlLexer.scanTopLevel(body, 0) { i =>
+      if (SqlLexer.keywordAt(body, i, "union"))
         byNameRe.findPrefixMatchOf(body.subSequence(i, body.length)).foreach(m =>
           ops += Op(i, i + m.end, m.group(1) != null))
-      None
+      false
     }
     if (ops.isEmpty) return sql
     if (ops.map(_.all).distinct.length > 1) return sql // mixed ALL/DISTINCT: pass through
@@ -5045,7 +4777,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // to the whole set operation, not the branch
     var tail = ""
     val lastB = branches.last
-    val tIdx = firstTopLevelKw(lastB, 0, "order", "limit", "offset")
+    val tIdx = SqlLexer.topLevelKeyword(lastB, 0, "order", "limit", "offset")
     if (tIdx >= 0) {
       tail = " " + lastB.substring(tIdx).trim
       branches = branches.init :+ lastB.substring(0, tIdx).trim
@@ -5114,8 +4846,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       // bare-item detection: SELECT <items> FROM … with exactly one
       // item being the nextval call itself
       val bareItemRe = """(?is)^\s*nextval\s*\(\s*'[^']*'\s*\)\s*(?:(?:as\s+)?([\w`]+))?\s*$""".r
-      val fromIdx = if (src.toLowerCase.startsWith("select")) firstTopLevelKw(src, 0, "from") else -1
-      val items = if (fromIdx > 0) splitTopLevel(src.substring("select".length, fromIdx), ',') else Seq.empty
+      val fromIdx = if (src.toLowerCase.startsWith("select")) SqlLexer.topLevelKeyword(src, 0, "from") else -1
+      val items = if (fromIdx > 0) SqlLexer.splitTopLevel(src.substring("select".length, fromIdx), ',') else Seq.empty
       val nvIdx = items.indexWhere(i => nextvalRe.findFirstIn(i).isDefined)
       val bareAlias = if (nvIdx >= 0) bareItemRe.findFirstMatchIn(items(nvIdx)).map(b =>
         Option(b.group(1)).getOrElse("__graft_sv")) else None
@@ -5150,10 +4882,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           val n = txnExec(rewrite(nextvalRe.replaceAllIn(src, _ => "0L"))).count()
           if (n == 0) return ExecResult(null, "INSERT 0 0")
           val base = reserve(n)
-          val obIdx = firstTopLevelKw(src, 0, "order")
+          val obIdx = SqlLexer.topLevelKeyword(src, 0, "order")
           val winOrder = if (obIdx < 0) "(SELECT 1)" else {
             val afterOb = src.substring(obIdx).replaceFirst("(?is)^order\\s+by\\s+", "")
-            val stop = firstTopLevelKw(afterOb, 0, "limit", "offset")
+            val stop = SqlLexer.topLevelKeyword(afterOb, 0, "limit", "offset")
             if (stop >= 0) afterOb.substring(0, stop).trim else afterOb.trim
           }
           val applied = nextvalRe.replaceAllIn(src, _ => Regex.quoteReplacement(
@@ -5273,7 +5005,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       // quoted assigned-column spellings match the field name (same
       // r15b fix as the ON CONFLICT SET parser: `SET "v" = …` silently
       // skipped the assignment)
-      val sets = splitTopLevel(setClause, ',').map { a =>
+      val sets = SqlLexer.splitTopLevel(setClause, ',').map { a =>
         val Array(c, e) = a.split("=", 2).map(_.trim)
         c.replace("\"", "").replace("`", "").toLowerCase -> e
       }.toMap
@@ -5530,7 +5262,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             // existing row (table alias) and excluded.*; a conflicting
             // pair failing cond keeps the existing row unchanged, and
             // the source row is neither inserted nor counted.
-            val (setsPart, whereOpt) = splitTopLevelWhere(sets0)
+            // the first top-level WHERE (subqueries in SET expressions
+            // legitimately contain their own)
+            val w = SqlLexer.topLevelKeyword(sets0, 0, "where")
+            val (setsPart, whereOpt) =
+              if (w < 0) (sets0.trim, None)
+              else (sets0.substring(0, w).trim, Some(sets0.substring(w + 5).trim))
             // NOT NULL and the row-local constraints (CHECK/enum)
             // apply to the incoming rows BEFORE conflict resolution —
             // PG/DuckDB reject the insert attempt even when the row
@@ -5548,7 +5285,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             // the assignment pre-fix (the lowercased quoted spelling
             // never matched a field name — r15b find, surfaced by the
             // INSERT OR REPLACE sugar generating backticked sets)
-            val sets = splitTopLevel(setsPart, ',').map { a =>
+            val sets = SqlLexer.splitTopLevel(setsPart, ',').map { a =>
               val Array(c, e) = a.split("=", 2).map(_.trim)
               c.replace("\"", "").replace("`", "").toLowerCase -> e
             }.toMap
@@ -5625,7 +5362,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     if (i >= sql.length) return None
     val (source, rest) =
       if (sql.charAt(i) == '(') {
-        val c = balancedClose(sql, i).getOrElse(return None)
+        val c = SqlLexer.matchingClose(sql, i)
+        if (c < 0) return None
         (sql.substring(i, c + 1), sql.substring(c + 1))
       } else {
         val m = """^[\w."]+""".r.findFirstMatchIn(sql.substring(i)).getOrElse(return None)
@@ -5647,7 +5385,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val m = """(?is)^\s*on\s+(.+?)(?:\s+into\s+name\s+(\w+)\s+value\s+(\w+))?\s*;?\s*$""".r
         .findFirstMatchIn(rest).getOrElse(throw new IllegalArgumentException(
           "UNPIVOT: expected ON <columns> [INTO NAME n VALUE v]"))
-      val onCols = splitTopLevel(m.group(1), ',').map(_.replace("\"", "").trim)
+      val onCols = SqlLexer.splitTopLevel(m.group(1), ',').map(_.replace("\"", "").trim)
       val nameCol = Option(m.group(2)).getOrElse("name")
       val valCol = Option(m.group(3)).getOrElse("value")
       val onSet = onCols.map(_.toLowerCase).toSet
@@ -5666,7 +5404,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val aggText = m.group(3).trim
     val vals: Seq[Any] = Option(m.group(2)) match {
       case Some(inList) =>
-        splitTopLevel(inList, ',').map { it =>
+        SqlLexer.splitTopLevel(inList, ',').map { it =>
           val t = it.trim
           if (t.startsWith("'") && t.endsWith("'"))
             t.substring(1, t.length - 1).replace("''", "'")
@@ -5682,7 +5420,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         d.filter(_ != null)
     }
     val groupCols = Option(m.group(4)) match {
-      case Some(g) => splitTopLevel(g, ',').map(_.replace("\"", "").trim)
+      case Some(g) => SqlLexer.splitTopLevel(g, ',').map(_.replace("\"", "").trim)
       case None =>
         // DuckDB's implicit grouping (measured): every source column
         // not referenced by ON or USING
@@ -5696,7 +5434,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       out = out.select((groupCols.map(fcol) ++
         vals.map(v => coalesce(fcol(s"`${v.toString}`"), lit(0)).as(v.toString))): _*)
     Option(m.group(5)).foreach { ob =>
-      out = out.orderBy(splitTopLevel(ob, ',').map(e => expr(e.trim)): _*)
+      out = out.orderBy(SqlLexer.splitTopLevel(ob, ',').map(e => expr(e.trim)): _*)
     }
     Option(m.group(6)).foreach(n => out = out.limit(n.toInt))
     Some(Engine.ExecResult(out, "SELECT"))
@@ -5988,30 +5726,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       spark.sparkContext.parallelize(out, 1), schema), "SELECT")
   }
 
-  /** Split `SET … [WHERE cond]` at the first WHERE keyword appearing at
-    * paren/quote depth 0 (subqueries inside SET expressions
-    * legitimately contain their own WHERE). */
-  private def splitTopLevelWhere(s: String): (String, Option[String]) = {
-    val lower = s.toLowerCase
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'w' | 'W' if depth == 0 && lower.regionMatches(i, "where", 0, 5) &&
-            (i == 0 || !lower.charAt(i - 1).isLetterOrDigit) &&
-            (i + 5 >= s.length || !lower.charAt(i + 5).isLetterOrDigit) =>
-          return (s.substring(0, i).trim, Some(s.substring(i + 5).trim))
-        case _ =>
-      }
-      i += 1
-    }
-    (s.trim, None)
-  }
-
   /** Append a DataFrame whose plan may read the target table: stage the
     * rows first (Spark refuses to scan and write one table in a job).
     * `check` runs against the materialized staged copy — validations
@@ -6228,7 +5942,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     var fks = Seq.empty[Fk]
     var enumCols = Seq.empty[(String, String)]
     var checks = Seq.empty[String]
-    val kept = splitTopLevel(colSpec, ',').flatMap { item0 =>
+    val kept = SqlLexer.splitTopLevel(colSpec, ',').flatMap { item0 =>
       val item = item0.trim
       val lower = item.toLowerCase
       if (lower.startsWith("primary key")) {
@@ -6709,7 +6423,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       if (!file.isFile)
         throw new IllegalArgumentException(s"IMPORT DATABASE: missing $path/$f")
       val text = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
-      splitTopLevel(text, ';').map(_.trim).filter(_.nonEmpty).foreach { st =>
+      SqlLexer.splitTopLevel(text, ';').map(_.trim).filter(_.nonEmpty).foreach { st =>
         execute(st)
         n += 1
       }
@@ -7537,94 +7251,20 @@ object Engine {
     val hasVal = new java.util.concurrent.atomic.AtomicBoolean(false)
   }
 
-  /** First top-level (outside strings/parens/brackets) word-bounded
-    * occurrence of a keyword, case-insensitive; -1 when absent. */
-  private def topKwIn(s: String, kw: String): Int = {
-    var depth = 0; var inq = false; var k = 0
-    while (k < s.length) {
-      val ch = s.charAt(k)
-      if (inq) { if (ch == '\'') inq = false }
-      else ch match {
-        case '\'' => inq = true
-        case '(' | '[' | '{' => depth += 1
-        case ')' | ']' | '}' => depth -= 1
-        case _ if depth == 0 =>
-          if (s.regionMatches(true, k, kw, 0, kw.length) &&
-              (k == 0 || { val p = s.charAt(k - 1); !p.isLetterOrDigit && p != '_' }) &&
-              (k + kw.length >= s.length || {
-                val n = s.charAt(k + kw.length); !n.isLetterOrDigit && n != '_' }))
-            return k
-        case _ =>
-      }
-      k += 1
-    }
-    -1
-  }
-
-  /** Backward walk over already-emitted text to find where the operand
-    * of a postfix construct (subscript `[…]`, JSON `->`) starts:
-    * balanced ()/[] groups chained with an optional identifier head
-    * (foo(a)[1], x.y[1], (sub)[1], a[1][2]). A quoted-literal operand
-    * ('abc'[2]) or anything unrecognized returns -1 → caller passes the
-    * construct through untouched. */
-  /** `a // b` → graft_fdiv(a, b): left operand via operandStart (the
-    * emitted text), right operand via a forward primary-expression
-    * scan (unary sign, literal/identifier/call/parenthesized, trailing
-    * subscripts); the right side is recursively rewritten. Falls back
-    * to emitting ` div ` when either operand cannot be delimited. */
+  /** `a // b` → graft_fdiv(a, b): left operand via [[operandStart]]
+    * (the emitted text), right operand via [[forwardOperandEnd]]; the
+    * right side is recursively rewritten. Falls back to emitting ` div `
+    * when either operand cannot be delimited. */
   private def rewriteFloorDiv(sql: String): String = {
     if (!sql.contains("//")) return sql
     val sb = new StringBuilder
-    val len = sql.length
     var i = 0
-    var inStr = false
-    def scanBalanced(from: Int, open: Char, close: Char): Int = {
-      var depth = 0; var j = from; var q = false
-      while (j < len) {
-        val c = sql.charAt(j)
-        if (q) { if (c == '\'') q = false }
-        else if (c == '\'') q = true
-        else if (c == open) depth += 1
-        else if (c == close) { depth -= 1; if (depth == 0) return j + 1 }
-        j += 1
-      }
-      -1
-    }
-    def rhsEnd(from: Int): Int = {
-      var j = from
-      while (j < len && sql.charAt(j).isWhitespace) j += 1
-      while (j < len && (sql.charAt(j) == '-' || sql.charAt(j) == '+')) j += 1
-      if (j >= len) return -1
-      sql.charAt(j) match {
-        case '\'' =>
-          var e = j + 1
-          while (e < len) {
-            if (sql.charAt(e) == '\'') {
-              if (e + 1 < len && sql.charAt(e + 1) == '\'') e += 2
-              else return e + 1
-            } else e += 1
-          }
-          -1
-        case '(' => scanBalanced(j, '(', ')')
-        case '[' => scanBalanced(j, '[', ']')
-        case c if c.isLetterOrDigit || c == '_' || c == '`' =>
-          var e = j
-          while (e < len && { val c2 = sql.charAt(e)
-            c2.isLetterOrDigit || c2 == '_' || c2 == '.' || c2 == '`' }) e += 1
-          // function call?
-          var k = e
-          while (k < len && sql.charAt(k).isWhitespace) k += 1
-          if (k < len && sql.charAt(k) == '(') scanBalanced(k, '(', ')') else e
-        case _ => -1
-      }
-    }
-    while (i < len) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '/' && i + 1 < len && sql.charAt(i + 1) == '/') {
+    while (i < sql.length) {
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
+      else if (sql.startsWith("//", i)) {
         val lhsStart = operandStart(sb)
-        val re = rhsEnd(i + 2)
+        val re = forwardOperandEnd(sql, i + 2)
         if (lhsStart >= 0 && re > 0) {
           val lhs = sb.substring(lhsStart)
           sb.delete(lhsStart, sb.length)
@@ -7632,48 +7272,41 @@ object Engine {
           sb.append(s"graft_fdiv($lhs, $rhs)")
           i = re
         } else { sb.append(" div "); i += 2 }
-      } else { sb += c; i += 1 }
+      } else { sb += sql.charAt(i); i += 1 }
     }
     sb.toString
   }
 
+  /** Backward walk over already-emitted text to find where the operand
+    * of a postfix construct (subscript `[…]`, JSON `->`) starts:
+    * balanced ()/[] groups chained with an optional identifier head
+    * (foo(a)[1], x.y[1], (sub)[1], a[1][2]), or a quoted literal
+    * ('abc'[2]). Anything unrecognized returns -1 → caller passes the
+    * construct through untouched. */
   private def operandStart(s: StringBuilder): Int = {
-    var k = s.length - 1
-    while (k >= 0 && s.charAt(k).isWhitespace) k -= 1 // `x -> 'a'` spacing
+    val text = s.toString
+    var k = text.length - 1
+    while (k >= 0 && text.charAt(k).isWhitespace) k -= 1 // `x -> 'a'` spacing
     var start = -1
     var done = false
     while (!done && k >= 0) {
-      val ch = s.charAt(k)
+      val ch = text.charAt(k)
       if (ch == ')' || ch == ']' || ch == '}') {
-        var depth = 0; var m = k; var inq = false; var matched = -1
-        while (m >= 0 && matched < 0) {
-          val cm = s.charAt(m)
-          if (inq) { if (cm == '\'') inq = false }
-          else cm match {
-            case '\'' => inq = true
-            case ')' | ']' | '}' => depth += 1
-            case '(' | '[' | '{' => depth -= 1; if (depth == 0) matched = m
-            case _ =>
-          }
-          m -= 1
-        }
-        if (matched < 0) { start = -1; done = true }
-        else { start = matched; k = matched - 1 } // keep walking: fn name / chain
+        start = SqlLexer.matchingOpen(text, k)
+        if (start < 0) done = true
+        else k = start - 1 // keep walking: fn name / chain
       } else if (ch.isLetterOrDigit || ch == '_' || ch == '.' || ch == '`') {
         var m = k
-        while (m >= 0 && { val c2 = s.charAt(m)
+        while (m >= 0 && { val c2 = text.charAt(m)
           c2.isLetterOrDigit || c2 == '_' || c2 == '.' || c2 == '`' }) m -= 1
         start = m + 1
         // a `::`-cast chains to the unit before it: 'x'::STRING[2]
-        if (m >= 1 && s.charAt(m) == ':' && s.charAt(m - 1) == ':') k = m - 2
+        if (m >= 1 && text.charAt(m) == ':' && text.charAt(m - 1) == ':') k = m - 2
         else done = true
       } else if (ch == '\'') {
-        // quoted-literal unit ('abc'[2] — DuckDB 1-based string index);
-        // naive wrt doubled '' (rare in subscripted operands)
-        var m = k - 1
-        while (m >= 0 && s.charAt(m) != '\'') m -= 1
-        if (m < 0) { start = -1; done = true }
-        else { start = m; done = true }
+        start = SqlLexer.spans(text).find(sp => sp.kind == SqlLexer.Literal && sp.end == k + 1)
+          .fold(-1)(_.start)
+        done = true
       } else done = true // operator boundary: stop with what we have
     }
     start
@@ -7684,52 +7317,27 @@ object Engine {
     * literal / number / identifier(±call parens) / paren group, plus
     * chained [subscript] groups. -1 when unrecognized. */
   private def forwardOperandEnd(s: String, from: Int): Int = {
-    var k = from
-    while (k < s.length && s.charAt(k).isWhitespace) k += 1
+    def skipWs(k: Int): Int = { var j = k; while (j < s.length && s.charAt(j).isWhitespace) j += 1; j }
+    def group(k: Int): Int = { val c = SqlLexer.matchingClose(s, k); if (c < 0) -1 else c + 1 }
+    var k = skipWs(from)
+    if (k < s.length && (s.charAt(k) == '+' || s.charAt(k) == '-')) k = skipWs(k + 1)
     if (k >= s.length) return -1
-    if (s.charAt(k) == '+' || s.charAt(k) == '-') {
-      k += 1
-      while (k < s.length && s.charAt(k).isWhitespace) k += 1
-      if (k >= s.length) return -1
-    }
-    def skipBalanced(open: Char, close: Char): Boolean = {
-      var depth = 0; var inq = false
-      while (k < s.length) {
-        val c = s.charAt(k)
-        if (inq) { if (c == '\'') inq = false }
-        else if (c == '\'') inq = true
-        else if (c == open) depth += 1
-        else if (c == close) { depth -= 1; if (depth == 0) { k += 1; return true } }
-        k += 1
-      }
-      false
-    }
     val c = s.charAt(k)
-    if (c == '\'') {
-      var e = k + 1; var closed = false
-      while (e < s.length && !closed) {
-        if (s.charAt(e) == '\'') {
-          if (e + 1 < s.length && s.charAt(e + 1) == '\'') e += 2 else { closed = true; e += 1 }
-        } else e += 1
-      }
-      if (!closed) return -1
-      k = e
-    } else if (c == '(' || c == '[') {
-      if (!skipBalanced(c, if (c == '(') ')' else ']')) return -1
-    } else if (c.isDigit) {
+    if (c == '\'') k = SqlLexer.skip(s, k)
+    else if (c == '(' || c == '[') k = group(k)
+    else if (c.isDigit) {
       while (k < s.length && (s.charAt(k).isDigit || s.charAt(k) == '.')) k += 1
       if (k < s.length && (s.charAt(k) == 'e' || s.charAt(k) == 'E')) {
-        val e0 = k + 1
-        var e = e0
+        var e = k + 1
         if (e < s.length && (s.charAt(e) == '+' || s.charAt(e) == '-')) e += 1
         if (e < s.length && s.charAt(e).isDigit) { k = e; while (k < s.length && s.charAt(k).isDigit) k += 1 }
       }
     } else if (c.isLetter || c == '_' || c == '`') {
       while (k < s.length && { val c2 = s.charAt(k)
-        c2.isLetterOrDigit || c2 == '_' || c2 == '.' || c2 == '`' }) k += 1
-      if (k < s.length && s.charAt(k) == '(') { if (!skipBalanced('(', ')')) return -1 }
+        c2.isLetterOrDigit || c2 == '_' || c2 == '.' || c2 == '`' }) k = SqlLexer.skip(s, k) max (k + 1)
+      if (k < s.length && s.charAt(k) == '(') k = group(k)
     } else return -1
-    while (k < s.length && s.charAt(k) == '[') { if (!skipBalanced('[', ']')) return -1 }
+    while (k > 0 && k < s.length && s.charAt(k) == '[') k = group(k)
     k
   }
 
@@ -7744,7 +7352,7 @@ object Engine {
       && !sql.contains("@")) return sql
     val sb = new StringBuilder
     val len = sql.length
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     def binary(opLen: Int, emit: (String, String) => String): Boolean = {
       val start = operandStart(sb)
       val rhsEnd = forwardOperandEnd(sql, i + opLen)
@@ -7761,10 +7369,8 @@ object Engine {
     }
     while (i < len) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { sb += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '`') { sb += c; inTick = true; i += 1 }
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
       else if (c == '*' && i + 1 < len && sql.charAt(i + 1) == '*') {
         if (!binary(2, (l, r) => s"power($l, $r)")) { sb.append("**"); i += 2 }
       } else if (c == '^') {
@@ -7794,11 +7400,11 @@ object Engine {
     if (!sql.contains("->")) return sql
     val sb = new StringBuilder
     val len = sql.length
-    var i = 0; var inStr = false
+    var i = 0
     while (i < len) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
       else if (c == '-' && i + 1 < len && sql.charAt(i + 1) == '>') {
         val text = i + 2 < len && sql.charAt(i + 2) == '>'
         var k = i + (if (text) 3 else 2)
@@ -7812,17 +7418,10 @@ object Engine {
         // a lambda's parameter list never does.
         var rhsEnd = -1
         var intRhs = false
-        if (k < len && sql.charAt(k) == '\'') {
-          var e = k + 1
-          while (e < len && rhsEnd < 0) {
-            if (sql.charAt(e) == '\'') {
-              if (e + 1 < len && sql.charAt(e + 1) == '\'') e += 2 else rhsEnd = e + 1
-            } else e += 1
-          }
-        } else if (k < len && sql.charAt(k).isDigit) {
-          var e = k
-          while (e < len && sql.charAt(e).isDigit) e += 1
-          rhsEnd = e
+        if (k < len && sql.charAt(k) == '\'') rhsEnd = SqlLexer.skip(sql, k)
+        else if (k < len && sql.charAt(k).isDigit) {
+          rhsEnd = k
+          while (rhsEnd < len && sql.charAt(rhsEnd).isDigit) rhsEnd += 1
           intRhs = true
         }
         var start = if (rhsEnd < 0) -1 else operandStart(sb)
@@ -7856,42 +7455,13 @@ object Engine {
     * clause keyword) moves to the front. */
   def rewriteLeadingFrom(sql: String): String = {
     if (!leadingFromRe.matches(sql)) return sql
-    val clauseKw = Set("where", "group", "having", "order", "limit", "qualify", "window", "union", "intersect", "except")
-    // positions of top-level keywords (outside strings/parens)
-    def keywordAt(s: String, i: Int): Option[String] = {
-      if (i > 0 && (s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) return None
-      val rest = s.substring(i).takeWhile(c => c.isLetter).toLowerCase
-      if (rest.nonEmpty && (clauseKw(rest) || rest == "select")) Some(rest) else None
-    }
-    def scan(s: String, from: Int, want: String => Boolean): Int = {
-      var depth = 0; var inStr = false; var inTick = false; var i = from
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (inTick) { if (c == '`') inTick = false }
-        else c match {
-          case '\'' => inStr = true
-          case '`' => inTick = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ if depth == 0 =>
-            keywordAt(s, i) match {
-              case Some(k) if want(k) => return i
-              case _ =>
-            }
-          case _ =>
-        }
-        i += 1
-      }
-      -1
-    }
-    val fromKw = sql.toLowerCase.indexOf("from")
-    val afterFrom = fromKw + 4
-    val selIdx = scan(sql, afterFrom, _ == "select")
+    val afterFrom = sql.toLowerCase.indexOf("from") + 4
+    val selIdx = SqlLexer.topLevelKeyword(sql, afterFrom, "select")
     if (selIdx < 0) return "SELECT * " + sql.trim
     val fromPart = sql.substring(afterFrom, selIdx).trim
     val afterSel = selIdx + 6
-    val clauseIdx = scan(sql, afterSel, clauseKw)
+    val clauseIdx = SqlLexer.topLevelKeyword(sql, afterSel, "where", "group", "having",
+      "order", "limit", "qualify", "window", "union", "intersect", "except")
     val (selList, tail) =
       if (clauseIdx < 0) (sql.substring(afterSel).trim, "")
       else (sql.substring(afterSel, clauseIdx).trim, sql.substring(clauseIdx))
@@ -7920,6 +7490,7 @@ object Engine {
   private val semiAntiRe = """(?i)\b(left\s+|right\s+)?(semi|anti)\s+join\b""".r
   private val similarToRe = """(?i)\b(not\s+)?similar\s+to\s+('(?:[^']|'')*')""".r
   private val globRe = """(?i)\b(not\s+)?glob\s+('(?:[^']|'')*')""".r
+  private val regexpReplaceRe = """(?i)\bregexp_replace\s*\(""".r
   /** DuckDB type names Spark lacks → closest Spark type. `::` form (and
     * the cast-keyword AS form for the unambiguous names). HUGEINT is
     * int128 → DECIMAL(38,0); unsigned ints widen to the next signed
@@ -7947,39 +7518,20 @@ object Engine {
   private val dateDiffRe = """(?i)\b(date_diff|datediff)\s*\(\s*'(\w+)'\s*,""".r
   private val formatFnRe = """(?i)\bformat\s*\(\s*'([^']*)'\s*,""".r
   private val structPackRe = """(?i)\b(?:struct_pack|struct_insert)\s*\(""".r
-  private val dollarTagRe = """\$([A-Za-z_][A-Za-z0-9_]*)?\$""".r
 
   /** PostgreSQL dollar-quoted strings — `$$…$$` and tagged
-    * `$tag$…$tag$` — → standard single-quoted literals. Left-to-right
-    * scan with the same in-string state machine as the bracket
-    * rewriter: a `$$` inside an ordinary `'…'` literal is content, not
-    * an opener. `$1`-style bind placeholders never match (a tag cannot
-    * start with a digit). An unterminated opener passes through. */
-  def rewriteDollarQuotes(sql: String): String = {
-    if (sql.indexOf('$') < 0) return sql
-    val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '$') {
-        dollarTagRe.findPrefixMatchOf(sql.subSequence(i, sql.length)) match {
-          case Some(m) =>
-            val delim = m.matched
-            val end = sql.indexOf(delim, i + delim.length)
-            if (end >= 0) {
-              val body = sql.substring(i + delim.length, end)
-              sb.append('\'').append(body.replace("'", "''")).append('\'')
-              i = end + delim.length
-            } else { sb += c; i += 1 }
-          case None => sb += c; i += 1
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+    * `$tag$…$tag$` — → standard single-quoted literals. The lexer decides
+    * what is a dollar quote: a `$$` inside an ordinary `'…'` literal is
+    * content, and `$1`-style bind placeholders are code. An unterminated
+    * opener passes through. */
+  def rewriteDollarQuotes(sql: String): String =
+    if (sql.indexOf('$') < 0) sql
+    else SqlLexer.spans(sql).map { sp =>
+      val t = sql.substring(sp.start, sp.end)
+      val tag = if (sp.kind == SqlLexer.DollarQuote) t.substring(0, t.indexOf('$', 1) + 1) else ""
+      if (tag.isEmpty || t.length < 2 * tag.length || !t.endsWith(tag)) t
+      else "'" + t.substring(tag.length, t.length - tag.length).replace("'", "''") + "'"
+    }.mkString
 
   /** PG regex-match operators `~ / !~ / ~* / !~*` with a string-literal
     * pattern → `[NOT] RLIKE`; `~*` prefixes `(?i)`. A left-to-right
@@ -7990,11 +7542,11 @@ object Engine {
     if (sql.indexOf('~') < 0) return sql
     val sb = new StringBuilder
     val len = sql.length
-    var i = 0; var inStr = false
+    var i = 0
     while (i < len) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
       else if (c == '~' || (c == '!' && i + 1 < len && sql.charAt(i + 1) == '~')) {
         val neg = c == '!'
         var j = i + (if (neg) 2 else 1)
@@ -8007,13 +7559,8 @@ object Engine {
         while (k < len && sql.charAt(k).isWhitespace) k += 1
         var matched = false
         if (k < len && sql.charAt(k) == '\'') {
-          var e = k + 1; var closed = -1
-          while (e < len && closed < 0) {
-            if (sql.charAt(e) == '\'') {
-              if (e + 1 < len && sql.charAt(e + 1) == '\'') e += 2 else closed = e
-            } else e += 1
-          }
-          if (closed > 0) {
+          val closed = SqlLexer.skip(sql, k) - 1
+          if (closed > k && sql.charAt(closed) == '\'') {
             val lit0 = sql.substring(k, closed + 1)
             if (likeOp) {
               val op = if (ci) "ILIKE" else "LIKE"
@@ -8036,16 +7583,8 @@ object Engine {
     sb.toString
   }
 
-  /** Literal replacement outside single-quoted strings (even segments
-    * of a quote-split are non-string SQL text). */
-  private def replaceOutsideStrings(s: String, target: String, repl: String): String =
-    if (!s.contains(target)) s
-    else s.split("'", -1).zipWithIndex.map { case (p, i) =>
-      if (i % 2 == 0) p.replace(target, repl) else p
-    }.mkString("'")
-
   /** DuckDB `[1,2,3]` list literals → `array(1,2,3)`. A single
-    * string-aware scan: brackets inside string literals pass through,
+    * lexer-driven scan: brackets inside literals and comments pass through,
     * and a bracket immediately after an identifier / `)` / `]` / quote
     * is a subscript, not a literal. List contents (which may contain
     * strings and nested lists) rewrite recursively. */
@@ -8053,62 +7592,33 @@ object Engine {
     if (sql.indexOf('[') < 0) return sql
     val sb = new StringBuilder
     var i = 0
-    var inStr = false
     def subscriptPrefix: Boolean = sb.nonEmpty && {
       val p = sb.charAt(sb.length - 1)
       p.isLetterOrDigit || p == '_' || p == ')' || p == ']' || p == '}' ||
         p == '\'' || p == '"' || p == '`'
     }
-    // first top-level ':' in a subscript body (slice separator); -1 = index
-    def sliceColon(s: String): Int = {
-      var depth = 0; var inq = false; var k = 0
-      while (k < s.length) {
-        val ch = s.charAt(k)
-        if (inq) { if (ch == '\'') inq = false }
-        else ch match {
-          case '\'' => inq = true
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case ':' if depth == 0 => return k
-          case _ =>
-        }
-        k += 1
-      }
-      -1
-    }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
       else if (c == '[') {
-        var depth = 1; var j = i + 1; var s2 = false
-        while (j < sql.length && depth > 0) {
-          val cj = sql.charAt(j)
-          if (s2) { if (cj == '\'') s2 = false }
-          else cj match {
-            case '\'' => s2 = true
-            case '[' => depth += 1
-            case ']' => depth -= 1
-            case _ =>
-          }
-          j += 1
-        }
-        if (depth != 0) { sb += c; i += 1 } // unbalanced: pass through
+        val j = SqlLexer.matchingClose(sql, i) + 1
+        if (j == 0) { sb += c; i += 1 } // unbalanced: pass through
         else if (!subscriptPrefix) {
           val raw = sql.substring(i + 1, j - 1)
           // DuckDB list comprehension [expr FOR v IN list [IF cond]] →
           // transform(filter(list, v -> cond), v -> expr)
-          val forIdx = topKwIn(raw, "for")
+          val forIdx = SqlLexer.topLevelKeyword(raw, 0, "for")
           val compre: Option[String] = if (forIdx < 0) None else {
             val exprPart = raw.substring(0, forIdx).trim
             val rest = raw.substring(forIdx + 3)
-            val inIdx = topKwIn(rest, "in")
+            val inIdx = SqlLexer.topLevelKeyword(rest, 0, "in")
             if (inIdx < 0 || exprPart.isEmpty) None else {
               val v = rest.substring(0, inIdx).trim
               val tail = rest.substring(inIdx + 2)
               // `if` must be the clause keyword (whitespace-separated),
               // not the if(…) function call
-              val ifIdx0 = topKwIn(tail, "if")
+              val ifIdx0 = SqlLexer.topLevelKeyword(tail, 0, "if")
               val ifIdx = if (ifIdx0 >= 0 && ifIdx0 + 2 < tail.length
                 && tail.charAt(ifIdx0 + 2).isWhitespace) ifIdx0 else -1
               val (listPart, cond) =
@@ -8140,7 +7650,8 @@ object Engine {
           else {
             val operand = sb.substring(start)
             sb.delete(start, sb.length)
-            val colon = sliceColon(content)
+            // first top-level ':' is the slice separator
+            val colon = SqlLexer.scanTopLevel(content, 0)(content.charAt(_) == ':')
             if (colon >= 0) {
               val lo = content.substring(0, colon).trim
               val hi = content.substring(colon + 1).trim
@@ -8167,27 +7678,15 @@ object Engine {
     val entryRe = """(?s)^\s*('(?:[^']|'')*')\s*:\s*(.+)$""".r
     val sb = new StringBuilder
     var i = 0
-    var inStr = false
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
+      val e = SqlLexer.skip(sql, i)
+      if (e > i) { sb.append(sql.substring(i, e)); i = e }
       else if (c == '{') {
-        var depth = 1; var j = i + 1; var s2 = false
-        while (j < sql.length && depth > 0) {
-          val cj = sql.charAt(j)
-          if (s2) { if (cj == '\'') s2 = false }
-          else cj match {
-            case '\'' => s2 = true
-            case '{' => depth += 1
-            case '}' => depth -= 1
-            case _ =>
-          }
-          j += 1
-        }
-        if (depth == 0) {
+        val j = SqlLexer.matchingClose(sql, i) + 1
+        if (j > 0) {
           val body = rewriteStructLiterals(sql.substring(i + 1, j - 1))
-          val entries = splitTopLevel(body, ',').map {
+          val entries = SqlLexer.splitTopLevel(body, ',').map {
             case entryRe(k, v) => Some(s"$k, ${v.trim}")
             case _ => None
           }
@@ -8209,38 +7708,17 @@ object Engine {
     if (!low.contains("struct_pack") && !low.contains("struct_insert")) return sql
     val out = new StringBuilder
     var i = 0
-    while (i < sql.length) {
-      structPackRe.findFirstMatchIn(sql.substring(i)) match {
-        case None => out.append(sql.substring(i)); i = sql.length
-        case Some(m) =>
-          val open = i + m.end // index just past '('
-          out.append(sql.substring(i, open))
-          var depth = 1; var j = open; var inS = false
-          while (j < sql.length && depth > 0) {
-            val c = sql.charAt(j)
-            if (inS) { if (c == '\'') inS = false }
-            else c match {
-              case '\'' => inS = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case _ =>
-            }
-            j += 1
-          }
-          if (depth != 0) { out.append(sql.substring(open)); i = sql.length }
-          else {
-            val span = sql.substring(open, j - 1)
-            // := → quoted-name form, outside string literals only
-            val replaced = span.split("'", -1).zipWithIndex.map { case (p, idx) =>
-              if (idx % 2 == 0) p.replaceAll("(\\w+)\\s*:=\\s*", "'$1', ") else p
-            }.mkString("'")
-            out.append(replaced).append(')')
-            i = j
-          }
+    for (m <- SqlLexer.codeMatches(sql, structPackRe) if m.start >= i) {
+      val close = SqlLexer.matchingClose(sql, m.end - 1)
+      if (close >= 0) {
+        out.append(sql.substring(i, m.end))
+          .append(SqlLexer.replaceInCode(sql.substring(m.end, close), namedArgRe)(a => s"'${a.group(1)}', "))
+        i = close
       }
     }
-    out.toString
+    out.append(sql.substring(i)).toString
   }
+  private val namedArgRe = """(\w+)\s*:=\s*""".r
   private val orderedAggRe =
     """(?i)\b(string_agg|listagg|group_concat)\s*\(((?:[^()']|\([^()]*\)|'[^']*')*?)\s+order\s+by\s+((?:[^()']|\([^()]*\)|'[^']*')*?)\)""".r
   private val orderedFllRe =
@@ -8248,32 +7726,6 @@ object Engine {
   private val readParquetRe = """(?i)(?:read_parquet|parquet_scan)\s*\(\s*'([^']+)'\s*\)""".r
   private val readCsvRe = """(?i)(?:read_csv_auto|read_csv)\s*\(\s*'([^']+)'\s*\)""".r
   private val readJsonRe = """(?i)read_json_auto\s*\(\s*'([^']+)'\s*\)""".r
-
-  /** Split on a separator, ignoring separators inside quotes/parens. */
-  def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case `sep` if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Statement splitter for multi-statement simple queries (Q8 fixed:
-    * split, not error). */
-  def splitStatements(sql: String): Seq[String] = splitTopLevel(sql, ';')
 
   /** Bootstrap the catalog: database `main` with the fixture tables as
     * external parquet tables + compat views (SURVEY A25). */

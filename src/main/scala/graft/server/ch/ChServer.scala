@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.server.Engine
+import graft.server.{Engine, SqlLexer}
 import graft.server.pg.{CsvValues, Scram}
 
 /** ClickHouse HTTP frontend (reference ch_server.go): GET/POST query
@@ -103,18 +103,18 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
   }
 
   private def select(ex: HttpExchange, sql0: String): Unit = {
-    var sql = sql0.replace("\r\n", " ").replace('\n', ' ')
+    var sql = sql0
     // FORMAT clause extraction
     var format = "TabSeparated"
-    formatClauseRe.findFirstMatchIn(sql).foreach { m =>
+    SqlLexer.codeMatches(sql, formatClauseRe).nextOption().foreach { m =>
       if (Formats.names.contains(m.group(1)) || m.group(1).equalsIgnoreCase("json")) {
         format = m.group(1)
         sql = sql.substring(0, m.start)
       }
     }
     // reference rewrites (ch_server.go:155-164)
-    sql = sql.replace("version()", "'23.3.1.2823'")
-    sql = limitNmRe.replaceAllIn(sql, m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
+    sql = SqlLexer.mapCode(sql)(_.replace("version()", "'23.3.1.2823'"))
+    sql = SqlLexer.replaceInCode(sql, limitNmRe)(m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
     if (sql.trim.equalsIgnoreCase("select table")) sql = "select `table`"
 
     val res = engine.execute(sql)
@@ -202,24 +202,16 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
       }
     }
 
-  /** POST body head/payload split: read lines until the accumulated
-    * head classifies as a complete statement (reference ch_server.go:118-140);
-    * for INSERT…FORMAT the payload starts after that line. */
+  /** POST body head/payload split: the head grows line by line until it
+    * classifies as INSERT…FORMAT, whose payload starts on the next line
+    * (reference ch_server.go:118-140); otherwise the whole body is the
+    * statement. Line breaks stay in the head — they may sit inside a
+    * literal or end a `--` comment. */
   private def splitHead(body: String): (String, String) = {
-    val sb = new StringBuilder
-    var rest = body
-    var head = ""
-    var done = false
-    while (!done && rest.nonEmpty) {
-      val idx = rest.indexOf('\n')
-      val (line, tail) = if (idx < 0) (rest, "") else (rest.substring(0, idx), rest.substring(idx + 1))
-      sb.append(line)
-      head = sb.toString
-      rest = tail
-      if (insertFormatRe.matches(head) || idx < 0) done = true
-      else sb.append(' ')
-    }
-    (head.trim, rest)
+    var idx = body.indexOf('\n')
+    while (idx >= 0 && !insertFormatRe.matches(body.substring(0, idx)))
+      idx = body.indexOf('\n', idx + 1)
+    if (idx < 0) (body.trim, "") else (body.substring(0, idx).trim, body.substring(idx + 1))
   }
 
   private def readAll(in: InputStream): Array[Byte] = in.readAllBytes()

@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 
-import graft.server.Engine
+import graft.server.{Engine, SqlLexer}
 
 /** One PG client connection: startup → auth → message loop. Mirrors
   * the reference's state machine (pg_conn.go:90-208) with SURVEY's
@@ -188,7 +188,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
         case None =>
       }
       // Q8 fixed: split multi-statement simple queries
-      Engine.splitStatements(sql).foreach(runOne)
+      SqlLexer.splitTopLevel(sql, ';').foreach(runOne)
     } catch {
       case NonFatal(e) =>
         // runtime failures during lazy-SELECT pumping surface here,
@@ -456,45 +456,17 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
 
   // -- $n parameter handling (literal splice, reference A12) ----------------
 
-  private def maxParamIndex(sql: String): Int = {
-    var mx = 0
-    val m = """\$(\d+)""".r
-    m.findAllMatchIn(stripLiterals(sql)).foreach(x => mx = math.max(mx, x.group(1).toInt))
-    mx
-  }
+  // only $n in code is a placeholder: one inside a literal, quoted
+  // identifier, comment or dollar quote is text
+  private val paramRe = """\$(\d+)""".r
 
-  private def stripLiterals(sql: String): String = {
-    val sb = new StringBuilder
-    var inStr = false
-    sql.foreach { c =>
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else sb += c
-    }
-    sb.toString
-  }
+  private def maxParamIndex(sql: String): Int =
+    SqlLexer.codeMatches(sql, paramRe).map(_.group(1).toInt).maxOption.getOrElse(0)
 
   /** $n → escaped literal; None/absent → NULL (describe path). Values
     * are guessed int/float/string like the reference (message.go:430). */
-  private def substituteParams(sql: String, params: Seq[Option[String]]): String = {
-    if (!sql.contains("$")) return sql
-    val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j).isDigit) j += 1
-        val idx = sql.substring(i + 1, j).toInt
-        sb.append(renderParam(params.lift(idx - 1).flatten))
-        i = j
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+  private def substituteParams(sql: String, params: Seq[Option[String]]): String =
+    SqlLexer.replaceInCode(sql, paramRe)(m => renderParam(params.lift(m.group(1).toInt - 1).flatten))
 
   private def renderParam(v: Option[String]): String = v match {
     case None => "NULL"

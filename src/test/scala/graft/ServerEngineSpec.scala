@@ -1803,6 +1803,16 @@ class ServerEngineSpec extends SparkSpecBase {
     val r2 = engine.execute(
       "SELECT 1 AS \"o'clock\", regexp_matches('7', '\\d') AS m").df.head()
     assert(r2.getInt(0) == 1 && r2.getBoolean(1))
+    // keyword and type-alias passes leave literal text alone
+    assert(engine.execute("SELECT 'a semi join b' AS s").df.head().getString(0) == "a semi join b")
+    assert(engine.execute("SELECT 'v::text' AS s").df.head().getString(0) == "v::text")
+    // a ' inside a quoted identifier or a comment opens no literal, so
+    // the list literal after it still rewrites
+    def list(r: org.apache.spark.sql.Row, i: Int) = r.getSeq[Int](i)
+    val r3 = engine.execute("SELECT 1 AS \"it's\", [1, 2] AS l").df.head()
+    assert(r3.getInt(0) == 1 && list(r3, 1) == Seq(1, 2))
+    val r4 = engine.execute("SELECT 1 -- it's\n, [1, 2] AS l").df.head()
+    assert(r4.getInt(0) == 1 && list(r4, 1) == Seq(1, 2))
   }
 
   test("unnest nested in a select-list expression hoists to an inner explode") {

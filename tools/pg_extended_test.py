@@ -255,6 +255,31 @@ def main(port):
     c.send(msg(b"C", b"S" + cstr("sp")), msg(b"S", b""))
     c.drain_until_ready()
 
+    # 5d. $n splices only in code: a ' inside a quoted identifier opens
+    # no literal, and a $1 in a literal, comment or dollar quote is text
+    c.send(
+        msg(b"P", cstr("sq") + cstr("""select 1 as "it's", $1::int as v, '$1' as l """
+                                    """/* $1 */, $q$ $1 $q$ as d""") + struct.pack(">h", 0)),
+        msg(b"B", cstr("") + cstr("sq") + struct.pack(">h", 0) + struct.pack(">h", 1)
+            + struct.pack(">i", 1) + b"7" + struct.pack(">h", 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"S", b""))
+    seq = c.drain_until_ready()
+    row = next((p for t, p in seq if t == b"D"), None)
+    cells = []
+    if row is not None:
+        off = 2
+        for _ in range(struct.unpack(">h", row[:2])[0]):
+            ln = struct.unpack(">i", row[off:off + 4])[0]
+            cells.append(row[off + 4:off + 4 + ln].decode())
+            off += 4 + max(0, ln)
+    ok = cells == ["1", "7", "$1", " $1 "]
+    print(("PASS" if ok else "FAIL") + f" $n splice in code only: {types_of(seq)} {cells}")
+    if not ok:
+        failures.append("param-splice-code-only")
+    c.send(msg(b"C", b"S" + cstr("sq")), msg(b"S", b""))
+    c.drain_until_ready()
+
     # 6. CancelRequest: fire a slow query, cancel from a second conn
     # data-independent and reliably minutes-long uncancelled
     slow = "select sum(id) from range(20000000000)"

@@ -63,6 +63,9 @@ chk "ch select"       "1"        "$($CURL "http://127.0.0.1:$CH/?query=SELECT%20
 chk "ch version"      "23.3.1.2823" "$($CURL "http://127.0.0.1:$CH/?query=SELECT%20version()")"
 chk "ch jsoneachrow"  '{"n":0}'  "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT n_nationkey AS n FROM nation ORDER BY n LIMIT 1 FORMAT JSONEachRow')"
 chk "ch limit n,m"    "NATION_2" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT n_name FROM nation ORDER BY n_nationkey LIMIT 2,1')"
+# CH-side rewrites (version(), LIMIT n,m) touch code only: a literal
+# holding version() or a newline reaches the engine byte-for-byte
+chk "ch literal intact" 'version()|a\nb' "$($CURL "http://127.0.0.1:$CH/" --data-binary $'SELECT \'version()\' AS v, \'a\nb\' AS s' | tr '\t' '|')"
 $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smoke2 (x BIGINT) USING parquet' >/dev/null
 chk "ch insert fmt"   "Ok."      "$(printf 'INSERT INTO smoke2 FORMAT TabSeparated\n10\n11\n' | $CURL "http://127.0.0.1:$CH/" --data-binary @-)"
 chk "ch readback"     "10
