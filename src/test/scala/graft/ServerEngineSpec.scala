@@ -250,6 +250,70 @@ class ServerEngineSpec extends SparkSpecBase {
     }
   }
 
+  test("catalog families: exact rows for one table and one view") {
+    def rows(sql: String): Seq[String] =
+      engine.execute(sql).df.collect().map(_.toString).toSeq
+    fresh("c_fam")
+    engine.execute("drop view if exists main.c_fam_v")
+    engine.execute("create table main.c_fam (id INT PRIMARY KEY, name STRING NOT NULL, " +
+      "amt DECIMAL(10,2)) using parquet")
+    engine.execute("create view main.c_fam_v as select id, name from main.c_fam")
+    try {
+      // pg_catalog
+      assert(rows("select nspname, nspowner from pg_catalog.pg_namespace " +
+        "where nspname = 'main'") == Seq("[main,0]"))
+      assert(rows("select c.relname, c.relkind, n.nspname, c.relhasindex, c.reltuples " +
+        "from pg_catalog.pg_class c join pg_catalog.pg_namespace n on c.relnamespace = n.oid " +
+        "where c.relname like 'c_fam%' order by c.relname") ==
+        Seq("[c_fam,r,main,false,-1.0]", "[c_fam_v,v,main,false,-1.0]"))
+      assert(rows("select c.relname, a.attname, a.atttypid, a.attnum, a.atttypmod, " +
+        "a.attnotnull, a.attisdropped from pg_catalog.pg_class c " +
+        "join pg_catalog.pg_attribute a on a.attrelid = c.oid " +
+        "where c.relname like 'c_fam%' order by c.relname, a.attnum") == Seq(
+        "[c_fam,id,23,1,-1,true,false]", "[c_fam,name,25,2,-1,true,false]",
+        "[c_fam,amt,1700,3,655366,false,false]",
+        "[c_fam_v,id,23,1,-1,false,false]", "[c_fam_v,name,25,2,-1,false,false]"))
+      // every pg_attribute row of these relations hangs off a pg_class oid
+      assert(rows("select count(*) from pg_catalog.pg_attribute a " +
+        "where a.attrelid in (select oid from pg_catalog.pg_class " +
+        "where relname like 'c_fam%')") == Seq("[5]"))
+      // information_schema (data_type in Spark's own spelling)
+      assert(rows("select table_catalog, table_schema, table_name, table_type " +
+        "from information_schema.tables where table_name like 'c_fam%' order by table_name") ==
+        Seq("[spark,main,c_fam,BASE TABLE]", "[spark,main,c_fam_v,VIEW]"))
+      assert(rows("select table_name, column_name, ordinal_position, data_type, is_nullable " +
+        "from information_schema.columns where table_name like 'c_fam%' " +
+        "order by table_name, ordinal_position") == Seq(
+        "[c_fam,id,1,int,YES]", "[c_fam,name,2,string,YES]",
+        "[c_fam,amt,3,decimal(10,2),YES]",
+        "[c_fam_v,id,1,int,YES]", "[c_fam_v,name,2,string,YES]"))
+      assert(rows("select * from information_schema.constraint_column_usage " +
+        "where table_name = 'c_fam'") == Seq("[spark,main,c_fam,id,c_fam_pkey]"))
+      // ClickHouse system.* (views are not tables here)
+      assert(rows("select name, database, uuid, engine, is_temporary, comment " +
+        "from system.tables where name like 'c_fam%'") == Seq("[c_fam,main,uuid,graft,0,]"))
+      assert(rows("select database, `table`, name, type, default_kind from system.columns " +
+        "where `table` like 'c_fam%'") == Seq(
+        "[main,c_fam,id,int,int]", "[main,c_fam,name,string,string]",
+        "[main,c_fam,amt,decimal(10,2),decimal(10,2)]",
+        "[main,c_fam_v,id,int,int]", "[main,c_fam_v,name,string,string]"))
+      // DuckDB duckdb_*()
+      assert(rows("select * from duckdb_tables() where table_name like 'c_fam%'") ==
+        Seq("[memory,main,c_fam,false,false,true,3]"))
+      assert(rows("select * from duckdb_columns() where table_name like 'c_fam%'") == Seq(
+        "[memory,main,c_fam,id,0,false,INTEGER,true]",
+        "[memory,main,c_fam,name,1,false,VARCHAR,true]",
+        "[memory,main,c_fam,amt,2,false,DECIMAL(10,2),true]",
+        "[memory,main,c_fam_v,id,0,false,INTEGER,true]",
+        "[memory,main,c_fam_v,name,1,false,VARCHAR,true]"))
+      assert(rows("select * from duckdb_views() where view_name like 'c_fam%'") ==
+        Seq("[memory,main,c_fam_v,false,false]"))
+    } finally {
+      engine.execute("drop view if exists main.c_fam_v")
+      engine.execute("drop table if exists main.c_fam")
+    }
+  }
+
   test("statement-level PIVOT/UNPIVOT: DuckDB simplified spellings") {
     fresh("c_piv")
     engine.execute("create table main.c_piv as " +
