@@ -117,7 +117,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     def isEmpty: Boolean = pk.isEmpty && unique.isEmpty && notNull.isEmpty &&
       fks.isEmpty && enumCols.isEmpty && checks.isEmpty
   }
-  private val constraints = new ConcurrentHashMap[String, Constraints]()
+  private[server] val constraints = new ConcurrentHashMap[String, Constraints]()
 
   /** User-defined ENUM types (DuckDB CREATE TYPE … AS ENUM): name →
     * allowed values. Columns of an enum type are stored as STRING and
@@ -569,9 +569,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * auto-commits (same declared class as temp-object DDL). Scalar
     * params substitute as parenthesized expressions; TABLE macros
     * splice as a parenthesized subquery. */
-  private case class MacroDef(params: Seq[String], defaults: Map[String, String],
+  private[server] case class MacroDef(params: Seq[String], defaults: Map[String, String],
       body: String, isTable: Boolean)
-  private val macros = new ConcurrentHashMap[String, MacroDef]()
+  private[server] val macros = new ConcurrentHashMap[String, MacroDef]()
 
   /** Bare lower-case macro name: macros live in one namespace like
     * DuckDB's (schema qualifiers accepted and dropped). */
@@ -1096,20 +1096,13 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     tempUserName(name).flatMap(n => tempNs.get().tables.get(n)).getOrElse(name)
 
   /** Lazily analyze a row-returning statement for the extended
-    * protocol's Parse/Describe (no job, no execution): dialect rewrite
-    * plus the connection's temp-name substitution — a prepared
-    * `SELECT … FROM tempview` must describe through the same namespace
-    * Execute resolves (r14; the bare spark.sql path couldn't see the
-    * mangled names). */
-  def analyzeOnly(sql: String): DataFrame = {
-    val rewritten = rewrite(expandMacros(sql))
-    if (tempNs.get().isEmpty) spark.sql(rewritten)
-    else {
-      val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
-      org.apache.spark.sql.GraftBridge.dataset(spark,
-        substituteConnTempReads(parsed))
-    }
-  }
+    * protocol's Parse/Describe (no job, no execution): macro expansion,
+    * then the same query path Execute takes after its intercepts
+    * ([[queryDf]]), so a prepared statement resolves catalog SQL, temp
+    * names and the open transaction's overlays as Execute would. No
+    * side-effecting intercept runs here (nextval, EXPLAIN ANALYZE,
+    * PIVOT value discovery). */
+  def analyzeOnly(sql: String): DataFrame = queryDf(expandMacros(sql))
 
   /** Drop every temp object THIS connection (thread) registered —
     * called at connection teardown, per CH request (pooled threads),
@@ -3335,11 +3328,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def executeInner(sql0: String, allowReserved: Boolean = false): ExecResult = {
     val sqlRaw = sql0.trim.stripSuffix(";").trim
     if (sqlRaw.isEmpty) return ExecResult(null, "EMPTY")
-    // DDL epoch: catalog-compat views (information_schema / pg_catalog /
-    // system.*) are rebuilt lazily — only when a query references them
-    // AND the epoch moved since that family's last rebuild. psql \d
-    // bursts (several catalog queries per meta-command) previously paid
-    // a full listTables×listColumns walk EACH; now one per DDL epoch.
+    // DDL epoch: the catalog views ([[CatalogViews]]) are rebuilt
+    // lazily, once a query names one AND the epoch moved since the last
+    // rebuild.
     if (Engine.ddlRe.findFirstIn(sqlRaw).isDefined) Engine.ddlEpoch.incrementAndGet()
 
     // engine-internal staging suffixes and connection-temp mangles are
@@ -4092,62 +4083,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       return describeShape(analyzeOnly(s"SELECT * FROM ${m.group(1)}").schema)
     }
 
-    // psql footer queries over catalogs with no analog here (extended
-    // stats, publications, policies …) → empty result, not an error, so
-    // \d keeps rendering (DuckDB gives the reference real-but-empty
-    // versions of these)
-    if (psqlStubRe.findFirstIn(sql).isDefined)
+    if (CatalogViews.isUnmodelled(sql))
       return ExecResult(spark.sql("SELECT '' AS stub WHERE false"), "SELECT")
 
-    var rewritten = rewrite(sql)
-    if (rewritten.toLowerCase.contains("columns(") || rewritten.toLowerCase.contains("columns ("))
-      rewritten = expandColumnsMacro(rewritten)
-    if (rewritten.toLowerCase.contains("information_schema.")) {
-      refreshInformationSchema()
-      rewritten = infoSchemaRe.replaceAllIn(rewritten, m => s"__is_${m.group(1).toLowerCase}")
-    }
-    if (sysCatalogRe.findFirstIn(rewritten).isDefined) {
-      refreshSystemCatalog()
-      rewritten = sysCatalogRe.replaceAllIn(rewritten, m => s"__sys_${m.group(1).toLowerCase}")
-    }
-    if (duckCatalogRe.findFirstIn(rewritten).isDefined) {
-      refreshDuckCatalog()
-      rewritten = duckCatalogRe.replaceAllIn(rewritten, m => s"__duck_${m.group(1).toLowerCase}")
-    }
-    if (rewritten.toLowerCase.contains("pg_catalog.") || pgRelRe.findFirstIn(rewritten).isDefined) {
-      refreshPgCatalog()
-      rewritten = pgCompat(rewritten)
-    }
-    excludeRe.findFirstMatchIn(rewritten).foreach { m =>
-      val excluded = m.group(1).split(",").map(_.trim.toLowerCase).toSet
-      val fields = spark.table(m.group(2)).schema.fieldNames
-      // DuckDB binder-errors on an EXCLUDE name that isn't in scope —
-      // silently ignoring it would hide typos (duckdb: Binder Error:
-      // Column "x" in EXCLUDE list not found)
-      val missing = excluded -- fields.map(_.toLowerCase).toSet
-      if (missing.nonEmpty) throw new IllegalArgumentException(
-        s"""Column "${missing.head}" in EXCLUDE list not found in FROM clause""")
-      val cols = fields
-        .filterNot(c => excluded(c.toLowerCase))
-        .map(c => s"`$c`").mkString(", ")
-      rewritten = rewritten.substring(0, m.start) + s"SELECT $cols FROM ${m.group(2)}" +
-        rewritten.substring(m.end)
-    }
-    replaceStarRe.findFirstMatchIn(rewritten).foreach { m =>
-      // SELECT * REPLACE (expr AS col, …) — star with substitutions
-      val repls = SqlLexer.splitTopLevel(m.group(1), ',').flatMap { item =>
-        val mm = """(?is)^(.*)\s+as\s+([\w"]+)$""".r.findFirstMatchIn(item.trim)
-        mm.map(x => x.group(2).replace("\"", "").toLowerCase -> x.group(1).trim)
-      }.toMap
-      val cols = spark.table(m.group(2)).schema.fieldNames.map { c =>
-        repls.get(c.toLowerCase) match {
-          case Some(e) => s"($e) AS `$c`"
-          case None => s"`$c`"
-        }
-      }.mkString(", ")
-      rewritten = rewritten.substring(0, m.start) + s"SELECT $cols FROM ${m.group(2)}" +
-        rewritten.substring(m.end)
-    }
     // a non-txn CREATE TABLE/CTAS serializes on the table's write lock
     // (r13b): a COMMIT publishing renames holds its target names'
     // write locks through validation AND publish — a lockless CREATE
@@ -4176,27 +4114,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         }
       else None
     try {
-    val df = try {
-      try txnExec(rewritten)
-      catch {
-        // DuckDB allows unnest() nested inside a SELECT-list expression
-        // (`select unnest(xs) + 10 from t`); Spark requires the
-        // generator at the top level. Narrow recovery: hoist the single
-        // unnest into an inner SELECT that explodes alongside the
-        // source columns, and reference its alias in the outer
-        // expression. Only attempted when Spark raised exactly this
-        // error, so no other statement shape can be affected.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass != null &&
-              e.getErrorClass.startsWith("UNSUPPORTED_GENERATOR.NESTED_IN_EXPRESSIONS") =>
-          hoistNestedUnnest(rewritten) match {
-            case Some(h) =>
-              try txnExec(h)
-              catch { case _: Throwable => throw e } // surface the ORIGINAL error
-            case None => throw e
-          }
-      }
-    } finally createLock.foreach(_.unlock())
+    val df = try queryDf(sql) finally createLock.foreach(_.unlock())
     val verb = sql.split("\\s+").head.toUpperCase
     verb match {
       case "SELECT" | "WITH" | "VALUES" | "TABLE" | "SHOW" | "DESCRIBE" | "DESC" | "EXPLAIN" | "PIVOT" | "FROM" =>
@@ -4228,6 +4146,69 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         ExecResult(null, verb)
     }
     } finally appendLockPair.foreach { case (mu, rl) => rl.unlock(); mu.unlock() }
+  }
+
+  /** Query text → lazy DataFrame: the dialect rewrite, `COLUMNS(…)`,
+    * catalog names ([[CatalogViews]]), `* EXCLUDE` / `* REPLACE` stars,
+    * then [[txnExec]]. Execute runs every statement that passed the
+    * intercepts through here, and Parse/Describe ([[analyzeOnly]]) and
+    * DESCRIBE take the same path, so they resolve exactly what Execute
+    * resolves: catalog SQL, the open transaction's overlays, the
+    * connection's temp names. */
+  private def queryDf(sql: String): DataFrame = {
+    var rewritten = rewrite(sql)
+    if (rewritten.toLowerCase.contains("columns(") || rewritten.toLowerCase.contains("columns ("))
+      rewritten = expandColumnsMacro(rewritten)
+    rewritten = catalog.resolve(rewritten)
+    excludeRe.findFirstMatchIn(rewritten).foreach { m =>
+      val excluded = m.group(1).split(",").map(_.trim.toLowerCase).toSet
+      val fields = spark.table(m.group(2)).schema.fieldNames
+      // DuckDB binder-errors on an EXCLUDE name that isn't in scope —
+      // silently ignoring it would hide typos (duckdb: Binder Error:
+      // Column "x" in EXCLUDE list not found)
+      val missing = excluded -- fields.map(_.toLowerCase).toSet
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"""Column "${missing.head}" in EXCLUDE list not found in FROM clause""")
+      val cols = fields
+        .filterNot(c => excluded(c.toLowerCase))
+        .map(c => s"`$c`").mkString(", ")
+      rewritten = rewritten.substring(0, m.start) + s"SELECT $cols FROM ${m.group(2)}" +
+        rewritten.substring(m.end)
+    }
+    replaceStarRe.findFirstMatchIn(rewritten).foreach { m =>
+      // SELECT * REPLACE (expr AS col, …) — star with substitutions
+      val repls = SqlLexer.splitTopLevel(m.group(1), ',').flatMap { item =>
+        val mm = """(?is)^(.*)\s+as\s+([\w"]+)$""".r.findFirstMatchIn(item.trim)
+        mm.map(x => x.group(2).replace("\"", "").toLowerCase -> x.group(1).trim)
+      }.toMap
+      val cols = spark.table(m.group(2)).schema.fieldNames.map { c =>
+        repls.get(c.toLowerCase) match {
+          case Some(e) => s"($e) AS `$c`"
+          case None => s"`$c`"
+        }
+      }.mkString(", ")
+      rewritten = rewritten.substring(0, m.start) + s"SELECT $cols FROM ${m.group(2)}" +
+        rewritten.substring(m.end)
+    }
+    try txnExec(rewritten)
+    catch {
+      // DuckDB allows unnest() nested inside a SELECT-list expression
+      // (`select unnest(xs) + 10 from t`); Spark requires the
+      // generator at the top level. Narrow recovery: hoist the single
+      // unnest into an inner SELECT that explodes alongside the
+      // source columns, and reference its alias in the outer
+      // expression. Only attempted when Spark raised exactly this
+      // error, so no other statement shape can be affected.
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getErrorClass != null &&
+            e.getErrorClass.startsWith("UNSUPPORTED_GENERATOR.NESTED_IN_EXPRESSIONS") =>
+        hoistNestedUnnest(rewritten) match {
+          case Some(h) =>
+            try txnExec(h)
+            catch { case _: Throwable => throw e } // surface the ORIGINAL error
+          case None => throw e
+        }
+    }
   }
 
   /** Run an INSERT eagerly and derive its row count from the write
@@ -5763,158 +5744,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     } finally spark.sql(s"DROP TABLE IF EXISTS $stage")
   }
 
-  /** information_schema.{schemata,tables,columns} (SURVEY §2-B.9 🔧):
-    * Spark has no information_schema, and static views would go stale —
-    * queries naming it get the views rebuilt from the live catalog and
-    * the reference rewritten to the temp-view names. Catalog
-    * introspection is driver-side metadata only (no jobs). */
-  private val isSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-  private val pgSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-  private val procSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-  private val sysSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-  private val duckSeen = new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** DuckDB's own introspection TVFs — `duckdb_tables()`,
-    * `duckdb_columns()`, … (duckdb catalog functions; scripts ported
-    * from the reference's backing engine use them directly). Same
-    * lazy-per-DDL-epoch temp-view pattern as the `system.*` family;
-    * the TVF call rewrites to the view name. Core columns of each
-    * DuckDB 1.0 shape; macros and sequences surface the engine's own
-    * registries (a created MACRO is introspectable here). */
-  private def refreshDuckCatalog(): Unit = {
-    val epoch = Engine.ddlEpoch.get()
-    if (duckSeen.get() == epoch) return
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val dbs = spark.catalog.listDatabases().collect().map(_.name.toLowerCase).sorted.toSeq
-    Seq(("memory", 0L, "", false, "duckdb"))
-      .toDF("database_name", "database_oid", "path", "internal", "type")
-      .createOrReplaceTempView("__duck_databases")
-    dbs.zipWithIndex.map { case (d, i) => (i.toLong, "memory", d, false) }
-      .toDF("oid", "database_name", "schema_name", "internal")
-      .createOrReplaceTempView("__duck_schemas")
-    val tbls = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect()
-        .filterNot(t => t.isTemporary || Engine.isHiddenTable(t.name))
-    .filter(_.tableType != "VIEW")
-        .map { t =>
-          val q = s"$d.${t.name.toLowerCase}"
-          val cols = try spark.table(q).schema.size catch { case _: Throwable => 0 }
-          ("memory", d, t.name.toLowerCase, false, false,
-            Option(constraints.get(q)).exists(_.pk.nonEmpty), cols.toLong)
-        }
-    }
-    tbls.toDF("database_name", "schema_name", "table_name", "internal",
-        "temporary", "has_primary_key", "column_count")
-      .createOrReplaceTempView("__duck_tables")
-    val vws = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect()
-        .filter(t => !t.isTemporary && t.tableType == "VIEW")
-        .map(t => ("memory", d, t.name.toLowerCase, false, false))
-    }
-    vws.toDF("database_name", "schema_name", "view_name", "internal", "temporary")
-      .createOrReplaceTempView("__duck_views")
-    val cols = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect()
-        .filterNot(t => t.isTemporary || Engine.isHiddenTable(t.name))
-        .flatMap { t =>
-          val rows: Seq[(String, String, String, String, Long, Boolean, String, Boolean)] =
-            try spark.table(s"$d.${t.name}").schema.fields.zipWithIndex.toSeq.map {
-              case (f, i) =>
-                ("memory", d, t.name.toLowerCase, f.name, i.toLong, false,
-                  graft.functions.DuckTypeNames.of(f.dataType), f.nullable)
-            } catch { case scala.util.control.NonFatal(_) => Nil }
-          rows
-        }
-    }
-    cols.toDF("database_name", "schema_name", "table_name", "column_name",
-        "column_index", "internal", "data_type", "is_nullable")
-      .createOrReplaceTempView("__duck_columns")
-    val fns = spark.catalog.listFunctions().collect().toSeq
-      .map(f => ("memory", "main", f.name.toLowerCase, "scalar", "")) ++
-      macros.asScala.toSeq.sortBy(_._1).map { case (n, d) =>
-        ("memory", "main", n, if (d.isTable) "table_macro" else "macro",
-          s"${n}(${d.params.mkString(", ")}) AS ${d.body}")
-      }
-    fns.toDF("database_name", "schema_name", "function_name",
-        "function_type", "macro_definition")
-      .createOrReplaceTempView("__duck_functions")
-    val seqs = sequences.asScala.toSeq
-      .filterNot { case (n, _) => Engine.isTempConnName(n.split('.').last) }
-      .sortBy(_._1).map { case (n, s) =>
-        val parts = n.split('.')
-        ("memory", if (parts.length > 1) parts(0) else "main", parts.last,
-          s.inc, s.next.get())
-      }
-    seqs.toDF("database_name", "schema_name", "sequence_name",
-        "increment_by", "last_value")
-      .createOrReplaceTempView("__duck_sequences")
-    val cons = constraints.asScala.toSeq.sortBy(_._1).flatMap { case (q, c) =>
-      val parts = q.split('.')
-      val (db, t) = (if (parts.length > 1) parts(0) else "main", parts.last)
-      def row(kind: String, cols: Seq[String], ex: String = "") =
-        ("memory", db, t, kind, cols, ex)
-      (if (c.pk.nonEmpty) Seq(row("PRIMARY KEY", c.pk)) else Nil) ++
-        c.unique.map(u => row("UNIQUE", u)) ++
-        c.notNull.map(nn => row("NOT NULL", Seq(nn))) ++
-        c.fks.map(f => row("FOREIGN KEY", f.cols,
-          s"REFERENCES ${f.refTable}(${f.refCols.mkString(", ")})")) ++
-        c.checks.map(ck => row("CHECK", Nil, ck))
-    }
-    cons.toDF("database_name", "schema_name", "table_name",
-        "constraint_type", "constraint_column_names", "expression")
-      .createOrReplaceTempView("__duck_constraints")
-    Seq(("threads", spark.sparkContext.defaultParallelism.toString,
-          "number of worker threads", "BIGINT"),
-        ("memory_limit", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"),
-          "memory limit", "VARCHAR"),
-        ("version", spark.version, "engine version", "VARCHAR"))
-      .toDF("name", "value", "description", "input_type")
-      .createOrReplaceTempView("__duck_settings")
-    duckSeen.set(epoch)
-  }
-
-  private def refreshInformationSchema(): Unit = {
-    val epoch = Engine.ddlEpoch.get()
-    if (isSeen.get() == epoch) return
-    import spark.implicits._
-    val dbs = spark.catalog.listDatabases().collect().map(_.name)
-    dbs.toSeq.map(d => ("spark", d)).toDF("catalog_name", "schema_name")
-      .createOrReplaceTempView("__is_schemata")
-    val tables = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect().filterNot(_.isTemporary)
-        .filterNot(t => Engine.isHiddenTable(t.name)).map(t =>
-        ("spark", d, t.name, t.tableType match {
-          case "VIEW" => "VIEW"
-          case _ => "BASE TABLE"
-        }))
-    }
-    tables.toSeq.toDF("table_catalog", "table_schema", "table_name", "table_type")
-      .createOrReplaceTempView("__is_tables")
-    val columns = tables.flatMap { case (_, d, t, _) =>
-      try spark.catalog.listColumns(s"$d.$t").collect().zipWithIndex.map { case (c, i) =>
-        ("spark", d, t, c.name, i + 1, c.dataType,
-          if (c.nullable) "YES" else "NO")
-      }
-      catch { case _: Throwable => Array.empty[(String, String, String, String, Int, String, String)] }
-    }
-    columns.toSeq.toDF("table_catalog", "table_schema", "table_name",
-      "column_name", "ordinal_position", "data_type", "is_nullable")
-      .createOrReplaceTempView("__is_columns")
-    // constraint_column_usage from the declared-constraint registry
-    // (the reference ships it empty, pg_server.go:39 — real rows here)
-    val ccu = {
-      import scala.jdk.CollectionConverters._
-      constraints.asScala.toSeq.flatMap { case (key, c) =>
-        val Array(sch, tbl) = key.split("\\.", 2)
-        c.pk.map(col => ("spark", sch, tbl, col, s"${tbl}_pkey")) ++
-          c.unique.flatten.map(col => ("spark", sch, tbl, col, s"${tbl}_${col}_key"))
-      }
-    }
-    ccu.toDF("table_catalog", "table_schema", "table_name", "column_name", "constraint_name")
-      .createOrReplaceTempView("__is_constraint_column_usage")
-    isSeen.set(epoch)
-  }
+  /** pg_catalog / information_schema / system.* / duckdb_*() views. */
+  private val catalog = new CatalogViews(spark, this)
 
   /** CREATE TABLE with PG/DuckDB constraint syntax: Spark's parser
     * rejects PRIMARY KEY / UNIQUE / NOT NULL, so they are parsed out
@@ -6095,198 +5926,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       persistConstraints()
     }
     ExecResult(null, "CREATE TABLE")
-  }
-
-  /** pg_catalog emulation — psql \dt / \dn / \dv / \d <table> and
-    * clients doing catalog introspection (the reference gets its
-    * pg_catalog from DuckDB; SURVEY A25). pg_class carries the full
-    * psql-15 column set (all "off": no indexes/rules/triggers, so psql
-    * skips those footer queries); pg_attribute is real per-column data
-    * with NOT NULL sourced from declared constraints. */
-  private def refreshPgCatalog(): Unit = {
-    val epoch = Engine.ddlEpoch.get()
-    if (pgSeen.get() == epoch) return
-    import spark.implicits._
-    val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted
-    val nsOid = dbs.zipWithIndex.map { case (d, i) => d -> (1000 + i) }.toMap
-    dbs.map(d => (nsOid(d), d, 0)).toSeq.toDF("oid", "nspname", "nspowner")
-      .createOrReplaceTempView("pg_namespace")
-    // per-db oid stride of 10k: DDL in one database can't shift another
-    // database's oids between psql's successive catalog queries, and
-    // collisions need >10k tables in one db
-    val tables = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect().filterNot(_.isTemporary)
-      .filterNot(t => Engine.isHiddenTable(t.name)).sortBy(_.name)
-        .zipWithIndex.map { case (t, i) => (100000 + (nsOid(d) - 1000) * 10000 + i, d, t) }
-    }
-    tables.map { case (oid, d, t) =>
-      (oid, t.name, nsOid(d), if (t.tableType == "VIEW") "v" else "r", 0, 0,
-        0 /*relchecks*/, false /*relhasindex*/, false /*relhasrules*/,
-        false /*relhastriggers*/, false /*relrowsecurity*/, false /*relforcerowsecurity*/,
-        false /*relispartition*/, 0 /*reltablespace*/, "p" /*relpersistence*/,
-        "d" /*relreplident*/, -1.0 /*reltuples*/, 0 /*relpages*/, false /*relhassubclass*/,
-        0 /*reltoastrelid*/, 0 /*reloftype*/)
-    }.toSeq.toDF("oid", "relname", "relnamespace", "relkind", "relowner", "relam",
-        "relchecks", "relhasindex", "relhasrules", "relhastriggers", "relrowsecurity",
-        "relforcerowsecurity", "relispartition", "reltablespace", "relpersistence",
-        "relreplident", "reltuples", "relpages", "relhassubclass",
-        "reltoastrelid", "reloftype")
-      .withColumn("reloptions", org.apache.spark.sql.functions.lit(null).cast("array<string>"))
-      .createOrReplaceTempView("pg_class")
-    val attrs = tables.flatMap { case (oid, d, t) =>
-      val nn = constraintsOf(s"$d.${t.name}").map(c => (c.notNull ++ c.pk).toSet)
-        .getOrElse(Set.empty)
-      try spark.table(s"$d.${t.name}").schema.fields.zipWithIndex.map { case (f, i) =>
-        (oid, f.name, graft.server.pg.PgTypes.oidOf(f.dataType), i + 1,
-          graft.server.pg.PgTypes.typmodOf(f.dataType), nn(f.name.toLowerCase),
-          false /*atthasdef*/, false /*attisdropped*/, 0 /*attcollation*/,
-          "" /*attidentity*/, "" /*attgenerated*/, "p" /*attstorage*/, "" /*attcompression*/,
-          -1 /*attstattarget*/)
-      }
-      catch { case scala.util.control.NonFatal(_) =>
-        Array.empty[(Int, String, Int, Int, Int, Boolean, Boolean, Boolean, Int, String, String, String, String, Int)] }
-    }
-    attrs.toSeq.toDF("attrelid", "attname", "atttypid", "attnum", "atttypmod",
-        "attnotnull", "atthasdef", "attisdropped", "attcollation", "attidentity",
-        "attgenerated", "attstorage", "attcompression", "attstattarget")
-      .createOrReplaceTempView("pg_attribute")
-    Seq((0, "heap")).toDF("oid", "amname").limit(0)
-      .createOrReplaceTempView("pg_am")
-    // pg_roles from the live users table (psql \du); the bootstrap
-    // pseudo-role 'spark' owns everything
-    locally {
-      import scala.jdk.CollectionConverters._
-      val names = ("spark" +: users.keySet.asScala.toSeq.sorted).distinct
-      names.zipWithIndex.map { case (u, i) =>
-        (50000 + i, u, u == "spark", true, false, false, true, false, -1, false)
-      }.toSeq.toDF("oid", "rolname", "rolsuper", "rolinherit", "rolcreaterole",
-          "rolcreatedb", "rolcanlogin", "rolreplication", "rolconnlimit", "rolbypassrls")
-        .withColumn("rolvaliduntil",
-          org.apache.spark.sql.functions.lit(null).cast("timestamp"))
-        .createOrReplaceTempView("pg_roles")
-      Seq((0, 0, 0, false)).toDF("roleid", "member", "grantor", "admin_option").limit(0)
-        .createOrReplaceTempView("pg_auth_members")
-    }
-    // pg_database: one row per Spark database (psql \l)
-    dbs.map(d => (nsOid(d), d, 0, 6 /*UTF8*/, "C", "C", null: String, "c"))
-      .toSeq.toDF("oid", "datname", "datdba", "encoding", "datcollate", "datctype",
-        "daticulocale", "datlocprovider")
-      .withColumn("datacl", org.apache.spark.sql.functions.lit(null).cast("array<string>"))
-      .createOrReplaceTempView("pg_database")
-    // view definitions for pg_get_viewdef (rewritten in pgCompat to a
-    // scalar subquery over this view — a UDF can't close over the
-    // session catalog)
-    val viewdefs = tables.flatMap { case (oid, d, t) =>
-      if (t.tableType != "VIEW") None
-      else try spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t.name, Some(d)))
-        .viewText.map(v => (oid, v))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-    viewdefs.toSeq.toDF("oid", "viewdef").createOrReplaceTempView("__pg_viewdefs")
-    Seq((0, 0, "")).toDF("adrelid", "adnum", "adbin").limit(0)
-      .createOrReplaceTempView("pg_attrdef")
-    Seq((0, "")).toDF("oid", "collname").limit(0)
-      .createOrReplaceTempView("pg_collation")
-    Seq((0, 0, "f", "", false, false, 0, 0, true, 0))
-      .toDF("oid", "conrelid", "contype", "conname", "condeferrable", "condeferred",
-        "conindid", "confrelid", "convalidated", "conparentid").limit(0)
-      .createOrReplaceTempView("pg_constraint")
-    Seq((0, 0, false, false, false, false, false))
-      .toDF("indexrelid", "indrelid", "indisprimary", "indisunique", "indisclustered",
-        "indisvalid", "indisreplident").limit(0)
-      .createOrReplaceTempView("pg_index")
-    refreshPgProc()
-    pgSeen.set(epoch)
-  }
-
-  /** pg_proc from the live function registry; prokind 'a' marks
-    * aggregates (reference exposes DuckDB's; system.functions derives
-    * from this, pg_server.go:66-68). */
-  private def refreshPgProc(): Unit = {
-    val epoch = Engine.ddlEpoch.get()
-    if (procSeen.get() == epoch) return
-    import spark.implicits._
-    val reg = spark.sessionState.functionRegistry
-    val fns = reg.listFunction().flatMap { f =>
-      val group = try Option(reg.lookupFunction(f).orNull).flatMap(i => Option(i.getGroup))
-        catch { case scala.util.control.NonFatal(_) => None }
-      Some((f.funcName, if (group.contains("agg_funcs")) "a" else "f"))
-    }.distinct.sortBy(_._1)
-    fns.zipWithIndex.map { case ((n, k), i) => (30000 + i, n, k, 11) }
-      .toDF("oid", "proname", "prokind", "pronamespace")
-      .createOrReplaceTempView("pg_proc")
-    procSeen.set(epoch)
-  }
-
-  /** ClickHouse system.* catalog emulation (reference pg_server.go:47-68
-    * defines these over information_schema/pg_proc; same data here,
-    * refreshed from the live catalog). */
-  private def refreshSystemCatalog(): Unit = {
-    val epoch = Engine.ddlEpoch.get()
-    if (sysSeen.get() == epoch) return
-    import spark.implicits._
-    refreshInformationSchema()
-    refreshPgProc()
-    val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted
-    dbs.toSeq.toDF("name").createOrReplaceTempView("__sys_databases")
-    val tables = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect().filterNot(_.isTemporary)
-      .filterNot(t => Engine.isHiddenTable(t.name))
-        .filter(_.tableType != "VIEW")
-        .map(t => (t.name, d, "uuid", "graft", 0, ""))
-    }
-    tables.toSeq.toDF("name", "database", "uuid", "engine", "is_temporary", "comment")
-      .createOrReplaceTempView("__sys_tables")
-    val columns = dbs.flatMap { d =>
-      spark.catalog.listTables(d).collect().filterNot(_.isTemporary)
-        .filterNot(t => Engine.isHiddenTable(t.name)).flatMap { t =>
-        try spark.catalog.listColumns(s"$d.${t.name}").collect().map(c =>
-          (d, t.name, c.name, c.dataType, "", c.dataType, ""))
-        catch { case scala.util.control.NonFatal(_) =>
-          Array.empty[(String, String, String, String, String, String, String)] }
-      }
-    }
-    columns.toSeq.toDF("database", "table", "name", "type", "comment",
-        "default_kind", "default_expression")
-      .createOrReplaceTempView("__sys_columns")
-    spark.sql("SELECT proname AS name, prokind = 'a' AS is_aggregate FROM pg_proc")
-      .createOrReplaceTempView("__sys_functions")
-    sysSeen.set(epoch)
-  }
-
-  /** psql-dialect → Spark SQL: strip pg_catalog qualification, the
-    * OPERATOR(~) spelling, COLLATE clauses and ::reg* casts psql emits,
-    * regex operators `~`/`!~` → regexp_like. (Double-quoted identifiers
-    * are handled by spark.sql.ansi.doubleQuotedIdentifiers.) */
-  private def pgCompat(sql0: String): String = {
-    var s = sql0.replaceAll("(?i)pg_catalog\\.", "")
-    // psql \d+ concatenates toast reloptions via a PG array-subquery
-    // constructor Spark can't parse; reloptions is always NULL here,
-    // so the concatenation is identity — drop it
-    s = s.replaceAll(
-      "(?is)\\|\\|\\s*array\\(select\\s+'toast\\.'\\s*\\|\\|\\s*x\\s+from\\s+unnest\\(tc\\.reloptions\\)\\s+x\\)", "")
-    // psql \du memberof column: PG ARRAY(SELECT …) constructor over
-    // pg_auth_members — role membership doesn't exist here, so an
-    // empty array is the truthful answer
-    s = s.replaceAll(
-      "(?is)ARRAY\\(SELECT\\s+b\\.rolname\\s+FROM\\s+pg_auth_members\\s+m\\s+JOIN\\s+pg_roles\\s+b\\s+ON\\s*\\(m\\.roleid\\s*=\\s*b\\.oid\\)\\s*WHERE\\s+m\\.member\\s*=\\s*r\\.oid\\)",
-      "array()")
-    // PG escape-string literals: E'\n' → '\n' (Spark processes
-    // backslash escapes in plain literals)
-    s = s.replaceAll("(?i)\\bE'", "'")
-    s = s.replaceAll("(?i)OPERATOR\\s*\\(\\s*!~\\s*\\)", " !~ ")
-    s = s.replaceAll("(?i)OPERATOR\\s*\\(\\s*~\\s*\\)", " ~ ")
-    s = s.replaceAll("(?i)\\s+COLLATE\\s+[\\w.\"]+", "")
-    s = s.replaceAll("(?i)::(regclass|regnamespace|regtype|regrole|oid|\"char\")", "")
-    s = s.replaceAll("(?i)::text\\b", "::string")
-    s = notTildeRe.replaceAllIn(s, m => Regex.quoteReplacement(
-      s"NOT regexp_like(${m.group(1)}, ${m.group(2)})"))
-    s = tildeRe.replaceAllIn(s, m => Regex.quoteReplacement(
-      s"regexp_like(${m.group(1)}, ${m.group(2)})"))
-    s = viewdefCallRe.replaceAllIn(s, m => Regex.quoteReplacement(
-      s"(SELECT viewdef FROM __pg_viewdefs WHERE oid = ${m.group(1).trim})"))
-    s
   }
 
   /** COPY (query|table) TO 'file' (FORMAT csv|parquet|json …) —
@@ -7055,8 +6694,8 @@ object Engine {
     extends RuntimeException(cause)
 
   /** Global DDL epoch (JVM-wide: all connections share the warehouse).
-    * Bumped on any CREATE/DROP/ALTER entering execute(); the per-family
-    * catalog-view rebuilds memoize against it. Over-bumping (e.g. a DDL
+    * Bumped on any CREATE/DROP/ALTER entering execute(); the catalog
+    * snapshot behind [[CatalogViews]] memoizes against it. Over-bumping (e.g. a DDL
     * that fails) only costs an extra rebuild — never staleness. */
   private[server] val ddlEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
   private[server] val ddlRe = """(?is)^\s*(create|drop|alter)\b""".r
@@ -7470,18 +7109,6 @@ object Engine {
   private val explainAnalyzeRe =
     """(?is)^\s*explain\s+analyze\s+((?:select|with|values)\b.+)$""".r
   private val partitionByRe = """(?i)partition_by\s*\(([^)]*)\)""".r
-  private val infoSchemaRe =
-    """(?i)information_schema\.(schemata|tables|columns|constraint_column_usage)""".r
-  private val sysCatalogRe = """(?i)\bsystem\.(databases|tables|columns|functions)\b""".r
-  private val duckCatalogRe =
-    """(?i)\bduckdb_(tables|columns|views|schemas|databases|functions|settings|sequences|constraints)\s*\(\s*\)""".r
-  private val pgRelRe =
-    """(?i)\bpg_(class|namespace|am|proc|attribute|attrdef|collation|index|constraint|database|roles)\b""".r
-  private val psqlStubRe =
-    """(?i)\bpg_(statistic_ext|publication|policy|policies|rules|event_trigger|inherits|partitioned_table|foreign_table|stat_\w+)\b""".r
-  private val viewdefCallRe = """(?i)pg_get_viewdef\s*\(\s*([^,)]+?)\s*(?:,[^)]*)?\)""".r
-  private val notTildeRe = """([\w.]+)\s+!~\s+('(?:[^']*)')""".r
-  private val tildeRe = """([\w.]+)\s+~\s+('(?:[^']*)')""".r
   private val excludeRe =
     """(?i)select\s+\*\s+exclude\s*\(([^)]*)\)\s+from\s+([\w.]+)""".r
   private val replaceStarRe =
@@ -7774,35 +7401,7 @@ object Engine {
       spark.sql(s"CREATE OR REPLACE VIEW main.$t AS $body")
     }
     spark.sql("USE main")
-    // catalog-compat views (reference pg_server.go:35-76)
-    val oidRows = Seq(
-      16 -> "bool", 20 -> "int8", 21 -> "int2", 23 -> "int4", 25 -> "text",
-      700 -> "float4", 701 -> "float8", 1700 -> "numeric", 1082 -> "date",
-      1114 -> "timestamp", 1184 -> "timestamptz", 114 -> "json", 17 -> "bytea")
-      .map { case (o, n) => s"($o, '$n', 0)" }.mkString(", ")
-    spark.sql(s"CREATE OR REPLACE VIEW pg_type AS SELECT * FROM VALUES $oidRows AS t(oid, typname, typcollation)")
-    spark.sql("CREATE OR REPLACE VIEW pg_matviews AS SELECT '' AS matviewname WHERE false")
-    // psql meta-command helpers (always-true visibility, fixed owner)
-    spark.udf.register("pg_table_is_visible", (_: Long) => true)
-    spark.udf.register("pg_get_userbyid", (_: Long) => "spark")
-    // \d support: format_type drives the column-type column; the rest
-    // are inert stubs psql's queries must merely resolve (defaults,
-    // constraint defs, comments, sizes are all empty here)
-    spark.udf.register("format_type",
-      (oid: Int, typmod: Int) => graft.server.pg.PgTypes.nameOf(oid, typmod))
-    spark.udf.register("pg_get_expr", (_: String, _: Int, _: Boolean) => null: String)
-    spark.udf.register("pg_get_constraintdef", (_: Int, _: Boolean) => null: String)
-    spark.udf.register("pg_get_indexdef", (_: Int, _: Int, _: Boolean) => null: String)
-    spark.udf.register("obj_description", (_: Int, _: String) => null: String)
-    spark.udf.register("col_description", (_: Int, _: Int) => null: String)
-    spark.udf.register("quote_ident", (s: String) => if (s == null) null else "\"" + s.replace("\"", "\"\"") + "\"")
-    spark.udf.register("array_to_string",
-      (a: scala.collection.Seq[String], sep: String) =>
-        if (a == null) null else a.filter(_ != null).mkString(sep))
-    spark.udf.register("pg_encoding_to_char", (_: Int) => "UTF8")
-    spark.udf.register("pg_table_size", (_: Int) => 0L)
-    spark.udf.register("pg_total_relation_size", (_: Int) => 0L)
-    spark.udf.register("pg_size_pretty", (_: Long) => "0 bytes")
+    CatalogViews.install(spark)
     engine.loadPersisted()
     engine
   }

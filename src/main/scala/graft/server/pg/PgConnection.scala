@@ -333,9 +333,9 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       catch { case _: Throwable => Seq.empty[Int] }
     val numParams = maxParamIndex(sql)
     val stmt = Stmt(sql, numParams,
-      // analyzeOnly: dialect rewrite + the connection's TEMP-namespace
-      // substitution (r14) — lazy analysis, no job, like spark.sql on
-      // a SELECT
+      // analyzeOnly: Execute's query path after the intercepts (dialect
+      // rewrite, catalog views, temp names, txn overlays) — lazy
+      // analysis, no job
       () => engine.analyzeOnly(substituteParams(sql, Seq.fill(numParams)(None))),
       declaredOids)
     // Parse-time validation (the reference gets this from DuckDB's

@@ -314,6 +314,41 @@ class ServerEngineSpec extends SparkSpecBase {
     }
   }
 
+  test("Parse/Describe and DESCRIBE resolve statements the way Execute does") {
+    def rows(sql: String): Seq[String] =
+      engine.execute(sql).df.collect().map(_.toString).toSeq
+    def cols(sql: String): Seq[String] = engine.analyzeOnly(sql).schema.fieldNames.toSeq
+    fresh("c_pd"); fresh("c_pd_t")
+    engine.execute("create table main.c_pd (a INT, b STRING) using parquet")
+    try {
+      // pgJDBC's getTables, as Parse sees it with $1 bound to NULL
+      assert(cols("SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, " +
+        "c.relname AS TABLE_NAME, CASE c.relkind WHEN 'r' THEN 'TABLE' " +
+        "WHEN 'v' THEN 'VIEW' ELSE NULL END AS TABLE_TYPE " +
+        "FROM pg_catalog.pg_namespace n, pg_catalog.pg_class c " +
+        "WHERE c.relnamespace = n.oid AND c.relname LIKE NULL " +
+        "ORDER BY TABLE_TYPE, TABLE_SCHEM, TABLE_NAME") ==
+        Seq("TABLE_CAT", "TABLE_SCHEM", "TABLE_NAME", "TABLE_TYPE"))
+      assert(cols("select table_name from information_schema.tables where table_name = NULL") ==
+        Seq("table_name"))
+      assert(cols("select name from system.tables") == Seq("name"))
+      assert(cols("select table_name from duckdb_tables()") == Seq("table_name"))
+      assert(cols("select * exclude (a) from main.c_pd") == Seq("b"))
+      assert(rows("describe select relname from pg_catalog.pg_class") ==
+        Seq("[relname,VARCHAR,YES]"))
+      // a table created inside the open transaction: Parse and DESCRIBE
+      // see it exactly as the SELECT does
+      engine.execute("BEGIN")
+      try {
+        engine.execute("CREATE TABLE main.c_pd_t (a INT)")
+        assert(rows("SELECT * FROM main.c_pd_t").isEmpty)
+        assert(cols("SELECT * FROM main.c_pd_t") == Seq("a"))
+        assert(rows("DESCRIBE main.c_pd_t") == Seq("[a,INTEGER,YES]"))
+      } finally engine.execute("ROLLBACK")
+      assert(!spark.catalog.tableExists("main.c_pd_t"))
+    } finally engine.execute("drop table if exists main.c_pd")
+  }
+
   test("statement-level PIVOT/UNPIVOT: DuckDB simplified spellings") {
     fresh("c_piv")
     engine.execute("create table main.c_piv as " +
@@ -1877,6 +1912,11 @@ class ServerEngineSpec extends SparkSpecBase {
     assert(r3.getInt(0) == 1 && list(r3, 1) == Seq(1, 2))
     val r4 = engine.execute("SELECT 1 -- it's\n, [1, 2] AS l").df.head()
     assert(r4.getInt(0) == 1 && list(r4, 1) == Seq(1, 2))
+    // catalog names map in code only
+    Seq("information_schema.tables", "system.tables", "duckdb_tables()",
+        "pg_catalog.pg_class").foreach { lit =>
+      assert(engine.execute(s"SELECT '$lit' AS s").df.head().getString(0) == lit)
+    }
   }
 
   test("unnest nested in a select-list expression hoists to an inner explode") {

@@ -24,7 +24,8 @@ Checks:
       Execute maxRows=2 → PortalSuspended → Execute again → resumes
       (not restarts) → CommandComplete; Close portal; COMMIT
   J6  metadata: current_schema(), getTables-shape pg_class ⋈
-      pg_namespace query, getColumns-shape ⋈ pg_attribute ⋈ pg_type
+      pg_namespace query, getColumns-shape ⋈ pg_attribute ⋈ pg_type,
+      both sent as pgJDBC's extended-protocol unnamed statement
   J7  Close statement → CloseComplete; reuse after close errors clean
 
 Usage: python3 tools/jdbc_smoke.py [port]
@@ -185,32 +186,42 @@ def main(port):
     c.send(msg(b"Q", cstr(
         "create table main.jdbc_t (k int primary key, v string) using parquet")))
     c.drain_until_ready()
+    # pgJDBC's default preferQueryMode=extended sends metadata SQL as an
+    # unnamed Parse (the pattern as a varchar $1) / Bind / Describe
+    # portal / Execute / Sync, so Parse must resolve the catalog views
+    def metadata_query(sql, arg):
+        c.send(
+            msg(b"P", cstr("") + cstr(sql) + struct.pack(">h", 1) + struct.pack(">i", 1043)),
+            msg(b"B", cstr("") + cstr("") + struct.pack(">h", 0) + struct.pack(">h", 1)
+                + struct.pack(">i", len(arg)) + arg.encode() + struct.pack(">h", 0)),
+            msg(b"D", b"P" + cstr("")),
+            msg(b"E", cstr("") + struct.pack(">i", 0)),
+            msg(b"S", b""))
+        return c.drain_until_ready()
     get_tables = (
         "SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, c.relname AS TABLE_NAME, "
         "CASE c.relkind WHEN 'r' THEN 'TABLE' WHEN 'v' THEN 'VIEW' ELSE NULL END AS TABLE_TYPE "
         "FROM pg_catalog.pg_namespace n, pg_catalog.pg_class c "
-        "WHERE c.relnamespace = n.oid AND c.relname LIKE 'jdbc_t' "
+        "WHERE c.relnamespace = n.oid AND c.relname LIKE $1 "
         "ORDER BY TABLE_TYPE, TABLE_SCHEM, TABLE_NAME")
-    c.send(msg(b"Q", cstr(get_tables)))
-    seq = c.drain_until_ready()
+    seq = metadata_query(get_tables, "jdbc_t")
     r = rows_of(seq)
-    check("J6b getTables shape", len(r) == 1 and r[0][2] == "jdbc_t"
-          and r[0][3] == "TABLE", f"{types_of(seq)} {r}")
+    check("J6b getTables shape", types_of(seq) == "12TDCZ" and len(r) == 1
+          and r[0][2] == "jdbc_t" and r[0][3] == "TABLE", f"{types_of(seq)} {r}")
     get_cols = (
         "SELECT n.nspname, c.relname, a.attname, a.atttypid, a.attnotnull, a.attnum, t.typname "
         "FROM pg_catalog.pg_namespace n "
         "JOIN pg_catalog.pg_class c ON c.relnamespace = n.oid "
         "JOIN pg_catalog.pg_attribute a ON a.attrelid = c.oid "
         "JOIN pg_catalog.pg_type t ON a.atttypid = t.oid "
-        "WHERE c.relname = 'jdbc_t' AND a.attnum > 0 ORDER BY a.attnum")
-    c.send(msg(b"Q", cstr(get_cols)))
-    seq = c.drain_until_ready()
+        "WHERE c.relname LIKE $1 AND a.attnum > 0 ORDER BY a.attnum")
+    seq = metadata_query(get_cols, "jdbc_t")
     r = rows_of(seq)
     # the pg_type join must not DROP any column (every emitted atttypid
     # resolves), PK column reports attnotnull, and typnames are real
-    check("J6c getColumns shape", len(r) == 2 and r[0][2] == "k"
-          and r[0][4] in ("t", "true") and r[0][6] == "int4" and r[1][6] == "text",
-          f"{types_of(seq)} rows={len(r)} {r}")
+    check("J6c getColumns shape", types_of(seq).startswith("12T") and len(r) == 2
+          and r[0][2] == "k" and r[0][4] in ("t", "true") and r[0][6] == "int4"
+          and r[1][6] == "text", f"{types_of(seq)} rows={len(r)} {r}")
     c.send(msg(b"Q", cstr("drop table main.jdbc_t")))
     c.drain_until_ready()
 

@@ -280,6 +280,28 @@ def main(port):
     c.send(msg(b"C", b"S" + cstr("sq")), msg(b"S", b""))
     c.drain_until_ready()
 
+    # 5e. catalog views through Parse/Describe: a named statement over
+    # information_schema resolves at Parse exactly as Execute does
+    c.send(
+        msg(b"P", cstr("sis") + cstr(
+            "SELECT table_name FROM information_schema.tables WHERE table_name = $1")
+            + struct.pack(">h", 0)),
+        msg(b"D", b"S" + cstr("sis")),
+        msg(b"B", cstr("") + cstr("sis") + struct.pack(">h", 0) + struct.pack(">h", 1)
+            + struct.pack(">i", 6) + b"nation" + struct.pack(">h", 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"S", b""))
+    seq = c.drain_until_ready()
+    kinds = types_of(seq)
+    datarows = [p for t, p in seq if t == b"D"]
+    val = datarows[0][6:] if datarows else b""
+    ok = kinds == "1tT2DCZ" and val == b"nation"
+    print(("PASS" if ok else "FAIL") + f" catalog view at Parse: {kinds} row={val}")
+    if not ok:
+        failures.append("catalog-parse")
+    c.send(msg(b"C", b"S" + cstr("sis")), msg(b"S", b""))
+    c.drain_until_ready()
+
     # 6. CancelRequest: fire a slow query, cancel from a second conn
     # data-independent and reliably minutes-long uncancelled
     slow = "select sum(id) from range(20000000000)"

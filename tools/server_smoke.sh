@@ -212,15 +212,14 @@ chk "pg vacuum"       "VACUUM"  "$(psql $P -tA -c "vacuum main.ckpt_smoke" 2>&1 
 chk "pg ckpt in txn"  "refused" "$(psql $P -tA -c "begin" -c "checkpoint" 2>&1 | grep -q 'transaction block' && echo refused)"
 psql $P -c "drop table main.ckpt_smoke" >/dev/null 2>&1
 
+# the probes' own exit status (not sed's) decides each one's pass/fail
 python3 "$(dirname "$0")/pg_extended_test.py" "$PG" | sed 's/^/  ext /'
+if [ "${PIPESTATUS[0]}" = 0 ]; then ok "pg_extended_test"; else bad "pg_extended_test"; fi
 
 # pgJDBC wire-sequence probe (no JDBC jar exists in this container —
 # the probe replays the driver's exact message sequences; see its doc)
-if python3 "$(dirname "$0")/jdbc_smoke.py" "$PG" | sed 's/^/  jdbc /'; then
-  pass=$((pass+1))
-else
-  fail=$((fail+1)); echo "FAIL jdbc_smoke"
-fi
+python3 "$(dirname "$0")/jdbc_smoke.py" "$PG" | sed 's/^/  jdbc /'
+if [ "${PIPESTATUS[0]}" = 0 ]; then ok "jdbc_smoke"; else bad "jdbc_smoke"; fi
 
 echo "smoke: $pass passed, $fail failed"
 exit $((fail > 0))
