@@ -2,9 +2,11 @@ package graft.server
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.locks.ReentrantReadWriteLock
+import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The engine behind both frontends: one shared SparkSession, dialect
   * rewrites, statement intercepts, the DML hard parts (SURVEY §7.3) and
@@ -22,6 +24,11 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val dbPath: Option[String] = None) {
 
   import Engine._
+
+  /** The files under dbPath; None = ephemeral (no durability contract,
+    * so nothing is persisted or journaled). */
+  private val disk: Option[Persistence] = dbPath.map(p => new Persistence(p, warehouseDir,
+    l => createViewRe.findFirstMatchIn(l).map(m => qualify(m.group(1)))))
 
   /** schema.table -> lock for copy-on-write writers. Keyed on the
     * db-qualified name (same canonicalization as the constraints
@@ -71,13 +78,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * CREATE INDEX intercept doc at [[Engine.createIndexRe]]. */
   private val indexes =
     new ConcurrentHashMap[String, (String, Seq[String], Boolean)]()
-  private def persistIndexes(): Unit = dbPath.foreach { p =>
-    import scala.jdk.CollectionConverters._
-    val lines = indexes.asScala.toSeq.sortBy(_._1).map { case (n, (t, cs, u)) =>
-      s"$n\t$t\t${cs.mkString(",")}\t${if (u) "U" else ""}"
-    }
-    writeFile(s"$p/indexes.tsv", lines.mkString("\n"))
-  }
+  private def persistIndexes(): Unit =
+    disk.foreach(_.save(Persistence.Indexes, indexes.asScala))
 
   /** Engine-wide count of OPEN transaction blocks, every connection.
     * Maintained by the single BEGIN site and [[TxnState.reset]] (the
@@ -110,13 +112,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   /** Declared constraints per table (SURVEY §7.3 phase 10: DuckDB
     * enforces PK/UNIQUE/NOT NULL natively; Spark accepts none — we
     * record them at CREATE TABLE and enforce on the ingest paths). */
-  case class Fk(cols: Seq[String], refTable: String, refCols: Seq[String])
-  case class Constraints(pk: Seq[String], unique: Seq[Seq[String]], notNull: Seq[String],
-      fks: Seq[Fk] = Nil, enumCols: Seq[(String, String)] = Nil,
-      checks: Seq[String] = Nil) {
-    def isEmpty: Boolean = pk.isEmpty && unique.isEmpty && notNull.isEmpty &&
-      fks.isEmpty && enumCols.isEmpty && checks.isEmpty
-  }
   private[server] val constraints = new ConcurrentHashMap[String, Constraints]()
 
   /** User-defined ENUM types (DuckDB CREATE TYPE … AS ENUM): name →
@@ -193,7 +188,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * unresolved post-rename spelling would silently miss FK children
     * (ADVICE r13). */
   private def fkChildrenOf(originalKey: String): Seq[(String, Fk)] = {
-    import scala.jdk.CollectionConverters._
     val st = txn.get()
     val base = constraints.asScala.toMap
     val merged =
@@ -211,7 +205,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
   /** NOT NULL sweep shared by the insert and upsert paths. */
   private def enforceNotNull(cols: Seq[String], newData: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
     cols.foreach { nn =>
       if (newData.filter(col(nn).isNull).limit(1).count() > 0)
         throw new IllegalArgumentException(
@@ -271,7 +264,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * and on the SET-updated image). */
   private def enforceRowLocal(table: String, newData: DataFrame): Unit =
     constraintsOfOriginal(qualify(table)).foreach { c =>
-      import org.apache.spark.sql.functions.{col, lit}
+      import org.apache.spark.sql.functions.lit
       // CHECK constraints: row-local predicate sweep (PG semantics —
       // a NULL check result passes, only FALSE rejects)
       c.checks.foreach { ck =>
@@ -569,8 +562,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * auto-commits (same declared class as temp-object DDL). Scalar
     * params substitute as parenthesized expressions; TABLE macros
     * splice as a parenthesized subquery. */
-  private[server] case class MacroDef(params: Seq[String], defaults: Map[String, String],
-      body: String, isTable: Boolean)
   private[server] val macros = new ConcurrentHashMap[String, MacroDef]()
 
   /** Bare lower-case macro name: macros live in one namespace like
@@ -731,18 +722,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       SqlLexer.replaceInCode(s, re)(_ => "(" + args(p) + ")")
     }
 
-  private def persistMacros(): Unit = dbPath.foreach { p =>
-    import scala.jdk.CollectionConverters._
-    def b64(s: String) =
-      java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-    val lines = macros.asScala.toSeq.sortBy(_._1).map { case (n, d) =>
-      val ps = d.params.map(pp =>
-        if (d.defaults.contains(pp)) s"$pp:=${b64(d.defaults(pp))}" else pp)
-        .mkString(",")
-      s"$n\t${if (d.isTable) "T" else "S"}\t$ps\t${b64(d.body)}"
-    }
-    writeFile(s"$p/macros.tsv", lines.mkString("\n"))
-  }
+  private def persistMacros(): Unit =
+    disk.foreach(_.save(Persistence.Macros, macros.asScala))
 
   private final class TempNs(val id: Long) {
     val views = scala.collection.mutable.Map.empty[String, TempViewDef]
@@ -1309,7 +1290,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * txn's new rows can collide there even when PKs don't). Runs under
     * the table's write lock inside COMMIT validation. */
   private def mergeDisjointRewrite(t: String, st: TxnState): Unit = {
-    import org.apache.spark.sql.functions.col
     val stg = st.staged(t)
     val keys = st.changedKeys(t).get
     val pkCols = constraintsOfOriginal(t).map(c =>
@@ -1369,7 +1349,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * First-touch pins compare against this map. */
   private def ensureSnapEpochs(st: TxnState): Unit =
     if (st.open && st.snapEpochs == null) {
-      import scala.jdk.CollectionConverters._
       st.snapEpochs = tableEpochs.asScala.map { case (k, v) => k -> v.get() }.toMap
     }
 
@@ -1711,8 +1690,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * validation atomic against concurrent commits) — verify the WHOLE
     * pinned epoch set, then publish: transactional DROPs first
     * (freeing names for same-txn re-CREATEs), created tables by
-    * RENAME, altered tables by DROP+RENAME replace, deltas with
-    * INSERT INTO, staged images with INSERT OVERWRITE. A staged table
+    * RENAME, deltas with INSERT INTO, staged images through
+    * [[publish]] (altered ones by replace). A staged table
     * whose base only received concurrent APPENDS since the pin does
     * not abort: the appended files are FK-re-validated
     * ([[recheckFkAppends]]) and replayed into the staged image
@@ -1723,8 +1702,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * constraint re-validation that bounds it. On conflict the whole
     * transaction rolls back with a serialization error. A mid-publish
     * failure never destroys the only copy of unpublished data: the
-    * remaining images are kept on disk and named in the error
-    * (mirrors alterColumnType's recovery contract). */
+    * remaining images are kept on disk and named in the error. */
   private def commitTxn(st: TxnState): Unit = {
     if (st.staged.isEmpty && st.deltas.isEmpty && st.dropped.isEmpty &&
         st.renames.isEmpty && st.createdViews.isEmpty && st.droppedViews.isEmpty &&
@@ -1843,15 +1821,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         st.droppedSchemas.toSeq.sorted.foreach(emptySchemaOrError(st, _))
       } catch { case e: Throwable => dropStaged(st); throw e }
       // ---- publish journal (r12): validation passed, so the commit
-      // DECISION is made — record the op list (atomically, via
-      // temp+rename) BEFORE the first destructive step. A crash
-      // anywhere in the publish loop leaves the journal + the staged
-      // images on disk; boot-time [[recoverPublishJournals]] rolls the
-      // commit FORWARD at the file level (the only correct direction:
-      // a half-done INSERT OVERWRITE has already damaged the base, and
-      // the staged image is the only intact copy). Without the journal
-      // the restart's stale-staging reclaim would DELETE that only
-      // copy. No dbPath → no durability contract → no journal.
+      // DECISION is made — record the op list BEFORE the first
+      // destructive step; a crash in the publish loop rolls the commit
+      // FORWARD at boot ([[Persistence.recover]]) instead of the
+      // stale-staging reclaim deleting the only intact copy.
       // the commit's full rename map, captured BEFORE the publish
       // passes consume st.renames: a table CREATED in this txn may
       // reference a renamed parent by its in-txn (new) name OR its
@@ -1898,18 +1871,17 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         }
         out.toSeq
       }
-      val journal: Option[java.io.File] = dbPath.map { p =>
-        val ops = tables.flatMap { t =>
-          val drop = if (st.dropped.contains(t)) Seq(s"drop\t$t\t\t\t") else Nil
+      val journal: Option[java.io.File] = disk.map { dk =>
+        import Persistence.JournalOp._
+        val ops: Seq[Persistence.JournalOp] = tables.flatMap { t =>
+          val drop = if (st.dropped.contains(t)) Seq(Drop(t)) else Nil
           val rest =
-            if (st.created.contains(t)) {
-              val cl = st.txnConstraints.get(t).flatten.filterNot(_.isEmpty)
-                .map(c => java.util.Base64.getEncoder.encodeToString(
-                  constraintLine(t, rekeyCreatedFks(c)).getBytes("UTF-8"))).getOrElse("")
-              Seq(s"rename\t$t\t${st.staged(t)}\t\t$cl")
-            } else if (st.altered.contains(t)) Seq(s"replace\t$t\t${st.staged(t)}\t\t")
+            if (st.created.contains(t))
+              Seq(Rename(t, st.staged(t), st.txnConstraints.get(t).flatten
+                .filterNot(_.isEmpty).map(rekeyCreatedFks)))
+            else if (st.altered.contains(t)) Seq(Replace(t, st.staged(t)))
             else st.staged.get(t) match {
-              case Some(stg) => Seq(s"overwrite\t$t\t$stg\t\t")
+              case Some(stg) => Seq(Overwrite(t, stg))
               case None => st.deltas.get(t).toSeq.map { d =>
                 // base file list: recovery deletes files a crashed
                 // partial append left behind, then re-copies the delta
@@ -1917,7 +1889,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
                   try spark.table(t).inputFiles.toSeq
                     .map(f => f.substring(f.lastIndexOf('/') + 1))
                   catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
-                s"append\t$t\t$d\t${base.mkString(",")}\t"
+                Append(t, d, base)
               }
             }
           drop ++ rest
@@ -1935,35 +1907,22 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             // drop-completion evidence; a cycle member is never a
             // dropped name); the FINAL hop carries the registration,
             // moving FROM the temp when the chain was broken.
-            if (!last) Seq(s"mv\t$dst\t$src\tchain\t")
-            else {
-              val ops = renameJournalOps(orig, dst, renameMap, droppedSet)
-              if (src == orig) ops
-              else ops.zipWithIndex.map { case (l, i) =>
-                if (i == 0) {
-                  val f = l.split("\t", -1)
-                  s"mv\t$dst\t$src\tchain\t${f(4)}"
-                } else l
-              }
+            if (!last) Seq(Mv(dst, src, "chain", None))
+            else renameJournalOps(orig, dst, renameMap, droppedSet) match {
+              case (mv: Mv) +: children if src != orig =>
+                mv.copy(from = src, marker = "chain") +: children
+              case ops => ops
             }
           }
-        } ++ st.droppedViews.toSeq.sorted.map(v => s"vdrop\t$v\t\t\t") ++
+        } ++ st.droppedViews.toSeq.sorted.map(ViewDrop(_)) ++
+          // view intents edit views.sql at recovery (catalog views
+          // have no warehouse dir; the journal replays their DDL)
           st.createdViews.toSeq.map { case (v, text) =>
-            // view intents edit views.sql at recovery (catalog views
-            // have no warehouse dir; the journal replays their DDL)
-            val stmt = s"CREATE OR REPLACE VIEW $v AS $text"
-            s"vcreate\t$v\t\t\t" + java.util.Base64.getEncoder
-              .encodeToString(stmt.getBytes("UTF-8"))
-          } ++ st.droppedEnums.toSeq.sorted.map(n => s"edrop\t$n\t\t\t") ++
-          st.createdEnums.toSeq.map { case (n, vs) =>
-            // enum intents edit enums.tsv at recovery (same line format
-            // persistEnums writes)
-            s"ecreate\t$n\t\t\t" + java.util.Base64.getEncoder
-              .encodeToString(s"$n\t${vs.mkString(",")}".getBytes("UTF-8"))
-          } ++ st.droppedSchemas.toSeq.sorted.map(s => s"sdrop\t$s\t\t\t")
-        val f = new java.io.File(p, s"publish_journal_${txnSeq.incrementAndGet()}.tsv")
-        writeFile(f.getAbsolutePath, ops.mkString("\n"))
-        f
+            ViewCreate(v, s"CREATE OR REPLACE VIEW $v AS $text")
+          } ++ st.droppedEnums.toSeq.sorted.map(EnumDrop(_)) ++
+          st.createdEnums.toSeq.map { case (n, vs) => EnumCreate(n, vs) } ++
+          st.droppedSchemas.toSeq.sorted.map(SchemaDrop(_))
+        dk.writeJournal(txnSeq.incrementAndGet(), ops)
       }
       val published = scala.collection.mutable.Buffer.empty[String]
       try {
@@ -1988,27 +1947,18 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           if (!st.created.contains(t)) st.staged.get(t) match {
             case Some(stg) if st.altered.contains(t) =>
               // transactional ALTER: the staged image's SCHEMA may
-              // differ from the base, so publish by REPLACE — the same
-              // drop+rename pattern as the non-txn ALTER COLUMN TYPE
-              // rebuild. Constraint registrations keep their committed
-              // values (column names survive a type change; parity with
-              // the auto-commit path).
-              spark.sql(s"DROP TABLE $t")
-              removeTableDir(t) // boot-registered EXTERNAL dirs survive DROP
-              spark.sql(s"ALTER TABLE $stg RENAME TO $t")
+              // differ from the base, so publish by REPLACE, like the
+              // auto-commit ALTER COLUMN TYPE. Constraint registrations
+              // keep their committed values (column names survive a
+              // type change; parity with the auto-commit path).
+              publish(t, stg, replace = true)
               st.altered.remove(t)
               st.staged.remove(t)
-              bumpRewriteEpoch(t) // schema rewrite invalidates snapshots
-              logRewrite(t, None) // whole-table: nothing commutes past an ALTER
-              bumpEpoch(t)
               published += t
             case Some(stg) =>
-              spark.sql(s"INSERT OVERWRITE TABLE $t SELECT * FROM $stg").collect()
-              bumpRewriteEpoch(t) // an overwrite can change existing rows
               // the published image differs from the pre-image exactly
               // on this txn's recorded key set (None = unattributable)
-              logRewrite(t, st.changedKeys.getOrElse(t, None))
-              bumpEpoch(t)
+              publish(t, stg, replace = false, st.changedKeys.getOrElse(t, None))
               published += t
             case None => st.deltas.get(t).foreach { d =>
               spark.sql(s"INSERT INTO $t SELECT * FROM $d").collect()
@@ -2047,7 +1997,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
               if (idx == 0 && !applied) throw e // phase untouched: plain abort
               val partialMv = e match {
                 case p: Engine.PartialRenameFailure =>
-                  Seq(s"mv\t${p.qn}\t${p.qo}\tchain\t")
+                  Seq(Persistence.JournalOp.Mv(p.qn, p.qo, "chain", None))
                 case _ => Nil
               }
               val unpersisted = e match {
@@ -2099,7 +2049,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           // way, just with a different message)
           try {
             spark.sql(rewrite(stmt))
-            if (dbPath.isDefined) { unlogView(v); logViewDdl(stmt) }
+            disk.foreach(_.rewriteViews(Set(qualify(v)), Seq(stmt)))
           } catch { case scala.util.control.NonFatal(_) => }
           st.createdViews.remove(v)
         }
@@ -2139,8 +2089,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           // re-apply over post-failure writes at boot).
           e match {
             case rp: Engine.RenamePhaseFailure =>
-              journal.foreach(f => writeFile(f.getAbsolutePath,
-                rp.repairOps.mkString("\n")))
+              journal.foreach(Persistence.rewriteJournal(_, rp.repairOps))
             case _ => journal.foreach(_.delete())
           }
           // published tables' images are consumed — drop those; keep
@@ -2190,7 +2139,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * copies committed rows verbatim). Runs under the table's write
     * lock inside COMMIT validation; any failure aborts the commit. */
   private def replayBaseAppends(t: String, st: TxnState): Unit = {
-    import org.apache.spark.sql.functions.col
     val pinned = st.pinnedFiles.getOrElse(t, None).getOrElse(noSnapshotError(t))
     val current =
       try spark.table(t).inputFiles.toSeq
@@ -2199,20 +2147,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     if (newFiles.isEmpty) return // epoch moved without new files (zero-row insert)
     val stg = st.staged(t)
     val appended = spark.read.schema(spark.table(stg).schema).parquet(newFiles: _*)
-    constraintsOfOriginal(t).foreach { c =>
-      val keySets = (if (c.pk.nonEmpty) Seq(c.pk) else Nil) ++ c.unique
-      keySets.foreach { keys =>
-        val kc = keys.map(col)
-        val hit = appended
-          .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-          .select(kc: _*)
-          .join(spark.table(stg).select(kc: _*), keys, "left_semi")
-        if (hit.limit(1).count() > 0)
-          throw new IllegalArgumentException(
-            s"could not commit transaction: a concurrent append to $t collides with " +
-              s"this transaction's rows on (${keys.mkString(", ")}) (serialization " +
-              "conflict); the transaction was rolled back")
-      }
+    rejectKeyCollisions(t, appended, spark.table(stg)) { keys =>
+      s"could not commit transaction: a concurrent append to $t collides with " +
+        s"this transaction's rows on (${keys.mkString(", ")}) (serialization " +
+        "conflict); the transaction was rolled back"
     }
     appended.write.insertInto(stg)
   }
@@ -2231,7 +2169,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * to a dropped parent) aborts the commit. Runs under the commit
     * locks; proportional to the appended delta, not the table. */
   private def recheckFkAppends(child: String, st: TxnState): Unit = {
-    import org.apache.spark.sql.functions.col
     val written = st.staged.keySet ++ st.dropped
     val fks = constraintsOfOriginal(child).map(_.fks).getOrElse(Nil)
       .filter(f => written.contains(qualify(f.refTable)))
@@ -2275,20 +2212,22 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * table's epoch actually moved. NULL keys never collide
     * (unique-index semantics, same as enforceConstraints). */
   private def recheckDeltaKeys(table: String, delta: String): Unit =
+    rejectKeyCollisions(table, spark.table(delta), spark.table(table)) { keys =>
+      s"could not commit transaction: a concurrent transaction inserted a " +
+        s"duplicate key into $table (${keys.mkString(", ")}) (serialization " +
+        "conflict); the transaction was rolled back"
+    }
+
+  /** Raise `conflict(keys)` when a row of `rows` repeats a PK/UNIQUE
+    * key of `table` already in `existing` (NULL keys never collide). */
+  private def rejectKeyCollisions(table: String, rows: DataFrame, existing: DataFrame)(
+      conflict: Seq[String] => String): Unit =
     constraintsOfOriginal(table).foreach { c =>
-      import org.apache.spark.sql.functions.col
-      val keySets = (if (c.pk.nonEmpty) Seq(c.pk) else Nil) ++ c.unique
-      keySets.foreach { keys =>
+      ((if (c.pk.nonEmpty) Seq(c.pk) else Nil) ++ c.unique).foreach { keys =>
         val kc = keys.map(col)
-        val hit = spark.table(delta)
-          .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-          .select(kc: _*)
-          .join(spark.table(table).select(kc: _*), keys, "left_semi")
-        if (hit.limit(1).count() > 0)
-          throw new IllegalArgumentException(
-            s"could not commit transaction: a concurrent transaction inserted a " +
-              s"duplicate key into $table (${keys.mkString(", ")}) (serialization " +
-              "conflict); the transaction was rolled back")
+        val hit = rows.filter(kc.map(_.isNotNull).reduce(_ && _)).select(kc: _*)
+          .join(existing.select(kc: _*), keys, "left_semi")
+        if (hit.limit(1).count() > 0) throw new IllegalArgumentException(conflict(keys))
       }
     }
 
@@ -2331,18 +2270,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val stg = physWrite(q) // existing overlay, or pin + snapshot copy
     alterColTypeRe.findFirstMatchIn(sql) match {
       case Some(m) =>
-        val colName = m.group(2).stripPrefix("\"").stripSuffix("\"")
-        val cols = spark.table(stg).schema.fieldNames
-        if (!cols.exists(_.equalsIgnoreCase(colName)))
-          throw new IllegalArgumentException(
-            s"""column "$colName" of relation "$table" does not exist""")
-        val newType = m.group(3).trim
-        val mapped = typeAliasMap.getOrElse(newType.toLowerCase, newType)
-        val proj = cols.map { c =>
-          if (c.equalsIgnoreCase(colName))
-            s"CAST(${Option(m.group(4)).getOrElse(s"`$c`")} AS $mapped) AS `$c`"
-          else s"`$c`"
-        }.mkString(", ")
+        val proj = alterTypeProjection(table, stg, m.group(2), m.group(3).trim,
+          Option(m.group(4)))
         val stg2 = q + "__txn" + txnSeq.incrementAndGet()
         spark.sql(s"DROP TABLE IF EXISTS $stg2")
         spark.sql(s"CREATE TABLE $stg2 AS SELECT $proj FROM $stg")
@@ -2401,7 +2330,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       // journal first: the dir move and the registration rekey are two
       // steps — a crash between them must roll FORWARD at boot, not
       // leave a renamed dir with an old-name registration
-      val journal = renameJournal(qo, qn)
+      val journal = disk.map(_.writeJournal(txnSeq.incrementAndGet(),
+        renameJournalOps(qo, qn, Map(qo -> qn), Set.empty)))
       try applyRenamePhysical(qo, qn)
       catch {
         case p: Engine.PartialRenameFailure =>
@@ -2409,9 +2339,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           // SURVIVE (boot rolls the rename forward) — shrunk to exactly
           // the ops still outstanding, so completed steps can't be
           // re-applied over later in-process edits
-          journal.foreach(f => writeFile(f.getAbsolutePath,
-            partialRenameRepairOps(qo, qn, p.constraintsPersisted)
-              .mkString("\n")))
+          journal.foreach(Persistence.rewriteJournal(_,
+            partialRenameRepairOps(qo, qn, p.constraintsPersisted)))
           throw new IllegalStateException(
             s"ALTER TABLE RENAME partially applied ($qo is now $qn in the " +
               "catalog); the remaining steps are journaled and complete at " +
@@ -2433,34 +2362,27 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * `excluded` names tables the same commit DROPS, whose registration
     * must not be resurrected by a recovery constraint op. */
   private def renameJournalOps(qo: String, qn: String,
-      renameMap: Map[String, String], excluded: Set[String]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    def b64(s: String) = java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-    val regLine = Option(constraints.get(qo)).filterNot(_.isEmpty)
-      .map(c => b64(constraintLine(qn, rekeyFksThrough(c, renameMap)))).getOrElse("")
+      renameMap: Map[String, String], excluded: Set[String]): Seq[Persistence.JournalOp] = {
+    import Persistence.JournalOp._
+    val reg = Option(constraints.get(qo)).filterNot(_.isEmpty)
+      .map(rekeyFksThrough(_, renameMap))
     // children that are THEMSELVES renamed carry their registration in
-    // their own mv op's regLine; dropped children carry none
-    val childLines = constraints.asScala.toSeq.collect {
+    // their own mv op; dropped children carry none
+    val children = constraints.asScala.toSeq.collect {
       case (k, c) if k != qo && !excluded(k) && !renameMap.contains(k) &&
           c.fks.exists(f => qualify(f.refTable) == qo) =>
-        s"constraint\t$k\t\t\t${b64(constraintLine(k, rekeyFksThrough(c, renameMap)))}"
+        Constraint(k, Some(rekeyFksThrough(c, renameMap)))
     }
-    // field 3 records whether the SOURCE had a warehouse-canonical dir
-    // when the journal was written: recovery's completion heuristic for
-    // a preceding same-name `drop` needs to know whether source-dir
+    // the marker records whether the SOURCE had a warehouse-canonical
+    // dir when the journal was written: recovery's completion heuristic
+    // for a preceding same-name `drop` needs to know whether source-dir
     // absence means "moved pre-crash" (wh) or "never had one" (ext —
     // a genuinely external location, where dir absence proves nothing)
-    val marker = if (tableDirOf(qo).isDirectory) "wh" else "ext"
-    s"mv\t$qn\t$qo\t$marker\t$regLine" +: childLines
+    Mv(qn, qo, sourceDirMarker(qo), reg) +: children
   }
 
-  private def renameJournal(qo: String, qn: String): Option[java.io.File] =
-    dbPath.map { p =>
-      val f = new java.io.File(p, s"publish_journal_${txnSeq.incrementAndGet()}.tsv")
-      writeFile(f.getAbsolutePath,
-        renameJournalOps(qo, qn, Map(qo -> qn), Set.empty).mkString("\n"))
-      f
-    }
+  private def sourceDirMarker(qo: String): String =
+    if (Persistence.tableDirOf(warehouseDir, qo).isDirectory) "wh" else "ext"
 
   /** Apply a rename NOW (both names' locks held by the caller):
     * catalog rename, EXTERNAL-dir move, registration + FK rekey,
@@ -2471,7 +2393,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * consistent with the catalog) and throws [[PartialRenameFailure]]
     * so the caller keeps the journal for boot-time roll-forward. */
   private def applyRenamePhysical(qo: String, qn: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val external =
       try spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(qo)).tableType ==
@@ -2515,28 +2436,19 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * registration lines, so recovery makes constraints.tsv match the
     * map the live process was already serving. */
   private def partialRenameRepairOps(
-      qo: String, qn: String, constraintsPersisted: Boolean): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    // carry the wh/ext marker exactly like renameJournalOps — "did the
-    // SOURCE (qo) have a warehouse-canonical dir when this journal was
-    // written": recovery's drop-completion heuristic keys on field 3,
-    // and while repair journals never hold drop ops TODAY, an empty
-    // field would silently break that invariant if their contents ever
-    // grow (ADVICE r13). Post-rename a consumed source dir probes
-    // "ext", which conservatively disables completion evidence — the
-    // safe direction for the heuristic.
-    val marker = if (tableDirOf(qo).isDirectory) "wh" else "ext"
-    if (constraintsPersisted) Seq(s"mv\t$qn\t$qo\t$marker\t")
+      qo: String, qn: String, constraintsPersisted: Boolean): Seq[Persistence.JournalOp] = {
+    import Persistence.JournalOp._
+    // the wh/ext marker as in renameJournalOps (ADVICE r13): post-rename
+    // a consumed source dir probes "ext", which conservatively disables
+    // recovery's drop-completion evidence
+    val marker = sourceDirMarker(qo)
+    if (constraintsPersisted) Seq(Mv(qn, qo, marker, None))
     else {
-      def b64(s: String) =
-        java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-      val regLine = Option(constraints.get(qn)).filterNot(_.isEmpty)
-        .map(c => b64(constraintLine(qn, c))).getOrElse("")
-      val childLines = constraints.asScala.toSeq.collect {
+      val children = constraints.asScala.toSeq.collect {
         case (k, c) if k != qn && c.fks.exists(f => qualify(f.refTable) == qn) =>
-          s"constraint\t$k\t\t\t${b64(constraintLine(k, c))}"
+          Constraint(k, Some(c))
       }
-      s"mv\t$qn\t$qo\t$marker\t$regLine" +: childLines
+      Mv(qn, qo, marker, Option(constraints.get(qn)).filterNot(_.isEmpty)) +: children
     }
   }
 
@@ -2546,12 +2458,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * (user parquet elsewhere) stays put, and the catalog entry keeps
     * pointing at it. */
   private def moveExternalDir(qo: String, qn: String): Unit = {
-    val Array(db, to) = qo.split("\\.", 2)
-    val tn = qn.split("\\.", 2)(1)
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    val oldDir = new java.io.File(wh, s"$db.db/$to")
-    val newDir = new java.io.File(wh, s"$db.db/$tn")
+    val oldDir = Persistence.tableDirOf(warehouseDir, qo)
+    val newDir = Persistence.tableDirOf(warehouseDir, qn)
     val loc =
       try new java.io.File(new java.net.URI(
         spark.sessionState.catalog.getTableMetadata(
@@ -2668,20 +2576,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // ROLLBACK path drops the eager schema, but a kill -9 mid-txn
     // would otherwise leak a permanent user-visible orphan — boot
     // recovery consumes the marker and drops the schema if still empty
-    pendingSchemaMarker(s).foreach(f => writeFile(f.getAbsolutePath, s))
+    disk.foreach(_.markSchema(s))
     spark.sql(s"CREATE DATABASE `$s`")
     st.createdSchemas += s
     ok()
   }
 
-  /** Crash-compensation marker for an eagerly-created in-txn schema:
-    * written BEFORE the CREATE, deleted once the schema's fate is
-    * decided (COMMIT keeps it, ROLLBACK / same-txn un-create drops
-    * it). A crash in between leaves the marker for [[loadPersisted]]. */
-  private def pendingSchemaMarker(s: String): Option[java.io.File] =
-    dbPath.map(p => new java.io.File(p, s"pending_schema_$s.marker"))
-  private def clearSchemaMarker(s: String): Unit =
-    pendingSchemaMarker(s).foreach(f => if (f.exists()) f.delete())
+  /** Consume an eager in-txn schema's crash marker once its fate is
+    * decided (a crash before that leaves it for [[loadPersisted]]). */
+  private def clearSchemaMarker(s: String): Unit = disk.foreach(_.clearSchemaMarker(s))
 
   /** Transactional DROP SCHEMA (r13, RESTRICT only — CASCADE keeps the
     * declared auto-commit path): a schema created in this txn drops
@@ -2801,26 +2704,22 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * hop touches them. */
   private def renamePhaseRepairOps(
       remaining: Seq[(String, String, String, Boolean)],
-      partialUnpersisted: Option[String]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    def b64(x: String) =
-      java.util.Base64.getEncoder.encodeToString(x.getBytes("UTF-8"))
+      partialUnpersisted: Option[String]): Seq[Persistence.JournalOp] = {
+    import Persistence.JournalOp._
     val m0 = remaining.map { case (src, dst, _, _) => src -> dst }.toMap
     // each OBJECT moves exactly once across the remaining hops (a
     // broken cycle member's two hops straddle the failure point, so at
     // most one remains) — the final name is a SINGLE map application;
     // composing would chase a dst into a DIFFERENT object's move
     def fin(k: String): String = m0.getOrElse(k, k)
-    val mvs = remaining.map { case (src, dst, _, _) => s"mv\t$dst\t$src\tchain\t" }
+    val mvs = remaining.map { case (src, dst, _, _) => Mv(dst, src, "chain", None) }
     val regs = constraints.asScala.toSeq.flatMap { case (k, c) =>
       val f = fin(k)
       val c2 = c.copy(fks = c.fks.map(fk =>
         fk.copy(refTable = fin(qualify(fk.refTable)))))
       val touched = f != k || c2 != c || partialUnpersisted.contains(k) ||
         c.fks.exists(fk => partialUnpersisted.contains(qualify(fk.refTable)))
-      if (touched && !c.isEmpty)
-        Some(s"constraint\t$f\t\t\t${b64(constraintLine(f, c2))}")
-      else None
+      if (touched && !c.isEmpty) Some(Constraint(f, Some(c2))) else None
     }
     mvs ++ regs
   }
@@ -4133,7 +4032,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       case _ =>
         df.collect()
         verb match {
-          case "CREATE" if dbPath.isDefined && createViewRe.matches(sql) => logViewDdl(sql)
+          case "CREATE" if createViewRe.matches(sql) => disk.foreach(_.logView(sql))
           case "DROP" =>
             // constraint-registry cleanup is unconditional (a re-created
             // table must not inherit the old table's constraints); the
@@ -4230,24 +4129,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     ExecResult(null, s"INSERT 0 $n")
   }
 
-  /** Drop a view's journal entries so replay doesn't resurrect it.
-    * Names compare fully-qualified (unqualified = main), and the
-    * rewritten journal keeps its trailing newline — logViewDdl appends,
-    * and a missing terminator would merge the next entry into the last
-    * line and silently lose both at replay. */
-  private def unlogView(view: String): Unit = dbPath.foreach { p =>
-    journalLock.synchronized {
-      val f = new java.io.File(s"$p/views.sql")
-      if (f.exists()) {
-        val target = qualify(view)
-        val src = scala.io.Source.fromFile(f)
-        val kept = try src.getLines().filterNot { l =>
-          createViewRe.findFirstMatchIn(l).exists(m => qualify(m.group(1)) == target)
-        }.toList finally src.close()
-        writeFile(f.getPath, if (kept.isEmpty) "" else kept.mkString("\n") + "\n")
-      }
-    }
-  }
+  /** Drop a view's views.sql entries so replay doesn't resurrect it
+    * (names compare fully-qualified). */
+  private def unlogView(view: String): Unit =
+    disk.foreach(_.rewriteViews(Set(qualify(view))))
 
   /** Dialect-level string rewrites (SURVEY §4.2-§4.3: read_* TVF
     * aliasing; the rest of the dialect layer lives in GraftFunctions). */
@@ -4909,69 +4794,53 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
   // -- DML hard parts (SURVEY §7.3) -----------------------------------------
 
-  /** UPDATE t SET a=e[, …] [WHERE p] → materialize SELECT with CASE
-    * projection, then overwrite — Spark cannot read and overwrite the
-    * same table in one job, so the new image goes through a staging
-    * table (the copy in copy-on-write). */
+  /** The CTAS projection of `ALTER … ALTER [COLUMN] c TYPE T [USING e]`
+    * over `src` (the table, or its in-txn staged copy): every column
+    * of `src`, with `c` cast to T (from e when given). */
+  private def alterTypeProjection(table: String, src: String, column: String,
+      newType: String, usingExpr: Option[String]): String = {
+    val cols = spark.table(src).schema.fieldNames
+    val colName = column.stripPrefix("\"").stripSuffix("\"")
+    if (!cols.exists(_.equalsIgnoreCase(colName)))
+      throw new IllegalArgumentException(
+        s"""column "$colName" of relation "$table" does not exist""")
+    val mapped = typeAliasMap.getOrElse(newType.toLowerCase, newType)
+    cols.map { c =>
+      if (c.equalsIgnoreCase(colName))
+        s"CAST(${usingExpr.getOrElse(s"`$c`")} AS $mapped) AS `$c`"
+      else s"`$c`"
+    }.mkString(", ")
+  }
+
   /** DuckDB `ALTER TABLE t ALTER [COLUMN] c [SET DATA] TYPE T [USING e]`
     * — Spark's v1 parquet tables cannot change a column's type in
     * place, so this is a copy-on-write REBUILD: stage a CTAS with the
-    * cast (or the USING expression), then drop + rename under the
-    * table's write lock. Was a declared scope-down ("type changes
-    * out") through r7. */
+    * cast (or the USING expression), then replace-publish it under the
+    * table's write lock ([[swapIn]]). Was a declared scope-down ("type
+    * changes out") through r7. */
   private def alterColumnType(table: String, column: String, newType: String,
       usingExpr: Option[String]): ExecResult = {
     guardStagedDdl(table)
     val lock = lockFor(table).writeLock()
     lock.lock()
     try {
-      val cols = spark.table(table).schema.fieldNames
-      val colName = column.stripPrefix("\"").stripSuffix("\"")
-      if (!cols.exists(_.equalsIgnoreCase(colName)))
-        throw new IllegalArgumentException(
-          s"""column "$colName" of relation "$table" does not exist""")
-      val mapped = typeAliasMap.getOrElse(newType.toLowerCase, newType)
-      val proj = cols.map { c =>
-        if (c.equalsIgnoreCase(colName))
-          s"CAST(${usingExpr.getOrElse(s"`$c`")} AS $mapped) AS `$c`"
-        else s"`$c`"
-      }.mkString(", ")
+      val proj = alterTypeProjection(table, table, column, newType, usingExpr)
       // the stage must live in the TARGET's database (RENAME cannot
       // cross databases)
-      val stage = table + "__alter"
+      val q = qualify(table)
+      val stage = q + "__alter"
       spark.sql(s"DROP TABLE IF EXISTS $stage")
-      spark.sql(s"CREATE TABLE $stage AS SELECT $proj FROM $table")
-      try {
-        spark.sql(s"DROP TABLE $table")
-        removeTableDir(table) // boot-registered EXTERNAL dirs survive DROP
-        spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-      } catch {
-        case e: Throwable =>
-          // recovery must never destroy the only copy of the data: once
-          // the original DROP has happened the stage IS the table, so a
-          // rename failure renames it back into place (or, failing
-          // that, leaves it and names it in the error). Only a failure
-          // BEFORE the drop may discard the stage.
-          val originalExists =
-            try spark.catalog.tableExists(table) catch { case _: Throwable => false }
-          if (originalExists) {
-            spark.sql(s"DROP TABLE IF EXISTS $stage")
-            throw e
-          }
-          val renamedBack =
-            try { spark.sql(s"ALTER TABLE $stage RENAME TO $table"); true }
-            catch { case _: Throwable => false }
-          if (renamedBack) throw e
-          throw new IllegalStateException(
-            s"ALTER TABLE failed mid-rebuild; data preserved in staging table $stage: ${e.getMessage}", e)
-      }
-      bumpEpoch(table); bumpRewriteEpoch(table)
-      logRewrite(table, None)
-      refreshPin(table) // in-txn DDL auto-commits: our own bump is not a conflict
+      spark.sql(s"CREATE TABLE $stage AS SELECT $proj FROM $q")
+      swapIn(q, stage, replace = true)
+      refreshPin(q) // in-txn DDL auto-commits: our own bump is not a conflict
       ExecResult(null, "ALTER TABLE")
     } finally lock.unlock()
   }
 
+  /** UPDATE t SET a=e[, …] [WHERE p] → materialize SELECT with CASE
+    * projection, then overwrite — Spark cannot read and overwrite the
+    * same table in one job, so the new image goes through a staging
+    * table (the copy in copy-on-write). */
   private def copyOnWriteUpdate(table0: String, setClause: String, where: Option[String]): ExecResult = {
     val table = resolveRenamed(table0) // post-rename names key by the original
     val lock = lockFor(table).writeLock()
@@ -5048,7 +4917,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       // referenced by a child. Exact old-minus-new key-set diff, so
       // updates that keep a referenced key intact pass.
       locally {
-        import org.apache.spark.sql.functions.col
         val referencing = fkChildrenOf(table)
         referencing.foreach { case (child, fk) =>
           val touchesKey = fk.refCols.exists(rc => sets.contains(rc.toLowerCase))
@@ -5068,11 +4936,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           }
         }
       }
-      stageAndSwap(phys, s"SELECT $proj FROM $rel")
-      if (!isTxnOpen) {
-        bumpEpoch(table); bumpRewriteEpoch(table)
-        logRewrite(table, keysOpt)
-      }
+      stageAndSwap(phys, s"SELECT $proj FROM $rel", keysOpt)
       ExecResult(null, s"UPDATE $touched")
     } finally lock.unlock()
   }
@@ -5115,7 +4979,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       // FK RESTRICT: deleting rows still referenced by a child table
       // is rejected (DuckDB/PG default behavior for enforced FKs)
       if (removed > 0) {
-        import org.apache.spark.sql.functions.col
         val referencing = fkChildrenOf(table)
         val remainingSql = s"FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL"
         referencing.foreach { case (child, fk) =>
@@ -5145,11 +5008,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
                 s"rows are still referenced by $child(${fk.cols.mkString(", ")})")
         }
       }
-      stageAndSwap(phys, s"SELECT * FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL")
-      if (!isTxnOpen) {
-        bumpEpoch(table); bumpRewriteEpoch(table)
-        logRewrite(table, keysOpt)
-      }
+      stageAndSwap(phys, s"SELECT * FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL", keysOpt)
       ExecResult(null, s"DELETE $removed")
     } finally lock.unlock()
   }
@@ -5164,7 +5023,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * <table-simple-name>.<col> (the existing row), like PostgreSQL. */
   private def insertOnConflict(table0: String, colList: Option[Seq[String]], srcSql: String,
       conflictCols: Option[Seq[String]], setClause: Option[String]): ExecResult = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     // resolveRenamed keys everything by the ORIGINAL name mid-txn; the
     // alias below keeps the USER-spelled name so SET expressions
     // referencing <name>.<col> still resolve
@@ -5299,16 +5158,18 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
               s"""SELECT $proj FROM $phys $tAlias LEFT JOIN $srcTable excluded ON $on
                  |UNION ALL
                  |SELECT excluded.* FROM $srcTable excluded LEFT ANTI JOIN $phys $tAlias ON $on""".stripMargin,
-              check = df => enforceRowLocal(table, df))
+              None, check = df => enforceRowLocal(table, df))
             cnt
         }
         // upsert counts as a rewrite (DO UPDATE mutates existing rows;
         // classifying conservatively keeps delta commits sound). Its
         // change set is left unattributed (r12 rewrite commute: the
         // merged-image rewrite touches source keys AND may insert — a
-        // concurrent rewrite conflicts at table granularity, declared)
+        // concurrent rewrite conflicts at table granularity, declared).
+        // DO UPDATE's swap already moved the epochs; DO NOTHING only
+        // appended but is classified the same way.
         recordChangedKeys(table, None)
-        if (!isTxnOpen) {
+        if (!isTxnOpen && setClause.isEmpty) {
           bumpEpoch(table); bumpRewriteEpoch(table)
           logRewrite(table, None)
         }
@@ -5460,13 +5321,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         spark.catalog.listDatabases().collect().map(_.name.toLowerCase).toSeq
           .filterNot(catalogCompatDbs)
     }
-    dbs.foreach { db =>
-      spark.catalog.listTables(db).collect()
-        .filter(t => !t.isTemporary && t.tableType != "VIEW")
-        .map(_.name.toLowerCase)
-        .filterNot(Engine.isHiddenTable)
-        .foreach(n => compactTable(s"$db.$n"))
-    }
+    userTables(dbs).foreach(compactTable(_))
     ExecResult(null, "CHECKPOINT")
   }
 
@@ -5477,19 +5332,23 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private val catalogCompatDbs: Set[String] =
     Set("pg_catalog", "information_schema", "system")
 
+  /** Qualified names of the user tables (no views, temp or staging) of `dbs`. */
+  private def userTables(dbs: Seq[String]): Seq[String] = dbs.flatMap { db =>
+    spark.catalog.listTables(db).collect().toSeq
+      .filter(t => !t.isTemporary && t.tableType != "VIEW")
+      .map(_.name.toLowerCase).filterNot(Engine.isHiddenTable).map(n => s"$db.$n")
+  }
+
   /** Compact one parquet table's file set to its ~target-size shape:
     * a staged `coalesce` copy (no shuffle — a file merge is IO-bound,
-    * partition count drops monotonically) swapped in under the
-    * table's write lock with the same DROP+RENAME recipe as
-    * transactional ALTER, journaled with a `replace` op so a kill
-    * between the DROP and the RENAME rolls the swap FORWARD from the
-    * fully-materialized stage at boot. Returns false when the table
-    * is already in shape (or not parquet-backed). Content is
-    * identical but the FILE SET is new: both epochs move so
-    * concurrently pinned readers abort with the clean serialization
-    * error instead of chasing deleted files — the same declared class
-    * as any rewrite. Constraint registrations are keyed by the name,
-    * which does not change. */
+    * partition count drops monotonically) replace-published under the
+    * table's write lock ([[swapIn]]). Returns false when the table is
+    * already in shape (or not parquet-backed). Content is identical
+    * but the FILE SET is new: both epochs move so concurrently pinned
+    * readers abort with the clean serialization error instead of
+    * chasing deleted files — the same declared class as any rewrite.
+    * Constraint registrations are keyed by the name, which does not
+    * change. */
   private def compactTable(q: String, targetBytes: Long = 128L << 20): Boolean = {
     val lock = lockFor(q).writeLock()
     lock.lock()
@@ -5503,45 +5362,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       val stage = q + "__alter"
       spark.sql(s"DROP TABLE IF EXISTS $stage")
       spark.table(q).coalesce(target).write.format("parquet").saveAsTable(stage)
-      // journal BEFORE the destructive step; deleted once the swap is
-      // done in-process (recoverPublishJournals `replace`: stage dir
-      // still present at boot = swap incomplete → rm target, move in)
-      val journal = dbPath.map { p =>
-        val f = new java.io.File(p,
-          s"publish_journal_${txnSeq.incrementAndGet()}.tsv")
-        writeFile(f.getAbsolutePath, s"replace\t$q\t$stage")
-        f
-      }
-      try {
-        spark.sql(s"DROP TABLE $q")
-        removeTableDir(q) // boot-registered EXTERNAL dirs survive DROP
-        spark.sql(s"ALTER TABLE $stage RENAME TO $q")
-      } catch {
-        // same preservation ladder as alterColumnType: before the DROP
-        // nothing happened (discard the stage); after it the stage IS
-        // the table — retry the rename (the content is identical, so a
-        // successful retry simply completes the compaction), else leave
-        // the stage + journal for boot roll-forward
-        case e: Throwable =>
-          val originalExists =
-            try spark.catalog.tableExists(q) catch { case _: Throwable => false }
-          if (originalExists) {
-            spark.sql(s"DROP TABLE IF EXISTS $stage")
-            journal.foreach(_.delete())
-            throw e
-          }
-          val renamedIn =
-            try { spark.sql(s"ALTER TABLE $stage RENAME TO $q"); true }
-            catch { case _: Throwable => false }
-          if (!renamedIn)
-            throw new IllegalStateException(
-              s"CHECKPOINT failed mid-swap on $q; data preserved in " +
-                s"staging table $stage, boot rolls the swap forward: " +
-                e.getMessage, e)
-      }
-      journal.foreach(_.delete())
-      bumpEpoch(q); bumpRewriteEpoch(q)
-      logRewrite(q, None)
+      swapIn(q, stage, replace = true)
       true
     } finally lock.unlock()
   }
@@ -5567,15 +5388,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
             q.split('.').toIndexedSeq)
         Seq(q)
-      case None =>
-        spark.catalog.listDatabases().collect().map(_.name.toLowerCase).toSeq
-          .filterNot(catalogCompatDbs).flatMap { db =>
-            spark.catalog.listTables(db).collect()
-              .filter(t => !t.isTemporary && t.tableType != "VIEW")
-              .map(_.name.toLowerCase)
-              .filterNot(Engine.isHiddenTable)
-              .map(n => s"$db.$n")
-          }
+      case None => userTables(spark.catalog.listDatabases().collect()
+        .map(_.name.toLowerCase).toSeq.filterNot(catalogCompatDbs))
     }
     targets.foreach(q => spark.sql(s"ANALYZE TABLE $q COMPUTE STATISTICS"))
     ExecResult(null, if (isVacuum) "VACUUM" else "ANALYZE")
@@ -5587,7 +5401,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * unknown pragmas error with a clear message. */
   private def pragma(body: String): ExecResult = {
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val fnRe = """(?is)^(\w+)\s*(?:\(\s*(.*?)\s*\))?$""".r
     body match {
       case _ if body.contains("=") => // PRAGMA setting: swallow like SET
@@ -5612,7 +5425,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
               StructField("pk", BooleanType)))
             ExecResult(spark.createDataFrame(rows.asJava, st), s"SELECT ${rows.size}")
           case "database_size" =>
-            val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+            val wh = warehouseDir
             def du(f: java.io.File): Long =
               if (f.isDirectory) Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
               else f.length()
@@ -5730,18 +5543,86 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     }
   }
 
+  /** Rewrite `table` (committed, or the open txn's staged copy — see
+    * [[physWrite]]) to the rows of `select`: stage them (Spark cannot
+    * scan and overwrite one table in one job), validate the stage with
+    * `check`, swap it in. A committed table swaps through [[swapIn]]
+    * (`keys` = the identity keys touched, None = unattributable); a
+    * txn's private copy is overwritten directly, its bookkeeping
+    * waits for COMMIT's [[publish]]. */
   private def stageAndSwap(table: String, select: String,
-      check: DataFrame => Unit = _ => ()): Unit = {
-    val stage = table.replace('.', '_') + "__cow"
+      keys: Option[Seq[Seq[Any]]], check: DataFrame => Unit = _ => ()): Unit = {
+    val stage = qualify(table) + "__cow"
     spark.sql(s"DROP TABLE IF EXISTS $stage")
     // txnExec: the SELECT carries user expressions (SET/WHERE/merge
     // projections) whose subqueries must resolve staged reads in-txn;
     // a CTAS root is not an InsertIntoStatement, so only reads rewrite
     txnExec(s"CREATE TABLE $stage AS $select")
-    try {
-      check(spark.table(stage)) // validate the staged image pre-swap
-      spark.sql(s"INSERT OVERWRITE TABLE $table SELECT * FROM $stage").collect()
-    } finally spark.sql(s"DROP TABLE IF EXISTS $stage")
+    try check(spark.table(stage)) // validate the staged image pre-swap
+    catch { case e: Throwable => spark.sql(s"DROP TABLE IF EXISTS $stage"); throw e }
+    if (!isTxnOpen) swapIn(table, stage, replace = false, keys)
+    else try overwrite(table, stage) finally spark.sql(s"DROP TABLE IF EXISTS $stage")
+  }
+
+  private def overwrite(table: String, stage: String): Unit =
+    spark.sql(s"INSERT OVERWRITE TABLE $table SELECT * FROM $stage").collect()
+
+  /** Put a fully staged image into committed `table` — the one step
+    * every swap goes through (COMMIT, auto-commit UPDATE/DELETE/upsert,
+    * ALTER COLUMN TYPE, CHECKPOINT). `replace` drops the table and
+    * renames the stage (same database) into its place, so the schema
+    * may change; otherwise the stage's rows overwrite the table's. The
+    * epochs move and the rewrite log records `keys`, the identity keys
+    * the image differs on (a replace never commutes). The caller holds
+    * the write lock and has journaled the step; a retry completes it. */
+  private def publish(table: String, stage: String, replace: Boolean,
+      keys: Option[Seq[Seq[Any]]] = None): Unit = {
+    if (replace) {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      removeTableDir(table) // boot-registered EXTERNAL dirs survive DROP
+      spark.sql(s"ALTER TABLE $stage RENAME TO $table")
+    } else overwrite(table, stage)
+    bumpRewriteEpoch(table) // a swap can change existing rows
+    logRewrite(table, if (replace) None else keys)
+    bumpEpoch(table)
+  }
+
+  /** An auto-commit swap: [[publish]] inside a one-op publish journal,
+    * written before the destructive step and deleted after it, so a
+    * kill -9 mid-swap rolls FORWARD from the stage at boot (the stage
+    * is the only full copy once the swap has started). On failure the
+    * stage is never lost: a failure that left the table untouched (a
+    * replace whose table still exists, an overwrite that failed
+    * analysis) discards stage and journal; anything else retries the
+    * swap once and, failing again, keeps stage and journal for the
+    * next boot and names the stage in the error. */
+  private def swapIn(table: String, stage: String, replace: Boolean,
+      keys: Option[Seq[Seq[Any]]] = None): Unit = {
+    import Persistence.JournalOp.{Overwrite, Replace}
+    val q = qualify(table)
+    val journal = disk.map(_.writeJournal(txnSeq.incrementAndGet(),
+      Seq(if (replace) Replace(q, stage) else Overwrite(q, stage))))
+    try publish(q, stage, replace, keys)
+    catch {
+      case e: Throwable =>
+        val untouched =
+          if (replace) try spark.catalog.tableExists(q) catch { case _: Throwable => false }
+          else e.isInstanceOf[org.apache.spark.sql.AnalysisException]
+        if (untouched) {
+          journal.foreach(_.delete())
+          spark.sql(s"DROP TABLE IF EXISTS $stage")
+          throw e
+        }
+        try publish(q, stage, replace, keys)
+        catch { case _: Throwable =>
+          throw new IllegalStateException(
+            s"swap of $q failed midway; data preserved in staging table $stage" +
+              (if (journal.isDefined) ", the next boot rolls the swap forward" else "") +
+              s": ${e.getMessage}", e)
+        }
+    }
+    journal.foreach(_.delete())
+    if (!replace) spark.sql(s"DROP TABLE IF EXISTS $stage")
   }
 
   /** pg_catalog / information_schema / system.* / duckdb_*() views. */
@@ -5978,7 +5859,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * ones under test everywhere else). File I/O gated like COPY. */
   private def exportDatabase(path: String): ExecResult = {
     requireFileIo()
-    import scala.jdk.CollectionConverters._
     val dir = new java.io.File(path)
     dir.mkdirs()
     val db = spark.catalog.currentDatabase
@@ -6046,8 +5926,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         schemaSql.append(s"CREATE INDEX $n ON ${t.split('.').last} " +
           s"(${cs.mkString(", ")});\n")
     }
-    writeFile(s"$path/schema.sql", schemaSql.toString)
-    writeFile(s"$path/load.sql", loadSql.toString)
+    Persistence.writeFile(s"$path/schema.sql", schemaSql.toString)
+    Persistence.writeFile(s"$path/load.sql", loadSql.toString)
     ExecResult(null, s"EXPORT ${tables.length}")
   }
 
@@ -6116,446 +5996,55 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       "COPY TO/FROM file is disabled on this server (start with --allow-file-io to enable)")
 
   // -- persistence (--db_path analog of reference main.go:18) ---------------
+  // The registries, views.sql, schema markers and publish journals
+  // live in files under dbPath ([[Persistence]]); table data survives
+  // in the relocated warehouse dir.
 
-  /** users + declared constraints survive restarts as flat files under
-    * dbPath; table data survives via the relocated warehouse dir (the
-    * reference gets all of this from its single DuckDB file). */
-  private def persistUsers(): Unit = dbPath.foreach { p =>
-    val lines = {
-      import scala.jdk.CollectionConverters._
-      users.asScala.toSeq.sortBy(_._1).map { case (u, v) => s"$u\t$v" }
-    }
-    writeFile(s"$p/users.tsv", lines.mkString("\n"))
-  }
+  private def persistUsers(): Unit =
+    disk.foreach(_.save(Persistence.Users, users.asScala))
 
-  private def persistSequences(): Unit = dbPath.foreach { p =>
-    val lines = {
-      import scala.jdk.CollectionConverters._
-      sequences.asScala.toSeq.sortBy(_._1)
-        .filterNot { case (n, _) => Engine.isTempConnName(n.split('.').last) }
-        .map { case (n, s) =>
-        s"$n\t${s.next.get()}\t${s.inc}"
-      }
-    }
-    writeFile(s"$p/sequences.tsv", lines.mkString("\n"))
-  }
+  // connection-temp objects die with the server — persisting their
+  // registrations would leave orphan rows after a crash (r14)
+  private def persistSequences(): Unit = disk.foreach(_.save(Persistence.Sequences,
+    sequences.asScala.filterNot { case (n, _) => Engine.isTempConnName(n.split('.').last) }))
 
-  /** One constraints.tsv line — the persisted registration format,
-    * shared by [[persistConstraints]] and the publish journal (which
-    * must carry a created table's registration so boot-time
-    * roll-forward can finish installing it). */
-  private def constraintLine(t: String, c: Constraints): String = {
-    val fkStr = c.fks.map(f =>
-      s"${f.cols.mkString(",")}>${f.refTable}:${f.refCols.mkString(",")}").mkString("|")
-    val enStr = c.enumCols.map { case (cn, en) => s"$cn:$en" }.mkString("|")
-    val ckStr = c.checks.map(ck => java.util.Base64.getEncoder
-      .encodeToString(ck.getBytes("UTF-8"))).mkString("|")
-    s"$t\t${c.pk.mkString(",")}\t${c.unique.map(_.mkString(",")).mkString("|")}\t${c.notNull.mkString(",")}\t$fkStr\t$enStr\t$ckStr"
-  }
+  private def persistConstraints(): Unit = disk.foreach(_.save(Persistence.ConstraintRecords,
+    constraints.asScala.filterNot { case (t, _) => Engine.isTempConnName(t.split('.').last) }))
 
-  private def persistConstraints(): Unit = dbPath.foreach { p =>
-    val lines = {
-      import scala.jdk.CollectionConverters._
-      // connection-temp tables die with the server — persisting their
-      // registrations would leave orphan rows after a crash (r14)
-      constraints.asScala.toSeq.sortBy(_._1)
-        .filterNot { case (t, _) => Engine.isTempConnName(t.split('.').last) }
-        .map { case (t, c) => constraintLine(t, c) }
-    }
-    writeFile(s"$p/constraints.tsv", lines.mkString("\n"))
-  }
+  private def persistEnums(): Unit =
+    disk.foreach(_.save(Persistence.Enums, enums.asScala))
 
-  private def persistEnums(): Unit = dbPath.foreach { p =>
-    import scala.jdk.CollectionConverters._
-    val lines = enums.asScala.toSeq.sortBy(_._1)
-      .map { case (n, vs) => s"$n\t${vs.mkString(",")}" }
-    writeFile(s"$p/enums.tsv", lines.mkString("\n"))
-  }
+  private def warehouseDir: String =
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
 
-  /** Replayable view DDL log (views have no on-disk footprint in the
-    * warehouse, so their definitions are journaled and replayed).
-    * Append and the DROP-side read-filter-rewrite (unlogView) both hold
-    * journalLock, so concurrent CREATE/DROP VIEW cannot drop entries. */
-  private[server] def logViewDdl(sql: String): Unit = dbPath.foreach { p =>
-    journalLock.synchronized {
-      val f = new java.io.FileWriter(s"$p/views.sql", true)
-      try f.write(sql.replace("\n", " ") + "\n") finally f.close()
-    }
-  }
-
-  /** Serializes view-journal read-modify-write cycles. */
-  private val journalLock = new Object
-
-  /** Crash-safe replace: write <file>.tmp, then ATOMIC_MOVE over the
-    * target — a crash mid-write leaves the old file intact instead of a
-    * truncated journal that silently drops users/constraints on load. */
-  /** Serialized across callers: the stage file is `path + ".tmp"`, so
-    * two concurrent persists of the SAME file (e.g. constrained
-    * CREATEs of different tables from two connections — the per-table
-    * locks don't order them; macro DDL from two connections) would
-    * interleave content in one tmp or race the move. The files are
-    * tiny metadata; one lock costs nothing. */
-  private val writeFileLock = new Object
-  private def writeFile(path: String, content: String): Unit = writeFileLock.synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val f = new java.io.File(path)
-    f.getParentFile.mkdirs()
-    val tmp = new java.io.File(path + ".tmp")
-    val w = new java.io.FileWriter(tmp)
-    try w.write(content) finally w.close()
-    try Files.move(tmp.toPath, Paths.get(path),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Warehouse dir of a qualified table (or staging) name. */
-  private def tableDirOf(name: String): java.io.File = {
-    val Array(db, t) = name.split("\\.", 2)
-    new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), s"$db.db/$t")
-  }
-
-  /** Boot-time roll-forward of COMMITs that crashed mid-publish. Each
-    * `publish_journal_*.tsv` in dbPath was written AFTER commit
-    * validation passed and deleted after the publish completed, so its
-    * presence means the commit decision was made but the publish may be
-    * half-done — e.g. an INSERT OVERWRITE that deleted the base's files
-    * and died before writing the new ones. Rolling FORWARD from the
-    * still-on-disk staged images (pure file-level ops, before any
-    * catalog registration) is the only direction that never loses data.
-    * Every op is idempotent against a crash DURING recovery:
-    *   drop      — delete the target dir (+ its constraints.tsv line)
-    *   rename    — move the staged dir to the target name (created
-    *               tables); (re-)install the journaled constraint line
-    *   replace   — delete the target dir, move the staged dir in
-    *               (transactional ALTER: schema changed)
-    *   overwrite — clear the target's data files, COPY the staged
-    *               image's in (copy, not move: a crash mid-copy must
-    *               leave the source whole for the retry)
-    *   append    — delete target files NOT in the journaled base list
-    *               (a crashed partial append's leftovers), then COPY
-    *               the delta's files in under a `jr_` prefix
-    * A table whose staged source dir is GONE already published fully
-    * (sources are only dropped after the last table publishes). Runs
-    * BEFORE constraints.tsv is read and before the stale-staging
-    * reclaim (which deletes the now-consumed sources). */
-  private def recoverPublishJournals(p: String): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val journals = Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("publish_journal_"))
-      .sortBy(_.getName)
-    if (journals.isEmpty) return
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    def dataFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")).toSeq
-    def clearCruft(d: java.io.File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName == "_temporary").foreach(rm)
-    val dropNames = scala.collection.mutable.Set.empty[String]
-    val addLines = scala.collection.mutable.Map.empty[String, String]
-    journals.foreach { jf =>
-      val ops = scala.io.Source.fromFile(jf).getLines().filter(_.nonEmpty)
-        .map(_.split("\t", -1)).toList
-      def b64dec(s: String) =
-        new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-      // Ops replay in the same ordered PHASES the publish loop ran:
-      // drops, per-table publishes, renames (`mv`), created-table
-      // publishes. Each op is idempotent against its own completion
-      // (a consumed source dir means it ran pre-crash), so a crash at
-      // any point rolls the whole commit forward exactly once.
-      // ---- phase 1: drops. Skip the dir removal when a later publish
-      // into the SAME name already completed pre-crash — that dir is
-      // the PUBLISHED table, not the dropped one.
-      ops.filter(_(0) == "drop").foreach { o =>
-        val t = o(1)
-        // only DIR-publishing ops count as same-name completion
-        // evidence — view/enum intents (vcreate/vdrop/ecreate/edrop)
-        // carry no source dir (empty x(2) would crash tableDirOf).
-        // For staged-image ops (overwrite/append/replace/rename) a
-        // MISSING source dir means the image was consumed = completed.
-        // For `mv` the source is a REAL table: its journaled field 3
-        // says whether it HAD a warehouse dir at journal-write time —
-        // "ext" (genuinely external location) never had one, so dir
-        // absence proves nothing and the drop must proceed (the mv
-        // phase is a harmless no-op on dirs); otherwise completion
-        // evidence is source-gone AND target-present (the moved dir —
-        // target-present alone is ambiguous with the DROPPED table's
-        // own dir in a drop-then-rename-onto-the-name commit).
-        val laterDone = ops.exists(x => x(1) == t && x(0) != "drop" &&
-          x(0) != "constraint" && x(2).nonEmpty && {
-            val srcGone = !tableDirOf(x(2)).exists()
-            if (x(0) == "mv")
-              x(3) != "ext" && srcGone && tableDirOf(x(1)).exists()
-            else srcGone
-          })
-        if (!laterDone) { val d = tableDirOf(t); if (d.exists()) rm(d) }
-        dropNames += t
-      }
-      // ---- phase 2: publishes into existing names — before any
-      // rename moves the dir out from under the name
-      ops.filter(o => o(0) == "overwrite" || o(0) == "append" || o(0) == "replace")
-        .foreach { o =>
-          val tDir = tableDirOf(o(1)); val sDir = tableDirOf(o(2))
-          if (sDir.exists()) o(0) match {
-            case "replace" =>
-              if (tDir.exists()) rm(tDir)
-              Files.move(sDir.toPath, tDir.toPath)
-            case "overwrite" =>
-              tDir.mkdirs(); clearCruft(tDir)
-              dataFiles(tDir).foreach(_.delete())
-              dataFiles(sDir).foreach(f => Files.copy(f.toPath,
-                new java.io.File(tDir, f.getName).toPath,
-                StandardCopyOption.REPLACE_EXISTING))
-            case _ =>
-              val base = if (o(3).isEmpty) Set.empty[String]
-                else o(3).split(",").toSet
-              tDir.mkdirs(); clearCruft(tDir)
-              dataFiles(tDir).filterNot(f => base(f.getName)).foreach(_.delete())
-              dataFiles(sDir).foreach(f => Files.copy(f.toPath,
-                new java.io.File(tDir, "jr_" + f.getName).toPath,
-                StandardCopyOption.REPLACE_EXISTING))
-          }
-        }
-      // ---- phase 3: renames — the old dir takes the new name; the
-      // registration rekeys even when the move itself already ran (or
-      // the table has no warehouse dir to move)
-      ops.filter(_(0) == "mv").foreach { o =>
-        val nDir = tableDirOf(o(1)); val oDir = tableDirOf(o(2))
-        var rescued = false
-        if (oDir.exists() && !nDir.exists()) Files.move(oDir.toPath, nDir.toPath)
-        else if (oDir.exists() && nDir.exists() &&
-            staleStagingRe.matches(o(2).split('.').last)) {
-          // a chain hop stranded at its TEMP name with the target
-          // occupied (a table created in the unlocked window before
-          // the rename phase failed): the temp dir is REAL DATA one
-          // reclaim away from deletion — move it to a visible rescue
-          // name instead of completing the (now impossible) hop
-          val rescue = tableDirOf(o(1) + "__rescued")
-          if (!rescue.exists()) {
-            Files.move(oDir.toPath, rescue.toPath)
-            rescued = true
-          }
-        }
-        dropNames += o(2)
-        // a rescued table keeps NO registration under the occupied
-        // target name — that line would bind the CONCURRENT table
-        if (o(4).nonEmpty && !rescued) addLines(o(1)) = b64dec(o(4))
-      }
-      ops.filter(_(0) == "constraint").foreach { o =>
-        if (o(4).nonEmpty) addLines(o(1)) = b64dec(o(4))
-      }
-      // ---- phase 4: created-table publishes — after renames freed
-      // any same-name dirs (a transactional recreate of a renamed-away
-      // name)
-      ops.filter(_(0) == "rename").foreach { o =>
-        val t = o(1); val tDir = tableDirOf(t); val sDir = tableDirOf(o(2))
-        if (!sDir.exists()) {
-          // completed pre-crash; the one non-file step — the created
-          // table's registration — is idempotent to re-apply
-          if (o(4).nonEmpty && tDir.exists()) addLines(t) = b64dec(o(4))
-        } else {
-          if (!tDir.exists()) Files.move(sDir.toPath, tDir.toPath)
-          if (o(4).nonEmpty) addLines(t) = b64dec(o(4))
-        }
-      }
-      // ---- phase 5: view intents — rewrite the view DDL journal
-      // (catalog views replay from views.sql at boot, so editing it IS
-      // the durable commit of the txn's view DDL)
-      val vdrops = ops.filter(_(0) == "vdrop").map(_(1))
-      val vcreates = ops.filter(_(0) == "vcreate").map(o => (o(1), b64dec(o(4))))
-      if (vdrops.nonEmpty || vcreates.nonEmpty) journalLock.synchronized {
-        val f = new java.io.File(p, "views.sql")
-        val existing =
-          if (f.exists())
-            scala.io.Source.fromFile(f).getLines().filter(_.nonEmpty).toList
-          else Nil
-        val names = (vdrops ++ vcreates.map(_._1)).toSet
-        val kept = existing.filterNot { l =>
-          createViewRe.findFirstMatchIn(l)
-            .exists(m => names.contains(qualify(m.group(1))))
-        }
-        val out = kept ++ vcreates.map(_._2.replace("\n", " "))
-        writeFile(f.getPath, if (out.isEmpty) "" else out.mkString("\n") + "\n")
-      }
-      // ---- phase 6: enum-type intents — same treatment on enums.tsv
-      val edrops = ops.filter(_(0) == "edrop").map(_(1))
-      val ecreates = ops.filter(_(0) == "ecreate").map(o => b64dec(o(4)))
-      if (edrops.nonEmpty || ecreates.nonEmpty) {
-        val f = new java.io.File(p, "enums.tsv")
-        val existing =
-          if (f.exists())
-            scala.io.Source.fromFile(f).getLines().filter(_.nonEmpty).toList
-          else Nil
-        val names = (edrops ++ ecreates.map(_.takeWhile(_ != '\t'))).toSet
-        val kept = existing.filterNot(l => names.contains(l.takeWhile(_ != '\t')))
-        val out = kept ++ ecreates
-        writeFile(f.getPath, out.mkString("\n"))
-      }
-      // ---- phase 7: schema-drop intents (r13) — remove the schema's
-      // warehouse dir so the boot dir-walk doesn't resurrect it.
-      // RESTRICT at recovery too: only when nothing but stale staging
-      // leftovers remain inside (phase 1 already removed the commit's
-      // own dropped tables; a table from a pre-crash concurrent commit
-      // keeps the schema alive)
-      ops.filter(_(0) == "sdrop").foreach { o =>
-        val dbDir = new java.io.File(
-          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-          s"${o(1)}.db")
-        val contents = Option(dbDir.listFiles()).getOrElse(Array.empty)
-        if (dbDir.isDirectory &&
-            contents.forall(f => f.isDirectory && staleStagingRe.matches(f.getName)))
-          rm(dbDir)
-      }
-      jf.delete()
-    }
-    if (dropNames.nonEmpty || addLines.nonEmpty) {
-      val f = new java.io.File(p, "constraints.tsv")
-      val existing =
-        if (f.exists()) scala.io.Source.fromFile(f).getLines().filter(_.nonEmpty).toList
-        else Nil
-      val kept = existing.filterNot { l =>
-        val n = l.takeWhile(_ != '\t')
-        dropNames.contains(n) || addLines.contains(n)
-      }
-      writeFile(f.getAbsolutePath, (kept ++ addLines.values.toSeq).mkString("\n"))
-    }
-  }
-
-  def loadPersisted(): Unit = dbPath.foreach { p =>
-    recoverPublishJournals(p)
-    def lines(name: String): Seq[String] = {
-      val f = new java.io.File(s"$p/$name")
-      if (!f.exists()) Nil
-      else scala.io.Source.fromFile(f).getLines().filter(_.nonEmpty).toList
-    }
-    lines("users.tsv").foreach { l =>
-      l.split("\t", 2) match {
-        case Array(u, v) => users.put(u, v)
-        case _ =>
-      }
-    }
-    lines("sequences.tsv").foreach { l =>
-      l.split("\t", -1) match {
-        case Array(n, next, inc) =>
-          sequences.put(n, new SeqState(
-            new java.util.concurrent.atomic.AtomicLong(next.toLong), inc.toLong))
-        case _ =>
-      }
-    }
-    lines("enums.tsv").foreach { l =>
-      l.split("\t", -1) match {
-        case Array(n, vs) => enums.put(n, if (vs.isEmpty) Nil else vs.split(",").toSeq)
-        case _ =>
-      }
-    }
-    lines("macros.tsv").foreach { l =>
-      l.split("\t", -1) match {
-        case Array(n, t, ps, b) =>
-          def dec(s: String) =
-            new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-          val items = if (ps.isEmpty) Nil else ps.split(",").toSeq
-          val params = items.map(_.split(":=", 2)(0))
-          val defaults = items.flatMap(_.split(":=", 2) match {
-            case Array(p, d) => Some(p -> dec(d))
-            case _ => None
-          }).toMap
-          macros.put(n, MacroDef(params, defaults, dec(b), t == "T"))
-        case _ =>
-      }
-    }
-    lines("indexes.tsv").foreach { l =>
-      l.split("\t", -1) match {
-        case Array(n, t, cs, u) =>
-          indexes.put(n, (t, if (cs.isEmpty) Nil else cs.split(",").toSeq, u == "U"))
-        case _ =>
-      }
-    }
-    lines("constraints.tsv").foreach { l =>
-      val parts = l.split("\t", -1)
-      if (parts.length >= 4) {
-        def list(s: String) = if (s.isEmpty) Nil else s.split(",").toSeq
-        val fks =
-          if (parts.length < 5 || parts(4).isEmpty) Nil
-          else parts(4).split("\\|").toSeq.flatMap { f =>
-            f.split(">", 2) match {
-              case Array(cols, rhs) => rhs.split(":", 2) match {
-                case Array(ref, rcols) => Some(Fk(list(cols), ref, list(rcols)))
-                case _ => None
-              }
-              case _ => None
-            }
-          }
-        val enumCols =
-          if (parts.length < 6 || parts(5).isEmpty) Nil
-          else parts(5).split("\\|").toSeq.flatMap { e =>
-            e.split(":", 2) match {
-              case Array(cn, en) => Some(cn -> en)
-              case _ => None
-            }
-          }
-        val checks =
-          if (parts.length < 7 || parts(6).isEmpty) Nil
-          else parts(6).split("\\|").toSeq.map(b =>
-            new String(java.util.Base64.getDecoder.decode(b), "UTF-8"))
-        constraints.put(parts(0), Constraints(list(parts(1)),
-          if (parts(2).isEmpty) Nil else parts(2).split("\\|").toSeq.map(_.split(",").toSeq),
-          list(parts(3)), fks, enumCols, checks))
-      }
-    }
+  /** Boot: roll leftover publish journals forward ([[Persistence.recover]],
+    * before any registry is read), load the registries, re-register the
+    * surviving warehouse table dirs, replay views.sql, and compensate
+    * schemas a crash left half-created inside a transaction. */
+  def loadPersisted(): Unit = disk.foreach { d =>
+    import Persistence._
+    d.recover()
+    d.load(Users).foreach { case (u, v) => users.put(u, v) }
+    d.load(Sequences).foreach { case (n, s) => sequences.put(n, s) }
+    d.load(Enums).foreach { case (n, vs) => enums.put(n, vs) }
+    d.load(Macros).foreach { case (n, m) => macros.put(n, m) }
+    d.load(Indexes).foreach { case (n, i) => indexes.put(n, i) }
+    d.load(ConstraintRecords).foreach { case (t, c) => constraints.put(t, c) }
     // re-register surviving managed tables: every parquet dir under
     // warehouse/<db>.db/<table> becomes a table again (parquet is
     // self-describing, so no schema journal is needed)
-    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    Option(wh.listFiles()).getOrElse(Array.empty).filter(d => d.isDirectory && d.getName.endsWith(".db"))
-      .foreach { dbDir =>
-        val db = dbDir.getName.stripSuffix(".db")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-        val (stale, live) = Option(dbDir.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory).partition(t => staleStagingRe.matches(t.getName))
-        // reclaim crash leftovers fully: excluding them from
-        // re-registration keeps phantom tables out of the catalog, but
-        // the dirs themselves are uncommitted garbage that would leak
-        // disk forever (crash_recovery_test find, r11)
-        stale.foreach { tDir =>
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete()
-          }
-          if (tDir.getName.matches(""".*__tmpc\d+$""")) {
-            // conn-temp leftovers are garbage BY SEMANTICS after a crash
-            // (temp tables die with their connection) — but a pre-r14
-            // database could hold a USER table whose name carries this
-            // suffix, created before the reserved-name guard existed.
-            // Quarantine loudly instead of deleting (ADVICE r14): data
-            // is recoverable by hand, and a true temp leftover costs
-            // only quarantine disk until an operator clears it.
-            val qd = new java.io.File(wh, ".quarantine/" + db)
-            qd.mkdirs()
-            val dst = new java.io.File(qd, tDir.getName)
-            System.err.println(
-              s"[graft] boot reclaim: quarantining temp-table leftover " +
-                s"${tDir.getAbsolutePath} -> ${dst.getAbsolutePath} " +
-                "(delete the quarantine dir to reclaim disk; restore by " +
-                "moving it back if this was a pre-guard user table)")
-            if (dst.exists() || !tDir.renameTo(dst)) rm(tDir) // occupied/cross-volume: fall back
-          } else rm(tDir)
-        }
-        live.foreach { tDir =>
-          try
-            if (!spark.catalog.tableExists(s"$db.${tDir.getName}"))
-              spark.sql(s"CREATE TABLE $db.${tDir.getName} USING parquet LOCATION '${tDir.getAbsolutePath}'")
-          catch { case scala.util.control.NonFatal(_) => } // unreadable dir: skip
-        }
+    d.liveTableDirs().foreach { case (db, live) =>
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+      live.foreach { tDir =>
+        try
+          if (!spark.catalog.tableExists(s"$db.${tDir.getName}"))
+            spark.sql(s"CREATE TABLE $db.${tDir.getName} USING parquet LOCATION '${tDir.getAbsolutePath}'")
+        catch { case scala.util.control.NonFatal(_) => } // unreadable dir: skip
       }
-    // replay journaled view DDL (best-effort: later statements may
+    }
+    // replay logged view DDL (best-effort: later statements may
     // legitimately re-define earlier ones)
-    lines("views.sql").foreach { ddl =>
+    d.viewDdl().foreach { ddl =>
       try spark.sql(rewrite(ddl)) catch { case scala.util.control.NonFatal(_) => }
     }
     // eager in-txn CREATE SCHEMA compensation (ADVICE r13): a crash
@@ -6565,20 +6054,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // RESTRICT stance as the in-process ROLLBACK compensation). The
     // marker is consumed either way. Runs AFTER table re-registration
     // and stale-staging reclaim so "empty" is judged on live content.
-    Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("pending_schema_") &&
-        f.getName.endsWith(".marker"))
-      .foreach { f =>
-        val s = f.getName.stripPrefix("pending_schema_").stripSuffix(".marker")
-        try {
-          // PERSISTENT tables only: catalog.listTables(db) also lists
-          // session temp views, which must not keep an orphan alive
-          if (spark.catalog.databaseExists(s) &&
-              spark.catalog.listTables(s).collect().forall(_.isTemporary))
-            spark.sql(s"DROP DATABASE IF EXISTS `$s`")
-        } catch { case scala.util.control.NonFatal(_) => }
-        f.delete()
-      }
+    d.consumeSchemaMarkers { s =>
+      try {
+        // PERSISTENT tables only: catalog.listTables(db) also lists
+        // session temp views, which must not keep an orphan alive
+        if (spark.catalog.databaseExists(s) &&
+            spark.catalog.listTables(s).collect().forall(_.isTemporary))
+          spark.sql(s"DROP DATABASE IF EXISTS `$s`")
+      } catch { case scala.util.control.NonFatal(_) => }
+    }
   }
 
   /** DROP TABLE under --db_path must also remove the on-disk dir, or
@@ -6600,16 +6084,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * LOCATION), whose dirs survive DROP TABLE — leaving them would
     * resurrect the table at next boot, or collide with a staged
     * image's RENAME into the same name (the replace-publish paths). */
-  private def removeTableDir(table: String): Unit = dbPath.foreach { _ =>
-    val Array(db, t) = qualify(table).split("\\.", 2)
-    val dir = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), s"$db.db/$t")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    if (dir.exists()) rm(dir)
-  }
+  private def removeTableDir(table: String): Unit =
+    if (disk.isDefined) Persistence.rm(Persistence.tableDirOf(warehouseDir, qualify(table)))
 
   // -- ingest (micro-batched Appender analog, SURVEY A15/A20) ---------------
 
@@ -6672,6 +6148,18 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 object Engine {
   case class ExecResult(df: DataFrame, tag: String)
 
+  case class Fk(cols: Seq[String], refTable: String, refCols: Seq[String])
+  case class Constraints(pk: Seq[String], unique: Seq[Seq[String]], notNull: Seq[String],
+      fks: Seq[Fk] = Nil, enumCols: Seq[(String, String)] = Nil,
+      checks: Seq[String] = Nil) {
+    def isEmpty: Boolean = pk.isEmpty && unique.isEmpty && notNull.isEmpty &&
+      fks.isEmpty && enumCols.isEmpty && checks.isEmpty
+  }
+
+  /** A CREATE MACRO definition (see the macro intercept). */
+  case class MacroDef(params: Seq[String], defaults: Map[String, String],
+      body: String, isTable: Boolean)
+
   /** A rename failed AFTER its catalog step succeeded: the point of no
     * return is `ALTER TABLE … RENAME` (concurrent connections already
     * resolve the new name), so the only safe direction is FORWARD —
@@ -6690,7 +6178,7 @@ object Engine {
     * phase forward at the next boot (outstanding dir moves + final
     * registration lines). */
   private[server] final class RenamePhaseFailure(
-      val repairOps: Seq[String], cause: Throwable)
+      val repairOps: Seq[Persistence.JournalOp], cause: Throwable)
     extends RuntimeException(cause)
 
   /** Global DDL epoch (JVM-wide: all connections share the warehouse).
@@ -6803,13 +6291,6 @@ object Engine {
   private[server] def isHiddenTable(name: String): Boolean =
     isInternalTable(name) || isTempConnName(name)
   private val dropViewRe = """(?is)^\s*drop\s+view\s+(?:if\s+exists\s+)?([\w.]+)\s*$""".r
-  /** Staging dirs a crash may leave behind — never re-register them.
-    * __txn overlays/deltas are included (a crash mid-transaction must
-    * not resurrect its uncommitted staging as a user table); __alter is
-    * deliberately NOT — after a mid-ALTER crash the stage can be the
-    * only surviving copy of the data. */
-  private val staleStagingRe =
-    """.*(__cow|__oc_src|__oc_src_raw|__oc_stage|__txn\d+(delta)?|__tmpc\d+)$""".r
 
   // the subquery form allows TWO paren-nesting levels (function calls
   // and casts inside the SELECT — `\([^)]+\)` broke on the FIRST `)`
@@ -7366,11 +6847,7 @@ object Engine {
     val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:"))
     if (dbPath.isEmpty && wh.getPath.contains("/target/")) { // safety: only ever wipe our own dir
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      if (wh.exists()) rm(wh)
+      if (wh.exists()) Persistence.rm(wh)
       // reclaim per-process ephemeral warehouses of DEAD processes
       // (GraftSession names them warehouse-<pid> so concurrent JVMs on
       // one box never wipe each other's live staging); a pid that is
@@ -7381,7 +6858,7 @@ object Engine {
         .filterNot(d => java.lang.ProcessHandle
           .of(d.getName.stripPrefix("warehouse-").toLong)
           .map[Boolean](_.isAlive).orElse(false))
-        .foreach(rm)
+        .foreach(Persistence.rm)
     }
     spark.sql("CREATE DATABASE IF NOT EXISTS main")
     graft.engine.Tables.names.foreach { t =>

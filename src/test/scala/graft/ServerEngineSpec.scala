@@ -2633,6 +2633,92 @@ class ServerEngineSpec extends SparkSpecBase {
     }
   }
 
+  test("registry files reload and re-persist byte-identical") {
+    // one literal line per registry in the on-disk format; booting them
+    // and then rewriting each file (a DDL of an object sorting last)
+    // must keep every loaded line byte-for-byte
+    val tmp = Files.createTempDirectory("graft-reg").toFile.getAbsolutePath
+    def b64(s: String) = java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+    val files = Seq(
+      "users.tsv" -> Seq("alice\tSCRAM-SHA-256$4096:c2FsdA==$c3RvcmVk:c2VydmVy"),
+      "sequences.tsv" -> Seq("main.a_s\t17\t-2"),
+      "enums.tsv" -> Seq("a_mood\tsad,ok,happy"),
+      "macros.tsv" -> Seq(s"a_add\tS\tx,y:=${b64("1")}\t${b64("x + y")}"),
+      "indexes.tsv" -> Seq("a_idx\tmain.a_t\tk,v\tU"),
+      "constraints.tsv" -> Seq(s"main.a_t\tk\tv\t\t\t\t${b64("k > 0")}",
+        "main.b_t\t\t\t\tp>main.a_t:k\tm:a_mood\t"))
+    files.foreach { case (f, ls) =>
+      Files.write(java.nio.file.Paths.get(tmp, f), ls.mkString("\n").getBytes("UTF-8"))
+    }
+    fresh("zz_t")
+    try {
+      val e = new Engine(spark, allowFileIo = true, dbPath = Some(tmp))
+      e.loadPersisted()
+      e.execute("CREATE USER zz WITH PASSWORD 'pw'")
+      e.execute("CREATE SEQUENCE main.zz_s")
+      e.execute("CREATE TYPE zz_mood AS ENUM ('x')")
+      e.execute("CREATE MACRO zz_m(x) AS x + 1")
+      e.execute("CREATE TABLE main.zz_t (k INT PRIMARY KEY)")
+      e.execute("CREATE INDEX zz_idx ON main.zz_t (k)")
+      files.foreach { case (f, ls) =>
+        val got = new String(Files.readAllBytes(java.nio.file.Paths.get(tmp, f)), "UTF-8")
+          .split("\n").toSeq
+        assert(got.init == ls && got.last.matches("(main\\.)?zz.*"), s"$f: $got")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS main.zz_t")
+  }
+
+  test("auto-commit swaps leave no publish journal and no staging dir behind") {
+    // UPDATE, DELETE, upsert, ALTER COLUMN TYPE and CHECKPOINT each swap
+    // a staged image into a committed table under a one-op publish
+    // journal; a successful swap consumes both the journal and the stage
+    val tmp = Files.createTempDirectory("graft-swap").toFile.getAbsolutePath
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    spark.sql("DROP DATABASE IF EXISTS swp CASCADE")
+    val e = new Engine(spark, allowFileIo = true, dbPath = Some(tmp))
+    def leftovers(): Seq[String] =
+      new java.io.File(tmp).list().toSeq.filter(_.startsWith("publish_journal_")) ++
+        Seq("swp.db", "main.db").flatMap(d =>
+          Option(new java.io.File(wh, d).list()).getOrElse(Array.empty[String]).toSeq
+            .filter(n => n.matches("(swp_)?(t|vw)__.*"))
+            .filter(n => n.endsWith("__cow") || n.endsWith("__alter") || n.contains("__oc_")))
+    def rows(): Seq[String] = e.execute("SELECT k, v FROM swp.t ORDER BY k").df
+      .collect().map(r => s"${r.get(0)}:${r.get(1)}").toSeq
+    try {
+      e.execute("CREATE SCHEMA swp")
+      e.execute("CREATE TABLE swp.t (k INT PRIMARY KEY, v STRING)")
+      for (i <- 1 to 4) e.execute(s"INSERT INTO swp.t VALUES ($i, 'v$i')")
+      assert(e.execute("UPDATE swp.t SET v = 'u' WHERE k <= 2").tag == "UPDATE 2")
+      assert(rows() == Seq("1:u", "2:u", "3:v3", "4:v4"))
+      assert(leftovers().isEmpty, leftovers())
+      assert(e.execute("DELETE FROM swp.t WHERE k = 4").tag == "DELETE 1")
+      assert(rows() == Seq("1:u", "2:u", "3:v3"))
+      assert(leftovers().isEmpty, leftovers())
+      e.execute("INSERT INTO swp.t VALUES (3, 'x'), (5, 'y') " +
+        "ON CONFLICT (k) DO UPDATE SET v = excluded.v")
+      assert(rows() == Seq("1:u", "2:u", "3:x", "5:y"))
+      assert(leftovers().isEmpty, leftovers())
+      e.execute("ALTER TABLE swp.t ALTER COLUMN k TYPE BIGINT")
+      assert(spark.table("swp.t").schema("k").dataType ==
+        org.apache.spark.sql.types.LongType)
+      assert(rows() == Seq("1:u", "2:u", "3:x", "5:y"))
+      assert(leftovers().isEmpty, leftovers())
+      // the PK registration survived the replace
+      intercept[IllegalArgumentException] { e.execute("INSERT INTO swp.t VALUES (1, 'dup')") }
+      // a swap refused before it touched anything (a view is no table)
+      // discards its stage and journal too
+      e.execute("CREATE VIEW swp.vw AS SELECT * FROM swp.t")
+      intercept[Exception] { e.execute("UPDATE swp.vw SET v = 'no'") }
+      assert(leftovers().isEmpty, leftovers())
+      for (i <- 6 to 8) e.execute(s"INSERT INTO swp.t VALUES ($i, 'w$i')")
+      assert(spark.table("swp.t").inputFiles.length > 1)
+      e.execute("CHECKPOINT swp")
+      assert(spark.table("swp.t").inputFiles.length == 1)
+      assert(rows() == Seq("1:u", "2:u", "3:x", "5:y", "6:w6", "7:w7", "8:w8"))
+      assert(leftovers().isEmpty, leftovers())
+    } finally spark.sql("DROP DATABASE IF EXISTS swp CASCADE")
+  }
+
   test("disjoint-row rewrites both commit (r12 row granularity)") {
     fresh("txrr")
     engine.execute("CREATE TABLE main.txrr (id INT PRIMARY KEY, v STRING)")

@@ -2,7 +2,7 @@
 # Crash-recovery probe: kill -9 the server MID-TRANSACTION (staged
 # overlay + delta + transactional CREATE all live on disk), restart
 # against the same --db_path, and assert the restart bootstrap
-# (staleStagingRe, Engine.bootstrap) reclaims every __txn leftover,
+# (Persistence.staleStagingRe, Engine.bootstrap) reclaims every __txn leftover,
 # no phantom table registers, and the base tables carry exactly their
 # pre-transaction content.
 # Usage: bash tools/crash_recovery_test.sh [pg_port] [ch_port]
@@ -114,6 +114,30 @@ chk "rolled forward: update applied everywhere" "$N" "$(psql $P -tA -c "select c
 chk "journal consumed" "0" "$(ls "$DB"/publish_journal_*.tsv 2>/dev/null | wc -l)"
 overlays_final=$(ls -d "$DB"/warehouse/main.db/*__txn* 2>/dev/null | wc -l)
 chk "staging reclaimed after roll-forward" "0" "$overlays_final"
+
+# ---- scenario 2b: SIGKILL DURING AN AUTO-COMMIT REWRITE ----
+# Scenario 2 without BEGIN/COMMIT: the UPDATE stages its image in a
+# __cow table, then INSERT OVERWRITE clears the table's files before it
+# writes them. The swap runs under a one-op publish journal, so a kill
+# inside it rolls FORWARD at boot instead of the stale-staging reclaim
+# deleting the only full copy.
+psql $P -c "update main.big set v = 'upd2'" > /tmp/graft_crash_psql2b.log 2>&1 &
+PSQL2B_PID=$!
+for i in $(seq 1 1200); do
+  ls "$DB"/publish_journal_*.tsv >/dev/null 2>&1 && break
+  sleep 0.05
+done
+if ls "$DB"/publish_journal_*.tsv >/dev/null 2>&1; then ok "auto-commit journal present at kill time"; else bad "auto-commit journal never appeared"; fi
+sleep 0.7   # let the overwrite get mid-flight (destructive window)
+kill -9 "$SRV_PID" 2>/dev/null
+wait "$SRV_PID" 2>/dev/null
+kill "$PSQL2B_PID" 2>/dev/null; wait "$PSQL2B_PID" 2>/dev/null
+
+start_server
+chk "auto-commit rolled forward: full count" "$N" "$(psql $P -tA -c 'select count(*) from main.big' 2>&1)"
+chk "auto-commit rolled forward: update applied everywhere" "$N" "$(psql $P -tA -c "select count(*) from main.big where v = 'upd2'" 2>&1)"
+chk "auto-commit journal consumed" "0" "$(ls "$DB"/publish_journal_*.tsv 2>/dev/null | wc -l)"
+chk "cow stage reclaimed" "0" "$(ls -d "$DB"/warehouse/*/*__cow 2>/dev/null | wc -l)"
 chk "big still writable" "INSERT 0 1" "$(psql $P -c "insert into main.big values (-1,'x')" 2>&1 | head -1)"
 # ---- scenario 3: RENAME durability across restarts (r12b) ----
 # main.ct has been through restarts, so it is a boot-registered
