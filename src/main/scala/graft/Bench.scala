@@ -25,42 +25,9 @@ object Bench {
     // can displace the summary line in that window. The bench is a
     // measurement tool — errors still surface, warnings don't matter.
     spark.sparkContext.setLogLevel("ERROR")
-    // Bench scale profile (measured, BENCH_NOTES r7). Two sub-GB-scale
-    // settings that are JOB conf on a real cluster, tuned here to the
-    // benchmark tier exactly like shuffle.partitions below:
-    //  - 4 MB scan splits: at sf0.1 every fixture file is < 128 MB, so
-    //    the default split size runs every scan as ONE task — the whole
-    //    first stage of every query was serial. 4 MB restores 8-16-way
-    //    scan parallelism (at 100 TB files outnumber cores and the
-    //    default is right; this knob matters only when data/core < split).
-    //  - AQE off FOR THE BENCH ONLY: AQE materializes every exchange as
-    //    a separate job (~50-70 ms barrier each; BenchProfile: 5 jobs
-    //    for a 2-shuffle query). With plans that already pin their
-    //    broadcast/shuffle split and a corpus whose shuffles fit 8
-    //    static partitions, coalescing has nothing left to decide and
-    //    the barriers are pure cost: measured full-corpus 37.9 s (AQE)
-    //    vs 32.2 s (off), and 32.9 vs 29.9 on the sf1 heavy tier —
-    //    the r3 finding that AQE-off was 4x WORSE predates static-8
-    //    partitions + explicit broadcast hints. AQE stays ON everywhere
-    //    else (GraftSession default: server, Verify, tests) — runtime
-    //    skew splitting and broadcast demotion are the 100 TB story;
-    //    per-stage barriers are invisible when stages run for seconds.
-    // SPARK_GRAFT_AQE=1 restores AQE for A/B runs.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4194304")
-    // root ORDER BY = presentation order of a result-sized output: sort
-    // at the gather point (one fewer job per query — no range-sampling
-    // re-execution). See plans/PresentationSort.scala for the scale
-    // trade; measured −26% on the light-query subset (BENCH_NOTES r7).
-    spark.conf.set(graft.plans.PresentationSort.ConfKey, "true")
-    if (!sys.env.contains("SPARK_GRAFT_AQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // bench profile: size the reducer count to the benchmark's data,
-    // not the core count — at sf0.1 every shuffle fits a handful of
-    // 64 MB-target partitions and 32 near-empty reducers are pure
-    // scheduling overhead. (On a cluster this is job conf; AQE's
-    // size-based coalescing makes the static value non-critical.)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "8"))
+    // the bench profile: 4 MB splits, presentation sort, AQE off,
+    // 8 shuffle partitions (see GraftSession.benchProfile)
+    graft.engine.GraftSession.benchProfile(spark)
     // config experiments: SPARK_GRAFT_CONF="k=v;k=v" applies runtime-
     // settable SQL confs before the corpus runs
     sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>

@@ -6,10 +6,10 @@ import java.io.{File, FileWriter}
   * query — the plan evidence the optimization rounds commit under
   * `plans/r<N>/<query>_<suffix>.txt`.
   *
-  * The session mirrors Bench's profile (AQE off, static-8 shuffle
-  * partitions, 4 MB scan splits, presentation sort) so the dumped plan
-  * is the plan the bench actually times; SPARK_GRAFT_AQE=1 restores the
-  * adaptive plan like in Bench.
+  * The session runs Bench's profile ([[graft.engine.GraftSession.benchProfile]]:
+  * AQE off, static-8 shuffle partitions, 4 MB scan splits, presentation
+  * sort) so the dumped plan is the plan the bench actually times;
+  * SPARK_GRAFT_AQE=1 restores the adaptive plan like in Bench.
   *
   *   SPARK_GRAFT_PLAN_DIR=plans/r15 SPARK_GRAFT_PLAN_SUFFIX=before \
   *   SPARK_GRAFT_ONLY='q_tpch_.*' sbt "runMain graft.PlanDump"
@@ -24,12 +24,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.engine.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4194304")
-    spark.conf.set(graft.plans.PresentationSort.ConfKey, "true")
-    if (!sys.env.contains("SPARK_GRAFT_AQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "8"))
+    graft.engine.GraftSession.benchProfile(spark)
     new File(outDir).mkdirs()
     graft.engine.Tables(spark, sfDir)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

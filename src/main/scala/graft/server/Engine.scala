@@ -599,7 +599,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       .getOrElse(throw new IllegalArgumentException(
         "expected AS <expression> (or AS TABLE <query>) after the macro parameter list"))
     val isTable = bodyM.group(1) != null
-    val body = bodyM.group(2).trim.stripSuffix(";").trim
+    val body = bodyM.group(2).trim
     // params: `name` or `name := default` (defaults may be arbitrary
     // expressions — the list was captured with the balanced scan)
     val ps = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1083,7 +1083,18 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * names and the open transaction's overlays as Execute would. No
     * side-effecting intercept runs here (nextval, EXPLAIN ANALYZE,
     * PIVOT value discovery). */
-  def analyzeOnly(sql: String): DataFrame = queryDf(expandMacros(sql))
+  def analyzeOnly(sql: String): DataFrame = queryDf(expandMacros(Statement(sql).text))
+
+  /** The columns `stmt` returns, by [[analyzeOnly]]; None for a kind that
+    * returns no rows. SUMMARIZE and the DuckDB DESCRIBE forms answer
+    * their fixed columns. */
+  def resultSchema(stmt: Statement): Option[org.apache.spark.sql.types.StructType] =
+    stmt.kind match {
+      case k if !k.returnsRows => None
+      case Statement.Summarize => Some(summarizeSchema)
+      case Statement.Describe if describeTarget(stmt.text).isDefined => Some(describeSchema)
+      case _ => Some(analyzeOnly(stmt.text).schema)
+    }
 
   /** Drop every temp object THIS connection (thread) registered —
     * called at connection teardown, per CH request (pooled threads),
@@ -3188,17 +3199,19 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   /** Execute one statement; returns (df-or-null, commandTag). DDL/DML
     * run eagerly; SELECT-ish statements return a lazy DataFrame the
     * caller pumps with toLocalIterator. */
-  def execute(sql0: String): ExecResult = {
+  def execute(sql: String): ExecResult = executeStatement(Statement(sql))
+
+  /** [[execute]] of a statement its frontend already classified. */
+  def executeStatement(stmt: Statement): ExecResult = {
     val st = txn.get()
-    if (st.open && st.aborted &&
-        !txnRe.matches(sql0.trim.stripSuffix(";").trim))
+    if (st.open && st.aborted && !stmt.kind.isTxnControl)
       throw new IllegalArgumentException(
         "current transaction is aborted, commands ignored until end of transaction block")
     // the txn's FIRST statement (even one that will fail) fixes the
     // global snapshot point, like DuckDB's — captured BEFORE execution
     ensureSnapEpochs(st)
     val r =
-      try executeInner(sql0)
+      try executeInner(stmt)
       catch {
         case e: Throwable =>
           // DuckDB (the reference's engine) aborts an open transaction
@@ -3224,13 +3237,23 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     r
   }
 
-  private def executeInner(sql0: String, allowReserved: Boolean = false): ExecResult = {
-    val sqlRaw = sql0.trim.stripSuffix(";").trim
-    if (sqlRaw.isEmpty) return ExecResult(null, "EMPTY")
+  private def executeInner(sql: String, allowReserved: Boolean): ExecResult =
+    executeInner(Statement(sql), allowReserved)
+
+  /** One statement, dispatched by its kind. The front passes run for
+    * every kind; then the handlers of the statement's kind run in
+    * order, each matching its own argument regex against the text, and
+    * the first that takes the statement returns. The rest go through
+    * the common tail: [[queryDf]], with the tag from the kind. */
+  private def executeInner(stmt: Statement, allowReserved: Boolean = false): ExecResult = {
+    import Statement._
+    val kind = stmt.kind
+    if (kind == Empty) return ExecResult(null, "EMPTY")
     // DDL epoch: the catalog views ([[CatalogViews]]) are rebuilt
     // lazily, once a query names one AND the epoch moved since the last
     // rebuild.
-    if (Engine.ddlRe.findFirstIn(sqlRaw).isDefined) Engine.ddlEpoch.incrementAndGet()
+    if (kind.isDdl) Engine.ddlEpoch.incrementAndGet()
+    val sqlRaw = stmt.text
 
     // engine-internal staging suffixes and connection-temp mangles are
     // RESERVED table names: a user table named *__cow/*__txnN/*__tmpcN
@@ -3239,14 +3262,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // reject at CREATE / RENAME TO time. Engine-internal staging and
     // the temp-namespace re-dispatch (allowReserved) never pass
     // through this guard.
-    if (!allowReserved) reservedNameTargetRe.findFirstMatchIn(sqlRaw).foreach { m =>
-      val bare = m.group(1).split('.').last
-      if (Engine.isHiddenTable(bare))
-        throw new IllegalArgumentException(
-          s"""table name "$bare" uses a reserved engine-internal suffix """ +
-            "(__cow, __oc_src, __oc_src_raw, __oc_stage, __alter, __txn<N>[delta], " +
-            "__tmpc<N>); choose another name")
-    }
+    if (!allowReserved && (kind == Create || kind == Alter))
+      reservedNameTargetRe.findFirstMatchIn(sqlRaw).foreach { m =>
+        val bare = m.group(1).split('.').last
+        if (Engine.isHiddenTable(bare))
+          throw new IllegalArgumentException(
+            s"""table name "$bare" uses a reserved engine-internal suffix """ +
+              "(__cow, __oc_src, __oc_src_raw, __oc_stage, __alter, __txn<N>[delta], " +
+              "__tmpc<N>); choose another name")
+      }
 
     // per-connection TEMP namespace (r14): CREATE/DROP/RENAME of temp
     // objects re-dispatch under the connection's mangled names; write
@@ -3257,425 +3281,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // not have its own body's call-shaped text expanded), then macro
     // CALL expansion — before the temp intercept so a CREATE TEMP VIEW
     // body using macros stores the expanded text
-    if (!allowReserved) {
+    if (!allowReserved && (kind == Create || kind == Drop)) {
       macroIntercept(sqlRaw).foreach(r => return r)
     }
     val sqlExp = if (allowReserved) sqlRaw else expandMacros(sqlRaw)
-    if (!allowReserved) {
+    if (!allowReserved && kind.isDdl) {
       connTempIntercept(sqlExp).foreach(r => return r)
     }
     val sql = if (allowReserved) sqlExp else substituteTempTargets(sqlExp)
 
-    // DuckDB CREATE OR REPLACE TABLE (after the temp intercept — the
-    // TEMP spelling routes to the connection namespace): drop-if-
-    // exists + create, re-dispatched through the engine's own
-    // transactional/constraint machinery. In-txn this composes the
-    // transactional DROP and CREATE intents (drop-then-recreate
-    // publishes drop-first, already documented); outside one the
-    // write lock is held across both so no locker sees a half-state.
-    orReplaceTableRe.findFirstMatchIn(sql).foreach { m =>
-      val t = m.group(1)
-      val createSql = sql.replaceFirst("""(?is)or\s+replace\s+""", "")
-      if (isTxnOpen) {
-        executeInner(s"drop table if exists $t", allowReserved)
-        return executeInner(createSql, allowReserved)
-      }
-      val lock = lockFor(t.replace("\"", "")).writeLock()
-      lock.lock()
-      try {
-        executeInner(s"drop table if exists $t", allowReserved)
-        return executeInner(createSql, allowReserved)
-      } finally lock.unlock()
-    }
-
-    // DuckDB statement-level PIVOT/UNPIVOT (simplified spellings)
-    if ("""(?is)^\s*(un)?pivot\b.*""".r.matches(sql)) {
-      pivotUnpivotIntercept(sql).foreach(r => return r)
-    }
-
-    // DuckDB INSERT OR IGNORE / OR REPLACE: sugar over the ON CONFLICT
-    // machinery. OR REPLACE updates every non-key column from the
-    // incoming row (DuckDB semantics); a table whose every column IS
-    // the key degenerates to DO NOTHING (nothing left to update).
-    insertOrRe.findFirstMatchIn(sql).foreach { m =>
-      val tbl = m.group(2)
-      val rest = m.group(3)
-      if (m.group(1).equalsIgnoreCase("ignore"))
-        return executeInner(s"insert into $tbl $rest on conflict do nothing",
-          allowReserved)
-      val q = qualify(resolveRenamed(resolveConnTemp(tbl.replace("\"", ""))))
-      val key = identityKeyOf(q)
-      if (key.isEmpty)
-        throw new IllegalArgumentException(
-          s"INSERT OR REPLACE requires a PRIMARY KEY or UNIQUE constraint on $tbl")
-      val keySet = key.map(_.toLowerCase).toSet
-      val sets = spark.table(q).schema.fieldNames
-        .filterNot(c => keySet(c.toLowerCase))
-        .map(c => s"$c = excluded.$c").mkString(", ")
-      return executeInner(
-        if (sets.isEmpty) s"insert into $tbl $rest on conflict do nothing"
-        else s"insert into $tbl $rest on conflict do update set $sets",
-        allowReserved)
-    }
-
-    // DuckDB CREATE [UNIQUE] INDEX / DROP INDEX (see [[indexes]])
-    createIndexRe.findFirstMatchIn(sql).foreach { m =>
-      val unique = m.group(1) != null
-      val ifNotExists = m.group(2) != null
-      val name = m.group(3).toLowerCase
-      val tbl = m.group(4)
-      val cols = SqlLexer.splitTopLevel(m.group(5), ',').map(_.replace("\"", "").trim.toLowerCase)
-      val q = qualify(resolveRenamed(resolveConnTemp(tbl.replace("\"", ""))))
-      if (!spark.catalog.tableExists(q))
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-          q.split('.').toIndexedSeq)
-      if (isView(q))
-        throw new IllegalArgumentException(
-          s"""cannot create index "$name": $tbl is a view""")
-      // atomic claim of the name (two racing CREATEs must not both
-      // pass a containsKey check); the placeholder is replaced by the
-      // real entry below, or removed on a validation failure
-      if (indexes.putIfAbsent(name, (q, cols, unique)) != null) {
-        if (ifNotExists) return ExecResult(null, "CREATE INDEX")
-        throw new IllegalArgumentException(s"""index "$name" already exists""")
-      }
-      try {
-        if (unique) {
-          // a UNIQUE index is a constraint: existing rows must already
-          // satisfy it (DuckDB validates at creation too)
-          val sel = cols.map(c => s"`$c`").mkString(", ")
-          val dup = txnExec(
-            s"SELECT $sel FROM $q GROUP BY $sel HAVING count(*) > 1 LIMIT 1")
-          if (dup.limit(1).collect().nonEmpty)
-            throw new IllegalArgumentException(
-              s"""could not create unique index "$name": table $tbl contains """ +
-                s"duplicate values on (${cols.mkString(", ")})")
-          val c0 = Option(constraints.get(q)).getOrElse(Constraints(Nil, Nil, Nil))
-          constraints.put(q, c0.copy(unique = c0.unique :+ cols))
-          persistConstraints()
-        }
-      } catch { case e: Throwable => indexes.remove(name); throw e }
-      persistIndexes()
-      return ExecResult(null, "CREATE INDEX")
-    }
-    dropIndexRe.findFirstMatchIn(sql).foreach { m =>
-      val name = m.group(2).toLowerCase
-      Option(indexes.remove(name)) match {
-        case Some((t, cols, unique)) =>
-          if (unique) Option(constraints.get(t)).foreach { c =>
-            val i = c.unique.indexOf(cols)
-            if (i >= 0)
-              constraints.put(t, c.copy(unique =
-                c.unique.patch(i, Nil, 1)))
-            persistConstraints()
-          }
-          persistIndexes()
-        case None =>
-          if (m.group(1) == null)
-            throw new IllegalArgumentException(s"""index "$name" does not exist""")
-      }
-      return ExecResult(null, "DROP INDEX")
-    }
-
-    // SQL-level PREPARE/EXECUTE/DEALLOCATE (PG and DuckDB both; the
-    // wire-level Parse/Bind is a separate machine in PgConnection).
-    // Connection-scoped; EXECUTE splices the argument expressions into
-    // the $n placeholders outside string literals and re-dispatches,
-    // so the statement passes through every engine layer (txn overlay,
-    // temp namespace, macros) at execution time.
-    prepareStmtRe.findFirstMatchIn(sql).foreach { m =>
-      tempNs.get().prepared(m.group(1).toLowerCase) = m.group(2).trim
-      return ExecResult(null, "PREPARE")
-    }
-    executeStmtSqlRe.findFirstMatchIn(sql).foreach { m =>
-      val n = m.group(1).toLowerCase
-      val body = tempNs.get().prepared.getOrElse(n,
-        throw new IllegalArgumentException(
-          s"""prepared statement "$n" does not exist"""))
-      val args = Option(m.group(2)).map(a => SqlLexer.splitTopLevel(a, ',')).getOrElse(Nil)
-      val subbed = SqlLexer.replaceInCode(body, """\$(\d+)""".r) { mm =>
-        val k = mm.group(1).toInt
-        if (k < 1 || k > args.size)
-          throw new IllegalArgumentException(
-            s"""prepared statement "$n": no value bound for parameter """ +
-              s"$$$k (${args.size} given)")
-        "(" + args(k - 1) + ")"
-      }
-      return executeInner(subbed, allowReserved)
-    }
-    deallocateRe.findFirstMatchIn(sql).foreach { m =>
-      val ns = tempNs.get()
-      if (m.group(1).equalsIgnoreCase("all")) ns.prepared.clear()
-      else if (ns.prepared.remove(m.group(1).toLowerCase).isEmpty)
-        throw new IllegalArgumentException(
-          s"""prepared statement "${m.group(1)}" does not exist""")
-      return ExecResult(null, "DEALLOCATE")
-    }
-
-    // DuckDB session variables: SET VARIABLE auto-declares (Spark's
-    // own SET VAR requires a prior DECLARE), RESET VARIABLE drops;
-    // getvariable('x') reads rewrite to system.session.x in rewrite()
-    setVariableRe.findFirstMatchIn(sql).foreach { m =>
-      val ns = tempNs.get()
-      val n = m.group(1).toLowerCase
-      val mangled = ns.vars.getOrElseUpdate(n, ns.mangle(n))
-      spark.sql(s"DECLARE OR REPLACE VARIABLE $mangled = ${rewrite(m.group(2))}")
-      return ExecResult(null, "SET")
-    }
-    resetVariableRe.findFirstMatchIn(sql).foreach { m =>
-      tempNs.get().vars.remove(m.group(1).toLowerCase).foreach { mangled =>
-        spark.sql(s"DROP TEMPORARY VARIABLE IF EXISTS $mangled")
-      }
-      return ExecResult(null, "RESET")
-    }
-
-    // ALTER TABLE … RENAME TO (r12b): routed through [[renameTable]]
-    // in AND outside transactions — outside for the constraint/FK/epoch
-    // rekeying and the journaled dir move the generic spark.sql path
-    // lacks (a renamed PK table silently lost its registration, and a
-    // recreated old name INHERITED it — judge-class bug), inside as a
-    // fully transactional intent.
-    alterRenameFullRe.findFirstMatchIn(sql).foreach { m =>
-      return renameTable(m.group(1) != null, m.group(2), m.group(3))
-    }
-
-    // staged-overlay txn: DDL on a table this transaction has written
-    // must not invalidate the staged image under it (see guardStagedDdl
-    // — EVERY ALTER form is covered, not just COLUMN TYPE: an in-txn
-    // ADD/RENAME/DROP COLUMN would make COMMIT's INSERT OVERWRITE
-    // publish a schema-mismatched image)
-    if (isTxnOpen) {
-      // transactional schema DDL (r13): eager-compensated CREATE,
-      // intent-staged empty-only DROP; CASCADE falls through to the
-      // declared auto-commit path
-      txnCreateSchemaRe.findFirstMatchIn(sql).foreach { m =>
-        return transactionalCreateSchema(m.group(1) != null, m.group(2))
-      }
-      txnDropSchemaRe.findFirstMatchIn(sql).foreach { m =>
-        return transactionalDropSchema(m.group(1) != null, m.group(2))
-      }
-      // a schema-DDL spelling the transactional regexes DON'T cover
-      // (quoted names with spaces/dots, AUTHORIZATION clauses) must not
-      // silently fall through to the auto-commit path — a later
-      // ROLLBACK would raise "cannot undo DDL" for a statement that
-      // looked transactional (ADVICE r13). DROP … CASCADE keeps its
-      // declared auto-commit route.
-      anySchemaDdlRe.findFirstMatchIn(sql).foreach { _ =>
-        if (!"""(?is)\bcascade\s*;?\s*$""".r.findFirstIn(sql).isDefined)
-          org.apache.spark.sql.GraftBridge.analysisError(
-            "unsupported schema DDL spelling inside a transaction (only " +
-              "CREATE/DROP SCHEMA with a plain single-identifier name is " +
-              "transactional; quoted multi-part names and AUTHORIZATION " +
-              "clauses are not) — COMMIT or ROLLBACK first")
-      }
-      dropTableRe.findFirstMatchIn(sql).foreach { m =>
-        // DROP of a table CREATED in this same transaction is a clean
-        // net no-op (DuckDB allows it): drop the overlay, unregister
-        // its constraints, done — nothing auto-commits
-        val st = txn.get()
-        val q0 = qualify(m.group(1))
-        val ifExists = """(?is)\bif\s+exists\b""".r.findFirstIn(sql).isDefined
-        st.created.remove(q0).foreach { stg =>
-          st.staged.remove(q0)
-          try spark.sql(s"DROP TABLE IF EXISTS $stg") catch { case _: Throwable => }
-          // overlay-only constraint cleanup: if the create had shadowed
-          // a base table this txn DROPPED, the txn keeps seeing the name
-          // as dropped (None); otherwise the entry just goes away. The
-          // global map is untouched either way (r11 judge find).
-          if (st.dropped.contains(q0)) st.txnConstraints(q0) = None
-          else st.txnConstraints.remove(q0)
-          absorbedDdl.set(true) // absorbed: ROLLBACK has nothing left to undo
-          return ExecResult(null, "DROP TABLE")
-        }
-        // a name this txn renamed AWAY is gone from its own view — but
-        // a name RETAKEN by another rename (r13 chains) now denotes the
-        // retaking table; the renamed-TO collapse below handles it
-        if (st.renames.contains(q0) && !st.renames.valuesIterator.contains(q0)) {
-          if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
-          droppedInTxn(q0)
-        }
-        // a VIEW created in this txn: DROP TABLE is the wrong command,
-        // IF EXISTS or not (the catalog cannot see the intent, so the
-        // generic fall-through would no-op/not-found instead)
-        if (st.createdViews.contains(q0))
-          org.apache.spark.sql.GraftBridge.analysisError(
-            s"$q0 is a view. 'DROP TABLE' expects a table; use DROP VIEW instead")
-        // a catalog view this txn DROPPED is absent from its viewpoint:
-        // IF EXISTS no-ops, a plain DROP raises not-found (the catalog
-        // still holds the view until COMMIT, so the generic path would
-        // wrongly raise the wrong-object-type error). A name RETAKEN
-        // as a rename target is exempt — it now resolves to the
-        // renamed table, and the renamed-TO collapse below drops it.
-        if (st.droppedViews.contains(q0) &&
-            !st.renames.valuesIterator.contains(q0)) {
-          if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
-          droppedInTxn(q0)
-        }
-        // a renamed-TO name resolves to the original table; dropping it
-        // also cancels the rename intent (the new name never existed in
-        // the catalog, so COMMIT just drops the original)
-        val q = st.renames.collectFirst { case (o, n) if n == q0 => o }.getOrElse(q0)
-        // pre-existing table: TRANSACTIONAL DROP — record the intent
-        // and discard any overlays this txn built on the table (their
-        // changes die with it); reads of the name now fail, COMMIT
-        // performs the real drop under the write lock with an epoch
-        // conflict check, ROLLBACK forgets it and the table is intact
-        // (DuckDB transactional DDL, reachable via pg_conn.go:314)
-        if (st.dropped.contains(q)) {
-          // already dropped in this txn: IF EXISTS is a transactional
-          // no-op — it must still set absorbedDdl, or execute() marks
-          // the txn as carrying auto-committed DDL and a later ROLLBACK
-          // spuriously raises "cannot undo DDL" (ADVICE r11)
-          if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
-          droppedInTxn(q) // already dropped in this txn: not found
-        }
-        // a VIEW under the name falls through to the generic path,
-        // which raises Spark's own wrong-object-type error (staging it
-        // as a transactional TABLE drop would mis-publish at COMMIT)
-        if (spark.catalog.tableExists(q) && !isView(q)) {
-          st.staged.remove(q).foreach(s =>
-            try spark.sql(s"DROP TABLE IF EXISTS $s") catch { case _: Throwable => })
-          st.deltas.remove(q).foreach(d =>
-            try spark.sql(s"DROP TABLE IF EXISTS $d") catch { case _: Throwable => })
-          st.altered -= q // its staged image died with the overlays above
-          st.renames.remove(q) // drop-via-new-name: the intent dies too
-          val lock = lockFor(q).readLock()
-          lock.lock()
-          try pinOrCheck(q) finally lock.unlock()
-          st.dropped += q
-          // this txn now sees NO registration for the name; the global
-          // map keeps the base table's set for concurrent connections
-          st.txnConstraints(q) = None
-          absorbedDdl.set(true) // fully rollback-able: a write, not auto-commit DDL
-          return ExecResult(null, "DROP TABLE")
-        }
-        // name genuinely unknown: IF EXISTS is a transactional no-op
-        // (same absorbedDdl bookkeeping as above — nothing
-        // auto-commits). A name that EXISTS as a VIEW falls through
-        // even with IF EXISTS — Spark raises its wrong-object-type
-        // error regardless of the clause, and a silent no-op would
-        // leave scripts believing the view was dropped. A plain DROP
-        // of an unknown name falls through to spark's binder-class
-        // not-found (non-aborting).
-        if (ifExists && !spark.catalog.tableExists(q)) {
-          absorbedDdl.set(true); return ExecResult(null, "DROP TABLE")
-        }
-      }
-      alterTableAnyRe.findFirstMatchIn(sql).foreach { m =>
-        // quoted-identifier RENAME forms bypass alterRenameFullRe and
-        // keep the pre-r12b staged-DDL guard; everything else is
-        // transactional (r12)
-        if (alterRenameToRe.matches(sql)) guardStagedDdl(m.group(1))
-        else transactionalAlter(m.group(1), sql).foreach(r => return r)
-      }
-      // transactional VIEW DDL (r12b): CREATE/DROP VIEW become intents
-      // like DROP TABLE — TEMP views (session objects) keep auto-commit
-      createViewFullRe.findFirstMatchIn(sql).foreach { m =>
-        return transactionalCreateView(m.group(1) != null, m.group(2) != null,
-          m.group(3), m.group(4))
-      }
-      dropViewRe.findFirstMatchIn(sql).foreach { m =>
-        transactionalDropView(sql, m.group(1)).foreach(r => return r)
-      }
-    }
-    truncateRe.findFirstMatchIn(sql).foreach { m =>
-      val t = resolveRenamed(m.group(1)) // post-rename names key by the original
-      val lock = lockFor(t).writeLock()
-      lock.lock()
-      try {
-        if (isTxnOpen) {
-          // stage an EMPTY image directly — snapshotting the rows only
-          // to truncate them would be a full-table copy for nothing
-          val st = txn.get()
-          val q = qualify(t)
-          recordChangedKeys(q, None) // whole-table: never commutes
-          st.staged.get(q) match {
-            case Some(stg) => spark.sql(s"TRUNCATE TABLE $stg")
-            case None =>
-              st.deltas.remove(q).foreach(d =>
-                try spark.sql(s"DROP TABLE IF EXISTS $d") catch { case _: Throwable => })
-              pinOrCheck(q)
-              val stg = q + "__txn" + txnSeq.incrementAndGet()
-              spark.sql(s"DROP TABLE IF EXISTS $stg")
-              spark.sql(s"CREATE TABLE $stg AS SELECT * FROM $q LIMIT 0")
-              st.staged(q) = stg
-          }
-        } else {
-          spark.sql(s"TRUNCATE TABLE $t")
-          bumpEpoch(t); bumpRewriteEpoch(t)
-          logRewrite(t, None)
-        }
-      } finally lock.unlock()
-      return ExecResult(null, "TRUNCATE TABLE")
-    }
-
-    createUserRe.findFirstMatchIn(sql) match {
-      case Some(m) =>
-        users.put(m.group(1).toLowerCase, graft.server.pg.Scram.encryptPassword(m.group(2)))
-        persistUsers()
-        return ExecResult(null, "CREATE ROLE")
-      case None =>
-    }
-    if (sql.equalsIgnoreCase("discard all")) {
-      // PG semantics: DISCARD ALL drops the session's temporary objects.
-      // PG rejects it inside a transaction block — and allowing it here
-      // leaked: releaseConnTemps dropped the mangled tables without
-      // purging the open txn's staged/delta overlays, so COMMIT
-      // republished staged data into the dropped hidden name (ADVICE r14)
-      if (isTxnOpen) throw new IllegalArgumentException(
-        "DISCARD ALL cannot run inside a transaction block")
-      releaseConnTemps()
-      return ExecResult(null, "DISCARD ALL")
-    }
-
-    createSeqRe.findFirstMatchIn(sql).foreach { m =>
-      val isTemp = m.group(1) != null
-      val ifNotExists = m.group(2) != null
-      val opts = Option(m.group(4)).getOrElse("")
-      val start = seqStartRe.findFirstMatchIn(opts).map(_.group(1).toLong).getOrElse(1L)
-      val inc = seqIncRe.findFirstMatchIn(opts).map(_.group(1).toLong).getOrElse(1L)
-      if (isTemp) {
-        // connection-private sequence (r14): lives under a mangled key,
-        // never persisted, dies with the connection / DISCARD ALL
-        val ns = tempNs.get()
-        val n = tempUserName(m.group(3)).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot create temp sequence ${m.group(3)}: temporary objects " +
-              "live in the temp schema"))
-        if (ns.seqs.contains(n)) {
-          if (!ifNotExists) throw new IllegalArgumentException(
-            s"""Sequence with name "$n" already exists!""")
-          return ExecResult(null, "CREATE SEQUENCE")
-        }
-        val key = "main." + ns.mangle(n)
-        ns.seqs(n) = key
-        sequences.put(key, new SeqState(
-          new java.util.concurrent.atomic.AtomicLong(start), inc))
-        return ExecResult(null, "CREATE SEQUENCE")
-      }
-      val name = qualify(m.group(3))
-      if (sequences.containsKey(name)) {
-        if (!ifNotExists)
-          throw new IllegalArgumentException(s"""Sequence with name "${m.group(3)}" already exists!""")
-      } else {
-        sequences.put(name, new SeqState(new java.util.concurrent.atomic.AtomicLong(start), inc))
-        persistSequences()
-      }
-      return ExecResult(null, "CREATE SEQUENCE")
-    }
-    dropSeqRe.findFirstMatchIn(sql).foreach { m =>
-      // temp sequences shadow persistent ones on DROP too
-      tempUserName(m.group(2)).flatMap(n =>
-          tempNs.get().seqs.remove(n).map(n -> _)).foreach { case (_, key) =>
-        sequences.remove(key)
-        return ExecResult(null, "DROP SEQUENCE")
-      }
-      val name = qualify(m.group(2))
-      if (sequences.remove(name) == null && m.group(1) == null)
-        throw new IllegalArgumentException(s"Sequence ${m.group(2)} does not exist")
-      persistSequences()
-      return ExecResult(null, "DROP SEQUENCE")
-    }
     // nextval/currval: each textual occurrence allocates (PG/DuckDB:
     // two nextval calls in one row = two values), replaced with the
     // allocated literal before any downstream path sees the statement.
@@ -3683,11 +3297,13 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // range-allocation path below: one contiguous block reserved under
     // the table write lock, applied as base + (row_number()-1)·inc —
     // the counter stays driver-side, the per-row math distributes.
-    var sqlSeq = sql
-    if (nextvalRe.findFirstIn(sqlSeq).isDefined || currvalRe.findFirstIn(sqlSeq).isDefined) {
-      if ("""(?is)^\s*insert\b.*\bselect\b.*""".r.matches(sqlSeq)
-          && nextvalRe.findFirstIn(sqlSeq).isDefined)
-        return insertSelectWithSequence(sqlSeq)
+    // PREPARE stores its body: the values are allocated at EXECUTE.
+    if (kind != Prepare &&
+        (nextvalRe.findFirstIn(sql).isDefined || currvalRe.findFirstIn(sql).isDefined)) {
+      if (kind == Insert && selectWordRe.findFirstIn(sql).isDefined
+          && nextvalRe.findFirstIn(sql).isDefined)
+        return insertSelectWithSequence(sql)
+      var sqlSeq = sql
       sqlSeq = nextvalRe.replaceAllIn(sqlSeq, m => {
         val st = seqOrFail(m.group(1), "nextval")
         val v = st.next.getAndAdd(st.inc)
@@ -3703,283 +3319,679 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       persistSequences()
       return execute(sqlSeq)
     }
-    if (txnRe.matches(sql)) {
-      val kw = sql.split("\\s+").head.toUpperCase
-      val st = txn.get()
-      kw match {
-        case "BEGIN" | "START" =>
-          // BEGIN inside an open transaction: PG warns and no-ops —
-          // the open transaction (and its staged writes) continue
-          if (!st.open) { st.reset(); st.open = true; openTxns.incrementAndGet() }
-          return ExecResult(null, if (kw == "START") "START TRANSACTION" else "BEGIN")
-        case "COMMIT" | "END" =>
-          val wasAborted = st.aborted
-          try { if (wasAborted) dropStaged(st) else commitTxn(st) }
-          finally st.reset()
-          // PG: COMMIT of an aborted transaction performs (and tags) a ROLLBACK
-          return ExecResult(null, if (wasAborted) "ROLLBACK" else "COMMIT")
-        case "ROLLBACK" =>
-          val hadDdl = st.open && st.ddl
-          dropStaged(st)
-          st.reset()
-          if (hadDdl) throw new IllegalArgumentException(
-            "ROLLBACK cannot undo DDL: this transaction ran a statement that " +
-              "auto-commits (TEMP object DDL, OR REPLACE forms, DROP SCHEMA " +
-              "CASCADE, quoted-identifier RENAME — table/view/type/schema " +
-              "CREATE/DROP/ALTER and RENAME TO are transactional); the staged " +
-              "DML changes in this transaction HAVE been rolled back")
-          return ExecResult(null, "ROLLBACK")
-        case _ =>
-          return ExecResult(null, kw)
-      }
-    }
-    if (showTxnReadOnlyRe.matches(sql))
-      return ExecResult(spark.sql("SELECT 'off' AS transaction_read_only"), "SELECT 1")
-    if (showTxnIsolationRe.matches(sql)) // pgjdbc probes this at connect
-      return ExecResult(
-        spark.sql("SELECT 'read committed' AS transaction_isolation"), "SELECT 1")
-    if (swallowedSetRe.matches(sql))
-      return ExecResult(spark.sql("SELECT 1 LIMIT 0"), "SET")
 
-    createEnumRe.findFirstMatchIn(sql).foreach { m =>
-      val vals = SqlLexer.splitTopLevel(m.group(2), ',').map(_.trim.stripPrefix("'").stripSuffix("'"))
-      val n = m.group(1).toLowerCase
-      if (isTxnOpen) {
-        // transactional CREATE TYPE (r12b): an intent — this txn's own
-        // statements resolve it via enumValuesOf, COMMIT publishes,
-        // ROLLBACK forgets. (Both paths keep the engine's declared
-        // replace-on-duplicate semantics.)
-        txn.get().createdEnums(n) = vals
-        absorbedDdl.set(true)
-        return ExecResult(null, "CREATE TYPE")
+    // the target regexes both a handler and the tail read, matched once
+    lazy val insertM = insertStmtRe.findFirstMatchIn(sql).filter(m => isQuery(m.group(3)))
+    lazy val createTableM = txnCreateTableRe.findFirstMatchIn(sql)
+    lazy val dropTableM = dropTableRe.findFirstMatchIn(sql)
+    lazy val dropViewM = dropViewRe.findFirstMatchIn(sql)
+
+    // a schema-DDL spelling the transactional regexes DON'T cover
+    // (quoted names with spaces/dots, AUTHORIZATION clauses) must not
+    // silently fall through to the auto-commit path — a later
+    // ROLLBACK would raise "cannot undo DDL" for a statement that
+    // looked transactional (ADVICE r13). DROP … CASCADE keeps its
+    // declared auto-commit route.
+    def rejectUntransactionalSchemaDdl(): Unit =
+      anySchemaDdlRe.findFirstMatchIn(sql).foreach { _ =>
+        if (!"""(?is)\bcascade\s*$""".r.findFirstIn(sql).isDefined)
+          org.apache.spark.sql.GraftBridge.analysisError(
+            "unsupported schema DDL spelling inside a transaction (only " +
+              "CREATE/DROP SCHEMA with a plain single-identifier name is " +
+              "transactional; quoted multi-part names and AUTHORIZATION " +
+              "clauses are not) — COMMIT or ROLLBACK first")
       }
-      enums.put(n, vals)
-      persistEnums()
-      return ExecResult(null, "CREATE TYPE")
-    }
-    dropTypeRe.findFirstMatchIn(sql).foreach { m =>
-      val n = m.group(2).toLowerCase
-      if (isTxnOpen) {
-        val st = txn.get()
-        val existedInTxn = st.createdEnums.remove(n).isDefined
-        if (!existedInTxn && !enumExists(n)) {
-          if (m.group(1) == null)
-            throw new IllegalArgumentException(s"type ${m.group(2)} does not exist")
-        } else if (enums.containsKey(n)) st.droppedEnums += n
-        absorbedDdl.set(true)
-        return ExecResult(null, "DROP TYPE")
-      }
-      if (enums.remove(n) == null && m.group(1) == null)
-        throw new IllegalArgumentException(s"type ${m.group(2)} does not exist")
-      persistEnums()
-      return ExecResult(null, "DROP TYPE")
-    }
-    createTableRe.findFirstMatchIn(sql).foreach { m =>
-      return createTableWithConstraints(m.group(2), m.group(3),
-        Option(m.group(4)).getOrElse(""), m.group(1) != null)
-    }
-    // a plain column-list CREATE TABLE (no constraint keywords) still
-    // needs the constraints path when a column is enum-typed
-    if (anyEnums) plainCreateTableRe.findFirstMatchIn(sql).foreach { m =>
-      val mentionsEnum = SqlLexer.splitTopLevel(m.group(3), ',').exists { item =>
-        val t = item.trim.split("\\s+", 3)
-        t.length >= 2 && enumExists(t(1))
-      }
-      if (mentionsEnum)
-        return createTableWithConstraints(m.group(2), m.group(3),
-          Option(m.group(4)).getOrElse(""), m.group(1) != null)
-    }
-    // transactional CREATE for the remaining table-creating forms
-    // (plain column list without constraints, CTAS, USING) — the
-    // constrained forms took createTableWithConstraints above. Guarded
-    // to exclude OR REPLACE / TEMP / VIEW / DATABASE, which keep their
-    // auto-commit behavior (declared).
-    if (isTxnOpen) txnCreateTableRe.findFirstMatchIn(sql)
-        .filterNot(m => Engine.isTempConnName(m.group(2).split('.').last))
-        .foreach { m =>
-      val ifNotExists = m.group(1) != null
-      val table = m.group(2)
-      // a name this txn DROPPED is free to re-create (drop-then-create
-      // publishes in that order at COMMIT); a name this txn renamed a
-      // table TO is taken
-      if ((spark.catalog.tableExists(table)
-            && !txn.get().dropped.contains(qualify(table))
-            && !txn.get().renames.contains(qualify(table))
-            && !txn.get().droppedViews.contains(qualify(table)))
-          || txn.get().created.contains(qualify(table))
-          || txn.get().createdViews.contains(qualify(table))
-          || txn.get().renames.valuesIterator.contains(qualify(table))) {
-        if (ifNotExists) return ExecResult(null, "CREATE TABLE")
-        throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
-          table.split('.').toSeq)
-      }
-      rejectRecreateOfRenamedAway(table)
-      val stg = stageCreatedTable(table)
-      val sql2 = sql.replaceFirst(
-        "(?is)(create\\s+table\\s+(?:if\\s+not\\s+exists\\s+)?)" +
-          java.util.regex.Pattern.quote(table),
-        "$1" + java.util.regex.Matcher.quoteReplacement(stg))
-      try {
-        val df = txnExec(rewrite(sql2))
-        if (df != null) df.collect()
-      } catch { case e: Throwable =>
-        // the CREATE failed (e.g. an AnalysisException in a CTAS
-        // source, which deliberately does not abort the txn): the
-        // registration must not outlive it (ADVICE r10 phantom entry)
-        unstageCreatedTable(table)
-        try spark.sql(s"DROP TABLE IF EXISTS $stg") catch { case _: Throwable => }
-        throw e
-      }
-      return ExecResult(null, "CREATE TABLE")
-    }
-    onConflictRe.findFirstMatchIn(sql).foreach { m =>
-      return insertOnConflict(m.group(1),
-        Option(m.group(2)).map(_.split(",").map(_.trim).toSeq.filter(_.nonEmpty)),
-        m.group(3).trim,
-        Option(m.group(4)).map(_.split(",").map(_.trim.toLowerCase).toSeq.filter(_.nonEmpty)),
-        Option(m.group(6)))
-    }
-    insertStmtRe.findFirstMatchIn(sql).foreach { m =>
-      // resolveRenamed: INSERT through a post-rename name keys the
-      // constraint check, lock, and change set by the ORIGINAL name;
-      // the renamed-away original fails binder-class
-      val table = resolveRenamed(m.group(1))
-      if (constraintsOfOriginal(qualify(table)).isDefined) {
-        // constraint check + insert must be one atomic unit — without
-        // the write lock two concurrent inserts of the same key both
-        // pass the PK check (round-2 TOCTOU), and an insert racing a
-        // CoW UPDATE's INSERT OVERWRITE is silently lost
-        val lock = lockFor(table).writeLock()
-        lock.lock()
-        try {
-          val cols = Option(m.group(2)).map(_.split(",").map(_.trim).toSeq)
-            .getOrElse(readOriginal(qualify(table)).schema.fieldNames.toSeq)
-          val srcSql = m.group(3).trim
-          val src = if (srcSql.toLowerCase.startsWith("values")) spark.sql(s"SELECT * FROM $srcSql")
-            else txnExec(rewrite(srcSql))
-          enforceConstraints(table, src.toDF(cols: _*))
-          // r12 rewrite commute: in-txn inserted keys join the txn's
-          // change set — they merge into the staged image if a later
-          // rewrite upgrades the delta, and a concurrent rewrite must
-          // see them in the disjointness check
+
+    kind match {
+      case Create =>
+        // DuckDB CREATE OR REPLACE TABLE (after the temp intercept — the
+        // TEMP spelling routes to the connection namespace): drop-if-
+        // exists + create, re-dispatched through the engine's own
+        // transactional/constraint machinery. In-txn this composes the
+        // transactional DROP and CREATE intents (drop-then-recreate
+        // publishes drop-first, already documented); outside one the
+        // write lock is held across both so no locker sees a half-state.
+        orReplaceTableRe.findFirstMatchIn(sql).foreach { m =>
+          val t = m.group(1)
+          val createSql = sql.replaceFirst("""(?is)or\s+replace\s+""", "")
           if (isTxnOpen) {
-            val pkCols = identityKeyOf(table)
-            if (pkCols.nonEmpty) {
-              val rows =
-                if (pkCols.forall(pc => cols.exists(_.equalsIgnoreCase(pc))) &&
-                    planDeterministic(src))
-                  // runInsert re-evaluates the source: a rand()/uuid()
-                  // key would insert DIFFERENT keys than were captured
-                  // (and than were constraint-checked) — poison instead
-                  src.toDF(cols: _*)
-                    .select(pkCols.map(org.apache.spark.sql.functions.col): _*)
-                    .limit(ChangedKeyCap + 1).collect()
-                else Array.fill(ChangedKeyCap + 1)(null: org.apache.spark.sql.Row)
-              recordChangedKeys(table,
-                if (rows.length <= ChangedKeyCap) Some(rows.toSeq.map(_.toSeq))
-                else None)
+            executeInner(s"drop table if exists $t", allowReserved)
+            return executeInner(createSql, allowReserved)
+          }
+          val lock = lockFor(t.replace("\"", "")).writeLock()
+          lock.lock()
+          try {
+            executeInner(s"drop table if exists $t", allowReserved)
+            return executeInner(createSql, allowReserved)
+          } finally lock.unlock()
+        }
+
+        // DuckDB CREATE [UNIQUE] INDEX / DROP INDEX (see [[indexes]])
+        createIndexRe.findFirstMatchIn(sql).foreach { m =>
+          val unique = m.group(1) != null
+          val ifNotExists = m.group(2) != null
+          val name = m.group(3).toLowerCase
+          val tbl = m.group(4)
+          val cols = SqlLexer.splitTopLevel(m.group(5), ',').map(_.replace("\"", "").trim.toLowerCase)
+          val q = qualify(resolveRenamed(resolveConnTemp(tbl.replace("\"", ""))))
+          if (!spark.catalog.tableExists(q))
+            throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
+              q.split('.').toIndexedSeq)
+          if (isView(q))
+            throw new IllegalArgumentException(
+              s"""cannot create index "$name": $tbl is a view""")
+          // atomic claim of the name (two racing CREATEs must not both
+          // pass a containsKey check); the placeholder is replaced by the
+          // real entry below, or removed on a validation failure
+          if (indexes.putIfAbsent(name, (q, cols, unique)) != null) {
+            if (ifNotExists) return ExecResult(null, "CREATE INDEX")
+            throw new IllegalArgumentException(s"""index "$name" already exists""")
+          }
+          try {
+            if (unique) {
+              // a UNIQUE index is a constraint: existing rows must already
+              // satisfy it (DuckDB validates at creation too)
+              val sel = cols.map(c => s"`$c`").mkString(", ")
+              val dup = txnExec(
+                s"SELECT $sel FROM $q GROUP BY $sel HAVING count(*) > 1 LIMIT 1")
+              if (dup.limit(1).collect().nonEmpty)
+                throw new IllegalArgumentException(
+                  s"""could not create unique index "$name": table $tbl contains """ +
+                    s"duplicate values on (${cols.mkString(", ")})")
+              val c0 = Option(constraints.get(q)).getOrElse(Constraints(Nil, Nil, Nil))
+              constraints.put(q, c0.copy(unique = c0.unique :+ cols))
+              persistConstraints()
+            }
+          } catch { case e: Throwable => indexes.remove(name); throw e }
+          persistIndexes()
+          return ExecResult(null, "CREATE INDEX")
+        }
+        if (isTxnOpen) {
+          // transactional schema DDL (r13): eager-compensated CREATE,
+          // intent-staged empty-only DROP; CASCADE falls through to the
+          // declared auto-commit path
+          txnCreateSchemaRe.findFirstMatchIn(sql).foreach { m =>
+            return transactionalCreateSchema(m.group(1) != null, m.group(2))
+          }
+          rejectUntransactionalSchemaDdl()
+          // transactional VIEW DDL (r12b): CREATE/DROP VIEW become intents
+          // like DROP TABLE — TEMP views (session objects) keep auto-commit
+          createViewFullRe.findFirstMatchIn(sql).foreach { m =>
+            return transactionalCreateView(m.group(1) != null, m.group(2) != null,
+              m.group(3), m.group(4))
+          }
+        }
+        createUserRe.findFirstMatchIn(sql) match {
+          case Some(m) =>
+            users.put(m.group(1).toLowerCase, graft.server.pg.Scram.encryptPassword(m.group(2)))
+            persistUsers()
+            return ExecResult(null, "CREATE ROLE")
+          case None =>
+        }
+        createSeqRe.findFirstMatchIn(sql).foreach { m =>
+          val isTemp = m.group(1) != null
+          val ifNotExists = m.group(2) != null
+          val opts = Option(m.group(4)).getOrElse("")
+          val start = seqStartRe.findFirstMatchIn(opts).map(_.group(1).toLong).getOrElse(1L)
+          val inc = seqIncRe.findFirstMatchIn(opts).map(_.group(1).toLong).getOrElse(1L)
+          if (isTemp) {
+            // connection-private sequence (r14): lives under a mangled key,
+            // never persisted, dies with the connection / DISCARD ALL
+            val ns = tempNs.get()
+            val n = tempUserName(m.group(3)).getOrElse(
+              throw new IllegalArgumentException(
+                s"cannot create temp sequence ${m.group(3)}: temporary objects " +
+                  "live in the temp schema"))
+            if (ns.seqs.contains(n)) {
+              if (!ifNotExists) throw new IllegalArgumentException(
+                s"""Sequence with name "$n" already exists!""")
+              return ExecResult(null, "CREATE SEQUENCE")
+            }
+            val key = "main." + ns.mangle(n)
+            ns.seqs(n) = key
+            sequences.put(key, new SeqState(
+              new java.util.concurrent.atomic.AtomicLong(start), inc))
+            return ExecResult(null, "CREATE SEQUENCE")
+          }
+          val name = qualify(m.group(3))
+          if (sequences.containsKey(name)) {
+            if (!ifNotExists)
+              throw new IllegalArgumentException(s"""Sequence with name "${m.group(3)}" already exists!""")
+          } else {
+            sequences.put(name, new SeqState(new java.util.concurrent.atomic.AtomicLong(start), inc))
+            persistSequences()
+          }
+          return ExecResult(null, "CREATE SEQUENCE")
+        }
+        createEnumRe.findFirstMatchIn(sql).foreach { m =>
+          val vals = SqlLexer.splitTopLevel(m.group(2), ',').map(_.trim.stripPrefix("'").stripSuffix("'"))
+          val n = m.group(1).toLowerCase
+          if (isTxnOpen) {
+            // transactional CREATE TYPE (r12b): an intent — this txn's own
+            // statements resolve it via enumValuesOf, COMMIT publishes,
+            // ROLLBACK forgets. (Both paths keep the engine's declared
+            // replace-on-duplicate semantics.)
+            txn.get().createdEnums(n) = vals
+            absorbedDdl.set(true)
+            return ExecResult(null, "CREATE TYPE")
+          }
+          enums.put(n, vals)
+          persistEnums()
+          return ExecResult(null, "CREATE TYPE")
+        }
+        createTableRe.findFirstMatchIn(sql).foreach { m =>
+          return createTableWithConstraints(m.group(2), m.group(3),
+            Option(m.group(4)).getOrElse(""), m.group(1) != null)
+        }
+        // a plain column-list CREATE TABLE (no constraint keywords) still
+        // needs the constraints path when a column is enum-typed
+        if (anyEnums) plainCreateTableRe.findFirstMatchIn(sql).foreach { m =>
+          val mentionsEnum = SqlLexer.splitTopLevel(m.group(3), ',').exists { item =>
+            val t = item.trim.split("\\s+", 3)
+            t.length >= 2 && enumExists(t(1))
+          }
+          if (mentionsEnum)
+            return createTableWithConstraints(m.group(2), m.group(3),
+              Option(m.group(4)).getOrElse(""), m.group(1) != null)
+        }
+        // transactional CREATE for the remaining table-creating forms
+        // (plain column list without constraints, CTAS, USING) — the
+        // constrained forms took createTableWithConstraints above. Guarded
+        // to exclude OR REPLACE / TEMP / VIEW / DATABASE, which keep their
+        // auto-commit behavior (declared).
+        if (isTxnOpen) createTableM
+            .filterNot(m => Engine.isTempConnName(m.group(2).split('.').last))
+            .foreach { m =>
+          val ifNotExists = m.group(1) != null
+          val table = m.group(2)
+          if (nameTaken(table)) {
+            if (ifNotExists) return ExecResult(null, "CREATE TABLE")
+            throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
+              table.split('.').toSeq)
+          }
+          rejectRecreateOfRenamedAway(table)
+          val stg = stageCreatedTable(table)
+          val sql2 = sql.replaceFirst(
+            "(?is)(create\\s+table\\s+(?:if\\s+not\\s+exists\\s+)?)" +
+              java.util.regex.Pattern.quote(table),
+            "$1" + java.util.regex.Matcher.quoteReplacement(stg))
+          try {
+            val df = txnExec(rewrite(sql2))
+            if (df != null) df.collect()
+          } catch { case e: Throwable =>
+            // the CREATE failed (e.g. an AnalysisException in a CTAS
+            // source, which deliberately does not abort the txn): the
+            // registration must not outlive it (ADVICE r10 phantom entry)
+            unstageCreatedTable(table)
+            try spark.sql(s"DROP TABLE IF EXISTS $stg") catch { case _: Throwable => }
+            throw e
+          }
+          return ExecResult(null, "CREATE TABLE")
+        }
+      case Drop =>
+        dropIndexRe.findFirstMatchIn(sql).foreach { m =>
+          val name = m.group(2).toLowerCase
+          Option(indexes.remove(name)) match {
+            case Some((t, cols, unique)) =>
+              if (unique) Option(constraints.get(t)).foreach { c =>
+                val i = c.unique.indexOf(cols)
+                if (i >= 0)
+                  constraints.put(t, c.copy(unique =
+                    c.unique.patch(i, Nil, 1)))
+                persistConstraints()
+              }
+              persistIndexes()
+            case None =>
+              if (m.group(1) == null)
+                throw new IllegalArgumentException(s"""index "$name" does not exist""")
+          }
+          return ExecResult(null, "DROP INDEX")
+        }
+        if (isTxnOpen) {
+          txnDropSchemaRe.findFirstMatchIn(sql).foreach { m =>
+            return transactionalDropSchema(m.group(1) != null, m.group(2))
+          }
+          rejectUntransactionalSchemaDdl()
+          dropTableM.foreach { m =>
+            // DROP of a table CREATED in this same transaction is a clean
+            // net no-op (DuckDB allows it): drop the overlay, unregister
+            // its constraints, done — nothing auto-commits
+            val st = txn.get()
+            val q0 = qualify(m.group(1))
+            val ifExists = """(?is)\bif\s+exists\b""".r.findFirstIn(sql).isDefined
+            st.created.remove(q0).foreach { stg =>
+              st.staged.remove(q0)
+              try spark.sql(s"DROP TABLE IF EXISTS $stg") catch { case _: Throwable => }
+              // overlay-only constraint cleanup: if the create had shadowed
+              // a base table this txn DROPPED, the txn keeps seeing the name
+              // as dropped (None); otherwise the entry just goes away. The
+              // global map is untouched either way (r11 judge find).
+              if (st.dropped.contains(q0)) st.txnConstraints(q0) = None
+              else st.txnConstraints.remove(q0)
+              absorbedDdl.set(true) // absorbed: ROLLBACK has nothing left to undo
+              return ExecResult(null, "DROP TABLE")
+            }
+            // a name this txn renamed AWAY is gone from its own view — but
+            // a name RETAKEN by another rename (r13 chains) now denotes the
+            // retaking table; the renamed-TO collapse below handles it
+            if (st.renames.contains(q0) && !st.renames.valuesIterator.contains(q0)) {
+              if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
+              droppedInTxn(q0)
+            }
+            // a VIEW created in this txn: DROP TABLE is the wrong command,
+            // IF EXISTS or not (the catalog cannot see the intent, so the
+            // generic fall-through would no-op/not-found instead)
+            if (st.createdViews.contains(q0))
+              org.apache.spark.sql.GraftBridge.analysisError(
+                s"$q0 is a view. 'DROP TABLE' expects a table; use DROP VIEW instead")
+            // a catalog view this txn DROPPED is absent from its viewpoint:
+            // IF EXISTS no-ops, a plain DROP raises not-found (the catalog
+            // still holds the view until COMMIT, so the generic path would
+            // wrongly raise the wrong-object-type error). A name RETAKEN
+            // as a rename target is exempt — it now resolves to the
+            // renamed table, and the renamed-TO collapse below drops it.
+            if (st.droppedViews.contains(q0) &&
+                !st.renames.valuesIterator.contains(q0)) {
+              if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
+              droppedInTxn(q0)
+            }
+            // a renamed-TO name resolves to the original table; dropping it
+            // also cancels the rename intent (the new name never existed in
+            // the catalog, so COMMIT just drops the original)
+            val q = st.renames.collectFirst { case (o, n) if n == q0 => o }.getOrElse(q0)
+            // pre-existing table: TRANSACTIONAL DROP — record the intent
+            // and discard any overlays this txn built on the table (their
+            // changes die with it); reads of the name now fail, COMMIT
+            // performs the real drop under the write lock with an epoch
+            // conflict check, ROLLBACK forgets it and the table is intact
+            // (DuckDB transactional DDL, reachable via pg_conn.go:314)
+            if (st.dropped.contains(q)) {
+              // already dropped in this txn: IF EXISTS is a transactional
+              // no-op — it must still set absorbedDdl, or execute() marks
+              // the txn as carrying auto-committed DDL and a later ROLLBACK
+              // spuriously raises "cannot undo DDL" (ADVICE r11)
+              if (ifExists) { absorbedDdl.set(true); return ExecResult(null, "DROP TABLE") }
+              droppedInTxn(q) // already dropped in this txn: not found
+            }
+            // a VIEW under the name falls through to the generic path,
+            // which raises Spark's own wrong-object-type error (staging it
+            // as a transactional TABLE drop would mis-publish at COMMIT)
+            if (spark.catalog.tableExists(q) && !isView(q)) {
+              st.staged.remove(q).foreach(s =>
+                try spark.sql(s"DROP TABLE IF EXISTS $s") catch { case _: Throwable => })
+              st.deltas.remove(q).foreach(d =>
+                try spark.sql(s"DROP TABLE IF EXISTS $d") catch { case _: Throwable => })
+              st.altered -= q // its staged image died with the overlays above
+              st.renames.remove(q) // drop-via-new-name: the intent dies too
+              val lock = lockFor(q).readLock()
+              lock.lock()
+              try pinOrCheck(q) finally lock.unlock()
+              st.dropped += q
+              // this txn now sees NO registration for the name; the global
+              // map keeps the base table's set for concurrent connections
+              st.txnConstraints(q) = None
+              absorbedDdl.set(true) // fully rollback-able: a write, not auto-commit DDL
+              return ExecResult(null, "DROP TABLE")
+            }
+            // name genuinely unknown: IF EXISTS is a transactional no-op
+            // (same absorbedDdl bookkeeping as above — nothing
+            // auto-commits). A name that EXISTS as a VIEW falls through
+            // even with IF EXISTS — Spark raises its wrong-object-type
+            // error regardless of the clause, and a silent no-op would
+            // leave scripts believing the view was dropped. A plain DROP
+            // of an unknown name falls through to spark's binder-class
+            // not-found (non-aborting).
+            if (ifExists && !spark.catalog.tableExists(q)) {
+              absorbedDdl.set(true); return ExecResult(null, "DROP TABLE")
             }
           }
-          val res = runInsert(txnExec(rewrite(sql)))
-          if (!isTxnOpen) bumpEpoch(table)
-          return res
-        } finally lock.unlock()
-      }
-    }
-    alterColTypeRe.findFirstMatchIn(sql).foreach { m =>
-      return alterColumnType(m.group(1), m.group(2), m.group(3).trim, Option(m.group(4)))
-    }
-    updateRe.findFirstMatchIn(sql).foreach { m =>
-      return copyOnWriteUpdate(m.group(1), m.group(2), Option(m.group(3)))
-    }
-    deleteRe.findFirstMatchIn(sql).foreach { m =>
-      return copyOnWriteDelete(m.group(1), Option(m.group(2)))
-    }
-    exportDbRe.findFirstMatchIn(sql).foreach { m =>
-      return exportDatabase(m.group(1))
-    }
-    importDbRe.findFirstMatchIn(sql).foreach { m =>
-      return importDatabase(m.group(1))
-    }
-    copyToRe.findFirstMatchIn(sql).foreach { m =>
-      return copyTo(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
-    }
-    copyFromFileRe.findFirstMatchIn(sql).foreach { m =>
-      return copyFromFile(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
-    }
-    explainAnalyzeRe.findFirstMatchIn(sql).foreach { m =>
-      // run the inner query through the FULL execute pipeline (so
-      // dialect rewrites apply), execute its own QueryExecution (toRdd
-      // drives the same physical plan, populating its SQL metrics and
-      // finalizing AQE), then render the plan plus per-node metrics —
-      // the analog of DuckDB's profiled plan.
-      val inner = execute(m.group(1))
-      if (inner.df == null) return ExecResult(null, inner.tag)
-      val qe = inner.df.queryExecution
-      val rows = qe.toRdd.count()
-      // AQE wraps the final plan in AdaptiveSparkPlanExec and each
-      // materialized stage in a leaf QueryStageExec — recurse through
-      // both or .collect sees only the wrappers
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-        val inner = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: QueryStageExec => Seq(q.plan)
-          case _ => Nil
+          dropViewM.foreach { m =>
+            transactionalDropView(sql, m.group(1)).foreach(r => return r)
+          }
         }
-        p +: (p.children ++ inner).flatMap(allNodes)
+        dropSeqRe.findFirstMatchIn(sql).foreach { m =>
+          // temp sequences shadow persistent ones on DROP too
+          tempUserName(m.group(2)).flatMap(n =>
+              tempNs.get().seqs.remove(n).map(n -> _)).foreach { case (_, key) =>
+            sequences.remove(key)
+            return ExecResult(null, "DROP SEQUENCE")
+          }
+          val name = qualify(m.group(2))
+          if (sequences.remove(name) == null && m.group(1) == null)
+            throw new IllegalArgumentException(s"Sequence ${m.group(2)} does not exist")
+          persistSequences()
+          return ExecResult(null, "DROP SEQUENCE")
+        }
+        dropTypeRe.findFirstMatchIn(sql).foreach { m =>
+          val n = m.group(2).toLowerCase
+          if (isTxnOpen) {
+            val st = txn.get()
+            val existedInTxn = st.createdEnums.remove(n).isDefined
+            if (!existedInTxn && !enumExists(n)) {
+              if (m.group(1) == null)
+                throw new IllegalArgumentException(s"type ${m.group(2)} does not exist")
+            } else if (enums.containsKey(n)) st.droppedEnums += n
+            absorbedDdl.set(true)
+            return ExecResult(null, "DROP TYPE")
+          }
+          if (enums.remove(n) == null && m.group(1) == null)
+            throw new IllegalArgumentException(s"type ${m.group(2)} does not exist")
+          persistEnums()
+          return ExecResult(null, "DROP TYPE")
+        }
+      case Alter =>
+        // ALTER TABLE … RENAME TO (r12b): routed through [[renameTable]]
+        // in AND outside transactions — outside for the constraint/FK/epoch
+        // rekeying and the journaled dir move the generic spark.sql path
+        // lacks (a renamed PK table silently lost its registration, and a
+        // recreated old name INHERITED it — judge-class bug), inside as a
+        // fully transactional intent.
+        alterRenameFullRe.findFirstMatchIn(sql).foreach { m =>
+          return renameTable(m.group(1) != null, m.group(2), m.group(3))
+        }
+        // staged-overlay txn: DDL on a table this transaction has written
+        // must not invalidate the staged image under it (see guardStagedDdl
+        // — EVERY ALTER form is covered, not just COLUMN TYPE: an in-txn
+        // ADD/RENAME/DROP COLUMN would make COMMIT's INSERT OVERWRITE
+        // publish a schema-mismatched image)
+        if (isTxnOpen) alterTableAnyRe.findFirstMatchIn(sql).foreach { m =>
+          // quoted-identifier RENAME forms bypass alterRenameFullRe and
+          // keep the pre-r12b staged-DDL guard; everything else is
+          // transactional (r12)
+          if (alterRenameToRe.matches(sql)) guardStagedDdl(m.group(1))
+          else transactionalAlter(m.group(1), sql).foreach(r => return r)
+        }
+        alterColTypeRe.findFirstMatchIn(sql).foreach { m =>
+          return alterColumnType(m.group(1), m.group(2), m.group(3).trim, Option(m.group(4)))
+        }
+      case Insert =>
+        // DuckDB INSERT OR IGNORE / OR REPLACE: sugar over the ON CONFLICT
+        // machinery. OR REPLACE updates every non-key column from the
+        // incoming row (DuckDB semantics); a table whose every column IS
+        // the key degenerates to DO NOTHING (nothing left to update).
+        insertOrRe.findFirstMatchIn(sql).foreach { m =>
+          val tbl = m.group(2)
+          val rest = m.group(3)
+          if (m.group(1).equalsIgnoreCase("ignore"))
+            return executeInner(s"insert into $tbl $rest on conflict do nothing",
+              allowReserved)
+          val q = qualify(resolveRenamed(resolveConnTemp(tbl.replace("\"", ""))))
+          val key = identityKeyOf(q)
+          if (key.isEmpty)
+            throw new IllegalArgumentException(
+              s"INSERT OR REPLACE requires a PRIMARY KEY or UNIQUE constraint on $tbl")
+          val keySet = key.map(_.toLowerCase).toSet
+          val sets = spark.table(q).schema.fieldNames
+            .filterNot(c => keySet(c.toLowerCase))
+            .map(c => s"$c = excluded.$c").mkString(", ")
+          return executeInner(
+            if (sets.isEmpty) s"insert into $tbl $rest on conflict do nothing"
+            else s"insert into $tbl $rest on conflict do update set $sets",
+            allowReserved)
+        }
+        onConflictRe.findFirstMatchIn(sql).filter(m => isQuery(m.group(3))).foreach { m =>
+          return insertOnConflict(m.group(1),
+            Option(m.group(2)).map(_.split(",").map(_.trim).toSeq.filter(_.nonEmpty)),
+            m.group(3).trim,
+            Option(m.group(4)).map(_.split(",").map(_.trim.toLowerCase).toSeq.filter(_.nonEmpty)),
+            Option(m.group(6)))
+        }
+        insertM.foreach { m =>
+          // resolveRenamed: INSERT through a post-rename name keys the
+          // constraint check, lock, and change set by the ORIGINAL name;
+          // the renamed-away original fails binder-class
+          val table = resolveRenamed(m.group(1))
+          if (constraintsOfOriginal(qualify(table)).isDefined) {
+            // constraint check + insert must be one atomic unit — without
+            // the write lock two concurrent inserts of the same key both
+            // pass the PK check (round-2 TOCTOU), and an insert racing a
+            // CoW UPDATE's INSERT OVERWRITE is silently lost
+            val lock = lockFor(table).writeLock()
+            lock.lock()
+            try {
+              val cols = Option(m.group(2)).map(_.split(",").map(_.trim).toSeq)
+                .getOrElse(readOriginal(qualify(table)).schema.fieldNames.toSeq)
+              val srcSql = m.group(3).trim
+              val src = if (srcSql.toLowerCase.startsWith("values")) spark.sql(s"SELECT * FROM $srcSql")
+                else txnExec(rewrite(srcSql))
+              enforceConstraints(table, src.toDF(cols: _*))
+              // r12 rewrite commute: in-txn inserted keys join the txn's
+              // change set — they merge into the staged image if a later
+              // rewrite upgrades the delta, and a concurrent rewrite must
+              // see them in the disjointness check
+              if (isTxnOpen) {
+                val pkCols = identityKeyOf(table)
+                if (pkCols.nonEmpty) {
+                  val rows =
+                    if (pkCols.forall(pc => cols.exists(_.equalsIgnoreCase(pc))) &&
+                        planDeterministic(src))
+                      // runInsert re-evaluates the source: a rand()/uuid()
+                      // key would insert DIFFERENT keys than were captured
+                      // (and than were constraint-checked) — poison instead
+                      src.toDF(cols: _*)
+                        .select(pkCols.map(org.apache.spark.sql.functions.col): _*)
+                        .limit(ChangedKeyCap + 1).collect()
+                    else Array.fill(ChangedKeyCap + 1)(null: org.apache.spark.sql.Row)
+                  recordChangedKeys(table,
+                    if (rows.length <= ChangedKeyCap) Some(rows.toSeq.map(_.toSeq))
+                    else None)
+                }
+              }
+              val res = runInsert(txnExec(rewrite(sql)))
+              if (!isTxnOpen) bumpEpoch(table)
+              return res
+            } finally lock.unlock()
+          }
+        }
+      case Update => updateRe.findFirstMatchIn(sql).foreach { m =>
+        return copyOnWriteUpdate(m.group(1), m.group(2), Option(m.group(3)))
       }
-      val plan = qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
+      case Delete => deleteRe.findFirstMatchIn(sql).foreach { m =>
+        return copyOnWriteDelete(m.group(1), Option(m.group(2)))
       }
-      val metrics = allNodes(plan).filter(_.metrics.nonEmpty).map { p =>
-        val ms = p.metrics.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k=${v.value}" }.mkString(", ")
-        s"${p.nodeName}: $ms"
+      case Truncate => truncateRe.findFirstMatchIn(sql).foreach { m =>
+        val t = resolveRenamed(m.group(1)) // post-rename names key by the original
+        val lock = lockFor(t).writeLock()
+        lock.lock()
+        try {
+          if (isTxnOpen) {
+            // stage an EMPTY image directly — snapshotting the rows only
+            // to truncate them would be a full-table copy for nothing
+            val st = txn.get()
+            val q = qualify(t)
+            recordChangedKeys(q, None) // whole-table: never commutes
+            st.staged.get(q) match {
+              case Some(stg) => spark.sql(s"TRUNCATE TABLE $stg")
+              case None =>
+                st.deltas.remove(q).foreach(d =>
+                  try spark.sql(s"DROP TABLE IF EXISTS $d") catch { case _: Throwable => })
+                pinOrCheck(q)
+                val stg = q + "__txn" + txnSeq.incrementAndGet()
+                spark.sql(s"DROP TABLE IF EXISTS $stg")
+                spark.sql(s"CREATE TABLE $stg AS SELECT * FROM $q LIMIT 0")
+                st.staged(q) = stg
+            }
+          } else {
+            spark.sql(s"TRUNCATE TABLE $t")
+            bumpEpoch(t); bumpRewriteEpoch(t)
+            logRewrite(t, None)
+          }
+        } finally lock.unlock()
+        return ExecResult(null, "TRUNCATE TABLE")
       }
-      import spark.implicits._
-      val lines = plan.toString.linesIterator.toSeq ++
-        Seq("", s"== Runtime metrics (rows: $rows) ==") ++ metrics
-      return ExecResult(lines.toDF("plan"), "SELECT")
-    }
-    pragmaRe.findFirstMatchIn(sql).foreach { m =>
-      val body = m.group(1).trim
-      if (body.equalsIgnoreCase("force_checkpoint"))
-        return checkpointDatabase(force = true, None)
-      return pragma(body)
-    }
-    checkpointRe.findFirstMatchIn(sql).foreach { m =>
-      return checkpointDatabase(m.group(1) != null, Option(m.group(2)))
-    }
-    vacuumAnalyzeRe.findFirstMatchIn(sql).foreach { m =>
-      return vacuumAnalyze(m.group(1).trim.toUpperCase.startsWith("VACUUM"),
-        Option(m.group(2)))
-    }
-    if (attachRe.matches(sql))
-      throw new UnsupportedOperationException(
-        "ATTACH/DETACH is not supported: graft serves a single warehouse " +
-          "(the reference attaches DuckDB database files)")
-    summarizeRe.findFirstMatchIn(sql).foreach { m =>
-      val target = m.group(1).trim
-      val q = if (target.matches("(?is)^(select|with|from|values)\\b.*")) target
-              else s"SELECT * FROM $target"
-      return summarize(q)
-    }
-    def describeShape(schema: org.apache.spark.sql.types.StructType): ExecResult = {
-      import spark.implicits._
-      val df = schema.fields.toSeq
-        .map(f => (f.name, graft.functions.DuckTypeNames.of(f.dataType),
-          if (f.nullable) "YES" else "NO"))
-        .toDF("column_name", "column_type", "null")
-      ExecResult(df, "SELECT")
-    }
-    describeQueryRe.findFirstMatchIn(sql).foreach { m =>
-      return describeShape(analyzeOnly(m.group(1)).schema)
-    }
-    describeTableRe.findFirstMatchIn(sql).foreach { m =>
-      return describeShape(analyzeOnly(s"SELECT * FROM ${m.group(1)}").schema)
+      case Pivot => // DuckDB statement-level PIVOT/UNPIVOT (simplified spellings)
+        pivotUnpivotIntercept(sql).foreach(r => return r)
+      case Prepare =>
+        // SQL-level PREPARE/EXECUTE/DEALLOCATE (PG and DuckDB both; the
+        // wire-level Parse/Bind is a separate machine in PgConnection).
+        // Connection-scoped; EXECUTE splices the argument expressions into
+        // the $n placeholders outside string literals and re-dispatches,
+        // so the statement passes through every engine layer (txn overlay,
+        // temp namespace, macros) at execution time.
+        prepareStmtRe.findFirstMatchIn(sql).foreach { m =>
+          tempNs.get().prepared(m.group(1).toLowerCase) = m.group(2).trim
+          return ExecResult(null, "PREPARE")
+        }
+      case Execute => executeStmtSqlRe.findFirstMatchIn(sql).foreach { m =>
+        val n = m.group(1).toLowerCase
+        val body = tempNs.get().prepared.getOrElse(n,
+          throw new IllegalArgumentException(
+            s"""prepared statement "$n" does not exist"""))
+        val args = Option(m.group(2)).map(a => SqlLexer.splitTopLevel(a, ',')).getOrElse(Nil)
+        val subbed = SqlLexer.replaceInCode(body, """\$(\d+)""".r) { mm =>
+          val k = mm.group(1).toInt
+          if (k < 1 || k > args.size)
+            throw new IllegalArgumentException(
+              s"""prepared statement "$n": no value bound for parameter """ +
+                s"$$$k (${args.size} given)")
+          "(" + args(k - 1) + ")"
+        }
+        return executeInner(subbed, allowReserved)
+      }
+      case Deallocate => deallocateRe.findFirstMatchIn(sql).foreach { m =>
+        val ns = tempNs.get()
+        if (m.group(1).equalsIgnoreCase("all")) ns.prepared.clear()
+        else if (ns.prepared.remove(m.group(1).toLowerCase).isEmpty)
+          throw new IllegalArgumentException(
+            s"""prepared statement "${m.group(1)}" does not exist""")
+        return ExecResult(null, "DEALLOCATE")
+      }
+      case Set =>
+        // DuckDB session variables: SET VARIABLE auto-declares (Spark's
+        // own SET VAR requires a prior DECLARE), RESET VARIABLE drops;
+        // getvariable('x') reads rewrite to system.session.x in rewrite()
+        setVariableRe.findFirstMatchIn(sql).foreach { m =>
+          val ns = tempNs.get()
+          val n = m.group(1).toLowerCase
+          val mangled = ns.vars.getOrElseUpdate(n, ns.mangle(n))
+          spark.sql(s"DECLARE OR REPLACE VARIABLE $mangled = ${rewrite(m.group(2))}")
+          return ExecResult(null, "SET")
+        }
+        if (swallowedSetRe.matches(sql))
+          return ExecResult(spark.sql("SELECT 1 LIMIT 0"), "SET")
+      case Reset => resetVariableRe.findFirstMatchIn(sql).foreach { m =>
+        tempNs.get().vars.remove(m.group(1).toLowerCase).foreach { mangled =>
+          spark.sql(s"DROP TEMPORARY VARIABLE IF EXISTS $mangled")
+        }
+        return ExecResult(null, "RESET")
+      }
+      case Discard =>
+        if (sql.equalsIgnoreCase("discard all")) {
+          // PG semantics: DISCARD ALL drops the session's temporary objects.
+          // PG rejects it inside a transaction block — and allowing it here
+          // leaked: releaseConnTemps dropped the mangled tables without
+          // purging the open txn's staged/delta overlays, so COMMIT
+          // republished staged data into the dropped hidden name (ADVICE r14)
+          if (isTxnOpen) throw new IllegalArgumentException(
+            "DISCARD ALL cannot run inside a transaction block")
+          releaseConnTemps()
+          return ExecResult(null, "DISCARD ALL")
+        }
+      case Begin | StartTransaction =>
+        // BEGIN inside an open transaction: PG warns and no-ops —
+        // the open transaction (and its staged writes) continue
+        val st = txn.get()
+        if (!st.open) { st.reset(); st.open = true; openTxns.incrementAndGet() }
+        return ExecResult(null, kind.tag)
+      case Commit =>
+        val st = txn.get()
+        val wasAborted = st.aborted
+        try { if (wasAborted) dropStaged(st) else commitTxn(st) }
+        finally st.reset()
+        // PG: COMMIT of an aborted transaction performs (and tags) a ROLLBACK
+        return ExecResult(null, if (wasAborted) "ROLLBACK" else "COMMIT")
+      case Rollback =>
+        val st = txn.get()
+        val hadDdl = st.open && st.ddl
+        dropStaged(st)
+        st.reset()
+        if (hadDdl) throw new IllegalArgumentException(
+          "ROLLBACK cannot undo DDL: this transaction ran a statement that " +
+            "auto-commits (TEMP object DDL, OR REPLACE forms, DROP SCHEMA " +
+            "CASCADE, quoted-identifier RENAME — table/view/type/schema " +
+            "CREATE/DROP/ALTER and RENAME TO are transactional); the staged " +
+            "DML changes in this transaction HAVE been rolled back")
+        return ExecResult(null, "ROLLBACK")
+      case Show =>
+        if (showTxnReadOnlyRe.matches(sql))
+          return ExecResult(spark.sql("SELECT 'off' AS transaction_read_only"), "SELECT 1")
+        if (showTxnIsolationRe.matches(sql)) // pgjdbc probes this at connect
+          return ExecResult(
+            spark.sql("SELECT 'read committed' AS transaction_isolation"), "SELECT 1")
+      case Export => exportDbRe.findFirstMatchIn(sql).foreach(m => return exportDatabase(m.group(1)))
+      case Import => importDbRe.findFirstMatchIn(sql).foreach(m => return importDatabase(m.group(1)))
+      case Copy =>
+        copyToRe.findFirstMatchIn(sql).foreach { m =>
+          return copyTo(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
+        }
+        copyFromFileRe.findFirstMatchIn(sql).foreach { m =>
+          return copyFromFile(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
+        }
+      case Explain => explainAnalyzeRe.findFirstMatchIn(sql).filter(m => isQuery(m.group(1))).foreach { m =>
+        // run the inner query through the FULL execute pipeline (so
+        // dialect rewrites apply), execute its own QueryExecution (toRdd
+        // drives the same physical plan, populating its SQL metrics and
+        // finalizing AQE), then render the plan plus per-node metrics —
+        // the analog of DuckDB's profiled plan.
+        val inner = execute(m.group(1))
+        if (inner.df == null) return ExecResult(null, inner.tag)
+        val qe = inner.df.queryExecution
+        val rows = qe.toRdd.count()
+        // AQE wraps the final plan in AdaptiveSparkPlanExec and each
+        // materialized stage in a leaf QueryStageExec — recurse through
+        // both or .collect sees only the wrappers
+        import org.apache.spark.sql.execution.SparkPlan
+        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+        def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+          val inner = p match {
+            case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+            case q: QueryStageExec => Seq(q.plan)
+            case _ => Nil
+          }
+          p +: (p.children ++ inner).flatMap(allNodes)
+        }
+        val plan = qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        val metrics = allNodes(plan).filter(_.metrics.nonEmpty).map { p =>
+          val ms = p.metrics.toSeq.sortBy(_._1)
+            .map { case (k, v) => s"$k=${v.value}" }.mkString(", ")
+          s"${p.nodeName}: $ms"
+        }
+        import spark.implicits._
+        val lines = plan.toString.linesIterator.toSeq ++
+          Seq("", s"== Runtime metrics (rows: $rows) ==") ++ metrics
+        return ExecResult(lines.toDF("plan"), "SELECT")
+      }
+      case Pragma => pragmaRe.findFirstMatchIn(sql).foreach { m =>
+        val body = m.group(1).trim
+        if (body.equalsIgnoreCase("force_checkpoint"))
+          return checkpointDatabase(force = true, None)
+        return pragma(body)
+      }
+      case Checkpoint => checkpointRe.findFirstMatchIn(sql).foreach { m =>
+        return checkpointDatabase(m.group(1) != null, Option(m.group(2)))
+      }
+      case Vacuum | Analyze => vacuumAnalyzeRe.findFirstMatchIn(sql).foreach { m =>
+        return vacuumAnalyze(kind == Vacuum, Option(m.group(2)))
+      }
+      case Attach =>
+        throw new UnsupportedOperationException(
+          "ATTACH/DETACH is not supported: graft serves a single warehouse " +
+            "(the reference attaches DuckDB database files)")
+      case Summarize => summarizeRe.findFirstMatchIn(sql).foreach { m =>
+        return summarize(if (isQuery(m.group(1))) m.group(1) else s"SELECT * FROM ${m.group(1)}")
+      }
+      case Describe =>
+        describeTarget(sql).foreach { q =>
+          import spark.implicits._
+          return ExecResult(analyzeOnly(q).schema.fields.toSeq
+            .map(f => (f.name, graft.functions.DuckTypeNames.of(f.dataType),
+              if (f.nullable) "YES" else "NO"))
+            .toDF(describeSchema.fieldNames.toIndexedSeq: _*), "SELECT")
+        }
+      case _ =>
     }
 
     if (CatalogViews.isUnmodelled(sql))
@@ -3993,9 +4005,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // residue; this closes the window). Spark DDL executes eagerly on
     // spark.sql, so unlocking after txnExec returns is sound.
     val createLock =
-      if (!isTxnOpen)
-        txnCreateTableRe.findFirstMatchIn(sql)
-          .map(m => lockFor(qualify(m.group(2))).writeLock())
+      if (kind == Create && !isTxnOpen) createTableM.map(m => lockFor(qualify(m.group(2))).writeLock())
       else None
     createLock.foreach(_.lock())
     // INSERT commands ALSO execute eagerly inside txnExec (spark.sql
@@ -4004,45 +4014,37 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // row-count read alone left the write itself uncovered (r15
     // torture-spec find; see [[appendMutexes]] for why concurrent
     // append jobs additionally serialize on the mutex).
-    val appendLockPair =
-      if (!isTxnOpen)
-        insertStmtRe.findFirstMatchIn(sql).map { m =>
-          val mu = appendMutexFor(m.group(1)); mu.lock()
-          val rl = lockFor(m.group(1)).readLock(); rl.lock()
-          (mu, rl)
-        }
-      else None
+    val appendTarget = if (kind == Insert && !isTxnOpen) insertM.map(_.group(1)) else None
+    val appendLockPair = appendTarget.map { t =>
+      val mu = appendMutexFor(t); mu.lock()
+      val rl = lockFor(t).readLock(); rl.lock()
+      (mu, rl)
+    }
     try {
     val df = try queryDf(sql) finally createLock.foreach(_.unlock())
-    val verb = sql.split("\\s+").head.toUpperCase
-    verb match {
-      case "SELECT" | "WITH" | "VALUES" | "TABLE" | "SHOW" | "DESCRIBE" | "DESC" | "EXPLAIN" | "PIVOT" | "FROM" =>
-        ExecResult(df, "SELECT")
-      case "INSERT" =>
-        insertStmtRe.findFirstMatchIn(sql) match {
-          case Some(m) if !isTxnOpen =>
-            // locks already held since BEFORE txnExec (appendLockPair):
-            // mutex vs other append jobs, read lock vs CoW rewriters'
-            // write lock (the ADVICE-r9 lost-update window)
-            val r = runInsert(df)
-            bumpEpoch(m.group(1))
-            r
-          case _ => runInsert(df)
-        }
+    kind match {
+      case k if k.returnsRows => ExecResult(df, "SELECT")
+      case Insert =>
+        // locks already held since BEFORE txnExec (appendLockPair):
+        // mutex vs other append jobs, read lock vs CoW rewriters'
+        // write lock (the ADVICE-r9 lost-update window)
+        val r = runInsert(df)
+        appendTarget.foreach(bumpEpoch)
+        r
       case _ =>
         df.collect()
-        verb match {
-          case "CREATE" if createViewRe.matches(sql) => disk.foreach(_.logView(sql))
-          case "DROP" =>
+        kind match {
+          case Create if createViewRe.matches(sql) => disk.foreach(_.logView(sql))
+          case Drop =>
             // constraint-registry cleanup is unconditional (a re-created
             // table must not inherit the old table's constraints); the
             // on-disk dir removal + journal cleanup inside are
             // --db_path-gated
-            dropTableRe.findFirstMatchIn(sql).foreach(m => afterDropTable(m.group(1)))
-            dropViewRe.findFirstMatchIn(sql).foreach(m => unlogView(m.group(1)))
+            dropTableM.foreach(m => afterDropTable(m.group(1)))
+            dropViewM.foreach(m => unlogView(m.group(1)))
           case _ =>
         }
-        ExecResult(null, verb)
+        ExecResult(null, kind.tag)
     }
     } finally appendLockPair.foreach { case (mu, rl) => rl.unlock(); mu.unlock() }
   }
@@ -5224,7 +5226,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     }
     import org.apache.spark.sql.functions.{col => fcol, coalesce, lit, expr}
     if (isUn) {
-      val m = """(?is)^\s*on\s+(.+?)(?:\s+into\s+name\s+(\w+)\s+value\s+(\w+))?\s*;?\s*$""".r
+      val m = """(?is)^\s*on\s+(.+?)(?:\s+into\s+name\s+(\w+)\s+value\s+(\w+))?\s*$""".r
         .findFirstMatchIn(rest).getOrElse(throw new IllegalArgumentException(
           "UNPIVOT: expected ON <columns> [INTO NAME n VALUE v]"))
       val onCols = SqlLexer.splitTopLevel(m.group(1), ',').map(_.replace("\"", "").trim)
@@ -5238,7 +5240,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     }
     val m = ("""(?is)^\s*on\s+([\w."]+)\s*(?:in\s*\(([^)]*)\)\s*)?using\s+(.+?)""" +
       """(?:\s+group\s+by\s+(.+?))?(?:\s+order\s+by\s+(.+?))?""" +
-      """(?:\s+limit\s+(\d+))?\s*;?\s*$""").r
+      """(?:\s+limit\s+(\d+))?\s*$""").r
       .findFirstMatchIn(rest).getOrElse(throw new IllegalArgumentException(
         "PIVOT: expected ON <column> [IN (…)] USING <aggregate> " +
           "[GROUP BY …] (single ON column and USING aggregate supported)"))
@@ -5509,15 +5511,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         row.getAs[String](b + 3), row.getAs[String](b + 4), row.getAs[String](b + 5),
         row.getAs[String](b + 6), row.getAs[String](b + 7), total, nullPct)
     }
-    val schema = StructType(Seq(
-      StructField("column_name", StringType), StructField("column_type", StringType),
-      StructField("min", StringType), StructField("max", StringType),
-      StructField("approx_unique", LongType), StructField("avg", StringType),
-      StructField("std", StringType), StructField("q25", StringType),
-      StructField("q50", StringType), StructField("q75", StringType),
-      StructField("count", LongType), StructField("null_percentage", DecimalType(9, 2))))
     ExecResult(spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1), schema), "SELECT")
+      spark.sparkContext.parallelize(out, 1), summarizeSchema), "SELECT")
   }
 
   /** Append a DataFrame whose plan may read the target table: stage the
@@ -5631,23 +5626,24 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   /** CREATE TABLE with PG/DuckDB constraint syntax: Spark's parser
     * rejects PRIMARY KEY / UNIQUE / NOT NULL, so they are parsed out
     * here, recorded, and the stripped DDL executed (SURVEY §2-B.9). */
+  /** Whether `table` resolves in the caller's view: inside a txn its own
+    * staged creates and renames count, and a name it DROPPED is free to
+    * re-create (drop-then-create publishes in that order at COMMIT); a
+    * name it renamed a table TO is taken. */
+  private def nameTaken(table: String): Boolean = {
+    val st = txn.get()
+    val q = qualify(table)
+    if (!st.open) spark.catalog.tableExists(table)
+    else (spark.catalog.tableExists(table) && !st.dropped.contains(q) &&
+        !st.renames.contains(q) && !st.droppedViews.contains(q)) ||
+      st.created.contains(q) || st.createdViews.contains(q) ||
+      st.renames.valuesIterator.contains(q)
+  }
+
   private def createTableWithConstraints(table: String, colSpec: String,
       rest: String, ifNotExists: Boolean = false): ExecResult = {
-    if (ifNotExists) {
-      // IF NOT EXISTS: no-op when the name resolves in the caller's
-      // view (inside a txn that includes its own staged creates/renames
-      // minus its drops — same resolution the conflict check uses)
-      val st = txn.get()
-      val q = qualify(table)
-      val exists =
-        if (st.open)
-          (spark.catalog.tableExists(table) && !st.dropped.contains(q) &&
-            !st.renames.contains(q) && !st.droppedViews.contains(q)) ||
-            st.created.contains(q) || st.createdViews.contains(q) ||
-            st.renames.valuesIterator.contains(q)
-        else spark.catalog.tableExists(table)
-      if (exists) return ExecResult(null, "CREATE TABLE")
-    }
+    // IF NOT EXISTS: no-op when the name resolves in the caller's view
+    if (ifNotExists && nameTaken(table)) return ExecResult(null, "CREATE TABLE")
     var pk = Seq.empty[String]
     var unique = Seq.empty[Seq[String]]
     var notNull = Seq.empty[String]
@@ -5942,10 +5938,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       if (!file.isFile)
         throw new IllegalArgumentException(s"IMPORT DATABASE: missing $path/$f")
       val text = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
-      SqlLexer.splitTopLevel(text, ';').map(_.trim).filter(_.nonEmpty).foreach { st =>
-        execute(st)
-        n += 1
-      }
+      SqlLexer.splitTopLevel(text, ';').map(Statement(_)).filter(_.kind != Statement.Empty)
+        .foreach { st => executeStatement(st); n += 1 }
     }
     ExecResult(null, s"IMPORT $n")
   }
@@ -6186,7 +6180,6 @@ object Engine {
     * snapshot behind [[CatalogViews]] memoizes against it. Over-bumping (e.g. a DDL
     * that fails) only costs an extra rebuild — never staleness. */
   private[server] val ddlEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[server] val ddlRe = """(?is)^\s*(create|drop|alter)\b""".r
 
   /** Sentinel first part of a multipart identifier marking a relation
     * a rename-target substitution already resolved — stripped before
@@ -6196,7 +6189,6 @@ object Engine {
   // intercepts (case-insensitive), mirroring reference pg_conn.go:274-307
   private val createUserRe =
     """(?is)^\s*create\s+user\s+(\S+)\s+with\s+password\s+'([^']*)'\s*$""".r
-  private val txnRe = """(?is)^\s*(begin|commit|rollback|start\s+transaction|end)\b.*""".r
   private val showTxnReadOnlyRe = """(?is)^\s*show\s+transaction_read_only\s*$""".r
   private val showTxnIsolationRe =
     """(?is)^\s*show\s+transaction\s+isolation\s+level\s*$""".r
@@ -6219,10 +6211,12 @@ object Engine {
     """(?is)^\s*create\s+table\s+(?:(if\s+not\s+exists)\s+)?([\w.]+)\s*\((.*)\)\s*(using\s+\w+)?\s*$""".r
   private val createTableRe =
     """(?is)^\s*create\s+table\s+(?:(if\s+not\s+exists)\s+)?([\w.]+)\s*\((.*(?:primary\s+key|unique|not\s+null|foreign\s+key|references\s|check\s*\().*)\)\s*(using\s+\w+)?\s*$""".r
+  // INSERT INTO t [(cols)] <source>: the handlers take only a query
+  // source (their own kind check), so DEFAULT VALUES falls through
   private val insertStmtRe =
-    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(values\b.+|select\b.+|with\b.+)$""".r
+    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(.+)$""".r
   private val onConflictRe =
-    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(values\b.+?|select\b.+?|with\b.+?)\s+on\s+conflict\s*(?:\(([^)]*)\))?\s*do\s+(nothing|update\s+set\s+(.+?))\s*$""".r
+    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(.+?)\s+on\s+conflict\s*(?:\(([^)]*)\))?\s*do\s+(nothing|update\s+set\s+(.+?))\s*$""".r
   private val deleteRe =
     """(?is)^\s*delete\s+from\s+([\w.]+)(?:\s+where\s+(.+))?\s*$""".r
   private val createViewRe =
@@ -6264,13 +6258,13 @@ object Engine {
     * (r13). DROP … CASCADE deliberately doesn't match: it keeps the
     * declared auto-commit path (its table drops are not staged). */
   private val txnCreateSchemaRe =
-    """(?is)^\s*create\s+schema\s+(if\s+not\s+exists\s+)?([\w"]+)\s*;?\s*$""".r
+    """(?is)^\s*create\s+schema\s+(if\s+not\s+exists\s+)?([\w"]+)\s*$""".r
   private val txnDropSchemaRe =
-    """(?is)^\s*drop\s+schema\s+(if\s+exists\s+)?([\w"]+)\s*(?:restrict\s*)?;?\s*$""".r
-  /** Any CREATE/DROP SCHEMA spelling — the in-txn guard that rejects
-    * forms the transactional regexes above don't cover (ADVICE r13). */
-  private val anySchemaDdlRe =
-    """(?is)^\s*(?:create|drop)\s+schema\b""".r
+    """(?is)^\s*drop\s+schema\s+(if\s+exists\s+)?([\w"]+)\s*(?:restrict\s*)?$""".r
+  /** Any CREATE/DROP SCHEMA spelling (matched on CREATE and DROP only) —
+    * the in-txn guard that rejects forms the transactional regexes above
+    * don't cover (ADVICE r13). */
+  private val anySchemaDdlRe = """(?is)^\s*\w+\s+schema\b""".r
 
   /** Engine-internal staging tables (txn overlays + deltas, CoW/upsert/
     * ALTER scratch) — hidden from every catalog listing the user can
@@ -6300,7 +6294,6 @@ object Engine {
   private val copyFromFileRe =
     """(?is)^\s*copy\s+([\w.]+)\s+from\s+'([^']+)'\s*(?:\(([^)]*)\)|with\s*\(([^)]*)\))?\s*$""".r
   private val pragmaRe = """(?is)^\s*pragma\s+(.+)$""".r
-  private val attachRe = """(?is)^\s*(attach|detach)\b.*""".r
   // DuckDB maintenance statements. CHECKPOINT takes an optional
   // DATABASE name (never a table). VACUUM/ANALYZE take an optional
   // table (+ ignored column list, like DuckDB, which samples all
@@ -6350,18 +6343,40 @@ object Engine {
   private val vacuumAnalyzeRe =
     """(?is)^\s*(vacuum(?:\s+analyze)?|analyze)(?:\s+([\w.]+)\s*(?:\([^)]*\))?)?\s*$""".r
 
-  private val describeQueryRe = """(?is)^\s*describe\s+((?:select|with|values)\b.+)$""".r
+  private val describeQueryRe = """(?is)^\s*describe\s+(.+)$""".r
   // bare `DESCRIBE <table>` answers the same DuckDB 3-column shape as
   // the query form (Spark's own DESCRIBE prints Spark type names —
   // `int` where every DuckDB client expects INTEGER)
   private val describeTableRe =
     """(?is)^\s*describe\s+(?:table\s+)?([\w."]+)\s*$""".r
+  /** The query a DuckDB-form DESCRIBE describes — `DESCRIBE <query>` or
+    * `DESCRIBE [TABLE] <name>`; other spellings (`DESC t`) go to Spark. */
+  private def describeTarget(sql: String): Option[String] =
+    describeQueryRe.findFirstMatchIn(sql).map(_.group(1)).filter(isQuery)
+      .orElse(describeTableRe.findFirstMatchIn(sql).map(m => s"SELECT * FROM ${m.group(1)}"))
+  private val describeSchema = org.apache.spark.sql.types.StructType(
+    Seq("column_name", "column_type", "null").map(
+      org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)))
+  /** Whether a handler's statement argument is a query. */
+  private def isQuery(sql: String): Boolean = Statement(sql).kind == Statement.Query
   private val summarizeRe = """(?is)^\s*summarize\s+(.+)$""".r
+  /** SUMMARIZE's columns, DuckDB's names and order. */
+  private val summarizeSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("column_name", StringType), StructField("column_type", StringType),
+      StructField("min", StringType), StructField("max", StringType),
+      StructField("approx_unique", LongType), StructField("avg", StringType),
+      StructField("std", StringType), StructField("q25", StringType),
+      StructField("q50", StringType), StructField("q75", StringType),
+      StructField("count", LongType), StructField("null_percentage", DecimalType(9, 2))))
+  }
   private val createSeqRe =
     """(?is)^\s*create\s+(temp(?:orary)?\s+)?sequence\s+(if\s+not\s+exists\s+)?([\w.]+)(.*)$""".r
   private val dropSeqRe = """(?is)^\s*drop\s+sequence\s+(if\s+exists\s+)?([\w.]+)\s*$""".r
   private val seqStartRe = """(?i)start\s+(?:with\s+)?(-?\d+)""".r
   private val seqIncRe = """(?i)increment\s+(?:by\s+)?(-?\d+)""".r
+  private val selectWordRe = """(?i)\bselect\b""".r
   private val nextvalRe = """(?i)\bnextval\s*\(\s*'([^']+)'\s*\)""".r
   private val currvalRe = """(?i)\bcurrval\s*\(\s*'([^']+)'\s*\)""".r
 
@@ -6588,7 +6603,7 @@ object Engine {
     s"SELECT $selList FROM $fromPart $tail".trim
   }
   private val explainAnalyzeRe =
-    """(?is)^\s*explain\s+analyze\s+((?:select|with|values)\b.+)$""".r
+    """(?is)^\s*explain\s+analyze\s+(.+)$""".r
   private val partitionByRe = """(?i)partition_by\s*\(([^)]*)\)""".r
   private val excludeRe =
     """(?i)select\s+\*\s+exclude\s*\(([^)]*)\)\s+from\s+([\w.]+)""".r

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.server.{Engine, SqlLexer}
+import graft.server.{Engine, SqlLexer, Statement}
 import graft.server.pg.{CsvValues, Scram}
 
 /** ClickHouse HTTP frontend (reference ch_server.go): GET/POST query
@@ -26,12 +26,10 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
   // auth cache: user -> (password, expiry) — amortizes PBKDF2 (A18)
   private val authCache = new ConcurrentHashMap[String, (String, Long)]()
 
-  private val selectRe = """(?is)^\s*(select|with|show|describe|desc|explain|values)\b.*""".r
   private val insertFormatRe =
     """(?is)^\s*insert\s+into\s+([\w.]+)\s*(\(([^)]*)\))?\s*format\s+(\w+)\s*$""".r
   private val formatClauseRe = """(?is)\s+format\s+(\w+)\s*$""".r
   private val limitNmRe = """(?i)limit\s+(\d+)\s*,\s*(\d+)""".r
-  private val txnCtlRe = """(?is)^\s*(begin|commit|rollback|start\s+transaction|end)\b.*""".r
 
   def start(): ChServer = {
     server = HttpServer.create(new InetSocketAddress(bindAddr, port), 128)
@@ -78,32 +76,33 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
       ex.close()
     }
 
-  /** Classify: SELECT-ish → stream result; INSERT…FORMAT → ingest;
+  /** By kind: row-returning → stream result; INSERT…FORMAT → ingest;
     * other → exec (reference ch_server.go:107-150). */
   private def run(ex: HttpExchange, sql0: String, payload: String): Unit = {
-    val sql = sql0.trim.stripSuffix(";")
-    if (sql.isEmpty) { respond(ex, 200, "Ok.\n"); return }
-    // explicit transactions need a session; HTTP requests don't have
-    // one (and real ClickHouse rejects these too)
-    if (txnCtlRe.matches(sql)) {
-      respond(ex, 400,
-        "error: transaction control statements are not supported over the " +
-          "ClickHouse HTTP protocol (each request auto-commits)\n")
-      return
-    }
-    insertFormatRe.findFirstMatchIn(sql) match {
+    val stmt = Statement(sql0)
+    insertFormat(stmt) match {
       case Some(m) =>
         val cols = Option(m.group(3)).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         ingest(ex, m.group(1), cols, m.group(4), payload)
-      case None if selectRe.matches(sql) => select(ex, sql)
+      case None if stmt.kind == Statement.Empty => respond(ex, 200, "Ok.\n")
+      // explicit transactions need a session; HTTP requests don't have
+      // one (and real ClickHouse rejects these too)
+      case None if stmt.kind.isTxnControl =>
+        respond(ex, 400,
+          "error: transaction control statements are not supported over the " +
+            "ClickHouse HTTP protocol (each request auto-commits)\n")
+      case None if stmt.kind.returnsRows => select(ex, stmt)
       case None =>
-        engine.execute(sql)
+        engine.executeStatement(stmt)
         respond(ex, 200, "Ok.\n")
     }
   }
 
-  private def select(ex: HttpExchange, sql0: String): Unit = {
-    var sql = sql0
+  private def insertFormat(stmt: Statement): Option[scala.util.matching.Regex.Match] =
+    if (stmt.kind == Statement.Insert) insertFormatRe.findFirstMatchIn(stmt.text) else None
+
+  private def select(ex: HttpExchange, stmt: Statement): Unit = {
+    var sql = stmt.text
     // FORMAT clause extraction
     var format = "TabSeparated"
     SqlLexer.codeMatches(sql, formatClauseRe).nextOption().foreach { m =>
@@ -117,7 +116,7 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
     sql = SqlLexer.replaceInCode(sql, limitNmRe)(m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
     if (sql.trim.equalsIgnoreCase("select table")) sql = "select `table`"
 
-    val res = engine.execute(sql)
+    val res = engine.executeStatement(stmt.copy(text = sql))
     ex.getResponseHeaders.set("X-ClickHouse-Format", format)
     ex.getResponseHeaders.set("Content-Type", format match {
       case "JSONEachRow" => "application/x-ndjson; charset=UTF-8"
@@ -204,14 +203,21 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
 
   /** POST body head/payload split: the head grows line by line until it
     * classifies as INSERT…FORMAT, whose payload starts on the next line
-    * (reference ch_server.go:118-140); otherwise the whole body is the
+    * (reference ch_server.go:118-140); a head that classifies as any
+    * other statement ends the search, and the whole body is the
     * statement. Line breaks stay in the head — they may sit inside a
     * literal or end a `--` comment. */
   private def splitHead(body: String): (String, String) = {
     var idx = body.indexOf('\n')
-    while (idx >= 0 && !insertFormatRe.matches(body.substring(0, idx)))
-      idx = body.indexOf('\n', idx + 1)
-    if (idx < 0) (body.trim, "") else (body.substring(0, idx).trim, body.substring(idx + 1))
+    while (idx >= 0) {
+      val head = Statement(body.substring(0, idx))
+      if (insertFormat(head).isDefined) return (body.substring(0, idx).trim, body.substring(idx + 1))
+      idx = head.kind match {
+        case Statement.Empty | Statement.Insert => body.indexOf('\n', idx + 1)
+        case _ => -1
+      }
+    }
+    (body.trim, "")
   }
 
   private def readAll(in: InputStream): Array[Byte] = in.readAllBytes()

@@ -6,9 +6,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
-import graft.server.{Engine, SqlLexer}
+import graft.server.{Engine, SqlLexer, Statement}
 
 /** One PG client connection: startup → auth → message loop. Mirrors
   * the reference's state machine (pg_conn.go:90-208) with SURVEY's
@@ -22,21 +23,21 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
   private val in = new WireIn(socket.getInputStream)
   private val out = new WireOut(socket.getOutputStream)
 
-  private case class Stmt(sql: String, numParams: Int, df: () => DataFrame,
-      paramOids: Seq[Int] = Nil)
+  private case class Stmt(stmt: Statement, numParams: Int, paramOids: Seq[Int] = Nil) {
+    /** The statement with its `$n` placeholders bound (None = NULL). */
+    def bound(params: Seq[Option[String]]): Statement =
+      stmt.copy(text = substituteParams(stmt.text, params))
+  }
   private final class Portal(val stmt: Stmt, val params: Seq[Option[String]],
       val resultFmts: Seq[Int] = Nil) {
     // live cursor state for Execute.maxRows / PortalSuspended (Q7 done
     // properly — the reference ignores maxRows, pg_conn.go:509-532)
-    var it: java.util.Iterator[org.apache.spark.sql.Row] = _
-    var schema: org.apache.spark.sql.types.StructType = _
+    var it: java.util.Iterator[Row] = _
+    var schema: StructType = _
     var tag: String = _
   }
 
-  private final class Cursor(val it: java.util.Iterator[org.apache.spark.sql.Row],
-      val schema: org.apache.spark.sql.types.StructType) {
-    var rowDescSent = false
-  }
+  private final class Cursor(val it: java.util.Iterator[Row], val schema: StructType)
 
   private val stmts = mutable.Map.empty[String, Stmt]
   private val portals = mutable.Map.empty[String, Portal]
@@ -162,15 +163,18 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     try body
     catch {
       case NonFatal(e) =>
-        // a RUNTIME failure during row pumping happens OUTSIDE
-        // engine.execute's catch (SELECTs are lazy) — the open
-        // transaction must still abort, DuckDB-style. Analysis errors
-        // were classified inside execute() already; anything surfacing
-        // here is execution.
-        engine.abortOpenTxn(e)
-        out.errorResponse(trimmedMessage(e))
+        fail(e)
         inError = true // skip until Sync (reference pg_conn.go:145-193)
     }
+
+  /** A RUNTIME failure during row pumping happens OUTSIDE
+    * engine.execute's catch (SELECTs are lazy) — the open transaction
+    * must still abort, DuckDB-style. Analysis errors were classified
+    * inside execute() already; anything surfacing here is execution. */
+  private def fail(e: Throwable): Unit = {
+    engine.abortOpenTxn(e)
+    out.errorResponse(trimmedMessage(e))
+  }
 
   private def trimmedMessage(e: Throwable): String = {
     if (sys.env.contains("GRAFT_DEBUG")) e.printStackTrace(System.err)
@@ -182,21 +186,14 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
 
   private def simpleQuery(sql: String): Unit = {
     try {
-      if (sql.trim.isEmpty) { out.emptyQueryResponse(); return }
-      copyFromStdinRe.findFirstMatchIn(sql) match {
-        case Some(m) => copyInMode(m.group(1), Option(m.group(2))); return
-        case None =>
-      }
-      // Q8 fixed: split multi-statement simple queries
-      SqlLexer.splitTopLevel(sql, ';').foreach(runOne)
-    } catch {
-      case NonFatal(e) =>
-        // runtime failures during lazy-SELECT pumping surface here,
-        // outside engine.execute's catch — the open txn must still
-        // abort (DuckDB semantics; same hook as guard())
-        engine.abortOpenTxn(e)
-        out.errorResponse(trimmedMessage(e))
-    }
+      // Q8 fixed: split multi-statement simple queries. A piece holding
+      // only comments is no statement; a query of nothing else gets
+      // EmptyQueryResponse, as in PG.
+      val stmts = SqlLexer.splitTopLevel(sql, ';').map(Statement(_))
+        .filter(_.kind != Statement.Empty)
+      if (stmts.isEmpty) out.emptyQueryResponse()
+      else stmts.foreach(runOne)
+    } catch { case NonFatal(e) => fail(e) }
   }
 
   // DECLARE/FETCH/CLOSE cursors (psql FETCH_COUNT, DataGrip paging)
@@ -206,54 +203,72 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     """(?is)^\s*fetch\s+(?:forward\s+)?(\d+|all)?\s*(?:from\s+|in\s+)?(\S+)\s*$""".r
   private val closeCursorRe = """(?is)^\s*close\s+(\S+)\s*$""".r
 
-  private def runOne(sql: String): Unit = withJobGroup {
-    declareCursorRe.findFirstMatchIn(sql).foreach { m =>
-      val df = engine.execute(m.group(2)).df
-      cursors(m.group(1).toLowerCase) = new Cursor(df.toLocalIterator(), df.schema)
-      out.commandComplete("DECLARE CURSOR")
-      return
-    }
-    fetchRe.findFirstMatchIn(sql).foreach { m =>
-      val name = m.group(2).toLowerCase
-      val cur = cursors.getOrElse(name,
-        throw new IllegalStateException(s"cursor \"$name\" does not exist"))
-      val n = Option(m.group(1)).map(s => if (s.equalsIgnoreCase("all")) Long.MaxValue else s.toLong)
-        .getOrElse(1L)
-      // each FETCH is its own result set → RowDescription every time
-      out.rowDescription(cur.schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)))
-      var sent = 0L
-      while (cur.it.hasNext && sent < n) {
-        val row = cur.it.next()
-        out.dataRow((0 until cur.schema.length).map(i => PgTypes.render(row.get(i))))
-        sent += 1
+  private def runOne(stmt: Statement): Unit = {
+    if (stmt.kind == Statement.Copy)
+      copyFromStdinRe.findFirstMatchIn(stmt.text).foreach { m =>
+        copyInMode(m.group(1), Option(m.group(2)))
+        return
       }
-      out.commandComplete(s"FETCH $sent")
-      return
+    withJobGroup {
+      stmt.kind match {
+        case Statement.Declare => declareCursorRe.findFirstMatchIn(stmt.text).foreach { m =>
+          val df = engine.execute(m.group(2)).df
+          cursors(m.group(1).toLowerCase) = new Cursor(df.toLocalIterator(), df.schema)
+          out.commandComplete("DECLARE CURSOR")
+          return
+        }
+        case Statement.Fetch => fetchRe.findFirstMatchIn(stmt.text).foreach { m =>
+          val name = m.group(2).toLowerCase
+          val cur = cursors.getOrElse(name,
+            throw new IllegalStateException(s"cursor \"$name\" does not exist"))
+          val n = Option(m.group(1)).map(s => if (s.equalsIgnoreCase("all")) Long.MaxValue else s.toLong)
+            .getOrElse(1L)
+          // each FETCH is its own result set → RowDescription every time
+          rowDescription(cur.schema)
+          out.commandComplete(s"FETCH ${sendRows(cur.it, cur.schema, Nil, n)}")
+          return
+        }
+        case Statement.Close => closeCursorRe.findFirstMatchIn(stmt.text).foreach { m =>
+          val name = m.group(1).toLowerCase
+          if (name == "all") cursors.clear() else cursors.remove(name)
+          out.commandComplete("CLOSE CURSOR")
+          return
+        }
+        case _ =>
+      }
+      val res = engine.executeStatement(stmt)
+      if (res.df == null) { out.commandComplete(res.tag); return }
+      rowDescription(res.df.schema)
+      // toLocalIterator keeps one partition resident — 100 TB results
+      // never land in driver memory at once
+      val n = sendRows(res.df.toLocalIterator(), res.df.schema, Nil, Long.MaxValue)
+      out.commandComplete(if (res.tag == "SELECT") s"SELECT $n" else res.tag)
     }
-    closeCursorRe.findFirstMatchIn(sql).foreach { m =>
-      val name = m.group(1).toLowerCase
-      if (name == "all") cursors.clear() else cursors.remove(name)
-      out.commandComplete("CLOSE CURSOR")
-      return
-    }
-    val res = engine.execute(sql)
-    if (res.df == null) { out.commandComplete(res.tag); return }
-    val n = pump(res.df, sendRowDesc = true)
-    out.commandComplete(if (res.tag == "SELECT") s"SELECT $n" else res.tag)
   }
 
-  /** Stream a DataFrame's rows as DataRow messages; returns row count.
-    * toLocalIterator keeps one partition resident — 100 TB results never
-    * land in driver memory at once. */
-  private def pump(df: DataFrame, sendRowDesc: Boolean): Long = {
-    val schema = df.schema
-    if (sendRowDesc)
-      out.rowDescription(schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)))
+  private def rowDescription(schema: StructType, fmts: Seq[Int] = Nil): Unit =
+    out.rowDescription(schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)), fmts)
+
+  /** Send up to `limit` rows of `it` as DataRows; returns the count
+    * sent. Cells follow the Bind result-format codes (PG rules: none =
+    * all text, one = applies to every column, else per column). Simple
+    * queries, cursors and portals all stream through here. */
+  private def sendRows(it: java.util.Iterator[Row], schema: StructType, fmts: Seq[Int],
+      limit: Long): Long = {
+    val nCols = schema.length
+    val binary = (0 until nCols).map(i =>
+      (if (fmts.size == 1) fmts.head else fmts.lift(i).getOrElse(0)) == 1)
+    val anyBinary = binary.contains(true)
     var n = 0L
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
+    while (n < limit && it.hasNext) {
       val row = it.next()
-      out.dataRow((0 until schema.length).map(i => PgTypes.render(row.get(i))))
+      if (!anyBinary)
+        out.dataRow((0 until nCols).map(i => PgTypes.render(row.get(i))))
+      else
+        out.dataRowBytes((0 until nCols).map { i =>
+          if (binary(i)) PgTypes.renderBinary(row.get(i))
+          else PgTypes.render(row.get(i)).map(_.getBytes(UTF_8))
+        })
       n += 1
     }
     n
@@ -331,17 +346,11 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     val declaredOids =
       try { val n = p.int16(); (0 until n).map(_ => p.int32()) }
       catch { case _: Throwable => Seq.empty[Int] }
-    val numParams = maxParamIndex(sql)
-    val stmt = Stmt(sql, numParams,
-      // analyzeOnly: Execute's query path after the intercepts (dialect
-      // rewrite, catalog views, temp names, txn overlays) — lazy
-      // analysis, no job
-      () => engine.analyzeOnly(substituteParams(sql, Seq.fill(numParams)(None))),
-      declaredOids)
+    val stmt = Stmt(Statement(sql), maxParamIndex(sql), declaredOids)
     // Parse-time validation (the reference gets this from DuckDB's
     // Prepare): analyze row-returning statements now so bad SQL errors
     // at Parse, not Execute. Lazy analysis only — no job runs.
-    if (looksRowReturning(sql)) stmt.df().schema
+    resultSchema(stmt)
     stmts(name) = stmt
     out.parseComplete()
   }
@@ -392,15 +401,18 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     }
   }
 
-  private def sendDescription(stmt: Stmt, fmts: Seq[Int] = Nil): Unit = {
-    if (!looksRowReturning(stmt.sql)) { out.noData(); return }
-    // lazy analysis only — no job runs (improvement over the reference's
-    // `describe <q>` probe round-trip, pg_conn.go:652-670)
-    val schema = stmt.df().schema
-    if (schema.isEmpty) out.noData()
-    else out.rowDescription(
-      schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)), fmts)
-  }
+  /** Columns of a prepared statement, params bound to NULL: Execute's
+    * query path after the intercepts (dialect rewrite, catalog views,
+    * temp names, txn overlays) — lazy analysis, no job (improvement over
+    * the reference's `describe <q>` probe round-trip, pg_conn.go:652-670). */
+  private def resultSchema(stmt: Stmt): Option[StructType] =
+    engine.resultSchema(stmt.bound(Seq.fill(stmt.numParams)(None)))
+
+  private def sendDescription(stmt: Stmt, fmts: Seq[Int] = Nil): Unit =
+    resultSchema(stmt) match {
+      case Some(schema) if schema.nonEmpty => rowDescription(schema, fmts)
+      case _ => out.noData()
+    }
 
   private def executePortal(body: Array[Byte]): Unit = withJobGroup {
     val p = new Payload(body)
@@ -408,38 +420,16 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     val maxRows = p.int32()
     val portal = portals.getOrElse(name, throw new IllegalStateException(s"unknown portal \"$name\""))
     if (portal.it == null) { // first Execute on this portal
-      val sql = substituteParams(portal.stmt.sql, portal.params)
-      val res = engine.execute(sql)
+      val res = engine.executeStatement(portal.stmt.bound(portal.params))
       if (res.df == null) { out.commandComplete(res.tag); return }
       portal.it = res.df.toLocalIterator()
       portal.schema = res.df.schema
       portal.tag = res.tag
     }
-    // stream up to maxRows (0 = all); suspend if the cursor survives.
-    // Cell formats follow the Bind result codes (PG rules: none = all
-    // text, one = applies to every column, else per-column)
-    val nCols = portal.schema.length
-    val fmts = (0 until nCols).map { i =>
-      if (portal.resultFmts.isEmpty) 0
-      else if (portal.resultFmts.size == 1) portal.resultFmts.head
-      else if (i < portal.resultFmts.size) portal.resultFmts(i)
-      else 0
-    }
-    val anyBinary = fmts.contains(1)
-    var n = 0L
-    val it = portal.it
-    while (it.hasNext && (maxRows <= 0 || n < maxRows)) {
-      val row = it.next()
-      if (!anyBinary)
-        out.dataRow((0 until nCols).map(i => PgTypes.render(row.get(i))))
-      else
-        out.dataRowBytes((0 until nCols).map { i =>
-          if (fmts(i) == 1) PgTypes.renderBinary(row.get(i))
-          else PgTypes.render(row.get(i)).map(_.getBytes(UTF_8))
-        })
-      n += 1
-    }
-    if (it.hasNext) out.portalSuspended()
+    // stream up to maxRows (0 = all); suspend if the cursor survives
+    val n = sendRows(portal.it, portal.schema, portal.resultFmts,
+      if (maxRows <= 0) Long.MaxValue else maxRows)
+    if (portal.it.hasNext) out.portalSuspended()
     else {
       portal.it = null
       out.commandComplete(if (portal.tag == "SELECT") s"SELECT $n" else portal.tag)
@@ -515,11 +505,6 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
         case _ => new String(bs, UTF_8)
       }
     }
-  }
-
-  private def looksRowReturning(sql: String): Boolean = {
-    val head = sql.trim.split("\\s+").headOption.getOrElse("").toLowerCase
-    Set("select", "with", "values", "table", "show", "describe", "desc", "explain", "pivot")(head)
   }
 }
 

@@ -4393,4 +4393,79 @@ class ServerEngineSpec extends SparkSpecBase {
       spark.sql("DROP TABLE IF EXISTS main.ldh2_s")
     }
   }
+
+  test("a leading comment or bracket never changes what a statement is") {
+    def rows(sql: String): Seq[String] =
+      engine.execute(sql).df.collect().toSeq.map(_.toString)
+    def tables(): Seq[String] =
+      rows("select table_name from information_schema.tables " +
+        "where table_name like 'c_cmt%' order by table_name")
+    for ((lead, i) <- Seq("/* c */ ", "-- c\n").zipWithIndex) {
+      val t = s"c_cmt$i"
+      fresh(t); fresh(t + "_d")
+      // queries: the rows and the SELECT tag, bracketed too
+      for (q <- Seq(s"${lead}select 1 as x", s"${lead}(select 1 as x)", "(select 1 as x)",
+          s"${lead}from (select 1 as x) select x", "select 1 as x -- c")) {
+        val r = engine.execute(q)
+        assert(r.tag == "SELECT" && r.df.collect().toSeq.map(_.toString) == Seq("[1]"), q)
+      }
+      // CREATE TABLE … PRIMARY KEY enforces, and the catalog sees the
+      // table (the DDL epoch moved)
+      assert(tables().isEmpty)
+      assert(engine.execute(s"${lead}create table main.$t (id INT PRIMARY KEY, v STRING) " +
+        "using parquet").tag == "CREATE TABLE")
+      assert(tables() == Seq(s"[$t]"))
+      // DESCRIBE: Parse/Describe announces the columns Execute sends
+      val described = engine.execute(s"${lead}describe main.$t").df
+      assert(described.collect().map(_.getString(0)).toSeq == Seq("id", "v"))
+      assert(engine.resultSchema(graft.server.Statement(s"${lead}describe main.$t")) ==
+        Some(described.schema))
+      assert(engine.execute(s"${lead}insert into main.$t values (1, 'a'), (2, 'b')").tag ==
+        "INSERT 0 2")
+      val dup = intercept[IllegalArgumentException] {
+        engine.execute(s"${lead}insert into main.$t values (1, 'c')")
+      }
+      assert(dup.getMessage.contains("duplicate key"))
+      // a bracketed, TABLE or FROM-first source is a query as well, so
+      // its rows are constraint-checked too
+      for (src <- Seq("(select 1, 'c')", s"table main.$t", s"from main.$t select id, v")) {
+        val e = intercept[IllegalArgumentException] {
+          engine.execute(s"${lead}insert into main.$t $src")
+        }
+        assert(e.getMessage.contains("duplicate key"), src)
+      }
+      // UPDATE / DELETE take the copy-on-write path, as bare ones do
+      assert(engine.execute(s"${lead}update main.$t set v = 'u' where id = 1").tag == "UPDATE 1")
+      assert(engine.execute(s"${lead}delete from main.$t where id = 2").tag == "DELETE 1")
+      assert(rows(s"select id, v from main.$t") == Seq("[1,u]"))
+      // BEGIN / ROLLBACK / COMMIT open and close a real transaction
+      assert(engine.execute(s"${lead}begin").tag == "BEGIN")
+      engine.execute(s"${lead}insert into main.$t values (3, 'c')")
+      assert(engine.execute(s"${lead}rollback").tag == "ROLLBACK")
+      assert(rows(s"select count(*) from main.$t") == Seq("[1]"))
+      assert(engine.execute(s"${lead}start transaction").tag == "START TRANSACTION")
+      engine.execute(s"${lead}insert into main.$t values (3, 'c')")
+      assert(engine.execute(s"commit -- c").tag == "COMMIT")
+      assert(rows(s"select count(*) from main.$t") == Seq("[2]"))
+      // DROP TABLE clears the constraint registry, with the comment on
+      // either end: a re-created table without constraints takes
+      // duplicate keys
+      engine.execute(s"create table main.${t}_d (id INT PRIMARY KEY) using parquet")
+      for ((tbl, drop) <- Seq(t -> s"${lead}drop table main.$t",
+          s"${t}_d" -> s"drop table main.${t}_d -- c")) {
+        assert(engine.execute(drop).tag == "DROP")
+        engine.execute(s"create table main.$tbl (id INT) using parquet")
+        engine.execute(s"insert into main.$tbl values (1), (1)")
+        assert(rows(s"select count(*) from main.$tbl") == Seq("[2]"), drop)
+        engine.execute(s"drop table main.$tbl")
+      }
+      assert(tables().isEmpty)
+      // a statement of comments only is EMPTY
+      assert(engine.execute(lead.trim).tag == "EMPTY")
+    }
+    assert(engine.execute("/* a */ -- b\n ; ").tag == "EMPTY")
+    // a keyword inside a comment is never read as the statement's kind
+    val r = engine.execute("/* delete */ select 1 as x")
+    assert(r.tag == "SELECT" && r.df.collect().toSeq.map(_.toString) == Seq("[1]"))
+  }
 }

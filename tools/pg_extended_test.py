@@ -302,6 +302,74 @@ def main(port):
     c.send(msg(b"C", b"S" + cstr("sis")), msg(b"S", b""))
     c.drain_until_ready()
 
+    # 5f. statement kinds through Parse/Describe: a FROM-first query,
+    # SUMMARIZE and DESCRIBE describe the columns Execute sends, and a
+    # leading comment or a comment-only query is read as PG reads it
+    c.send(
+        msg(b"P", cstr("sff") + cstr("FROM nation SELECT n_name WHERE n_nationkey = $1")
+            + struct.pack(">h", 0)),
+        msg(b"D", b"S" + cstr("sff")),
+        msg(b"B", cstr("") + cstr("sff") + struct.pack(">h", 0) + struct.pack(">h", 1)
+            + struct.pack(">i", 1) + b"3" + struct.pack(">h", 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"C", b"S" + cstr("sff")),
+        msg(b"S", b""))
+    seq = c.drain_until_ready()
+    kinds = types_of(seq)
+    datarows = [p for t, p in seq if t == b"D"]
+    val = datarows[0][6:] if datarows else b""
+    ok = kinds == "1tT2DC3Z" and val == b"NATION_3"
+    print(("PASS" if ok else "FAIL") + f" FROM-first at Parse: {kinds} row={val}")
+    if not ok:
+        failures.append("from-first-parse")
+    c.send(
+        msg(b"P", cstr("ssum") + cstr("SUMMARIZE nation") + struct.pack(">h", 0)),
+        msg(b"D", b"S" + cstr("ssum")),
+        msg(b"B", cstr("") + cstr("ssum") + struct.pack(">hhh", 0, 0, 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"C", b"S" + cstr("ssum")),
+        msg(b"S", b""))
+    kinds = types_of(c.drain_until_ready())
+    ok = kinds.startswith("1tT2D") and kinds.endswith("DC3Z")
+    print(("PASS" if ok else "FAIL") + f" SUMMARIZE at Parse: {kinds}")
+    if not ok:
+        failures.append("summarize-parse")
+    c.send(
+        msg(b"P", cstr("sdesc") + cstr("DESCRIBE nation") + struct.pack(">h", 0)),
+        msg(b"D", b"S" + cstr("sdesc")),
+        msg(b"C", b"S" + cstr("sdesc")),
+        msg(b"S", b""))
+    rowdesc = next((p for t, p in c.drain_until_ready() if t == b"T"), b"")
+    names, off = [], 2
+    for _ in range(struct.unpack(">h", rowdesc[:2])[0] if rowdesc else 0):
+        end = rowdesc.index(b"\0", off)
+        names.append(rowdesc[off:end].decode())
+        off = end + 19
+    ok = names == ["column_name", "column_type", "null"]
+    print(("PASS" if ok else "FAIL") + f" DESCRIBE at Parse: {names}")
+    if not ok:
+        failures.append("describe-parse")
+    c.send(
+        msg(b"P", cstr("") + cstr("/* c */ SELECT 7 AS v") + struct.pack(">h", 0)),
+        msg(b"B", cstr("") + cstr("") + struct.pack(">hhh", 0, 0, 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"S", b""))
+    seq = c.drain_until_ready()
+    kinds = types_of(seq)
+    tag = next((p for t, p in seq if t == b"C"), b"")
+    ok = kinds == "12DCZ" and tag == b"SELECT 1\0"
+    print(("PASS" if ok else "FAIL") + f" commented SELECT executes: {kinds} tag={tag}")
+    if not ok:
+        failures.append("comment-select")
+    c.send(msg(b"Q", cstr("/* nothing */")))
+    empty = types_of(c.drain_until_ready())
+    c.send(msg(b"Q", cstr("select 1; -- c")))
+    tail = types_of(c.drain_until_ready())
+    ok = empty == "IZ" and tail == "TDCZ"
+    print(("PASS" if ok else "FAIL") + f" comment-only query is empty: {empty} {tail}")
+    if not ok:
+        failures.append("comment-only")
+
     # 6. CancelRequest: fire a slow query, cancel from a second conn
     # data-independent and reliably minutes-long uncancelled
     slow = "select sum(id) from range(20000000000)"

@@ -70,6 +70,17 @@ $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smoke2 (x BIGINT) USING parq
 chk "ch insert fmt"   "Ok."      "$(printf 'INSERT INTO smoke2 FORMAT TabSeparated\n10\n11\n' | $CURL "http://127.0.0.1:$CH/" --data-binary @-)"
 chk "ch readback"     "10
 11" "$($CURL "http://127.0.0.1:$CH/?query=SELECT%20x%20FROM%20smoke2%20ORDER%20BY%20x")"
+# the statement's kind reads past comments and brackets: each of these
+# returns rows, and a commented INSERT…FORMAT head still ingests
+chk "ch comment select" "1"      "$($CURL "http://127.0.0.1:$CH/" -d '/* c */ SELECT 1')"
+chk "ch bracket select" "1"      "$($CURL "http://127.0.0.1:$CH/" -d '(SELECT 1)')"
+chk "ch from-first"   "10
+11" "$($CURL "http://127.0.0.1:$CH/" -d 'FROM smoke2 SELECT x ORDER BY x')"
+chk "ch summarize"    "x|BIGINT" "$($CURL "http://127.0.0.1:$CH/" -d 'SUMMARIZE smoke2' | head -1 | cut -f1,2 | tr '\t' '|')"
+$CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokecm (x BIGINT) USING parquet' >/dev/null
+printf -- '-- c\nINSERT INTO smokecm FORMAT CSV\n12\n13\n' | $CURL "http://127.0.0.1:$CH/" --data-binary @- >/dev/null
+chk "ch comment insert fmt" "2|25" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT count(*), sum(x) FROM smokecm' | tr '\t' '|')"
+$CURL "http://127.0.0.1:$CH/" -d 'DROP TABLE main.smokecm' >/dev/null
 # gzip both directions (clickhouse-jdbc compress=true; beyond-reference)
 chk "ch gzip resp"    "25"       "$($CURL -H 'Accept-Encoding: gzip' "http://127.0.0.1:$CH/?query=SELECT%20count(*)%20FROM%20nation" --compressed)"
 $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokegz (x BIGINT) USING parquet' >/dev/null
