@@ -3198,7 +3198,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
   /** Execute one statement; returns (df-or-null, commandTag). DDL/DML
     * run eagerly; SELECT-ish statements return a lazy DataFrame the
-    * caller pumps with toLocalIterator. */
+    * caller drains through [[ResultStream]]. */
   def execute(sql: String): ExecResult = executeStatement(Statement(sql))
 
   /** [[execute]] of a statement its frontend already classified. */
@@ -3317,7 +3317,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         st.last.get().toString + "L"
       })
       persistSequences()
-      return execute(sqlSeq)
+      // re-dispatch below executeStatement: its txn write accounting
+      // runs once, for this statement, when the outer call returns
+      return executeInner(Statement(sqlSeq), allowReserved)
     }
 
     // the target regexes both a handler and the tail read, matched once
@@ -6894,6 +6896,8 @@ object Engine {
     }
     spark.sql("USE main")
     CatalogViews.install(spark)
+    // probes and catalog SQL evaluate in the driver, without a job
+    graft.plans.LocalFold.install(spark)
     engine.loadPersisted()
     engine
   }

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.server.{Engine, SqlLexer, Statement}
+import graft.server.{Engine, ResultStream, SqlLexer, Statement}
 import graft.server.pg.{CsvValues, Scram}
 
 /** ClickHouse HTTP frontend (reference ch_server.go): GET/POST query
@@ -134,7 +134,7 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
     val out = if (gzip) new java.util.zip.GZIPOutputStream(raw, 8192) else raw
     if (res.df != null) {
       import scala.jdk.CollectionConverters._
-      Formats.write(format, res.df.schema, res.df.toLocalIterator().asScala, out)
+      Formats.write(format, res.df.schema, ResultStream.open(res.df).asScala, out)
     }
     out.close()
   }

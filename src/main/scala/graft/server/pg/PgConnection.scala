@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
-import graft.server.{Engine, SqlLexer, Statement}
+import graft.server.{Engine, ResultStream, SqlLexer, Statement}
 
 /** One PG client connection: startup → auth → message loop. Mirrors
   * the reference's state machine (pg_conn.go:90-208) with SURVEY's
@@ -213,7 +213,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       stmt.kind match {
         case Statement.Declare => declareCursorRe.findFirstMatchIn(stmt.text).foreach { m =>
           val df = engine.execute(m.group(2)).df
-          cursors(m.group(1).toLowerCase) = new Cursor(df.toLocalIterator(), df.schema)
+          cursors(m.group(1).toLowerCase) = new Cursor(ResultStream.open(df), df.schema)
           out.commandComplete("DECLARE CURSOR")
           return
         }
@@ -239,9 +239,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       val res = engine.executeStatement(stmt)
       if (res.df == null) { out.commandComplete(res.tag); return }
       rowDescription(res.df.schema)
-      // toLocalIterator keeps one partition resident — 100 TB results
-      // never land in driver memory at once
-      val n = sendRows(res.df.toLocalIterator(), res.df.schema, Nil, Long.MaxValue)
+      val n = sendRows(ResultStream.open(res.df), res.df.schema, Nil, Long.MaxValue)
       out.commandComplete(if (res.tag == "SELECT") s"SELECT $n" else res.tag)
     }
   }
@@ -422,7 +420,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     if (portal.it == null) { // first Execute on this portal
       val res = engine.executeStatement(portal.stmt.bound(portal.params))
       if (res.df == null) { out.commandComplete(res.tag); return }
-      portal.it = res.df.toLocalIterator()
+      portal.it = ResultStream.open(res.df)
       portal.schema = res.df.schema
       portal.tag = res.tag
     }

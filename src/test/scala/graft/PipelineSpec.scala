@@ -257,7 +257,7 @@ class PackSequencesScanSpec extends SparkSpecBase {
     spark.sparkContext.addSparkListener(listener)
     try {
       d.run(spark, sf).write.format("noop").mode("overwrite").save()
-      Thread.sleep(500) // listener bus drain (bus API is private in 4.x)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       val fileSize = new java.io.File(s"$sf/documents.parquet").length()
       assert(bytesRead.get() < (fileSize * 3) / 2,
         s"read ${bytesRead.get()} bytes vs file $fileSize — the tokenize scan ran twice")

@@ -1122,6 +1122,26 @@ class ServerEngineSpec extends SparkSpecBase {
     engine.execute("drop table main.sq_t")
   }
 
+  test("nextval in a transactional CTAS counts as one rollback-able write") {
+    engine.execute("drop sequence if exists main.sq_txn")
+    engine.execute("create sequence main.sq_txn")
+    fresh("sq_txn_t")
+    try {
+      engine.execute("begin")
+      engine.execute("create table main.sq_txn_t as select nextval('main.sq_txn') as x")
+      // the nextval pass re-dispatches the rewritten text; the staged
+      // CTAS must still count once, as a write ROLLBACK can undo
+      engine.execute("rollback")
+      assert(!spark.catalog.tableExists("main.sq_txn_t"))
+      assert(engine.execute("select table_name from information_schema.tables " +
+        "where table_name = 'sq_txn_t'").df.collect().isEmpty)
+    } finally {
+      engine.rollbackDanglingTxn()
+      engine.execute("drop table if exists main.sq_txn_t")
+      engine.execute("drop sequence if exists main.sq_txn")
+    }
+  }
+
   // -- wire-path dialect constructs Spark's parser rejects -------------------
   // The reference forwards these verbatim to DuckDB (pg_conn.go:314);
   // here Engine.rewrite hoists them into standard SQL, so the SAME text

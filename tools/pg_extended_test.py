@@ -76,9 +76,9 @@ def main(port):
     seq = c.drain_until_ready()
     kinds = types_of(seq)
     # expect: 1 t T 2 D C Z
-    ok = kinds == "1tT2DCZ"
     datarows = [p for t, p in seq if t == b"D"]
-    val = datarows[0].split(b"\0")[0][6:] if datarows else b""
+    val = datarows[0][6:] if datarows else b""
+    ok = kinds == "1tT2DCZ" and val == b"NATION_3"
     print(("PASS" if ok else "FAIL") + f" extended flow: {kinds} row={val}")
     if not ok:
         failures.append("flow")
@@ -369,6 +369,48 @@ def main(port):
     print(("PASS" if ok else "FAIL") + f" comment-only query is empty: {empty} {tail}")
     if not ok:
         failures.append("comment-only")
+
+    # 5g. results that drain with one collect keep the wire's paging:
+    # a portal over a catalog view suspends after maxRows and resumes,
+    # a cursor over pg_catalog fetches in pieces, and a runtime error
+    # raised while draining still aborts the open transaction
+    c.send(msg(b"Q", cstr("select count(*) from information_schema.tables")))
+    total = int(next(p for t, p in c.drain_until_ready() if t == b"D")[6:])
+    c.send(
+        msg(b"P", cstr("") + cstr("SELECT table_name FROM information_schema.tables")
+            + struct.pack(">h", 0)),
+        msg(b"B", cstr("") + cstr("") + struct.pack(">hhh", 0, 0, 0)),
+        msg(b"E", cstr("") + struct.pack(">i", 1)),
+        msg(b"E", cstr("") + struct.pack(">i", 0)),
+        msg(b"S", b""))
+    kinds = types_of(c.drain_until_ready())
+    ok = total > 1 and kinds == "12Ds" + "D" * (total - 1) + "CZ"
+    print(("PASS" if ok else "FAIL") + f" portal suspends over a catalog view: {kinds}")
+    if not ok:
+        failures.append("portal-suspend")
+    c.send(msg(b"Q", cstr("DECLARE cc CURSOR FOR SELECT relname FROM pg_catalog.pg_class")))
+    declared = types_of(c.drain_until_ready())
+    c.send(msg(b"Q", cstr("FETCH 2 FROM cc")))
+    seq = c.drain_until_ready()
+    tag = next((p for t, p in seq if t == b"C"), b"")
+    c.send(msg(b"Q", cstr("CLOSE cc")))
+    c.drain_until_ready()
+    ok = declared == "CZ" and types_of(seq) == "TDDCZ" and tag == b"FETCH 2\0"
+    print(("PASS" if ok else "FAIL") + f" cursor over pg_catalog: {declared} {types_of(seq)}")
+    if not ok:
+        failures.append("cursor-catalog")
+    c.send(msg(b"Q", cstr("BEGIN")))
+    c.drain_until_ready()
+    c.send(msg(b"Q", cstr("SELECT 1/0")))
+    err = types_of(c.drain_until_ready())
+    c.send(msg(b"Q", cstr("SELECT 1")))
+    after = c.drain_until_ready()
+    c.send(msg(b"Q", cstr("ROLLBACK")))
+    c.drain_until_ready()
+    ok = "E" in err and types_of(after) == "EZ" and after[-1][1] == b"E"
+    print(("PASS" if ok else "FAIL") + f" drain error aborts txn: {err} {types_of(after)}")
+    if not ok:
+        failures.append("drain-error-txn")
 
     # 6. CancelRequest: fire a slow query, cancel from a second conn
     # data-independent and reliably minutes-long uncancelled

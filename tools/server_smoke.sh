@@ -98,6 +98,9 @@ $CURL "http://127.0.0.1:$CH/" -d 'DROP TABLE main.smoke3' >/dev/null
 chk "ch sys dbs"      "main"     "$($CURL "http://127.0.0.1:$CH/" -d "SELECT name FROM system.databases WHERE name='main'")"
 chk "ch sys tables"   "smoke2"   "$($CURL "http://127.0.0.1:$CH/" -d "SELECT name FROM system.tables WHERE name='smoke2'")"
 chk "ch sys columns"  "x"        "$($CURL "http://127.0.0.1:$CH/" -d "SELECT name FROM system.columns WHERE \`table\`='smoke2'")"
+# catalog rows drain with one collect (no Spark job), plain and gzip
+chk "ch sys tables json" '{"name":"smoke2","database":"main"}' "$($CURL "http://127.0.0.1:$CH/" -d "SELECT name, database FROM system.tables WHERE name='smoke2' FORMAT JSONEachRow")"
+chk "ch sys tables json gzip" '{"name":"smoke2","database":"main"}' "$($CURL -H 'Accept-Encoding: gzip' --compressed "http://127.0.0.1:$CH/" -d "SELECT name, database FROM system.tables WHERE name='smoke2' FORMAT JSONEachRow")"
 chk "ch sys functions" "1"       "$($CURL "http://127.0.0.1:$CH/" -d "SELECT count(*)>0 FROM system.functions WHERE name='sum'" | head -1)"
 chk "pg pg_proc"      "t"        "$(psql $P -tA -c "select count(*)>0 from pg_proc where proname='avg'" 2>&1)"
 chk "pg ccu view"     "0"        "$(psql $P -tA -c "select count(*) from information_schema.constraint_column_usage" 2>&1)"
