@@ -64,10 +64,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * path (SQL INSERT, appendBatch, COPY FROM file) holds the table's
     * append MUTEX in addition to its read lock: parallel WITHIN the
     * job (its partitions), serial across jobs per table — DuckDB's
-    * own effective per-table write discipline. Lock order is always
-    * mutex → read-lock; rewriters take only the write lock, so no
-    * cycle exists. In-txn appends write private per-txn delta tables
-    * and need neither. */
+    * own effective per-table write discipline. A batch written in the
+    * driver ([[ParquetAppend]]) stages no `_temporary` dir, but takes
+    * the same mutex, so one appender at a time writes a table whichever
+    * path it takes. Lock order is always mutex → read-lock; rewriters
+    * take only the write lock, so no cycle exists. In-txn appends write
+    * private per-txn delta tables and need neither. */
   private val appendMutexes =
     new ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
   private def appendMutexFor(t: String) =
@@ -1087,12 +1089,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
   /** The columns `stmt` returns, by [[analyzeOnly]]; None for a kind that
     * returns no rows. SUMMARIZE and the DuckDB DESCRIBE forms answer
-    * their fixed columns. */
+    * their fixed columns; a statement-level PIVOT/UNPIVOT answers the
+    * schema of the plan its intercept builds, without draining it. */
   def resultSchema(stmt: Statement): Option[org.apache.spark.sql.types.StructType] =
     stmt.kind match {
       case k if !k.returnsRows => None
       case Statement.Summarize => Some(summarizeSchema)
       case Statement.Describe if describeTarget(stmt.text).isDefined => Some(describeSchema)
+      case Statement.Pivot => pivotUnpivotIntercept(stmt.text).map(_.df.schema)
+        .orElse(Some(analyzeOnly(stmt.text).schema))
       case _ => Some(analyzeOnly(stmt.text).schema)
     }
 
@@ -6085,8 +6090,12 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
   // -- ingest (micro-batched Appender analog, SURVEY A15/A20) ---------------
 
-  /** Append a batch of parsed rows to a table. One Spark job per batch;
-    * visibility at completion = the reference's Appender Flush. */
+  /** Append a batch of parsed rows to a table. A plain parquet target
+    * takes one driver-written file and no Spark job ([[ParquetAppend]]);
+    * any other target (CHAR/VARCHAR columns, partitions, buckets, a
+    * non-parquet provider, more than [[ParquetAppend.MaxRows]] rows)
+    * keeps the `insertInto` job. Visibility at return = the reference's
+    * Appender Flush. */
   def appendBatch(table0: String, columns: Seq[String], rows: Seq[Seq[Any]]): Unit = {
     if (rows.isEmpty) return
     // conn-temp names first (protocol-text targets, r14), then
@@ -6094,9 +6103,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val table = resolveRenamed(resolveConnTemp(table0))
     // constrained tables need check+insert atomic → write lock.
     // Constraint-free appends exclude only rewriters (read lock) BUT
-    // serialize among THEMSELVES on the append mutex — concurrent
-    // append jobs into one dir corrupt each other's committer staging
-    // (see [[appendMutexes]]; r15 find).
+    // serialize among THEMSELVES on the append mutex (see
+    // [[appendMutexes]]; r15 find).
     val constrained = constraintsOfOriginal(qualify(table)).isDefined
     val mutex = if (constrained) None else Some(appendMutexFor(table))
     mutex.foreach(_.lock())
@@ -6106,20 +6114,25 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     lock.lock()
     try {
       val phys = physAppend(table) // batch append: delta, not snapshot
-      val target = spark.table(phys)
-      val schema = org.apache.spark.sql.types.StructType(
-        columns.map(c => target.schema(target.schema.fieldIndex(c))))
-      val rdd = spark.sparkContext.parallelize(
-        rows.map(org.apache.spark.sql.Row.fromSeq), math.max(1, rows.size / 65536))
-      var df = spark.createDataFrame(rdd, schema)
+      val full = spark.table(phys).schema
+      val schema = org.apache.spark.sql.types.StructType(columns.map(c => full(full.fieldIndex(c))))
+      val data = rows.map(org.apache.spark.sql.Row.fromSeq)
       // project + null-fill the column subset to the full table schema
-      val full = target.schema.fieldNames.map { c =>
+      def aligned(df: DataFrame): DataFrame = df.select(full.fieldNames.toIndexedSeq.map { c =>
         if (columns.exists(_.equalsIgnoreCase(c))) org.apache.spark.sql.functions.col(c)
-        else org.apache.spark.sql.functions.lit(null).cast(target.schema(c).dataType).as(c)
+        else org.apache.spark.sql.functions.lit(null).cast(full(c).dataType).as(c)
+      }: _*)
+      ParquetAppend.target(spark, phys, rows.size) match {
+        case Some(meta) =>
+          // the checks read the rows as a driver-local relation
+          if (constrained) enforceConstraints(table, aligned(spark.createDataFrame(data.asJava, schema)))
+          ParquetAppend.write(spark, meta, full, columns, rows)
+        case None =>
+          val df = aligned(spark.createDataFrame(spark.sparkContext.parallelize(
+            data, math.max(1, rows.size / ParquetAppend.MaxRows)), schema))
+          enforceConstraints(table, df)
+          df.write.insertInto(phys)
       }
-      val aligned = df.select(full.toIndexedSeq: _*)
-      enforceConstraints(table, aligned)
-      aligned.write.insertInto(phys)
       // appendBatch is called directly (COPY FROM STDIN / CH insert),
       // not through execute(), so the txn write flag and the committed
       // epoch are maintained here

@@ -232,7 +232,8 @@ final class Persistence(dir: String, warehouse: String,
 
   /** The boot walk of the warehouse: each `<db>.db` dir with the table
     * dirs to re-register. Crash leftovers of engine staging
-    * ([[Persistence.staleStagingRe]]) are reclaimed on the way — left
+    * ([[Persistence.staleStagingRe]]) and of driver-side appends
+    * ([[Persistence.isAppendTemp]]) are reclaimed on the way — left
     * out of the catalog AND deleted, or they leak disk forever. */
   def liveTableDirs(): Seq[(String, Seq[File])] = {
     val wh = new File(warehouse)
@@ -254,6 +255,7 @@ final class Persistence(dir: String, warehouse: String,
             if (dst.exists() || !tDir.renameTo(dst)) rm(tDir) // occupied/cross-volume: fall back
           } else rm(tDir)
         }
+        live.foreach(t => listFiles(t).filter(f => f.isFile && isAppendTemp(f.getName)).foreach(rm))
         db -> live.toSeq
       }
   }
@@ -271,6 +273,12 @@ object Persistence {
     * `__alter` stage. */
   private val staleStagingRe =
     """.*(__cow|__oc_src|__oc_src_raw|__oc_stage|__txn\d+(delta)?|__tmpc\d+)$""".r
+
+  /** A file [[ParquetAppend]] writes before its rename — `.part-…` —
+    * or that file's checksum, `..part-….crc`. A committed data file's
+    * own checksum (`.part-….crc`) is not one. */
+  def isAppendTemp(name: String): Boolean =
+    name.startsWith("..part-") || (name.startsWith(".part-") && !name.endsWith(".crc"))
 
   // -- file primitives -----------------------------------------------------------
 

@@ -106,4 +106,22 @@ class PersistenceSpec extends AnyFunSuite {
         "drop\tmain.t\t\t\t\nsdrop\ts\t\t\t")
     } finally Persistence.rm(dir)
   }
+
+  test("the boot walk reclaims driver-append temp files and keeps committed data and checksums") {
+    val root = Files.createTempDirectory("persist-append").toFile
+    try {
+      val wh = new java.io.File(root, "warehouse")
+      val t = new java.io.File(wh, "main.db/t")
+      t.mkdirs()
+      val kept = Seq("part-00000-a-c000.snappy.parquet", ".part-00000-a-c000.snappy.parquet.crc",
+        "_SUCCESS")
+      val temps = Seq(".part-00000-b-c000.snappy.parquet", "..part-00000-b-c000.snappy.parquet.crc")
+      (kept ++ temps).foreach(n => Files.write(new java.io.File(t, n).toPath, Array[Byte](1)))
+      assert(temps.forall(Persistence.isAppendTemp) && !kept.exists(Persistence.isAppendTemp))
+      val live = new Persistence(new java.io.File(root, "db").getPath, wh.getPath, _ => None)
+        .liveTableDirs()
+      assert(live.map { case (db, ds) => db -> ds.map(_.getName) } == Seq("main" -> Seq("t")))
+      assert(t.list().toSet == kept.toSet)
+    } finally Persistence.rm(root)
+  }
 }

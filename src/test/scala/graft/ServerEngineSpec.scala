@@ -381,6 +381,20 @@ class ServerEngineSpec extends SparkSpecBase {
     engine.execute("drop table main.c_piv")
   }
 
+  test("statement-level PIVOT/UNPIVOT: resultSchema (Parse/Describe) equals the executed schema") {
+    fresh("c_pivs")
+    engine.execute("create table main.c_pivs as " +
+      "select id % 3 as r, id as k, concat('x', id) as s from range(6)")
+    Seq("pivot main.c_pivs on r using count(*)",
+      "pivot main.c_pivs on r in (2, 0) using sum(k) group by s",
+      "unpivot (select 1 as a, 2 as b, 'z' as id) on a, b into name n2 value v",
+      "unpivot main.c_pivs on r, k").foreach { sql =>
+      assert(engine.resultSchema(graft.server.Statement(sql)) ==
+        Some(engine.execute(sql).df.schema), sql)
+    }
+    engine.execute("drop table main.c_pivs")
+  }
+
   test("SQL-level PREPARE/EXECUTE/DEALLOCATE: params splice, connection-scoped") {
     def one(sql: String): String =
       engine.execute(sql).df.collect().head.toString

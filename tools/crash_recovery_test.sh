@@ -270,6 +270,46 @@ chk "stage not registered" "" "$(psql $P -tA -c "select table_name from informat
 chk "stage dir consumed" "0" "$(ls -d "$DB"/warehouse/main.db/ckt__alter 2>/dev/null | wc -l)"
 kill "$SRV_PID" 2>/dev/null; wait "$SRV_PID" 2>/dev/null
 
+# ---- scenario 8: SIGKILL DURING A STREAM OF CH INSERT … FORMAT CSV ----
+# Each 1,000-row batch is one parquet file, written under a hidden
+# `.part-…` name and renamed in. A kill leaves every batch whole or
+# absent, every acknowledged batch present, and at most a hidden temp
+# file, which boot deletes. One such stranded temp (and its checksum)
+# is also planted before the reboot, so the reclaim runs every time.
+start_server
+psql $P -c "create user crashch with password 'crashpw'" >/dev/null 2>&1
+psql $P -c 'create table main.ing (id bigint, b int)' >/dev/null 2>&1
+ACK=$(mktemp /tmp/graft_crash_acks.XXXXXX)
+( for b in $(seq 1 600); do
+    resp=$({ echo 'INSERT INTO ing FORMAT CSV'; seq 0 999 | awk -v b="$b" '{print b * 1000 + $1 "," b}'; } \
+      | curl -s -u crashch:crashpw "http://127.0.0.1:$CH/" --data-binary @-)
+    [ "$resp" = "Ok." ] || break
+    echo "$b" >> "$ACK"
+  done ) &
+LOOP_PID=$!
+for i in $(seq 1 600); do
+  [ "$(wc -l < "$ACK")" -ge 5 ] && break
+  sleep 0.1
+done
+kill -9 "$SRV_PID" 2>/dev/null
+wait "$SRV_PID" 2>/dev/null
+wait "$LOOP_PID" 2>/dev/null
+acked=$(wc -l < "$ACK")
+rm -f "$ACK"
+ING="$DB"/warehouse/main.db/ing
+f=$(ls "$ING"/part-*.parquet 2>/dev/null | head -1)
+[ -n "$f" ] && cp "$f" "$ING/.part-00000-stranded-c000.snappy.parquet" && touch "$ING/..part-00000-stranded-c000.snappy.parquet.crc"
+start_server
+n=$(psql $P -tA -c 'select count(*) from main.ing' 2>&1)
+if [ "$acked" -ge 5 ] && [ $((n % 1000)) -eq 0 ] && [ $((n / 1000)) -ge "$acked" ]; then
+  ok "ingest kill: $n rows, whole batches, >= the $acked acknowledged"
+else bad "ingest kill: $n rows after $acked acknowledged batches"; fi
+chk "ingest kill: no partial batch" "0" "$(psql $P -tA -c 'select count(*) from (select b from main.ing group by b having count(*) <> 1000) t' 2>&1)"
+chk "ingest kill: every acknowledged batch present" "$acked" "$(psql $P -tA -c "select count(distinct b) from main.ing where b <= $acked" 2>&1)"
+chk "ingest kill: no append temp left" "0" "$(ls -A "$ING" | grep -cE '^[.][.]part-|^[.]part-.*[.]parquet$')"
+chk "ingest kill: table still ingests" "Ok." "$(printf 'INSERT INTO ing FORMAT CSV\n-1,0\n' | curl -s -u crashch:crashpw "http://127.0.0.1:$CH/" --data-binary @-)"
+kill "$SRV_PID" 2>/dev/null; wait "$SRV_PID" 2>/dev/null
+
 rm -rf "$DB"
 echo "crash-recovery: $pass passed, $fail failed"
 [ "$fail" -eq 0 ]

@@ -61,6 +61,16 @@ def types_of(msgs):
     return "".join(t.decode() for t, _ in msgs)
 
 
+def field_names(rowdesc):
+    """Column names of a RowDescription payload."""
+    names, off = [], 2
+    for _ in range(struct.unpack(">h", rowdesc[:2])[0] if rowdesc else 0):
+        end = rowdesc.index(b"\0", off)
+        names.append(rowdesc[off:end].decode())
+        off = end + 19
+    return names
+
+
 def main(port):
     c = Conn(port)
     failures = []
@@ -339,16 +349,33 @@ def main(port):
         msg(b"D", b"S" + cstr("sdesc")),
         msg(b"C", b"S" + cstr("sdesc")),
         msg(b"S", b""))
-    rowdesc = next((p for t, p in c.drain_until_ready() if t == b"T"), b"")
-    names, off = [], 2
-    for _ in range(struct.unpack(">h", rowdesc[:2])[0] if rowdesc else 0):
-        end = rowdesc.index(b"\0", off)
-        names.append(rowdesc[off:end].decode())
-        off = end + 19
+    names = field_names(next((p for t, p in c.drain_until_ready() if t == b"T"), b""))
     ok = names == ["column_name", "column_type", "null"]
     print(("PASS" if ok else "FAIL") + f" DESCRIBE at Parse: {names}")
     if not ok:
         failures.append("describe-parse")
+    # statement-level UNPIVOT / PIVOT … IN (…): Describe answers the
+    # columns of the plan the Execute-time intercept builds, then the
+    # rows follow
+    for name, sql, cols, nrows in (
+            ("unpivot", "UNPIVOT (SELECT n_nationkey AS a, n_regionkey AS b FROM nation "
+             "WHERE n_nationkey < 2) ON a, b", ["name", "value"], 4),
+            ("pivot", "PIVOT (SELECT n_regionkey, n_nationkey % 2 AS par FROM nation) "
+             "ON n_regionkey IN (0, 1) USING count(*) GROUP BY par", ["par", "0", "1"], 2)):
+        c.send(
+            msg(b"P", cstr("spv") + cstr(sql) + struct.pack(">h", 0)),
+            msg(b"D", b"S" + cstr("spv")),
+            msg(b"B", cstr("") + cstr("spv") + struct.pack(">hhh", 0, 0, 0)),
+            msg(b"E", cstr("") + struct.pack(">i", 0)),
+            msg(b"C", b"S" + cstr("spv")),
+            msg(b"S", b""))
+        seq = c.drain_until_ready()
+        kinds = types_of(seq)
+        names = field_names(next((p for t, p in seq if t == b"T"), b""))
+        ok = kinds == "1tT2" + "D" * nrows + "C3Z" and names == cols
+        print(("PASS" if ok else "FAIL") + f" {name.upper()} at Parse: {kinds} {names}")
+        if not ok:
+            failures.append(f"{name}-parse")
     c.send(
         msg(b"P", cstr("") + cstr("/* c */ SELECT 7 AS v") + struct.pack(">h", 0)),
         msg(b"B", cstr("") + cstr("") + struct.pack(">hhh", 0, 0, 0)),

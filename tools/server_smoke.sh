@@ -81,6 +81,23 @@ $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokecm (x BIGINT) USING par
 printf -- '-- c\nINSERT INTO smokecm FORMAT CSV\n12\n13\n' | $CURL "http://127.0.0.1:$CH/" --data-binary @- >/dev/null
 chk "ch comment insert fmt" "2|25" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT count(*), sum(x) FROM smokecm' | tr '\t' '|')"
 $CURL "http://127.0.0.1:$CH/" -d 'DROP TABLE main.smokecm' >/dev/null
+# batch ingest targets: a column-list JSONEachRow batch null-fills the
+# other columns; a VARCHAR(3) table keeps its length check (HTTP 500,
+# nothing written); a PK table rejects a duplicate key from psql \copy
+$CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokejs (id BIGINT, s STRING, v DOUBLE, d DATE)' >/dev/null
+printf 'INSERT INTO smokejs (id, s) FORMAT JSONEachRow\n{"id":1,"s":"a"}\n{"id":2,"s":"b"}\n' | $CURL "http://127.0.0.1:$CH/" --data-binary @- >/dev/null
+chk "ch json collist null-fill" "2|3|2|0|0" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT count(*), sum(id), count(s), count(v), count(d) FROM smokejs' | tr '\t' '|')"
+$CURL "http://127.0.0.1:$CH/" -d 'DROP TABLE main.smokejs' >/dev/null
+$CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokevc (id BIGINT, s VARCHAR(3))' >/dev/null
+chk "ch varchar over-length 500" "500" "$(printf 'INSERT INTO smokevc FORMAT CSV\n1,abc\n2,abcd\n' | $CURL -o /dev/null -w '%{http_code}' "http://127.0.0.1:$CH/" --data-binary @-)"
+chk "ch varchar nothing written" "0" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT count(*) FROM smokevc')"
+$CURL "http://127.0.0.1:$CH/" -d 'DROP TABLE main.smokevc' >/dev/null
+psql $P -c "drop table if exists main.pkcp_smoke" >/dev/null 2>&1
+psql $P -c "create table main.pkcp_smoke (k int primary key, v string)" >/dev/null 2>&1
+printf '1,a\n' | psql $P -c '\copy main.pkcp_smoke from pstdin with csv' >/dev/null 2>&1
+chk "pg \\copy pk dup rejected" "rejected" "$(printf '2,b\n1,dup\n' | psql $P -c '\copy main.pkcp_smoke from pstdin with csv' 2>&1 | grep -q 'duplicate key' && echo rejected)"
+chk "pg \\copy pk rows kept" "1|a" "$(psql $P -tA -c 'select k, v from main.pkcp_smoke' 2>&1)"
+psql $P -c "drop table main.pkcp_smoke" >/dev/null 2>&1
 # gzip both directions (clickhouse-jdbc compress=true; beyond-reference)
 chk "ch gzip resp"    "25"       "$($CURL -H 'Accept-Encoding: gzip' "http://127.0.0.1:$CH/?query=SELECT%20count(*)%20FROM%20nation" --compressed)"
 $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smokegz (x BIGINT) USING parquet' >/dev/null
