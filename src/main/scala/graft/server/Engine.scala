@@ -7,6 +7,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The engine behind both frontends: one shared SparkSession, dialect
   * rewrites, statement intercepts, the DML hard parts (SURVEY §7.3) and
@@ -53,23 +54,26 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       case _ => ""
     })
 
-  /** Append-vs-append serialization (r15 torture-spec find): appends
-    * correctly interleave with everything lighter than a rewriter's
-    * write lock, but two SIMULTANEOUS append JOBS into one table
-    * share the FileOutputCommitter `_temporary` staging under the
-    * table dir — the first job to commit deletes it recursively and
-    * the second dies mid-write (or silently loses task output).
-    * Concurrent jobs writing one directory are unsupported by every
-    * Hadoop committer, local or cluster. So every auto-commit append
-    * path (SQL INSERT, appendBatch, COPY FROM file) holds the table's
-    * append MUTEX in addition to its read lock: parallel WITHIN the
-    * job (its partitions), serial across jobs per table — DuckDB's
-    * own effective per-table write discipline. A batch written in the
-    * driver ([[ParquetAppend]]) stages no `_temporary` dir, but takes
-    * the same mutex, so one appender at a time writes a table whichever
-    * path it takes. Lock order is always mutex → read-lock; rewriters
-    * take only the write lock, so no cycle exists. In-txn appends write
-    * private per-txn delta tables and need neither. */
+  /** The append lock rule, applied by [[append]] alone, the same in and
+    * out of a transaction:
+    *  - a table with constraints takes its WRITE lock, so the check and
+    *    the write are one atomic unit (two concurrent inserts of one key
+    *    would otherwise both pass the PK check);
+    *  - any other table takes its append MUTEX, then its READ lock.
+    * The read lock lets appends interleave with everything lighter than
+    * a rewriter's write lock. The mutex serializes append jobs into one
+    * table (r15 torture-spec find): two SIMULTANEOUS jobs share the
+    * FileOutputCommitter `_temporary` staging under the table dir, and
+    * the first to commit deletes it while the second is mid-write. No
+    * Hadoop committer supports concurrent jobs writing one directory.
+    * So appends run parallel within a job, serial across jobs per table,
+    * DuckDB's own effective per-table write discipline. A batch written
+    * in the driver ([[ParquetAppend]]) stages no `_temporary` dir but
+    * takes the same mutex, so one appender at a time writes a table
+    * whichever path it takes. Lock order is always mutex → read lock;
+    * rewriters take only the write lock, and a thread that already holds
+    * a table's write lock (nextval INSERT … SELECT) appends under it
+    * without the mutex, so no cycle exists. */
   private val appendMutexes =
     new ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
   private def appendMutexFor(t: String) =
@@ -3737,7 +3741,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             allowReserved)
         }
         onConflictRe.findFirstMatchIn(sql).filter(m => isQuery(m.group(3))).foreach { m =>
-          return insertOnConflict(m.group(1),
+          return insertOnConflict(m.group(1).replace("\"", ""),
             Option(m.group(2)).map(_.split(",").map(_.trim).toSeq.filter(_.nonEmpty)),
             m.group(3).trim,
             Option(m.group(4)).map(_.split(",").map(_.trim.toLowerCase).toSeq.filter(_.nonEmpty)),
@@ -3746,49 +3750,16 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         insertM.foreach { m =>
           // resolveRenamed: INSERT through a post-rename name keys the
           // constraint check, lock, and change set by the ORIGINAL name;
-          // the renamed-away original fails binder-class
-          val table = resolveRenamed(m.group(1))
-          if (constraintsOfOriginal(qualify(table)).isDefined) {
-            // constraint check + insert must be one atomic unit — without
-            // the write lock two concurrent inserts of the same key both
-            // pass the PK check (round-2 TOCTOU), and an insert racing a
-            // CoW UPDATE's INSERT OVERWRITE is silently lost
-            val lock = lockFor(table).writeLock()
-            lock.lock()
-            try {
-              val cols = Option(m.group(2)).map(_.split(",").map(_.trim).toSeq)
-                .getOrElse(readOriginal(qualify(table)).schema.fieldNames.toSeq)
-              val srcSql = m.group(3).trim
-              val src = if (srcSql.toLowerCase.startsWith("values")) spark.sql(s"SELECT * FROM $srcSql")
-                else txnExec(rewrite(srcSql))
-              enforceConstraints(table, src.toDF(cols: _*))
-              // r12 rewrite commute: in-txn inserted keys join the txn's
-              // change set — they merge into the staged image if a later
-              // rewrite upgrades the delta, and a concurrent rewrite must
-              // see them in the disjointness check
-              if (isTxnOpen) {
-                val pkCols = identityKeyOf(table)
-                if (pkCols.nonEmpty) {
-                  val rows =
-                    if (pkCols.forall(pc => cols.exists(_.equalsIgnoreCase(pc))) &&
-                        planDeterministic(src))
-                      // runInsert re-evaluates the source: a rand()/uuid()
-                      // key would insert DIFFERENT keys than were captured
-                      // (and than were constraint-checked) — poison instead
-                      src.toDF(cols: _*)
-                        .select(pkCols.map(org.apache.spark.sql.functions.col): _*)
-                        .limit(ChangedKeyCap + 1).collect()
-                    else Array.fill(ChangedKeyCap + 1)(null: org.apache.spark.sql.Row)
-                  recordChangedKeys(table,
-                    if (rows.length <= ChangedKeyCap) Some(rows.toSeq.map(_.toSeq))
-                    else None)
-                }
-              }
-              val res = runInsert(txnExec(rewrite(sql)))
-              if (!isTxnOpen) bumpEpoch(table)
-              return res
-            } finally lock.unlock()
-          }
+          // the renamed-away original fails binder-class. The check reads
+          // the source through queryDf; the write is the whole statement
+          // through it, so Spark's InsertIntoStatement casts, counts and
+          // (in a transaction) redirects to the delta.
+          val cols = Option(m.group(2)).map(_.split(",").toSeq
+            .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
+          val src = m.group(3).trim
+          return append(resolveRenamed(m.group(1).replace("\"", "")), cols, _ =>
+            queryDf(if (src.toLowerCase.startsWith("values")) s"SELECT * FROM $src" else src)
+          )(_ => runInsert(queryDf(sql)))
         }
       case Update => updateRe.findFirstMatchIn(sql).foreach { m =>
         return copyOnWriteUpdate(m.group(1), m.group(2), Option(m.group(3)))
@@ -3932,7 +3903,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           return copyTo(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
         }
         copyFromFileRe.findFirstMatchIn(sql).foreach { m =>
-          return copyFromFile(m.group(1), m.group(2), Option(m.group(3)).getOrElse(""))
+          return copyFromFile(m.group(1), m.group(2),
+            Option(m.group(3)).orElse(Option(m.group(4))).getOrElse(""))
         }
       case Explain => explainAnalyzeRe.findFirstMatchIn(sql).filter(m => isQuery(m.group(1))).foreach { m =>
         // run the inner query through the FULL execute pipeline (so
@@ -4015,29 +3987,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       if (kind == Create && !isTxnOpen) createTableM.map(m => lockFor(qualify(m.group(2))).writeLock())
       else None
     createLock.foreach(_.lock())
-    // INSERT commands ALSO execute eagerly inside txnExec (spark.sql
-    // and Dataset.ofRows both run commands at creation), so the append
-    // locks must be held BEFORE it — the r9-era read lock around the
-    // row-count read alone left the write itself uncovered (r15
-    // torture-spec find; see [[appendMutexes]] for why concurrent
-    // append jobs additionally serialize on the mutex).
-    val appendTarget = if (kind == Insert && !isTxnOpen) insertM.map(_.group(1)) else None
-    val appendLockPair = appendTarget.map { t =>
-      val mu = appendMutexFor(t); mu.lock()
-      val rl = lockFor(t).readLock(); rl.lock()
-      (mu, rl)
-    }
-    try {
     val df = try queryDf(sql) finally createLock.foreach(_.unlock())
     kind match {
       case k if k.returnsRows => ExecResult(df, "SELECT")
-      case Insert =>
-        // locks already held since BEFORE txnExec (appendLockPair):
-        // mutex vs other append jobs, read lock vs CoW rewriters'
-        // write lock (the ADVICE-r9 lost-update window)
-        val r = runInsert(df)
-        appendTarget.foreach(bumpEpoch)
-        r
+      case Insert => runInsert(df)
       case _ =>
         df.collect()
         kind match {
@@ -4053,12 +4006,11 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         }
         ExecResult(null, kind.tag)
     }
-    } finally appendLockPair.foreach { case (mu, rl) => rl.unlock(); mu.unlock() }
   }
 
   /** Query text → lazy DataFrame: the dialect rewrite, `COLUMNS(…)`,
-    * catalog names ([[CatalogViews]]), `* EXCLUDE` / `* REPLACE` stars,
-    * then [[txnExec]]. Execute runs every statement that passed the
+    * catalog names ([[CatalogViews]]), `* REPLACE` stars, then
+    * [[txnExec]]. Execute runs every statement that passed the
     * intercepts through here, and Parse/Describe ([[analyzeOnly]]) and
     * DESCRIBE take the same path, so they resolve exactly what Execute
     * resolves: catalog SQL, the open transaction's overlays, the
@@ -4068,21 +4020,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     if (rewritten.toLowerCase.contains("columns(") || rewritten.toLowerCase.contains("columns ("))
       rewritten = expandColumnsMacro(rewritten)
     rewritten = catalog.resolve(rewritten)
-    excludeRe.findFirstMatchIn(rewritten).foreach { m =>
-      val excluded = m.group(1).split(",").map(_.trim.toLowerCase).toSet
-      val fields = spark.table(m.group(2)).schema.fieldNames
-      // DuckDB binder-errors on an EXCLUDE name that isn't in scope —
-      // silently ignoring it would hide typos (duckdb: Binder Error:
-      // Column "x" in EXCLUDE list not found)
-      val missing = excluded -- fields.map(_.toLowerCase).toSet
-      if (missing.nonEmpty) throw new IllegalArgumentException(
-        s"""Column "${missing.head}" in EXCLUDE list not found in FROM clause""")
-      val cols = fields
-        .filterNot(c => excluded(c.toLowerCase))
-        .map(c => s"`$c`").mkString(", ")
-      rewritten = rewritten.substring(0, m.start) + s"SELECT $cols FROM ${m.group(2)}" +
-        rewritten.substring(m.end)
-    }
     replaceStarRe.findFirstMatchIn(rewritten).foreach { m =>
       // SELECT * REPLACE (expr AS col, …) — star with substitutions
       val repls = SqlLexer.splitTopLevel(m.group(1), ',').flatMap { item =>
@@ -4232,6 +4169,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // ones; an existing LEFT/RIGHT prefix (any whitespace) passes through
     s = SqlLexer.replaceInCode(s, semiAntiRe)(m =>
       if (m.group(1) != null) m.matched else s"LEFT ${m.group(2).toUpperCase} JOIN")
+    // DuckDB `* EXCLUDE (…)` is Spark's `* EXCEPT (…)`: the analyzer
+    // expands it against whatever the star covers (qualified stars,
+    // temp and in-transaction tables) and binder-errors an unknown name
+    s = SqlLexer.replaceInCode(s, starExcludeRe)(_ => "* EXCEPT (")
     // DuckDB `USING SAMPLE n% | n [ROWS] | method(n unit) [(method
     // [, seed])] [REPEATABLE (seed)]` after a relation → Spark
     // TABLESAMPLE (bare n = ROWS, DuckDB's default). The post-WHERE
@@ -4703,7 +4644,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def insertSelectWithSequence(sql: String): ExecResult = {
     val m = insertStmtRe.findFirstMatchIn(sql).getOrElse(throw new IllegalArgumentException(
       "nextval() inside INSERT … SELECT: unsupported INSERT shape"))
-    val table = m.group(1)
+    val table = m.group(1).replace("\"", "")
     val occ = nextvalRe.findAllMatchIn(sql).toSeq
     if (occ.length > 1) throw new IllegalArgumentException(
       "multiple nextval() calls in one INSERT … SELECT are not supported; use one call per statement")
@@ -5962,19 +5903,11 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       case "json" => reader.json(path)
       case _ => reader.parquet(path)
     }
-    // mutex vs other append jobs (see [[appendMutexes]]), read lock vs
-    // rewriters
-    val mutex = appendMutexFor(table)
-    mutex.lock()
-    val lock = lockFor(table).readLock()
-    lock.lock()
-    try {
-      val phys = physAppend(table) // COPY is an append: delta, not snapshot
+    append(table, None, _ => df) { phys =>
       val n = df.count()
       df.write.insertInto(phys)
-      if (!isTxnOpen) bumpEpoch(table)
       ExecResult(null, s"COPY $n")
-    } finally { lock.unlock(); mutex.unlock() }
+    }
   }
 
   private def formatOf(opts: String, path: String): String = {
@@ -6088,69 +6021,104 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def removeTableDir(table: String): Unit =
     if (disk.isDefined) Persistence.rm(Persistence.tableDirOf(warehouseDir, qualify(table)))
 
-  // -- ingest (micro-batched Appender analog, SURVEY A15/A20) ---------------
+  // -- appends --------------------------------------------------------------
 
-  /** Append a batch of parsed rows to a table. A plain parquet target
-    * takes one driver-written file and no Spark job ([[ParquetAppend]]);
-    * any other target (CHAR/VARCHAR columns, partitions, buckets, a
-    * non-parquet provider, more than [[ParquetAppend.MaxRows]] rows)
-    * keeps the `insertInto` job. Visibility at return = the reference's
-    * Appender Flush. */
+  /** The one append protocol. INSERT … VALUES/SELECT, COPY FROM 'file',
+    * and the batches of COPY FROM STDIN and CH `INSERT … FORMAT`
+    * ([[appendBatch]]) call it with a resolved table name and say two
+    * things: which rows are new, and how to write them.
+    *  - `rows` builds the new rows, positional over `columns` (default:
+    *    every table column), from the full table schema. It is built
+    *    only when the table has constraints: an unconstrained append
+    *    evaluates `write` alone.
+    *  - `write` writes them into the append target it is handed
+    *    ([[physAppend]]: the table, or the open transaction's delta or
+    *    staged copy) and returns the caller's result.
+    * Under the locks of [[appendMutexes]]' rule, a constrained table's
+    * rows are aligned to the full schema once ([[alignTo]]). That frame
+    * is checked ([[enforceConstraints]]) and, in an open transaction,
+    * supplies the identity keys the rewrite-commute check needs (r12). A
+    * nondeterministic frame poisons them instead: the write re-evaluates
+    * its source, so rand()/uuid() keys would differ from those captured.
+    * After the write the transaction records a write, or, outside one,
+    * the table's epoch moves. */
+  private def append[A](table: String, columns: Option[Seq[String]],
+      rows: StructType => DataFrame)(write: String => A): A = {
+    val rw = lockFor(table)
+    val constrained = constraintsOfOriginal(qualify(table)).isDefined
+    val exclusive = constrained || rw.isWriteLockedByCurrentThread
+    val mutex = if (exclusive) None else Some(appendMutexFor(table))
+    mutex.foreach(_.lock())
+    val lock = if (exclusive) rw.writeLock() else rw.readLock()
+    lock.lock()
+    try {
+      val phys = physAppend(table)
+      if (constrained) {
+        val full = spark.table(phys).schema
+        val frame = alignTo(table, full, columns, rows(full))
+        enforceConstraints(table, frame)
+        val key = identityKeyOf(table)
+        if (isTxnOpen && key.nonEmpty) recordChangedKeys(table,
+          if (!planDeterministic(frame)) None
+          else {
+            val keys = frame.select(key.map(col): _*).limit(ChangedKeyCap + 1).collect()
+            if (keys.length <= ChangedKeyCap) Some(keys.toSeq.map(_.toSeq)) else None
+          })
+      }
+      val result = write(phys)
+      val st = txn.get()
+      if (st.open) st.writes = true else bumpEpoch(table)
+      result
+    } finally { lock.unlock(); mutex.foreach(_.unlock()) }
+  }
+
+  /** `src`, positional over `columns` (default: every column of `full`),
+    * as a frame of `full`'s columns in table order: a listed column cast
+    * to its table type, every other one NULL. */
+  private def alignTo(table: String, full: StructType,
+      columns: Option[Seq[String]], src: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val names = columns.getOrElse(full.fieldNames.toSeq)
+    if (src.columns.length != names.length)
+      org.apache.spark.sql.GraftBridge.analysisError(
+        s"table $table has ${names.length} columns but ${src.columns.length} values were supplied")
+    names.find(n => !full.fieldNames.exists(_.equalsIgnoreCase(n))).foreach(n =>
+      org.apache.spark.sql.GraftBridge.analysisError(
+        s"""column "$n" of relation "$table" does not exist"""))
+    val named = src.toDF(names: _*)
+    named.select(full.fields.toIndexedSeq.map { f =>
+      names.find(_.equalsIgnoreCase(f.name)) match {
+        case Some(n) => named.col(s"`${n.replace("`", "``")}`").cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
+    }: _*)
+  }
+
+  /** Append a batch of parsed rows (COPY FROM STDIN, CH `INSERT …
+    * FORMAT`; the micro-batched Appender analog, SURVEY A15/A20) through
+    * [[append]]. A plain parquet target takes one driver-written file
+    * and no Spark job ([[ParquetAppend]]); any other target (CHAR/VARCHAR
+    * columns, partitions, buckets, a non-parquet provider, more than
+    * [[ParquetAppend.MaxRows]] rows) keeps the `insertInto` job. The
+    * constraint checks read the rows as a driver-local relation.
+    * Visibility at return = the reference's Appender Flush. */
   def appendBatch(table0: String, columns: Seq[String], rows: Seq[Seq[Any]]): Unit = {
     if (rows.isEmpty) return
+    val data = rows.map(org.apache.spark.sql.Row.fromSeq)
+    def subset(full: StructType) = StructType(columns.map(c => full(full.fieldIndex(c))))
     // conn-temp names first (protocol-text targets, r14), then
     // post-rename names key by the original
     val table = resolveRenamed(resolveConnTemp(table0))
-    // constrained tables need check+insert atomic → write lock.
-    // Constraint-free appends exclude only rewriters (read lock) BUT
-    // serialize among THEMSELVES on the append mutex (see
-    // [[appendMutexes]]; r15 find).
-    val constrained = constraintsOfOriginal(qualify(table)).isDefined
-    val mutex = if (constrained) None else Some(appendMutexFor(table))
-    mutex.foreach(_.lock())
-    val lock =
-      if (constrained) lockFor(table).writeLock()
-      else lockFor(table).readLock()
-    lock.lock()
-    try {
-      val phys = physAppend(table) // batch append: delta, not snapshot
+    append(table, Some(columns), full => spark.createDataFrame(data.asJava, subset(full))) { phys =>
       val full = spark.table(phys).schema
-      val schema = org.apache.spark.sql.types.StructType(columns.map(c => full(full.fieldIndex(c))))
-      val data = rows.map(org.apache.spark.sql.Row.fromSeq)
-      // project + null-fill the column subset to the full table schema
-      def aligned(df: DataFrame): DataFrame = df.select(full.fieldNames.toIndexedSeq.map { c =>
-        if (columns.exists(_.equalsIgnoreCase(c))) org.apache.spark.sql.functions.col(c)
-        else org.apache.spark.sql.functions.lit(null).cast(full(c).dataType).as(c)
-      }: _*)
       ParquetAppend.target(spark, phys, rows.size) match {
-        case Some(meta) =>
-          // the checks read the rows as a driver-local relation
-          if (constrained) enforceConstraints(table, aligned(spark.createDataFrame(data.asJava, schema)))
-          ParquetAppend.write(spark, meta, full, columns, rows)
+        case Some(meta) => ParquetAppend.write(spark, meta, full, columns, rows)
         case None =>
-          val df = aligned(spark.createDataFrame(spark.sparkContext.parallelize(
-            data, math.max(1, rows.size / ParquetAppend.MaxRows)), schema))
-          enforceConstraints(table, df)
-          df.write.insertInto(phys)
+          alignTo(table, full, Some(columns), spark.createDataFrame(spark.sparkContext.parallelize(
+            data, math.max(1, rows.size / ParquetAppend.MaxRows)), subset(full)))
+            .write.insertInto(phys)
       }
-      // appendBatch is called directly (COPY FROM STDIN / CH insert),
-      // not through execute(), so the txn write flag and the committed
-      // epoch are maintained here
-      val st = txn.get()
-      if (st.open) {
-        st.writes = true
-        // r12 rewrite commute: batch-appended keys join the change set
-        // (the rows are in memory — no extra job)
-        val pkCols = identityKeyOf(table)
-        if (pkCols.nonEmpty) {
-          val idx = pkCols.map(pc => columns.indexWhere(_.equalsIgnoreCase(pc)))
-          recordChangedKeys(table,
-            if (idx.forall(_ >= 0) && rows.size <= ChangedKeyCap)
-              Some(rows.map(r => idx.map(r(_))))
-            else None)
-        }
-      } else bumpEpoch(table)
-    } finally { lock.unlock(); mutex.foreach(_.unlock()) }
+    }
   }
 }
 
@@ -6227,11 +6195,13 @@ object Engine {
   private val createTableRe =
     """(?is)^\s*create\s+table\s+(?:(if\s+not\s+exists)\s+)?([\w.]+)\s*\((.*(?:primary\s+key|unique|not\s+null|foreign\s+key|references\s|check\s*\().*)\)\s*(using\s+\w+)?\s*$""".r
   // INSERT INTO t [(cols)] <source>: the handlers take only a query
-  // source (their own kind check), so DEFAULT VALUES falls through
+  // source (their own kind check), so DEFAULT VALUES falls through. The
+  // target may be double-quoted (drivers and ORMs quote it); handlers
+  // strip the quotes
   private val insertStmtRe =
-    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(.+)$""".r
+    """(?is)^\s*insert\s+into\s+([\w."]+)\s*(?:\(([^)]*)\))?\s*(.+)$""".r
   private val onConflictRe =
-    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(.+?)\s+on\s+conflict\s*(?:\(([^)]*)\))?\s*do\s+(nothing|update\s+set\s+(.+?))\s*$""".r
+    """(?is)^\s*insert\s+into\s+([\w."]+)\s*(?:\(([^)]*)\))?\s*(.+?)\s+on\s+conflict\s*(?:\(([^)]*)\))?\s*do\s+(nothing|update\s+set\s+(.+?))\s*$""".r
   private val deleteRe =
     """(?is)^\s*delete\s+from\s+([\w.]+)(?:\s+where\s+(.+))?\s*$""".r
   private val createViewRe =
@@ -6620,12 +6590,11 @@ object Engine {
   private val explainAnalyzeRe =
     """(?is)^\s*explain\s+analyze\s+(.+)$""".r
   private val partitionByRe = """(?i)partition_by\s*\(([^)]*)\)""".r
-  private val excludeRe =
-    """(?i)select\s+\*\s+exclude\s*\(([^)]*)\)\s+from\s+([\w.]+)""".r
   private val replaceStarRe =
     """(?i)select\s+\*\s+replace\s*\(((?:[^()]|\([^()]*\))*)\)\s+from\s+([\w.]+)""".r
 
   private val semiAntiRe = """(?i)\b(left\s+|right\s+)?(semi|anti)\s+join\b""".r
+  private val starExcludeRe = """(?i)\*\s*exclude\s*\(""".r
   private val similarToRe = """(?i)\b(not\s+)?similar\s+to\s+('(?:[^']|'')*')""".r
   private val globRe = """(?i)\b(not\s+)?glob\s+('(?:[^']|'')*')""".r
   private val regexpReplaceRe = """(?i)\bregexp_replace\s*\(""".r

@@ -151,7 +151,7 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
       else if (table0.contains(".")) table0 else s"main.$table0"
     val target = spark.table(table)
     val columns = cols.getOrElse(target.schema.fieldNames.toSeq)
-    val parsers = columns.map(c => CsvValues.parserFor(target.schema(c).dataType))
+    val parsers = columns.map(c => CsvValues.parserFor(target.schema(c).dataType, c))
     val rows = Formats.read(format, payload, columns).filter(_.nonEmpty).map { fields =>
       fields.zipWithIndex.map { case (v, i) => if (v == null) null else parsers(i)(v) }
     }

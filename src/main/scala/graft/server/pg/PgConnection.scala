@@ -318,8 +318,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       }
     }
     if (failed) { out.errorResponse("COPY cancelled by client"); return }
-    val fieldTypes = cols.map(c => target.schema(target.schema.fieldIndex(c)).dataType)
-    val parsers = fieldTypes.map(CsvValues.parserFor)
+    val parsers = cols.map(c => CsvValues.parserFor(target.schema(c).dataType, c))
     val rows = CsvValues.parseCsv(new String(buf.toByteArray, UTF_8)).filter(_.nonEmpty).map { fields =>
       fields.zipWithIndex.map { case (v, i) =>
         if (v == null) null else parsers(i)(v)
@@ -511,7 +510,12 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
 object CsvValues {
   import org.apache.spark.sql.types._
 
-  def parserFor(dt: DataType): String => Any = dt match {
+  /** The text parser for the values of `column`, of type `dt`, built
+    * once per batch. A type with no text form here (BINARY, nested
+    * types) raises, naming the column and its type, before any row is
+    * parsed: nothing on the write path casts a String. */
+  def parserFor(dt: DataType, column: String = "?"): String => Any = dt match {
+    case ByteType => _.trim.toByte
     case IntegerType => _.trim.toInt
     case LongType => _.trim.toLong
     case ShortType => _.trim.toShort
@@ -525,8 +529,10 @@ object CsvValues {
     case DateType => s => java.sql.Date.valueOf(s.trim)
     case TimestampNTZType => s => java.time.LocalDateTime.parse(s.trim.replace(' ', 'T'))
     case TimestampType => s => java.sql.Timestamp.valueOf(s.trim)
-    case StringType => identity[String]
-    case other => identity[String] // let Spark cast on insert
+    case _: StringType => identity[String]
+    case other => throw new IllegalArgumentException(
+      s"""column "$column" has type ${graft.functions.DuckTypeNames.of(other)}, """ +
+        "which COPY FROM STDIN and INSERT … FORMAT cannot read from text")
   }
 
   /** Minimal RFC-4180 CSV split; returns null for \N. */

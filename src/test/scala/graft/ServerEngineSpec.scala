@@ -4502,4 +4502,165 @@ class ServerEngineSpec extends SparkSpecBase {
     val r = engine.execute("/* delete */ select 1 as x")
     assert(r.tag == "SELECT" && r.df.collect().toSeq.map(_.toString) == Seq("[1]"))
   }
+
+  // -- one append protocol: COPY FROM 'file' and INSERT share the checks --
+
+  private def rowsOf(sql: String): Seq[String] =
+    engine.execute(sql).df.collect().toSeq.map(_.toString)
+
+  /** `body` outside any transaction, then inside BEGIN … COMMIT. */
+  private def bothTxnModes(body: Boolean => Unit): Unit = {
+    body(false)
+    engine.execute("BEGIN")
+    try body(true)
+    finally engine.execute(if (engine.txnStatus == 'T') "COMMIT" else "ROLLBACK")
+  }
+
+  test("COPY FROM file enforces constraints: an in-file duplicate, an existing key or a NULL NOT NULL writes nothing") {
+    fresh("c_cpk"); fresh("c_cnn")
+    val dir = Files.createTempDirectory("copy_checks")
+    def file(name: String, text: String): String = {
+      val f = dir.resolve(name); Files.write(f, text.getBytes("UTF-8")); f.toString
+    }
+    try {
+      engine.execute("create table main.c_cpk (id INT PRIMARY KEY, v VARCHAR)")
+      engine.execute("create table main.c_cnn (id INT NOT NULL, v VARCHAR)")
+      val dup = file("dup.csv", "id,v\n1,a\n1,b\n")
+      val e1 = intercept[IllegalArgumentException](engine.execute(s"copy main.c_cpk from '$dup' (HEADER)"))
+      assert(e1.getMessage.contains("duplicate key"), e1.getMessage)
+      assert(rowsOf("select count(*) from main.c_cpk") == Seq("[0]"))
+      assert(engine.execute(s"copy main.c_cpk from '${file("ok.csv", "id,v\n1,a\n2,b\n")}' (HEADER)")
+        .tag == "COPY 2")
+      val e2 = intercept[IllegalArgumentException](
+        engine.execute(s"copy main.c_cpk from '${file("old.csv", "id,v\n3,c\n2,again\n")}' (HEADER)"))
+      assert(e2.getMessage.contains("duplicate key value"), e2.getMessage)
+      assert(rowsOf("select id, v from main.c_cpk order by id") == Seq("[1,a]", "[2,b]"))
+      // the same check inside a transaction; the violation aborts it
+      engine.execute("BEGIN")
+      try intercept[IllegalArgumentException](engine.execute(s"copy main.c_cpk from '$dup' (HEADER)"))
+      finally engine.execute("ROLLBACK")
+      assert(rowsOf("select count(*) from main.c_cpk") == Seq("[2]"))
+      val e3 = intercept[IllegalArgumentException](
+        engine.execute(s"copy main.c_cnn from '${file("nn.csv", "id,v\n1,a\n,b\n")}' WITH (HEADER)"))
+      assert(e3.getMessage.contains("""null value in column "id""""), e3.getMessage)
+      assert(rowsOf("select count(*) from main.c_cnn") == Seq("[0]"))
+    } finally {
+      engine.execute("drop table if exists main.c_cpk"); engine.execute("drop table if exists main.c_cnn")
+      graft.server.Persistence.rm(dir.toFile)
+    }
+  }
+
+  test("INSERT with a column list into a constrained table checks the full row, omitted columns NULL") {
+    fresh("c_il"); fresh("c_iln")
+    engine.execute("create table main.c_il (id INT PRIMARY KEY, v VARCHAR, w INT CHECK (w > 0))")
+    engine.execute("create table main.c_iln (id INT NOT NULL, v VARCHAR)")
+    try {
+      bothTxnModes { inTxn =>
+        val k = if (inTxn) 2 else 1
+        // the CHECK column is omitted: NULL passes it
+        assert(engine.execute(s"insert into main.c_il (id, v) values ($k, 'v$k')").tag == "INSERT 0 1")
+        assert(rowsOf(s"select id, v, w from main.c_il where id = $k") == Seq(s"[$k,v$k,null]"))
+      }
+      assert(rowsOf("select count(*) from main.c_il") == Seq("[2]"))
+      bothTxnModes { inTxn =>
+        // the omitted NOT NULL column is NULL: DuckDB's not-null error,
+        // not an unresolved column
+        val e = intercept[IllegalArgumentException](
+          engine.execute("insert into main.c_iln (v) values ('a')"))
+        assert(e.getMessage.contains("""null value in column "id" violates not-null constraint"""),
+          s"inTxn=$inTxn: ${e.getMessage}")
+      }
+      assert(rowsOf("select count(*) from main.c_iln") == Seq("[0]"))
+      // a listed column still meets its CHECK, in either order
+      intercept[IllegalArgumentException](engine.execute("insert into main.c_il (w, id) values (-1, 3)"))
+      assert(engine.execute("insert into main.c_il (w, id) values (7, 3)").tag == "INSERT 0 1")
+      assert(rowsOf("select id, v, w from main.c_il where id = 3") == Seq("[3,null,7]"))
+    } finally {
+      engine.execute("drop table if exists main.c_il"); engine.execute("drop table if exists main.c_iln")
+    }
+  }
+
+  test("a double-quoted INSERT target gets the same checks and ON CONFLICT handling") {
+    fresh("c_qpk")
+    engine.execute("create table main.c_qpk (id INT PRIMARY KEY, v VARCHAR)")
+    try {
+      engine.execute("insert into main.c_qpk values (1, 'a')")
+      val e = intercept[IllegalArgumentException](engine.execute("""insert into main."c_qpk" values (1, 'b')"""))
+      assert(e.getMessage.contains("duplicate key"), e.getMessage)
+      intercept[IllegalArgumentException](engine.execute("""insert into "main"."c_qpk" (id) values (1)"""))
+      engine.execute("""insert into main."c_qpk" values (1, 'c'), (2, 'd') on conflict do nothing""")
+      assert(rowsOf("select id, v from main.c_qpk order by id") == Seq("[1,a]", "[2,d]"))
+    } finally engine.execute("drop table if exists main.c_qpk")
+  }
+
+  test("INSERT … SELECT * EXCLUDE into a constrained table") {
+    fresh("c_exk"); fresh("c_exs")
+    engine.execute("create table main.c_exk (id INT PRIMARY KEY, v VARCHAR)")
+    engine.execute("create table main.c_exs (id INT, x INT, v VARCHAR)")
+    try {
+      engine.execute("insert into main.c_exs values (1, 10, 'a'), (2, 20, 'b')")
+      assert(engine.execute("insert into main.c_exk select * exclude (x) from main.c_exs").tag ==
+        "INSERT 0 2")
+      assert(rowsOf("select id, v from main.c_exk order by id") == Seq("[1,a]", "[2,b]"))
+      val e = intercept[IllegalArgumentException](
+        engine.execute("insert into main.c_exk select * exclude (x) from main.c_exs"))
+      assert(e.getMessage.contains("duplicate key"), e.getMessage)
+    } finally {
+      engine.execute("drop table if exists main.c_exk"); engine.execute("drop table if exists main.c_exs")
+    }
+  }
+
+  test("* EXCLUDE covers TEMP and in-transaction tables, qualified stars and extra items") {
+    fresh("c_exq")
+    engine.execute("create table main.c_exq (a INT, b INT)")
+    engine.execute("insert into main.c_exq values (1, 2)")
+    def cols(sql: String): Seq[String] = engine.execute(sql).df.schema.fieldNames.toSeq
+    try {
+      assert(rowsOf("select t.* exclude (b) from main.c_exq t") == Seq("[1]"))
+      assert(cols("select * exclude (b), 1 as one from main.c_exq") == Seq("a", "one"))
+      assert(rowsOf("select * exclude (B) from main.c_exq where b = 2") == Seq("[1]"))
+      engine.execute("create temp table c_ex_tmp (a INT, b INT, c INT)")
+      try {
+        engine.execute("insert into c_ex_tmp values (1, 2, 3)")
+        assert(rowsOf("select * exclude (b) from c_ex_tmp") == Seq("[1,3]"))
+      } finally engine.execute("drop table c_ex_tmp")
+      engine.execute("BEGIN")
+      try {
+        engine.execute("create table main.c_ex_txn (a INT, b INT)")
+        engine.execute("insert into main.c_ex_txn values (5, 6)")
+        assert(rowsOf("select * exclude (a) from main.c_ex_txn") == Seq("[6]"))
+        // an unknown name is a binder error: the transaction stays usable
+        intercept[org.apache.spark.sql.AnalysisException](
+          engine.execute("select * exclude (nope) from main.c_exq"))
+        assert(engine.txnStatus == 'T')
+        assert(rowsOf("select count(*) from main.c_ex_txn") == Seq("[1]"))
+      } finally engine.execute("ROLLBACK")
+      assert(!spark.catalog.tableExists("main.c_ex_txn"))
+    } finally engine.execute("drop table if exists main.c_exq")
+  }
+
+  test("nextval INSERT … SELECT racing batch appends into one unconstrained table: no deadlock") {
+    // the sequence path holds the table's write lock while its INSERT
+    // appends; taking the append mutex under it would wait on a batch
+    // that holds the mutex and waits on the read lock
+    fresh("c_seqapp")
+    engine.execute("drop sequence if exists main.c_seqapp_s")
+    engine.execute("create sequence main.c_seqapp_s")
+    engine.execute("create table main.c_seqapp (id BIGINT, v INT)")
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val seq = pool.submit(new Runnable {
+        def run(): Unit = for (_ <- 0 until 10)
+          engine.execute("insert into main.c_seqapp select nextval('main.c_seqapp_s'), 1 from range(3)")
+      })
+      val batches = pool.submit(new Runnable {
+        def run(): Unit = for (_ <- 0 until 40)
+          engine.appendBatch("main.c_seqapp", Seq("id", "v"), Seq(Seq[Any](-1L, 2)))
+      })
+      seq.get(120, TimeUnit.SECONDS); batches.get(120, TimeUnit.SECONDS)
+    } finally pool.shutdownNow()
+    assert(rowsOf("select v, count(*), count(distinct id) from main.c_seqapp group by v order by v") ==
+      Seq("[1,30,30]", "[2,40,1]"))
+    engine.execute("drop table main.c_seqapp"); engine.execute("drop sequence main.c_seqapp_s")
+  }
 }

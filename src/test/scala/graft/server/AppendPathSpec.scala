@@ -192,4 +192,26 @@ class AppendPathSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(count("ap_stats") == 3)
     engine.execute("drop table main.ap_stats")
   }
+
+  test("TINYINT values parse and round-trip; a type with no text parser writes nothing") {
+    fresh("ap_ti"); fresh("ap_bin")
+    engine.execute("create table main.ap_ti (t TINYINT, s STRING)")
+    val ti = spark.table("main.ap_ti").schema
+    val parse = Seq("t", "s").map(c => CsvValues.parserFor(ti(c).dataType, c))
+    val text = Seq(Seq("-128", "lo"), Seq(" 127 ", "hi"), Seq(null, "none"))
+    engine.appendBatch("main.ap_ti", Seq("t", "s"),
+      text.map(_.zip(parse).map { case (v, p) => if (v == null) null else p(v) }))
+    assert(spark.sql("select t, s from main.ap_ti order by s").collect().map(_.toString).toSeq ==
+      Seq("[127,hi]", "[-128,lo]", "[null,none]"))
+    // the parser is built, and fails, before any row is parsed or written
+    engine.execute("create table main.ap_bin (id INT, b BINARY)")
+    val bin = spark.table("main.ap_bin").schema
+    val e = intercept[IllegalArgumentException] {
+      val ps = Seq("id", "b").map(c => CsvValues.parserFor(bin(c).dataType, c))
+      engine.appendBatch("main.ap_bin", Seq("id", "b"), Seq(Seq(ps(0)("1"), ps(1)("x"))))
+    }
+    assert(e.getMessage.contains("\"b\"") && e.getMessage.contains("BLOB"), e.getMessage)
+    assert(count("ap_bin") == 0 && dataFiles("ap_bin").isEmpty)
+    Seq("ap_ti", "ap_bin").foreach(t => engine.execute(s"drop table main.$t"))
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Stateful DML differential fuzzer: generate a random DDL/DML script
-(CREATE TABLE with constraints, INSERT / INSERT..SELECT / ON CONFLICT,
-UPDATE, DELETE, ALTER) and replay it statement-by-statement in BOTH the
+(CREATE TABLE with constraints, INSERT with and without a column list /
+INSERT..SELECT / ON CONFLICT, UPDATE, DELETE, ALTER) and replay it statement-by-statement in BOTH the
 embedded DuckDB oracle and the live graft PG server. After each
 mutating statement the fuzzer compares (a) whether the statement
 succeeded/failed on each side and (b) the full canonical table
@@ -55,9 +55,9 @@ def gen_script(r, tname):
 
     stmts = [f"CREATE TABLE {tname} ({', '.join(col_defs)})"]
 
-    def row_values(null_p=0.15):
+    def row_values(listed, null_p=0.15):
         vals = []
-        for (name, ty, genv) in cols:
+        for (name, ty, genv) in listed:
             if name != "id" and r.random() < null_p:
                 vals.append("NULL")
             else:
@@ -67,14 +67,22 @@ def gen_script(r, tname):
     n_ops = r.randint(4, 10)
     for _ in range(n_ops):
         op = r.random()
-        if op < 0.45:
-            rows = ", ".join(row_values() for _ in range(r.randint(1, 4)))
+        if op < 0.35:
+            rows = ", ".join(row_values(cols) for _ in range(r.randint(1, 4)))
             ins = f"INSERT INTO {tname} VALUES {rows}"
             if pk and r.random() < 0.3:
                 act = r.choice(["DO NOTHING",
                                 f"DO UPDATE SET c0 = excluded.c0"])
                 ins += f" ON CONFLICT (id) {act}"
             stmts.append(ins)
+        elif op < 0.45:
+            # column-list INSERT: id plus a shuffled random subset, so
+            # NOT NULL and CHECK columns are sometimes omitted (NULL)
+            listed = [cols[0]] + [c for c in cols[1:] if r.random() < 0.5]
+            r.shuffle(listed)
+            rows = ", ".join(row_values(listed) for _ in range(r.randint(1, 3)))
+            names = ", ".join(c[0] for c in listed)
+            stmts.append(f"INSERT INTO {tname} ({names}) VALUES {rows}")
         elif op < 0.60:
             # UPDATE with a predicate; sometimes violating a constraint
             name, ty, genv = r.choice(cols)
