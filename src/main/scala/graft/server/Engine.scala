@@ -294,6 +294,36 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       }
     }
 
+  /** FK RESTRICT, the one check of every statement that removes rows
+    * of, or keys from, a referenced table: for each FK referencing
+    * `table` (an ORIGINAL key, [[fkChildrenOf]]) that `removes` says
+    * the statement can hit, no child row may reference a key `before`
+    * holds and `after` lacks. A self-FK's child rows are `after` itself
+    * (rows the statement deletes hold no reference afterwards); any
+    * other child is read through the open transaction's overlays. */
+  private def restrictFk(table: String, before: DataFrame, after: DataFrame,
+      removes: Fk => Boolean): Unit =
+    fkChildrenOf(table).filter(cf => removes(cf._2)).foreach { case (child, fk) =>
+      val rows = if (qualify(child) == qualify(table)) after else readOriginal(qualify(child))
+      if (referencesRemoved(fk, rows, before, after))
+        throw new IllegalArgumentException(
+          s"violates foreign key constraint: a key of $table is still referenced by " +
+            s"$child(${fk.cols.mkString(", ")})")
+    }
+
+  /** True iff a row of `children` references through `fk` a key that
+    * `before` holds and `after` lacks: an exact key-set difference, so
+    * removing one of several rows that share a key removes no key.
+    * NULL references never bind. */
+  private def referencesRemoved(fk: Fk, children: DataFrame, before: DataFrame,
+      after: DataFrame): Boolean = {
+    val refs = fk.refCols.map(col)
+    val removed = before.select(refs: _*).except(after.select(refs: _*)).toDF(fk.cols: _*)
+    children.select(fk.cols.map(col): _*)
+      .filter(fk.cols.map(col(_).isNotNull).reduce(_ && _))
+      .join(removed, fk.cols, "left_semi").limit(1).count() > 0
+  }
+
   // -- statement execution ---------------------------------------------------
 
   /** Per-connection explicit-transaction state (staged-overlay
@@ -1232,6 +1262,16 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       case p if p.expressions.exists(e => e.exists(!_.deterministic)) => p
     }.isEmpty
 
+  /** The identity-key tuples `keys` yields, capped at [[ChangedKeyCap]]:
+    * None when over the cap, or when `keys` is nondeterministic (the
+    * write re-evaluates it, so its tuples would differ from these). */
+  private def keyTuples(keys: DataFrame): Option[Seq[Seq[Any]]] =
+    if (!planDeterministic(keys)) None
+    else {
+      val rows = keys.limit(ChangedKeyCap + 1).collect()
+      if (rows.length <= ChangedKeyCap) Some(rows.toSeq.map(_.toSeq)) else None
+    }
+
   /** The ROW-IDENTITY key the rewrite-commute machinery attributes
     * changes by: the PRIMARY KEY, else the table's FIRST declared
     * UNIQUE set (r12b — widens the commute to PK-less tables). The
@@ -1312,9 +1352,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def mergeDisjointRewrite(t: String, st: TxnState): Unit = {
     val stg = st.staged(t)
     val keys = st.changedKeys(t).get
-    val pkCols = constraintsOfOriginal(t).map(c =>
-      if (c.pk.nonEmpty) c.pk else c.unique.headOption.getOrElse(Nil))
-      .getOrElse(Nil)
+    val pkCols = identityKeyOf(t)
     val live = spark.table(t)
     val keySchema = live.select(pkCols.map(col): _*).schema
     val keysDf = spark.createDataFrame(
@@ -1431,13 +1469,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * parquet — concurrent appends' new files are simply not in it). */
   private def snapshotBase(q: String): DataFrame = {
     val st = txn.get()
-    val live = spark.table(q)
-    if (epochOf(q) == st.baseEpochs.getOrElse(q, -1L)) live
-    else st.pinnedFiles.getOrElse(q, None) match {
-      case Some(Seq()) => live.filter(org.apache.spark.sql.functions.lit(false)) // genuinely empty at pin time
-      case Some(files) => spark.read.schema(live.schema).parquet(files: _*)
-      case None => noSnapshotError(q)
-    }
+    if (epochOf(q) == st.baseEpochs.getOrElse(q, -1L)) spark.table(q)
+    else if (st.pinnedFiles.getOrElse(q, None).isEmpty) noSnapshotError(q)
+    else pinnedScan(q)
   }
 
   /** The pinned file list as a DataFrame, used where the snapshot must
@@ -1454,7 +1488,7 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   private def pinnedScan(q: String): DataFrame = {
     val live = spark.table(q)
     txn.get().pinnedFiles.getOrElse(q, None) match {
-      case Some(Seq()) => live.filter(org.apache.spark.sql.functions.lit(false))
+      case Some(Seq()) => live.filter(org.apache.spark.sql.functions.lit(false)) // empty at pin time
       case Some(files) => spark.read.schema(live.schema).parquet(files: _*)
       case None => live
     }
@@ -2202,20 +2236,14 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     val appended = spark.read.schema(spark.table(child).schema).parquet(newFiles: _*)
     fks.foreach { fk =>
       val parent = qualify(fk.refTable)
-      val referencing = appended
-        .select(fk.cols.map(col): _*)
-        .filter(fk.cols.map(col(_).isNotNull).reduce(_ && _))
-      val violating =
-        if (!st.staged.contains(parent)) referencing // parent dropped, not recreated
-        else {
-          // keys present at the parent's pin but absent from the image
-          // about to publish (staged rewrite or drop-then-recreate)
-          val removed = pinnedScan(parent).select(fk.refCols.map(col): _*)
-            .except(spark.table(st.staged(parent)).select(fk.refCols.map(col): _*))
-            .toDF(fk.cols: _*)
-          referencing.join(removed, fk.cols, "left_semi")
-        }
-      if (violating.limit(1).count() > 0)
+      val violating = st.staged.get(parent) match {
+        // keys present at the parent's pin but absent from the image
+        // about to publish (staged rewrite or drop-then-recreate)
+        case Some(stg) => referencesRemoved(fk, appended, pinnedScan(parent), spark.table(stg))
+        case None => // parent dropped, not recreated
+          appended.filter(fk.cols.map(col(_).isNotNull).reduce(_ && _)).limit(1).count() > 0
+      }
+      if (violating)
         throw new IllegalArgumentException(
           s"could not commit transaction: rows appended to $child by a concurrent " +
             s"transaction reference keys this transaction removes from ${fk.refTable} " +
@@ -3761,22 +3789,40 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             queryDf(if (src.toLowerCase.startsWith("values")) s"SELECT * FROM $src" else src)
           )(_ => runInsert(queryDf(sql)))
         }
+      // UPDATE/DELETE targets may be double-quoted and aliased; the
+      // alias names the rewritten relation, so `t.col` in SET and
+      // WHERE resolves
       case Update => updateRe.findFirstMatchIn(sql).foreach { m =>
-        return copyOnWriteUpdate(m.group(1), m.group(2), Option(m.group(3)))
+        val name = m.group(1).replace("\"", "")
+        val alias = Option(m.group(2)).getOrElse(defaultAlias(name))
+        val (sets, where) = parseSet(m.group(3))
+        val n = rewriteRows(name, alias, where, None, sets.keySet) { (rel, schema) =>
+          s"SELECT ${assignProjection(schema, alias, sets, s"(${where.getOrElse("true")})")} FROM $rel"
+        }
+        return ExecResult(null, s"UPDATE $n")
       }
       case Delete => deleteRe.findFirstMatchIn(sql).foreach { m =>
-        return copyOnWriteDelete(m.group(1), Option(m.group(2)))
+        val name = m.group(1).replace("\"", "")
+        val where = Option(m.group(3))
+        val pred = where.getOrElse("true")
+        val n = rewriteRows(name, Option(m.group(2)).getOrElse(defaultAlias(name)), where,
+          None, _ => false, deletes = true)((rel, _) =>
+          s"SELECT * FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL")
+        return ExecResult(null, s"DELETE $n")
       }
       case Truncate => truncateRe.findFirstMatchIn(sql).foreach { m =>
-        val t = resolveRenamed(m.group(1)) // post-rename names key by the original
+        // post-rename names key by the original
+        val t = resolveRenamed(m.group(1).replace("\"", ""))
+        val q = qualify(t)
         val lock = lockFor(t).writeLock()
         lock.lock()
         try {
+          val before = readOriginal(q)
+          restrictFk(q, before, before.limit(0), _ => true)
           if (isTxnOpen) {
             // stage an EMPTY image directly — snapshotting the rows only
             // to truncate them would be a full-table copy for nothing
             val st = txn.get()
-            val q = qualify(t)
             recordChangedKeys(q, None) // whole-table: never commutes
             st.staged.get(q) match {
               case Some(stg) => spark.sql(s"TRUNCATE TABLE $stg")
@@ -4026,7 +4072,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         val mm = """(?is)^(.*)\s+as\s+([\w"]+)$""".r.findFirstMatchIn(item.trim)
         mm.map(x => x.group(2).replace("\"", "").toLowerCase -> x.group(1).trim)
       }.toMap
-      val cols = spark.table(m.group(2)).schema.fieldNames.map { c =>
+      // the schema from the same resolution the query gets (TEMP and
+      // in-transaction tables); analysis only, no job
+      val cols = txnExec(s"SELECT * FROM ${m.group(2)}").schema.fieldNames.map { c =>
         repls.get(c.toLowerCase) match {
           case Some(e) => s"($e) AS `$c`"
           case None => s"`$c`"
@@ -4165,10 +4213,6 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     // DuckDB operator spellings: ** and ^ exponentiation, @() abs,
     // && overlap, @> / <@ containment
     s = rewriteDuckOperators(s)
-    // DuckDB's bare SEMI/ANTI JOIN keywords → Spark's LEFT-prefixed
-    // ones; an existing LEFT/RIGHT prefix (any whitespace) passes through
-    s = SqlLexer.replaceInCode(s, semiAntiRe)(m =>
-      if (m.group(1) != null) m.matched else s"LEFT ${m.group(2).toUpperCase} JOIN")
     // DuckDB `* EXCLUDE (…)` is Spark's `* EXCEPT (…)`: the analyzer
     // expands it against whatever the star covers (qualified stars,
     // temp and in-transaction tables) and binder-errors an unknown name
@@ -4787,180 +4831,95 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     } finally lock.unlock()
   }
 
-  /** UPDATE t SET a=e[, …] [WHERE p] → materialize SELECT with CASE
-    * projection, then overwrite — Spark cannot read and overwrite the
-    * same table in one job, so the new image goes through a staging
-    * table (the copy in copy-on-write). */
-  private def copyOnWriteUpdate(table0: String, setClause: String, where: Option[String]): ExecResult = {
+  /** The rewrite protocol of UPDATE, DELETE and ON CONFLICT DO UPDATE:
+    * `image` replaces the rows of `table0`. Spark cannot read and
+    * overwrite one table in one job, so the image goes through a stage
+    * (the copy in copy-on-write). Under the table's write lock, on its
+    * write target ([[physWrite]]), the relation aliased `alias`:
+    *  - `where` picks the rows the statement changes (None: all of
+    *    them). `assigned` holds of each lower-cased column a SET writes;
+    *    unless it holds of an identity-key column, the changed rows' key
+    *    tuples are captured for the rewrite commute (r12) and give the
+    *    count. An upsert's changes are no predicate on the table: it
+    *    passes its own `count`, and its keys stay unattributed.
+    *  - `image(relation, schema)` is the table after the statement. It is
+    *    staged once ([[stageAndSwap]]), and every check reads the stage:
+    *    the declared constraints, and FK RESTRICT ([[restrictFk]]) when
+    *    the statement can remove a referenced key, i.e. a DELETE
+    *    (`deletes`) or a SET of a referenced column that changed rows.
+    * Returns the number of changed rows. */
+  private def rewriteRows(table0: String, alias: String, where: Option[String],
+      count: Option[Long], assigned: String => Boolean, deletes: Boolean = false)(
+      image: (String, StructType) => String): Long = {
     val table = resolveRenamed(table0) // post-rename names key by the original
     val lock = lockFor(table).writeLock()
     lock.lock()
     try {
       val phys = physWrite(table)
-      // alias the staged relation with the USER-spelled bare name so
-      // predicates written as `t.col` keep resolving against the copy
-      val rel = if (phys == table) table else s"$phys ${table0.split('.').last}"
-      val schema = spark.table(phys).schema
-      val cols = schema.fieldNames
-      // quoted assigned-column spellings match the field name (same
-      // r15b fix as the ON CONFLICT SET parser: `SET "v" = …` silently
-      // skipped the assignment)
-      val sets = SqlLexer.splitTopLevel(setClause, ',').map { a =>
-        val Array(c, e) = a.split("=", 2).map(_.trim)
-        c.replace("\"", "").replace("`", "").toLowerCase -> e
-      }.toMap
-      val pred = where.getOrElse("true")
-      // assignment cast: the SET expression coerces to the COLUMN's
-      // declared type (PG/DuckDB). Without it the CASE's branch
-      // coercion can go the other way — SET varchar_col = 7 typed the
-      // CASE BIGINT and cast the column's strings (dml_fuzz find).
-      val proj = cols.map { c =>
-        sets.get(c.toLowerCase) match {
-          case Some(e) =>
-            s"CASE WHEN ($pred) THEN CAST(($e) AS ${schema(c).dataType.sql}) ELSE `$c` END AS `$c`"
-          case None => s"`$c`"
-        }
-      }.mkString(", ")
-      // no-WHERE form must not emit `FROM t WHERE (true)`: the parser
-      // reads a parenthesized IDENTIFIER after a relation as a
-      // column-alias list ("t WHERE (true)" = alias WHERE, cols (true))
-      // and dies with ASSIGNMENT_ARITY_MISMATCH
+      val rel = s"$phys `$alias`"
+      val select = image(rel, spark.table(phys).schema)
       val predSql = where.map(w => s" WHERE ($w)").getOrElse("")
-      // txnExec, not spark.sql: user predicates/SET expressions can
-      // embed subqueries naming the BASE table — mid-transaction those
-      // must read the staged copy (txn_fuzz find, seed 23)
-      // Change-set capture (r12 rewrite commute): when the predicate's
-      // row set is attributable by PRIMARY KEY and the SET leaves the
-      // key columns alone, collect the touched keys — LIMIT cap+1
-      // either IS the exact count (replacing the count job) or proves
-      // the set over-cap. A key-column SET changes row identities both
-      // ways — unattributable, poison the set.
-      val pkCols = identityKeyOf(table)
-      var keysOpt: Option[Seq[Seq[Any]]] = None
-      var exactCount = -1L
-      if (pkCols.nonEmpty && !pkCols.exists(pc => sets.contains(pc.toLowerCase))) {
-        val sel = pkCols.map(c => s"`$c`").mkString(", ")
-        val keyDf = txnExec(s"SELECT $sel FROM $rel$predSql")
-        // the swap's CASE re-evaluates the predicate: a rand()/uuid()
-        // in it updates DIFFERENT rows than were captured — poison.
-        // (Non-deterministic SET values are fine: the staged CTAS
-        // freezes them, and the key set only depends on the predicate.)
-        if (planDeterministic(keyDf)) {
-          val rows = keyDf.limit(ChangedKeyCap + 1).collect()
-          if (rows.length <= ChangedKeyCap) {
-            keysOpt = Some(rows.toSeq.map(_.toSeq))
-            exactCount = rows.length.toLong
-          }
-        }
+      val key = identityKeyOf(table)
+      // txnExec, not spark.sql: user predicates can embed subqueries
+      // naming the BASE table, which mid-transaction must read the
+      // staged copy (txn_fuzz find, seed 23). A SET of a key column
+      // changes row identities both ways: unattributable.
+      val keys =
+        if (count.isDefined || key.isEmpty || key.exists(k => assigned(k.toLowerCase))) None
+        else keyTuples(txnExec(s"SELECT ${key.map(k => s"`$k`").mkString(", ")} FROM $rel$predSql"))
+      recordChangedKeys(table, keys)
+      val n = count.orElse(keys.map(_.size.toLong)).getOrElse(
+        txnExec(s"SELECT count(*) FROM $rel$predSql").head().getLong(0))
+      stageAndSwap(phys, select, keys) { stage =>
+        enforceConstraints(table, stage, againstExisting = false)
+        if (n > 0) restrictFk(table, spark.table(phys), stage,
+          fk => deletes || fk.refCols.exists(c => assigned(c.toLowerCase)))
       }
-      recordChangedKeys(table, keysOpt)
-      val touched: Long =
-        if (exactCount >= 0) exactCount
-        else txnExec(s"SELECT count(*) FROM $rel$predSql").head().getLong(0)
-      // UPDATE must re-validate: a SET can break NOT NULL / CHECK /
-      // enum / FK, or collapse two PKs onto one value (DuckDB rejects
-      // all of these at update time)
-      enforceConstraints(table, txnExec(s"SELECT $proj FROM $rel"),
-        againstExisting = false)
-      // FK RESTRICT when this table is REFERENCED: keys the update
-      // removes (present before, absent after) must not still be
-      // referenced by a child. Exact old-minus-new key-set diff, so
-      // updates that keep a referenced key intact pass.
-      locally {
-        val referencing = fkChildrenOf(table)
-        referencing.foreach { case (child, fk) =>
-          val touchesKey = fk.refCols.exists(rc => sets.contains(rc.toLowerCase))
-          if (touchesKey) {
-            val oldKeys = spark.table(phys).select(fk.refCols.map(col): _*)
-            val newKeys = txnExec(s"SELECT $proj FROM $rel")
-              .select(fk.refCols.map(col): _*)
-            val removed = oldKeys.except(newKeys).toDF(fk.cols: _*)
-            val hit = readOriginal(qualify(child))
-              .select(fk.cols.map(col): _*)
-              .filter(fk.cols.map(col(_).isNotNull).reduce(_ && _))
-              .join(removed, fk.cols, "left_semi")
-            if (hit.limit(1).count() > 0)
-              throw new IllegalArgumentException(
-                s"update on $table violates foreign key constraint: " +
-                  s"a referenced key would change while rows in $child still reference it")
-          }
-        }
-      }
-      stageAndSwap(phys, s"SELECT $proj FROM $rel", keysOpt)
-      ExecResult(null, s"UPDATE $touched")
+      n
     } finally lock.unlock()
   }
 
-  private def copyOnWriteDelete(table0: String, where: Option[String]): ExecResult = {
-    val table = resolveRenamed(table0) // post-rename names key by the original
-    val lock = lockFor(table).writeLock()
-    lock.lock()
-    try {
-      val pred = where.getOrElse("true")
-      // same WHERE-less parse hazard as UPDATE: `FROM t WHERE (true)`
-      // reads as an alias + column-alias list
-      val phys = physWrite(table)
-      val rel = if (phys == table) table else s"$phys ${table0.split('.').last}"
-      val predSql = where.map(w => s" WHERE ($w)").getOrElse("")
-      // change-set capture (r12 rewrite commute): a DELETE never moves
-      // key columns, so the predicate's PK tuples fully attribute it —
-      // the LIMIT cap+1 collect doubles as the exact removed-count for
-      // small deletes (same trade as copyOnWriteUpdate)
-      val pkCols = identityKeyOf(table)
-      var keysOpt: Option[Seq[Seq[Any]]] = None
-      var exactCount = -1L
-      if (pkCols.nonEmpty) {
-        val sel = pkCols.map(c => s"`$c`").mkString(", ")
-        val keyDf = txnExec(s"SELECT $sel FROM $rel$predSql")
-        // the swap's NOT(pred) re-evaluates the predicate — same
-        // non-determinism poisoning as copyOnWriteUpdate
-        if (planDeterministic(keyDf)) {
-          val rows = keyDf.limit(ChangedKeyCap + 1).collect()
-          if (rows.length <= ChangedKeyCap) {
-            keysOpt = Some(rows.toSeq.map(_.toSeq))
-            exactCount = rows.length.toLong
-          }
-        }
+  /** The alias a DML target's own name gives it: the bare table name,
+    * unmangled for a connection TEMP table (`t`, not `t__tmpc<N>`). */
+  private def defaultAlias(name: String): String =
+    name.split('.').last.replaceFirst("(?i)__tmpc\\d+$", "")
+
+  /** `col = expr[, …] [WHERE cond]`, the SET list of UPDATE and of ON
+    * CONFLICT DO UPDATE → (lower-cased column → expression, cond). The
+    * list splits at top-level commas and the WHERE at the top-level
+    * keyword, so a subquery in an expression keeps its own WHERE. A
+    * quoted column (`"v"`, `` `v` ``) matches its field name (r15b find:
+    * the INSERT OR REPLACE sugar sets backticked columns). */
+  private def parseSet(clause: String): (Map[String, String], Option[String]) = {
+    val w = SqlLexer.topLevelKeyword(clause, 0, "where")
+    val sets = SqlLexer.splitTopLevel(if (w < 0) clause else clause.substring(0, w), ',').map { a =>
+      a.split("=", 2).map(_.trim) match {
+        case Array(c, e) => c.replace("\"", "").replace("`", "").toLowerCase -> e
+        case _ => org.apache.spark.sql.GraftBridge.analysisError(s"syntax error in SET item: $a")
       }
-      recordChangedKeys(table, keysOpt)
-      val removed: Long =
-        if (exactCount >= 0) exactCount
-        else txnExec(s"SELECT count(*) FROM $rel$predSql").head().getLong(0)
-      // FK RESTRICT: deleting rows still referenced by a child table
-      // is rejected (DuckDB/PG default behavior for enforced FKs)
-      if (removed > 0) {
-        val referencing = fkChildrenOf(table)
-        val remainingSql = s"FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL"
-        referencing.foreach { case (child, fk) =>
-          // exact old-minus-new key diff (mirrors copyOnWriteUpdate):
-          // deleting one of several rows sharing a referenced key value
-          // leaves the key present, so it must not be counted as removed
-          val deletedKeys = txnExec(
-            s"SELECT ${fk.refCols.mkString(", ")} FROM $rel$predSql")
-            .toDF(fk.cols: _*)
-          val remainingKeys = txnExec(
-            s"SELECT ${fk.refCols.mkString(", ")} $remainingSql")
-            .toDF(fk.cols: _*)
-          val removedKeys = deletedKeys.except(remainingKeys)
-          // self-FK: child rows deleted by this same statement cannot
-          // hold a reference afterwards — check the POST-delete image
-          val childRows =
-            if (qualify(child) == qualify(table))
-              txnExec(s"SELECT * $remainingSql") // self-FK; both originals
-            else readOriginal(qualify(child))
-          val hit = childRows
-            .select(fk.cols.map(col): _*)
-            .filter(fk.cols.map(col(_).isNotNull).reduce(_ && _))
-            .join(removedKeys, fk.cols, "left_semi")
-          if (hit.limit(1).count() > 0)
-            throw new IllegalArgumentException(
-              s"delete from $table violates foreign key constraint: " +
-                s"rows are still referenced by $child(${fk.cols.mkString(", ")})")
-        }
+    }.toMap
+    (sets, if (w < 0) None else Some(clause.substring(w + 5).trim))
+  }
+
+  /** The image projection of a SET over the relation aliased `alias`:
+    * where `cond` holds, an assigned column takes its expression cast to
+    * the column's declared type, the assignment cast of PG/DuckDB
+    * (without it the CASE's branch coercion can go the other way: SET
+    * varchar_col = 7 typed the CASE BIGINT, dml_fuzz find); every other
+    * column keeps its value. A SET of a column the table lacks is a
+    * binder error, as in DuckDB. */
+  private def assignProjection(schema: StructType, alias: String,
+      sets: Map[String, String], cond: String): String = {
+    sets.keys.find(c => !schema.fieldNames.exists(_.equalsIgnoreCase(c))).foreach(c =>
+      org.apache.spark.sql.GraftBridge.analysisError(
+        s"Referenced update column $c not found in table"))
+    schema.fieldNames.map { c =>
+      sets.get(c.toLowerCase) match {
+        case Some(e) =>
+          s"CASE WHEN $cond THEN CAST(($e) AS ${schema(c).dataType.sql}) ELSE `$alias`.`$c` END AS `$c`"
+        case None => s"`$alias`.`$c` AS `$c`"
       }
-      stageAndSwap(phys, s"SELECT * FROM $rel WHERE NOT ($pred) OR ($pred) IS NULL", keysOpt)
-      ExecResult(null, s"DELETE $removed")
-    } finally lock.unlock()
+    }.mkString(", ")
   }
 
   /** INSERT … ON CONFLICT [(cols)] DO NOTHING | DO UPDATE SET … —
@@ -4991,11 +4950,9 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
           col(cols.find(_.equalsIgnoreCase(c)).get).cast(target.schema(c).dataType).as(c)
         else lit(null).cast(target.schema(c).dataType).as(c)
       }
-      val keys = conflictCols
-        .orElse(constraintsOfOriginal(qualify(table)).map(c => if (c.pk.nonEmpty) c.pk else c.unique.headOption.getOrElse(Nil)))
-        .filter(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException(
-          "ON CONFLICT requires a conflict target or a declared PRIMARY KEY/UNIQUE constraint"))
+      val keys = conflictCols.getOrElse(identityKeyOf(table))
+      if (keys.isEmpty) throw new IllegalArgumentException(
+        "ON CONFLICT requires a conflict target or a declared PRIMARY KEY/UNIQUE constraint")
       // stage the RAW source before any branching: every later read
       // (null-key split, dedupe, merge branches, checks) hits the one
       // materialized copy, so a non-deterministic source can't give
@@ -5037,8 +4994,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         spark.sql(s"CREATE TABLE $srcTable AS SELECT * FROM ${srcTable}_v")
         spark.catalog.dropTempView(srcTable + "_v")
         val staged = spark.table(srcTable)
-        val tAlias = table0.split("\\.").last
-        val on = keys.map(k => s"$tAlias.`$k` <=> excluded.`$k` AND excluded.`$k` IS NOT NULL")
+        val tAlias = defaultAlias(table0)
+        val on = keys.map(k => s"`$tAlias`.`$k` <=> excluded.`$k` AND excluded.`$k` IS NOT NULL")
           .mkString(" AND ")
         val n = setClause match {
           case None =>
@@ -5046,82 +5003,48 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
             // staged copy (NOT NULL + non-target uniques still apply),
             // then append it — one anti-join execution total
             val fresh = staged.join(target.select(keys.map(col): _*), keys, "left_anti")
-            stageAndAppend(phys, fresh, check = df => enforceConstraints(table, df))
+            val appended = stageAndAppend(phys, fresh, check = df => enforceConstraints(table, df))
+            // an upsert counts as a rewrite, unattributed (r12 rewrite
+            // commute; DO UPDATE's merge may also insert): a concurrent
+            // rewrite conflicts at table granularity, declared
+            recordChangedKeys(table, None)
+            if (!isTxnOpen) {
+              bumpEpoch(table); bumpRewriteEpoch(table)
+              logRewrite(table, None)
+            }
+            appended
           case Some(sets0) =>
             // `SET … WHERE cond` (PostgreSQL/DuckDB): cond sees the
             // existing row (table alias) and excluded.*; a conflicting
             // pair failing cond keeps the existing row unchanged, and
             // the source row is neither inserted nor counted.
-            // the first top-level WHERE (subqueries in SET expressions
-            // legitimately contain their own)
-            val w = SqlLexer.topLevelKeyword(sets0, 0, "where")
-            val (setsPart, whereOpt) =
-              if (w < 0) (sets0.trim, None)
-              else (sets0.substring(0, w).trim, Some(sets0.substring(w + 5).trim))
-            // NOT NULL and the row-local constraints (CHECK/enum)
-            // apply to the incoming rows BEFORE conflict resolution —
-            // PG/DuckDB reject the insert attempt even when the row
-            // would have conflicted into an update (dml_fuzz find).
-            // Non-target unique constraints under DO UPDATE stay a
-            // documented divergence (validating them on the merged
-            // image needs a second full pass).
-            constraintsOfOriginal(qualify(table)).foreach(c =>
-              enforceNotNull((c.notNull ++ c.pk).distinct, staged))
+            val (sets, whereOpt) = parseSet(sets0)
+            // CHECK/enum apply to the incoming rows BEFORE conflict
+            // resolution, like NOT NULL on `raw` above: PG/DuckDB reject
+            // the insert attempt even when the row would have conflicted
+            // into an update (dml_fuzz find)
             enforceRowLocal(table, staged)
-            // DO UPDATE: new table image = existing rows (updated where
-            // a source row matches) + non-matching source rows
-            // strip identifier quoting when matching the assigned
-            // column: `SET "v" = …` / `SET \`v\` = …` silently skipped
-            // the assignment pre-fix (the lowercased quoted spelling
-            // never matched a field name — r15b find, surfaced by the
-            // INSERT OR REPLACE sugar generating backticked sets)
-            val sets = SqlLexer.splitTopLevel(setsPart, ',').map { a =>
-              val Array(c, e) = a.split("=", 2).map(_.trim)
-              c.replace("\"", "").replace("`", "").toLowerCase -> e
-            }.toMap
             val upd = whereOpt match {
               case Some(w) => s"excluded.`${keys.head}` IS NOT NULL AND ($w)"
               case None => s"excluded.`${keys.head}` IS NOT NULL"
             }
-            val proj = target.schema.fieldNames.map { c =>
-              sets.get(c.toLowerCase) match {
-                // assignment cast to the column's declared type, like
-                // copyOnWriteUpdate (dml_fuzz find)
-                case Some(e) =>
-                  s"CASE WHEN $upd THEN CAST(($e) AS ${target.schema(c).dataType.sql}) ELSE $tAlias.`$c` END AS `$c`"
-                case None => s"$tAlias.`$c` AS `$c`"
-              }
-            }.mkString(", ")
             val cnt = whereOpt match {
               case None => staged.count()
               case Some(w) =>
                 // affected = inserted (no conflict) + conflicts passing
                 // the WHERE; one join pass counts both
                 val mu = txnExec(
-                  s"SELECT count(*), count(CASE WHEN ($w) THEN 1 END) FROM $srcTable excluded JOIN $phys $tAlias ON $on")
+                  s"SELECT count(*), count(CASE WHEN ($w) THEN 1 END) FROM $srcTable excluded JOIN $phys `$tAlias` ON $on")
                   .head()
                 staged.count() - mu.getLong(0) + mu.getLong(1)
             }
-            // the merged image re-validates the row-local constraints:
-            // a SET expression can push an existing row out of a CHECK
-            stageAndSwap(phys,
-              s"""SELECT $proj FROM $phys $tAlias LEFT JOIN $srcTable excluded ON $on
+            // new image = existing rows (updated where a source row
+            // matches) + non-matching source rows
+            rewriteRows(table0, tAlias, None, Some(cnt), sets.keySet) { (rel, schema) =>
+              s"""SELECT ${assignProjection(schema, tAlias, sets, upd)} FROM $rel LEFT JOIN $srcTable excluded ON $on
                  |UNION ALL
-                 |SELECT excluded.* FROM $srcTable excluded LEFT ANTI JOIN $phys $tAlias ON $on""".stripMargin,
-              None, check = df => enforceRowLocal(table, df))
-            cnt
-        }
-        // upsert counts as a rewrite (DO UPDATE mutates existing rows;
-        // classifying conservatively keeps delta commits sound). Its
-        // change set is left unattributed (r12 rewrite commute: the
-        // merged-image rewrite touches source keys AND may insert — a
-        // concurrent rewrite conflicts at table granularity, declared).
-        // DO UPDATE's swap already moved the epochs; DO NOTHING only
-        // appended but is classified the same way.
-        recordChangedKeys(table, None)
-        if (!isTxnOpen && setClause.isEmpty) {
-          bumpEpoch(table); bumpRewriteEpoch(table)
-          logRewrite(table, None)
+                 |SELECT excluded.* FROM $srcTable excluded LEFT ANTI JOIN $rel ON $on""".stripMargin
+            }
         }
         ExecResult(null, s"INSERT 0 $n")
       } finally {
@@ -5494,13 +5417,15 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
     * txn's private copy is overwritten directly, its bookkeeping
     * waits for COMMIT's [[publish]]. */
   private def stageAndSwap(table: String, select: String,
-      keys: Option[Seq[Seq[Any]]], check: DataFrame => Unit = _ => ()): Unit = {
+      keys: Option[Seq[Seq[Any]]])(check: DataFrame => Unit): Unit = {
     val stage = qualify(table) + "__cow"
     spark.sql(s"DROP TABLE IF EXISTS $stage")
     // txnExec: the SELECT carries user expressions (SET/WHERE/merge
-    // projections) whose subqueries must resolve staged reads in-txn;
-    // a CTAS root is not an InsertIntoStatement, so only reads rewrite
-    txnExec(s"CREATE TABLE $stage AS $select")
+    // projections) whose subqueries must read the transaction's
+    // overlays. The stage is written from the redirected query: a CTAS
+    // command hides its query from the redirect, so its subqueries read
+    // the base table
+    txnExec(select).write.saveAsTable(stage)
     try check(spark.table(stage)) // validate the staged image pre-swap
     catch { case e: Throwable => spark.sql(s"DROP TABLE IF EXISTS $stage"); throw e }
     if (!isTxnOpen) swapIn(table, stage, replace = false, keys)
@@ -6058,12 +5983,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
         val frame = alignTo(table, full, columns, rows(full))
         enforceConstraints(table, frame)
         val key = identityKeyOf(table)
-        if (isTxnOpen && key.nonEmpty) recordChangedKeys(table,
-          if (!planDeterministic(frame)) None
-          else {
-            val keys = frame.select(key.map(col): _*).limit(ChangedKeyCap + 1).collect()
-            if (keys.length <= ChangedKeyCap) Some(keys.toSeq.map(_.toSeq)) else None
-          })
+        if (isTxnOpen && key.nonEmpty)
+          recordChangedKeys(table, keyTuples(frame.select(key.map(col): _*)))
       }
       val result = write(phys)
       val st = txn.get()
@@ -6179,8 +6100,10 @@ object Engine {
     """(?is)^\s*set\s+(extra_float_digits|application_name|search_path|datestyle|client_min_messages)\b.*""".r
   private val alterColTypeRe =
     """(?is)^\s*alter\s+table\s+([\w.]+)\s+alter\s+(?:column\s+)?("?\w+"?)\s+(?:set\s+data\s+type|type)\s+([\w]+(?:\s*\([\d\s,]*\))?)\s*(?:using\s+(.+))?\s*$""".r
+  // UPDATE t [[AS] alias] SET …: the SET list and its WHERE split in
+  // [[parseSet]], at the top level
   private val updateRe =
-    """(?is)^\s*update\s+([\w.]+)\s+set\s+(.+?)(?:\s+where\s+(.+))?\s*$""".r
+    """(?is)^\s*update\s+([\w."]+)(?:\s+(?:as\s+)?(?!set\b)(\w+))?\s+set\s+(.+)$""".r
   private val enumColonCastRe = """::\s*(\w+)""".r
   private val exportDbRe = """(?is)^\s*export\s+database\s+'([^']+)'\s*(?:\(.*\))?\s*$""".r
   private val importDbRe = """(?is)^\s*import\s+database\s+'([^']+)'\s*$""".r
@@ -6203,7 +6126,7 @@ object Engine {
   private val onConflictRe =
     """(?is)^\s*insert\s+into\s+([\w."]+)\s*(?:\(([^)]*)\))?\s*(.+?)\s+on\s+conflict\s*(?:\(([^)]*)\))?\s*do\s+(nothing|update\s+set\s+(.+?))\s*$""".r
   private val deleteRe =
-    """(?is)^\s*delete\s+from\s+([\w.]+)(?:\s+where\s+(.+))?\s*$""".r
+    """(?is)^\s*delete\s+from\s+([\w."]+)(?:\s+(?:as\s+)?(?!where\b)(\w+))?(?:\s+where\s+(.+))?\s*$""".r
   private val createViewRe =
     """(?is)^\s*create\s+(?:or\s+replace\s+)?(?:temp(?:orary)?\s+)?view\s+(?:if\s+not\s+exists\s+)?([\w.]+).*""".r
   /** Non-TEMP CREATE VIEW with the pieces captured — the transactional
@@ -6211,7 +6134,7 @@ object Engine {
   private val createViewFullRe =
     """(?is)^\s*create\s+(or\s+replace\s+)?view\s+(if\s+not\s+exists\s+)?([\w.]+)\s+as\s+(.+)$""".r
   private val dropTableRe = """(?is)^\s*drop\s+table\s+(?:if\s+exists\s+)?([\w.]+)\s*$""".r
-  private val truncateRe = """(?is)^\s*truncate\s+(?:table\s+)?([\w.]+)\s*$""".r
+  private val truncateRe = """(?is)^\s*truncate\s+(?:table\s+)?([\w."]+)\s*$""".r
   /** Any ALTER TABLE form — the in-txn staged-DDL guard must cover all
     * of them (ADD/RENAME/DROP COLUMN break the staged image's schema
     * contract just like COLUMN TYPE does). */
@@ -6593,7 +6516,6 @@ object Engine {
   private val replaceStarRe =
     """(?i)select\s+\*\s+replace\s*\(((?:[^()]|\([^()]*\))*)\)\s+from\s+([\w.]+)""".r
 
-  private val semiAntiRe = """(?i)\b(left\s+|right\s+)?(semi|anti)\s+join\b""".r
   private val starExcludeRe = """(?i)\*\s*exclude\s*\(""".r
   private val similarToRe = """(?i)\b(not\s+)?similar\s+to\s+('(?:[^']|'')*')""".r
   private val globRe = """(?i)\b(not\s+)?glob\s+('(?:[^']|'')*')""".r

@@ -965,13 +965,24 @@ class ServerEngineSpec extends SparkSpecBase {
     engine.execute("drop table main.oc_dup")
   }
 
-  test("SEMI/ANTI keyword rewrite leaves LEFT-prefixed forms alone") {
-    assert(engine.rewrite("a SEMI JOIN b").contains("LEFT SEMI JOIN"))
-    assert(engine.rewrite("a anti join b").contains("LEFT ANTI JOIN"))
-    val spaced = engine.rewrite("a LEFT  SEMI JOIN b")
-    assert(!spaced.toLowerCase.contains("left left"), s"double prefix: $spaced")
-    val newline = engine.rewrite("a LEFT\nSEMI JOIN b")
-    assert(!newline.toLowerCase.contains("left left"), s"double prefix: $newline")
+  test("bare and spaced SEMI/ANTI JOIN return the LEFT SEMI/ANTI rows") {
+    fresh("sa_l"); fresh("sa_r")
+    engine.execute("create table main.sa_l (id INT, v VARCHAR)")
+    engine.execute("create table main.sa_r (id INT)")
+    try {
+      engine.execute("insert into main.sa_l values (1, 'a'), (2, 'b'), (3, 'c')")
+      engine.execute("insert into main.sa_r values (2), (3), (3)")
+      def rows(join: String): Seq[String] = engine.execute(
+        s"select * from main.sa_l $join main.sa_r on sa_l.id = sa_r.id").df.collect().toSeq
+        .map(_.toString).sorted
+      val semi = rows("LEFT SEMI JOIN")
+      val anti = rows("LEFT ANTI JOIN")
+      assert(semi == Seq("[2,b]", "[3,c]") && anti == Seq("[1,a]"))
+      Seq("SEMI JOIN", "semi /**/ join", "LEFT  SEMI JOIN", "LEFT\nSEMI JOIN").foreach(j =>
+        assert(rows(j) == semi, j))
+      Seq("ANTI JOIN", "anti join", "LEFT  ANTI JOIN", "LEFT\nANTI JOIN").foreach(j =>
+        assert(rows(j) == anti, j))
+    } finally Seq("sa_l", "sa_r").foreach(t => engine.execute(s"drop table if exists main.$t"))
   }
 
   test("view journal survives drop-then-create (trailing newline kept)") {
@@ -4662,5 +4673,154 @@ class ServerEngineSpec extends SparkSpecBase {
     assert(rowsOf("select v, count(*), count(distinct id) from main.c_seqapp group by v order by v") ==
       Seq("[1,30,30]", "[2,40,1]"))
     engine.execute("drop table main.c_seqapp"); engine.execute("drop sequence main.c_seqapp_s")
+  }
+
+  test("ON CONFLICT DO UPDATE checks NOT NULL, FK and non-target UNIQUE on the merged image") {
+    fresh("c_ocpar"); fresh("c_ockid")
+    engine.execute("create table main.c_ocpar (id INT PRIMARY KEY)")
+    engine.execute("create table main.c_ockid (id INT PRIMARY KEY, " +
+      "pid INT REFERENCES main.c_ocpar(id), v VARCHAR NOT NULL, u INT UNIQUE)")
+    try {
+      engine.execute("insert into main.c_ocpar values (1)")
+      engine.execute("insert into main.c_ockid values (1, 1, 'a', 10), (2, 1, 'b', 20)")
+      val before = rowsOf("select * from main.c_ockid order by id")
+      val ins = "insert into main.c_ockid values (1, 1, 'x', 11) on conflict (id) do update set "
+      Seq("v = NULL" -> "not-null", "pid = 99" -> "foreign key", "u = 20" -> "unique").foreach {
+        case (set, msg) => bothTxnModes { inTxn =>
+          val e = intercept[IllegalArgumentException](engine.execute(ins + set))
+          assert(e.getMessage.contains(msg), s"$set inTxn=$inTxn: ${e.getMessage}")
+        }
+      }
+      assert(rowsOf("select * from main.c_ockid order by id") == before)
+      // a SET that keeps every constraint still applies, in both modes
+      bothTxnModes { inTxn =>
+        assert(engine.execute(ins + s"v = 'y$inTxn'").tag == "INSERT 0 1")
+        assert(rowsOf("select v from main.c_ockid where id = 1") == Seq(s"[y$inTxn]"))
+      }
+    } finally Seq("c_ockid", "c_ocpar").foreach(t => engine.execute(s"drop table if exists main.$t"))
+  }
+
+  test("TRUNCATE of a referenced parent is rejected and changes nothing") {
+    fresh("c_trp"); fresh("c_trc")
+    engine.execute("create table main.c_trp (id INT PRIMARY KEY)")
+    engine.execute("create table main.c_trc (pid INT REFERENCES main.c_trp(id))")
+    try {
+      engine.execute("insert into main.c_trp values (1), (2)")
+      engine.execute("insert into main.c_trc values (1)")
+      bothTxnModes { inTxn =>
+        val e = intercept[IllegalArgumentException](engine.execute("truncate main.c_trp"))
+        assert(e.getMessage.contains("still referenced"), s"inTxn=$inTxn: ${e.getMessage}")
+      }
+      assert(rowsOf("select count(*) from main.c_trp") == Seq("[2]"))
+      assert(rowsOf("select pid from main.c_trc") == Seq("[1]"))
+      // once the child is empty the parent truncates, in a transaction too
+      engine.execute("BEGIN")
+      engine.execute("truncate table main.c_trc")
+      engine.execute("truncate table main.c_trp")
+      engine.execute("COMMIT")
+      assert(rowsOf("select count(*) from main.c_trp") == Seq("[0]"))
+    } finally Seq("c_trc", "c_trp").foreach(t => engine.execute(s"drop table if exists main.$t"))
+  }
+
+  test("UPDATE splits its WHERE at the top level, not inside a SET subquery") {
+    fresh("c_ua"); fresh("c_ub")
+    engine.execute("create table main.c_ua (id INT, v INT)")
+    engine.execute("create table main.c_ub (id INT, w INT)")
+    try {
+      engine.execute("insert into main.c_ua values (1, 0), (2, 0)")
+      engine.execute("insert into main.c_ub values (1, 5), (1, 7), (2, 9)")
+      assert(engine.execute("update main.c_ua set v = (select max(w) from main.c_ub " +
+        "where c_ub.id = c_ua.id) where id = 1").tag == "UPDATE 1")
+      assert(rowsOf("select id, v from main.c_ua order by id") == Seq("[1,7]", "[2,0]"))
+    } finally Seq("c_ua", "c_ub").foreach(t => engine.execute(s"drop table if exists main.$t"))
+  }
+
+  test("in-transaction UPDATE and DELETE write what their subqueries read in the transaction") {
+    fresh("c_sqt")
+    engine.execute("create table main.c_sqt (id INT, a INT)")
+    try {
+      engine.execute("insert into main.c_sqt values (1, 10), (19, 50)")
+      engine.execute("BEGIN")
+      engine.execute("delete from main.c_sqt where id > 7")
+      assert(engine.execute("update main.c_sqt set a = 7 " +
+        "where id = (select max(id) from main.c_sqt)").tag == "UPDATE 1")
+      assert(rowsOf("select id, a from main.c_sqt") == Seq("[1,7]"))
+      engine.execute("insert into main.c_sqt values (5, 5)")
+      assert(engine.execute("delete from main.c_sqt " +
+        "where id = (select max(id) from main.c_sqt)").tag == "DELETE 1")
+      assert(rowsOf("select id, a from main.c_sqt") == Seq("[1,7]"))
+      engine.execute("COMMIT")
+      assert(rowsOf("select id, a from main.c_sqt") == Seq("[1,7]"))
+    } finally engine.execute("drop table if exists main.c_sqt")
+  }
+
+  test("a SET of an unknown column, or with no `=`, is a binder error that changes nothing") {
+    fresh("c_unk")
+    engine.execute("create table main.c_unk (id INT PRIMARY KEY, v INT)")
+    try {
+      engine.execute("insert into main.c_unk values (1, 1)")
+      bothTxnModes { inTxn =>
+        intercept[org.apache.spark.sql.AnalysisException](
+          engine.execute("update main.c_unk set nosuch = 5"))
+        intercept[org.apache.spark.sql.AnalysisException](engine.execute(
+          "insert into main.c_unk values (1, 2) on conflict (id) do update set nosuch = 5"))
+        // so is a SET item with no `=`
+        intercept[org.apache.spark.sql.AnalysisException](engine.execute("update main.c_unk set v"))
+        // a binder error leaves the transaction usable
+        assert(engine.txnStatus == (if (inTxn) 'T' else 'I'))
+      }
+      assert(rowsOf("select id, v from main.c_unk") == Seq("[1,1]"))
+    } finally engine.execute("drop table if exists main.c_unk")
+  }
+
+  test("quoted and aliased UPDATE, DELETE and TRUNCATE targets take the rewrite path") {
+    fresh("c_qt"); fresh("c_qtc")
+    engine.execute("create table main.c_qt (id INT PRIMARY KEY, v VARCHAR)")
+    engine.execute("create table main.c_qtc (pid INT REFERENCES main.c_qt(id))")
+    try {
+      engine.execute("insert into main.c_qt values (1, 'a'), (2, 'b'), (3, 'c')")
+      engine.execute("insert into main.c_qtc values (2)")
+      assert(engine.execute("""update "main"."c_qt" set v = 'q' where id = 1""").tag == "UPDATE 1")
+      assert(engine.execute("update main.c_qt as x set v = 'y' where x.id = 1").tag == "UPDATE 1")
+      assert(engine.execute("update main.c_qt x set v = x.v || 'z' where x.id = 1").tag == "UPDATE 1")
+      // the constraint checks run: a key collision and a referenced delete
+      val dup = intercept[IllegalArgumentException](
+        engine.execute("""update main."c_qt" set id = 3 where id = 1"""))
+      assert(dup.getMessage.contains("duplicate key"), dup.getMessage)
+      val ref = intercept[IllegalArgumentException](
+        engine.execute("""delete from main."c_qt" where id = 2"""))
+      assert(ref.getMessage.contains("still referenced"), ref.getMessage)
+      assert(engine.execute("delete from main.c_qt as x where x.id = 3").tag == "DELETE 1")
+      assert(engine.execute("delete from main.c_qt x where x.v = 'yz'").tag == "DELETE 1")
+      assert(rowsOf("select id, v from main.c_qt") == Seq("[2,b]"))
+      assert(engine.execute("""truncate "main"."c_qtc"""").tag == "TRUNCATE TABLE")
+      assert(rowsOf("select count(*) from main.c_qtc") == Seq("[0]"))
+      // a TEMP table's own name qualifies its columns
+      engine.execute("create temp table c_qtmp (id INT PRIMARY KEY, v INT)")
+      try {
+        engine.execute("insert into c_qtmp values (1, 1), (2, 2)")
+        assert(engine.execute("update c_qtmp set v = c_qtmp.v + 8 where c_qtmp.id = 1").tag == "UPDATE 1")
+        assert(engine.execute("delete from c_qtmp where c_qtmp.id = 2").tag == "DELETE 1")
+        engine.execute("insert into c_qtmp values (1, 0) on conflict (id) do update set v = c_qtmp.v + 1")
+        assert(rowsOf("select id, v from c_qtmp") == Seq("[1,10]"))
+      } finally engine.execute("drop table c_qtmp")
+    } finally Seq("c_qtc", "c_qt").foreach(t => engine.execute(s"drop table if exists main.$t"))
+  }
+
+  test("SELECT * REPLACE over a TEMP table") {
+    engine.execute("create temp table c_rep_tmp (a INT, b INT)")
+    try {
+      engine.execute("insert into c_rep_tmp values (1, 1)")
+      assert(rowsOf("select * replace (b + 10 as b) from c_rep_tmp") == Seq("[1,11]"))
+    } finally engine.execute("drop table c_rep_tmp")
+  }
+
+  test("SELECT * REPLACE over a table created in the open transaction") {
+    engine.execute("BEGIN")
+    try {
+      engine.execute("create table main.c_rep_txn (a INT, b INT)")
+      engine.execute("insert into main.c_rep_txn values (1, 1)")
+      assert(rowsOf("select * replace (b + 10 as b) from main.c_rep_txn") == Seq("[1,11]"))
+    } finally engine.execute("ROLLBACK")
   }
 }
